@@ -13,9 +13,9 @@ Pipeline per batch (≈ one "job run" of the reference,
    interleaving").
 3. **Validation split** — vectorized reason column → (valid, quarantine);
    quarantine is written idempotently per (batch, chunk) directory.
-4. **LWW dedup** — max_by per doc_id (map-side combine kills most skew);
-   salted two-phase reduction engaged automatically when the batch's key
-   histogram is hot.
+4. **LWW dedup** — :func:`.dedup.lww_winners`, a primitive max per doc_id
+   (map-side combine kills most skew); its salted two-phase form engages
+   when a chunk exceeds ``salt_threshold`` rows.
 5. **MERGE** — bucket-pruned join-and-rewrite with the LSN monotonic guard
    (``new.lsn > old.last_lsn``); deletes tombstone without forgetting
    ``last_lsn`` so lower-LSN stragglers can never resurrect a row.
@@ -34,20 +34,18 @@ from __future__ import annotations
 import json
 import os
 import re
+import shutil
 import time
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
-
-import shutil
-
-from pyspark.sql import Observation
 from pyspark.sql import types as T
 
 from ..functions.validation import validation_reason_expr, with_reason
 from ..lake.table import BROADCAST_MAX_KEY_ROWS, LakeTable, bucket_expr
+from .dedup import lww_winners
 from .events import EVENT_SCHEMA, SOURCE_WHITELIST
 
 QUARANTINE_REASONS = ["null_tokens", "empty_tokens", "bad_n_tok", "bad_source"]
@@ -111,18 +109,15 @@ class CdcEngine:
         spark: SparkSession,
         table_path: str,
         whitelist: list[str] | None = None,
-        validation_mode: str = "hybrid",  # hybrid | slim | arrow | pandas | expr
         # Rows-per-chunk above which the two-phase salted LWW engages.
-        # Effectively opt-in by default: the max_by hash aggregate already
+        # Effectively opt-in by default: the max hash aggregate already
         # pre-reduces every hot key map-side (a key collapses to one row
         # per task before the shuffle), and measured replays show salting
         # a normal batch costs ~1.6x (the (key, salt) pre-reduction
-        # multiplies group cardinality by salt_buckets). Lower this only
-        # for adversarial distributions where a single task's group
-        # cardinality overflows the agg hash table, or when using the
-        # window-based LWW formulation (which has no map-side combine).
+        # multiplies group cardinality by dedup.SALT_BUCKETS). Lower this
+        # only for adversarial distributions where a single task's group
+        # cardinality overflows the agg hash table.
         salt_threshold: int = 500_000_000,
-        salt_buckets: int = 32,
         n_buckets: int = 16,
         # merge commit strategy, passed to LakeTable.merge. The CDC
         # resolver is LWW-by-LSN with a monotone watermark — exactly the
@@ -148,10 +143,8 @@ class CdcEngine:
         )
         self.manifest_dir = os.path.join(self.table_path, "_manifest")
         self.whitelist = list(whitelist or SOURCE_WHITELIST)
-        self.validation_mode = validation_mode
         # chunks with more rows than this use the two-phase salted LWW
         self.salt_threshold = salt_threshold
-        self.salt_buckets = salt_buckets
         self.n_buckets = n_buckets
         self.merge_mode = merge_mode
         self.table = LakeTable(spark, os.path.join(self.table_path, "target"))
@@ -197,13 +190,16 @@ class CdcEngine:
         # finalize). Two shapes, both idempotent against redelivery —
         # if the chunk's merge never committed, the redelivered finalize
         # simply replaces the recovered dir with bit-identical content:
-        #   quar_b{B}_c{C}  reasons already assigned; crash was between
-        #                   write and rename — finish the rename.
-        #   b{B}_c{C}/route=q  crash before the reason pass — run it now.
-        # Anything else (route=d intermediates, unparseable names) is
-        # swept; the data path's correctness never depends on staging.
-        # Safe here: ingest is single-writer and this engine has not
-        # started its own staging yet.
+        #   b{B}_c{C}/route=q  crash before the reason pass — run it now
+        #                      (sorts first, so it supersedes a partial
+        #                      staged output of the same chunk).
+        #   quar_ + b{B}_c{C}  reasons already assigned; crash was between
+        #                      write and rename — finish the rename if the
+        #                      write committed (_SUCCESS).
+        # Anything else (route=d intermediates, partial writes,
+        # unparseable names) is swept; the data path's correctness never
+        # depends on staging. Safe here: ingest is single-writer and this
+        # engine has not started its own staging yet.
         self._recover_archive_swap()
         stg = os.path.join(self.table_path, "_staging")
         if os.path.isdir(stg):
@@ -212,40 +208,16 @@ class CdcEngine:
                 m = re.fullmatch(r"(quar_)?b(\d+)_c(\d+)", d)
                 if m:
                     b, c = int(m.group(2)), int(m.group(3))
-                    qdir = os.path.join(
-                        self.quarantine_path, f"batch_id={b}", f"chunk={c}"
-                    )
-                    if not os.path.exists(qdir):
-                        if m.group(1):  # reasoned: finish the rename
-                            os.makedirs(os.path.dirname(qdir), exist_ok=True)
-                            os.rename(path, qdir)
+                    qdir = self._quarantine_dir(b, c)
+                    qsrc = os.path.join(path, "route=q")
+                    if os.path.exists(qdir):
+                        pass  # already finalized
+                    elif m.group(1):
+                        if os.path.exists(os.path.join(path, "_SUCCESS")):
+                            self._promote_quarantine(path, qdir)
                             continue
-                        qsrc = os.path.join(path, "route=q")
-                        if os.path.isdir(qsrc):
-                            mode = (
-                                "slim"
-                                if self.validation_mode == "hybrid"
-                                else self.validation_mode
-                            )
-                            reasoned = with_reason(
-                                self.spark.read.parquet(qsrc),
-                                self.whitelist,
-                                mode=mode,
-                            )
-                            if reasoned.limit(1).count() > 0:
-                                # stage-then-rename, NEVER a direct write to
-                                # qdir: a crash mid-write would leave a
-                                # partial qdir that the next init() sees as
-                                # "already recovered" and then sweeps this
-                                # staging source — truncating the chunk's
-                                # quarantine forever (redelivery is
-                                # LSN-filtered past finalize). The staged
-                                # quar_b{B}_c{C} shape is itself recovered
-                                # by the rename branch above on re-crash.
-                                tmp = os.path.join(stg, f"quar_b{b}_c{c}")
-                                reasoned.write.mode("overwrite").parquet(tmp)
-                                os.makedirs(os.path.dirname(qdir), exist_ok=True)
-                                os.rename(tmp, qdir)
+                    elif os.path.isdir(qsrc):
+                        self._finalize_quarantine(self.spark.read.parquet(qsrc), b, c)
                 shutil.rmtree(path, ignore_errors=True)
         # vocab outbox lives OUTSIDE _staging (the sweep above must never
         # eat a committed-but-unfolded delta); recover() folds or drops it
@@ -370,38 +342,10 @@ class CdcEngine:
         valid = snap_wire.filter(expr_r.isNull())
         invalid = snap_wire.filter(expr_r.isNotNull())
 
-        # quarantine: same stage-then-swap shape as the streaming finalize
-        ck = as_of_lsn
-        by_reason: dict[str, int] = {}
-        rows_q = 0
-        qdir = os.path.join(
-            self.quarantine_path, f"batch_id={batch_id}", f"chunk={ck}"
-        )
-        tmp = os.path.join(self.table_path, "_staging", f"quar_b{batch_id}_c{ck}")
-        mode = "slim" if self.validation_mode == "hybrid" else self.validation_mode
-        obs = Observation(f"bootstrap-quar-{batch_id}")
-        reasoned = with_reason(invalid, self.whitelist, mode=mode).observe(
-            obs,
-            F.count(F.lit(1)).alias("n"),
-            *[
-                F.sum(F.when(F.col("reason") == r, 1).otherwise(0)).alias(r)
-                for r in QUARANTINE_REASONS
-            ],
-        )
-        reasoned.write.mode("overwrite").parquet(tmp)
-        qm = obs.get
-        rows_q = int(qm.get("n") or 0)
-        if rows_q > 0:
-            if os.path.exists(qdir):
-                shutil.rmtree(qdir)
-            os.makedirs(os.path.dirname(qdir), exist_ok=True)
-            os.rename(tmp, qdir)
-        else:
-            shutil.rmtree(tmp, ignore_errors=True)
-        for r in QUARANTINE_REASONS:
-            c = int(qm.get(r) or 0)
-            if c:
-                by_reason[r] = c
+        ck = as_of_lsn  # the chunk key: the snapshot's one "chunk"
+        qm = self._finalize_quarantine(invalid, batch_id, ck)
+        rows_q = qm["n"]
+        by_reason = {r: qm[r] for r in QUARANTINE_REASONS if qm[r]}
 
         stage_future = None
         if self._vocab is not None:
@@ -520,6 +464,63 @@ class CdcEngine:
             .add("batch_id", T.LongType())
             .add("chunk", T.LongType())
         )
+
+    def _quarantine_dir(self, batch_id: int, ck: int) -> str:
+        return os.path.join(self.quarantine_path, f"batch_id={batch_id}", f"chunk={ck}")
+
+    def _finalize_quarantine(self, rows: DataFrame, batch_id: int, ck: int) -> dict:
+        """The one quarantine writer: assign each of ``rows`` its
+        authoritative reason (:func:`with_reason`), count by reason from
+        the write's own Observation, stage the result under ``_staging``
+        and rename it into ``quarantine/batch_id=B/chunk=C``.
+
+        Staged OUTSIDE the partition-discovered quarantine tree (a crashed
+        leftover named chunk=M.inprogress would poison partition
+        discovery) and renamed whole, so the chunk dir is all-or-nothing:
+        a redelivered chunk replaces it with identical content, and a
+        crash leaves a staged dir that ``init()`` finishes or re-derives.
+        A chunk with no rows keeps whatever dir it already has. Spark's
+        ``_SUCCESS`` marker rides the rename into the chunk dir.
+
+        Returns ``{"n": rows, <reason>: rows, ...}``.
+        """
+        obs = Observation(f"quar-{batch_id}-{ck}")
+        reasoned = with_reason(rows, self.whitelist).observe(
+            obs,
+            F.count(F.lit(1)).alias("n"),
+            *[
+                F.sum(F.when(F.col("reason") == r, 1).otherwise(0)).alias(r)
+                for r in QUARANTINE_REASONS
+            ],
+        )
+        tmp = os.path.join(self.table_path, "_staging", f"quar_b{batch_id}_c{ck}")
+        reasoned.write.mode("overwrite").parquet(tmp)
+        got = obs.get  # safe: the write action ran
+        counts = {k: int(got.get(k) or 0) for k in ["n", *QUARANTINE_REASONS]}
+        if counts["n"]:
+            self._promote_quarantine(tmp, self._quarantine_dir(batch_id, ck))
+        else:
+            shutil.rmtree(tmp, ignore_errors=True)
+        return counts
+
+    @staticmethod
+    def _promote_quarantine(tmp: str, qdir: str) -> None:
+        """Rename a staged, reasoned chunk into place (replacing any
+        previous delivery). A concurrent compact_quarantine may rmdir the
+        emptied batch dir between makedirs and rename; losing the rename
+        would drop the chunk's rows forever (redelivery is LSN-filtered),
+        so retry the pair — compaction empties a batch dir at most once
+        per listed chunk, so this settles."""
+        if os.path.exists(qdir):
+            shutil.rmtree(qdir)
+        for attempt in range(10):
+            os.makedirs(os.path.dirname(qdir), exist_ok=True)
+            try:
+                os.rename(tmp, qdir)
+                return
+            except FileNotFoundError:
+                if attempt == 9:
+                    raise
 
     def vocab(self) -> DataFrame:
         """(token, n_occ, n_docs) — the incrementally-maintained corpus
@@ -773,10 +774,8 @@ class CdcEngine:
             return {"examined": examined, "rescued": 0, "merged": 0}
         rescued = self.spark.read.parquet(rescued_stage)
         # LWW within the rescued set (one doc may have several rescued
-        # events). Deletes never quarantine, so every row is an upsert and
-        # max(lsn) alone picks the winner — an all-primitive HashAggregate,
-        # no struct buffer (same rule as the hot path).
-        winners = rescued.groupBy("doc_id").agg(F.max("lsn").alias("lsn"))
+        # events), by the same aggregate as the hot path
+        winners = lww_winners(rescued).select("doc_id", "lsn")
         delta = rescued.join(winners, ["doc_id", "lsn"])
         nb = self.table.snapshot()["n_buckets"]
         stats = (
@@ -1040,23 +1039,17 @@ class CdcEngine:
             #          invalid → route=q, valid winner → route=d, valid
             #          loser dropped. This fuses what used to be two more
             #          full passes (quarantine write + delta semi-join).
-            #   async  quarantine finalize: re-read the small route=q
-            #          slice, assign authoritative reasons with the
-            #          Arrow-vectorized UDF, stage-then-swap into the
-            #          idempotent per-(batch, chunk) dir; counts by reason
-            #          from the write's own Observation.
+            #   async  quarantine finalize: the small route=q slice
+            #          through _finalize_quarantine (Arrow UDF reasons,
+            #          stage-then-rename, counts from an Observation).
             #   sync   merge: reads the file-backed route=d delta (no
             #          persist, no recompute races) into the bucket-pruned
             #          MERGE (no internal distinct/count jobs).
             _t = time.time()
-            _timing = os.environ.get("SPARK_CDC_TIMING") == "1"
 
             def _mark(label):
                 nonlocal _t
-                dt = time.time() - _t
-                self.timings[label] = self.timings.get(label, 0.0) + dt
-                if _timing:
-                    print(f"[cdc-timing] {label}: {dt:.2f}s", flush=True)
+                self.timings[label] = self.timings.get(label, 0.0) + time.time() - _t
                 _t = time.time()
 
             lineage_future = self._pool.submit(
@@ -1115,54 +1108,18 @@ class CdcEngine:
             # (chunk_lsn_max None) writes nothing; ci is only a
             # placeholder there.
             ck = chunk_lsn_max if chunk_lsn_max is not None else ci
-            qdir = os.path.join(
-                self.quarantine_path, f"batch_id={batch_id}", f"chunk={ck}"
-            )
             staging = os.path.join(
                 self.table_path, "_staging", f"b{batch_id}_c{ck}"
             )
 
-            # LWW scale path: narrow (key -> max lsn, cnt, winner op)
-            # aggregation — token arrays never enter an agg buffer —
-            # then the routed pass fetches the winning payload rows.
-            # The winner's op rides INSIDE the lsn as `lsn*2 +
-            # is_delete`: a string/struct agg buffer (max_by) would
-            # force SortAggregate (per-partition sorts, spill-prone at
-            # high thread counts); an all-primitive max keeps the agg
-            # a HashAggregate with full map-side combine, which is
-            # also what makes hot keys a non-issue (each key collapses
-            # to one row per task before the shuffle).
+            # LWW: narrow (key -> max lsn, cnt, winner op) aggregation,
+            # then the routed pass fetches the winning payload rows
             dedup_cols = ["doc_id", "lsn", "op", "tokens", "n_tok", "source"]
-            slim = valid.select(*dedup_cols)
-            combined = F.col("lsn") * 2 + F.when(
-                F.col("op") == "delete", F.lit(1)
-            ).otherwise(F.lit(0))
-            if rows_in >= self.salt_threshold:
-                salted_any = True
-                salted = slim.select(
-                    "doc_id",
-                    combined.alias("__c"),
-                    F.pmod(F.xxhash64(F.col("lsn")), F.lit(self.salt_buckets)).alias(
-                        "__salt"
-                    ),
-                )
-                partial = salted.groupBy("doc_id", "__salt").agg(
-                    F.max("__c").alias("__c"), F.count(F.lit(1)).alias("__cnt")
-                )
-                winners = partial.groupBy("doc_id").agg(
-                    F.max("__c").alias("__c"), F.sum("__cnt").alias("cnt")
-                )
-            else:
-                winners = slim.select("doc_id", combined.alias("__c")).groupBy(
-                    "doc_id"
-                ).agg(F.max("__c").alias("__c"), F.count(F.lit(1)).alias("cnt"))
+            salted = rows_in >= self.salt_threshold
+            salted_any |= salted
             nb = self.table.snapshot()["n_buckets"]
-            winners = winners.select(
-                "doc_id",
-                F.shiftright("__c", 1).alias("lsn"),
-                (F.col("__c") % 2 == 1).alias("win_del"),
-                "cnt",
-                bucket_expr(F.col("doc_id"), nb).alias("_wb"),
+            winners = lww_winners(valid, salted=salted).withColumn(
+                "_wb", bucket_expr(F.col("doc_id"), nb)
             ).persist()
             q_future = None
             stage_future = None
@@ -1186,7 +1143,6 @@ class CdcEngine:
                 affected = [int(b) for b in (w["buckets"] or [])]
                 _mark("lww_and_stats")
 
-                q_future = None
                 if rows_in > 0:
                     # pass 2: ONE routed scan writes quarantine candidates
                     # and the LWW delta together
@@ -1211,67 +1167,14 @@ class CdcEngine:
                     _mark("routed_write")
 
                     # quarantine finalize (async, small): authoritative
-                    # reasons via the Arrow-vectorized UDF over the staged
-                    # q-slice; stage-then-swap so a redelivered (fully
-                    # LSN-filtered) chunk can't clobber the original
-                    # delivery's quarantine
-                    reason_mode = (
-                        "slim" if self.validation_mode == "hybrid" else self.validation_mode
-                    )
-
-                    def _finalize_quarantine(
-                        qsrc=os.path.join(staging, "route=q"),
-                        qdir=qdir,
-                        mode=reason_mode,
-                        tag=f"quar-{batch_id}-{ck}",
-                    ):
-                        # staging is driver-local: existence, not a bare
-                        # except, decides "no invalid rows staged" — any
-                        # real read failure must propagate so counts are
-                        # never silently dropped
-                        if not os.path.isdir(qsrc):
-                            return None  # no invalid rows staged (or redelivery)
-                        qdf = self.spark.read.parquet(qsrc)
-                        obs = Observation(tag)
-                        reasoned = with_reason(qdf, self.whitelist, mode=mode).observe(
-                            obs,
-                            F.count(F.lit(1)).alias("n"),
-                            *[
-                                F.sum(F.when(F.col("reason") == r, 1).otherwise(0)).alias(r)
-                                for r in QUARANTINE_REASONS
-                            ],
+                    # reasons over the staged q-slice only
+                    qsrc = os.path.join(staging, "route=q")
+                    if os.path.isdir(qsrc):  # no invalid rows staged otherwise
+                        q_future = self._pool.submit(
+                            lambda qsrc=qsrc, ck=ck: self._finalize_quarantine(
+                                self.spark.read.parquet(qsrc), batch_id, ck
+                            )
                         )
-                        # stage OUTSIDE the partition-discovered quarantine
-                        # tree (a crashed leftover named chunk=M.inprogress
-                        # would poison partition discovery)
-                        tmp = os.path.join(
-                            self.table_path, "_staging", f"quar_b{batch_id}_c{ck}"
-                        )
-                        reasoned.write.mode("overwrite").parquet(tmp)
-                        counts = obs.get  # safe: the write action ran
-                        if (counts.get("n") or 0) > 0 or not os.path.exists(qdir):
-                            if os.path.exists(qdir):
-                                shutil.rmtree(qdir)
-                            # a concurrent compact_quarantine may rmdir the
-                            # (emptied) batch dir between our makedirs and
-                            # rename — losing the rename would silently drop
-                            # this chunk's quarantine rows forever (redelivery
-                            # is LSN-filtered, so finalize never re-runs).
-                            # Retry the pair; compaction empties a batch dir
-                            # at most once per listed chunk, so this settles.
-                            for attempt in range(10):
-                                os.makedirs(os.path.dirname(qdir), exist_ok=True)
-                                try:
-                                    os.rename(tmp, qdir)
-                                    break
-                                except FileNotFoundError:
-                                    if attempt == 9:
-                                        raise
-                        else:
-                            shutil.rmtree(tmp, ignore_errors=True)
-                        return counts
-
-                    q_future = self._pool.submit(_finalize_quarantine)
 
                     # merge consumes the file-backed delta: no persist, no
                     # recompute races across the merge's three branches.
@@ -1359,12 +1262,11 @@ class CdcEngine:
             finally:
                 winners.unpersist()
             if q_future is not None:
-                qm = q_future.result() or {}  # finalize ran in parallel
+                qm = q_future.result()  # finalize ran in parallel
                 for r in QUARANTINE_REASONS:
-                    c = qm.get(r) or 0
-                    if c:
-                        by_reason[r] = by_reason.get(r, 0) + int(c)
-                totals["rows_quarantined"] += int(qm.get("n") or 0)
+                    if qm[r]:
+                        by_reason[r] = by_reason.get(r, 0) + qm[r]
+                totals["rows_quarantined"] += qm["n"]
             shutil.rmtree(staging, ignore_errors=True)
             _mark("quarantine_join")
 

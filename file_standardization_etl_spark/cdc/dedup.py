@@ -3,99 +3,59 @@
 Re-expresses the reference's latest-event-per-file EXISTS/GROUP BY/max(id)
 query (``/root/reference/config/queries.py:21-44``, SURVEY.md J1/W1/A3)
 over (doc_id, lsn), with explicit skew handling.
-
-Two implementations:
-
-- :func:`lww_maxby` — ``groupBy(key).agg(max_by(struct(payload), lsn))``.
-  This is the scale default: a hash aggregate gets **map-side partial
-  aggregation**, so a hot doc_id collapses to ~one row per input partition
-  before the shuffle — the skew never reaches the exchange. Two-level
-  salted variant included for the adversarial case where even partial-agg
-  input is one giant partition.
-- :func:`lww_window` — ``row_number() over (partition by key order by lsn
-  desc) = 1``. Semantically identical; a window has NO partial aggregation
-  (all rows of a key shuffle to one task), so it needs the salting
-  pre-pass on skewed data. Kept for parity tests and because it preserves
-  arbitrary extra columns without structing.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# salts per key on the two-phase path (``lww_winners(salted=True)``)
+SALT_BUCKETS = 32
 
-def lww_maxby(
-    df: DataFrame, key: str = "doc_id", order: str = "lsn", with_count: bool = False
-) -> DataFrame:
-    """One row per key: the payload with the greatest ``order`` value.
 
-    LSNs are unique (FIXTURES.md §2), so max_by is deterministic. With
-    ``with_count`` the same single pass also emits rows-per-key (``cnt``)
-    — the skew/lineage stat comes free instead of costing a second scan.
+def lww_winners(events: DataFrame, salted: bool = False) -> DataFrame:
+    """One row per ``doc_id``: the winning (greatest) ``lsn``, whether that
+    winner is a delete (``win_del``) and the key's row count (``cnt``).
+
+    Only narrow columns enter the aggregate — token arrays never sit in an
+    agg buffer; the caller fetches the winning payload rows by (doc_id,
+    lsn). The winner's op rides INSIDE the lsn as ``lsn*2 + is_delete``:
+    a string/struct buffer (``max_by``) would force SortAggregate
+    (per-partition sorts, spill-prone at high thread counts), while an
+    all-primitive max stays a HashAggregate with full map-side combine —
+    which is also what makes hot keys a non-issue (each key collapses to
+    one row per task before the shuffle). LSNs are unique (FIXTURES.md
+    §2), so the winner is deterministic.
+
+    ``salted`` first reduces within (key, salt) and then across salts, for
+    adversarial batches where even one task's group cardinality overflows
+    the agg hash map. The salt derives from the lsn (no ``rand()``), so a
+    retried task routes identically — required for exactly-once.
     """
-    payload = [c for c in df.columns if c != key]
-    aggs = [F.max_by(F.struct(*payload), F.col(order)).alias("__r")]
-    if with_count:
-        aggs.append(F.count(F.lit(1)).alias("cnt"))
-    agg = df.groupBy(key).agg(*aggs)
-    cols = [key] + [F.col(f"__r.{c}").alias(c) for c in payload]
-    if with_count:
-        cols.append("cnt")
-    return agg.select(*cols)
-
-
-def lww_maxby_salted(
-    df: DataFrame,
-    key: str = "doc_id",
-    order: str = "lsn",
-    salt_buckets: int = 32,
-    with_count: bool = False,
-) -> DataFrame:
-    """Two-phase salted LWW: reduce within (key, salt) then across salts.
-
-    The salt derives from the order column (deterministic, no rand()), so
-    re-execution of a failed task yields identical routing — required for
-    exactly-once under retry.
-    """
-    payload = [c for c in df.columns if c != key]
-    salted = df.withColumn("__salt", F.pmod(F.xxhash64(F.col(order)), F.lit(salt_buckets)))
-    partial = salted.groupBy(key, "__salt").agg(
-        F.max_by(F.struct(*payload), F.col(order)).alias("__r"),
-        F.count(F.lit(1)).alias("__cnt"),
-    )
-    aggs = [F.max_by(F.col("__r"), F.col(f"__r.{order}")).alias("__r")]
-    if with_count:
-        aggs.append(F.sum("__cnt").alias("cnt"))
-    final = partial.groupBy(key).agg(*aggs)
-    cols = [key] + [F.col(f"__r.{c}").alias(c) for c in payload]
-    if with_count:
-        cols.append("cnt")
-    return final.select(*cols)
-
-
-def lww_window(
-    df: DataFrame,
-    key: str = "doc_id",
-    order: str = "lsn",
-    salt_buckets: int | None = None,
-) -> DataFrame:
-    """row_number()-based LWW (SURVEY.md W1). With ``salt_buckets``, a
-    salted pre-reduction bounds any single window partition to
-    ~rows(key)/salt_buckets before the final per-key window."""
-    if salt_buckets:
-        df = lww_maxby_salted(df, key=key, order=order, salt_buckets=salt_buckets)
-    w = Window.partitionBy(key).orderBy(F.col(order).desc())
-    return (
-        df.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") == 1).drop("__rn")
-    )
-
-
-def key_skew_stats(df: DataFrame, key: str = "doc_id") -> DataFrame:
-    """Per-batch skew profile: rows per key, used for the manifest's
-    ``max_key_rows`` lineage stat and to decide salting."""
-    return df.groupBy(key).agg(F.count(F.lit(1)).alias("rows")).agg(
-        F.max("rows").alias("max_key_rows"),
-        F.count(F.lit(1)).alias("distinct_keys"),
-        F.sum("rows").alias("total_rows"),
+    combined = F.col("lsn") * 2 + F.when(
+        F.col("op") == "delete", F.lit(1)
+    ).otherwise(F.lit(0))
+    if salted:
+        partial = (
+            events.select(
+                "doc_id",
+                combined.alias("__c"),
+                F.pmod(F.xxhash64(F.col("lsn")), F.lit(SALT_BUCKETS)).alias("__salt"),
+            )
+            .groupBy("doc_id", "__salt")
+            .agg(F.max("__c").alias("__c"), F.count(F.lit(1)).alias("__cnt"))
+        )
+        agg = partial.groupBy("doc_id").agg(
+            F.max("__c").alias("__c"), F.sum("__cnt").alias("cnt")
+        )
+    else:
+        agg = events.select("doc_id", combined.alias("__c")).groupBy("doc_id").agg(
+            F.max("__c").alias("__c"), F.count(F.lit(1)).alias("cnt")
+        )
+    return agg.select(
+        "doc_id",
+        F.shiftright("__c", 1).alias("lsn"),
+        (F.col("__c") % 2 == 1).alias("win_del"),
+        "cnt",
     )

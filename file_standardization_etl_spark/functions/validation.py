@@ -5,19 +5,15 @@ Re-expresses the reference's validators — required/null checks
 consistency (``src/validation/data_validator.py:62-76``), categorical
 whitelist (``src/validation/data_validator.py:79-84``,
 ``src/config/validation_config.py:25-27``) — over the token-table domain
-with **no per-row Python** (north rule):
+with **no per-row Python** (north rule). One rule set, two renderings:
 
-- :func:`validation_reason_pandas_udf` — the rule-mandated pandas/Arrow UDF
-  path: token arrays arrive as one Arrow ``ListArray`` batch; the length
-  check is ``pyarrow.compute.list_value_length`` (O(1) per batch on the
-  offsets buffer, no element materialization).
-- :func:`validation_reason_expr` — pure Catalyst column expression
-  (``F.size`` / ``isin``), whole-stage-codegen'd; the fast path.
+- :func:`validation_reason_expr` — Catalyst column expression, whole-stage
+  codegen'd; the engine's routed pass splits valid rows from quarantine
+  candidates with it, JVM-side.
+- :func:`with_reason` — the authoritative reason from one scalar Arrow UDF
+  over narrow columns, run on the quarantine slice only.
 
-Both return the same reason string column (null = valid); tests assert
-they agree bitwise and that both agree with the pure-Python oracle
-(:func:`..cdc.oracle.validation_reason`). The engine defaults to the
-expression path (JVM-side) and exposes the UDF path for parity/benchmark.
+Both agree bitwise with the oracle (:func:`..cdc.oracle.validation_reason`).
 
 Reason precedence (must match the oracle): null_tokens → empty_tokens →
 bad_n_tok → bad_source. Deletes carry no payload and are always valid.
@@ -26,9 +22,7 @@ bad_n_tok → bad_source. Deletes carry no payload and are always valid.
 from __future__ import annotations
 
 import pandas as pd
-import pyarrow as pa
-import pyarrow.compute as pc
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.functions import pandas_udf
 
@@ -47,87 +41,13 @@ def validation_reason_expr(
     )
 
 
-def make_validation_reason_pandas_udf(whitelist: list[str]):
-    """Arrow-vectorized validation UDF factory.
-
-    Signature: (op, tokens, n_tok, source) -> reason string (null = valid).
-    """
-    wl = set(whitelist)
-
-    @pandas_udf("string")
-    def _reason(
-        op: pd.Series, tokens: pd.Series, n_tok: pd.Series, source: pd.Series
-    ) -> pd.Series:
-        # Move the list column back into Arrow to use the offsets-buffer
-        # length kernel instead of per-row Python len().
-        arr = pa.array(tokens, type=pa.list_(pa.int32()))
-        lengths = pc.list_value_length(arr).to_pandas()  # null where tokens null
-        is_delete = op == "delete"
-        null_tok = tokens.isna()
-        empty_tok = lengths.eq(0).fillna(False)
-        bad_n = n_tok.isna() | (n_tok != lengths)
-        bad_src = ~source.isin(wl)
-        out = pd.Series([None] * len(op), dtype="object")
-        # precedence: later assignments must not overwrite earlier ones
-        out = out.mask(bad_src, "bad_source")
-        out = out.mask(bad_n, "bad_n_tok")
-        out = out.mask(empty_tok, "empty_tokens")
-        out = out.mask(null_tok, "null_tokens")
-        out = out.mask(is_delete, None)
-        return out
-
-    return _reason
-
-
-def with_reason_arrow(df, whitelist: list[str]):
-    """Append the reason column via ``mapInArrow`` — the fastest vectorized
-    path: Arrow RecordBatches in and out, zero pandas conversion, zero
-    per-row Python. The length check is ``pc.list_value_length`` (reads the
-    ListArray offsets buffer)."""
-    import pyspark.sql.types as T
-
-    out_schema = T.StructType(list(df.schema.fields) + [T.StructField("reason", T.StringType())])
-    wl = pa.array(list(whitelist), type=pa.string())
-    names = df.columns
-    i_op, i_tok, i_n, i_src = (
-        names.index("op"),
-        names.index("tokens"),
-        names.index("n_tok"),
-        names.index("source"),
-    )
-
-    def kernel(batches):
-        for rb in batches:
-            op = rb.column(i_op)
-            tokens = rb.column(i_tok)
-            n_tok = rb.column(i_n)
-            source = rb.column(i_src)
-            lengths = pc.list_value_length(tokens)
-            f = lambda c: pc.fill_null(c, False)  # noqa: E731
-            reason = pa.nulls(rb.num_rows, pa.string())
-            # reverse precedence: later assignment wins
-            reason = pc.if_else(f(pc.invert(pc.is_in(source, value_set=wl))),
-                                pa.scalar("bad_source"), reason)
-            reason = pc.if_else(
-                f(pc.or_kleene(pc.is_null(n_tok), pc.not_equal(pc.cast(n_tok, pa.int32()), lengths))),
-                pa.scalar("bad_n_tok"), reason)
-            reason = pc.if_else(f(pc.equal(lengths, 0)), pa.scalar("empty_tokens"), reason)
-            reason = pc.if_else(pc.is_null(tokens), pa.scalar("null_tokens"), reason)
-            reason = pc.if_else(f(pc.equal(op, "delete")), pa.nulls(rb.num_rows, pa.string()), reason)
-            yield pa.RecordBatch.from_arrays(list(rb.columns) + [reason], names=names + ["reason"])
-
-    return df.mapInArrow(kernel, out_schema)
-
-
 def make_slim_validation_pandas_udf(whitelist: list[str]):
     """Arrow-vectorized scalar validation UDF over narrow columns.
 
     The token-array length is extracted JVM-side (``F.size`` reads the
     array header, no element materialization) so only four scalar columns
     cross the Arrow boundary — ~20 bytes/row instead of the full token
-    payload. This is the engine's default validation path: it keeps the
-    north rule's "vectorized pandas/Arrow UDF, no per-row Python" contract
-    at roughly the cost of a native expression.
+    payload (the cost model of Accelerating Python UDFs, CIDR'22).
 
     Signature: (op, tok_len, n_tok, source) → reason (null = valid);
     ``tok_len`` is null iff tokens is null.
@@ -138,6 +58,7 @@ def make_slim_validation_pandas_udf(whitelist: list[str]):
     def _reason(
         op: pd.Series, tok_len: pd.Series, n_tok: pd.Series, source: pd.Series
     ) -> pd.Series:
+        # precedence: later masks overwrite earlier ones
         out = pd.Series([None] * len(op), dtype="object")
         out = out.mask(~source.isin(wl), "bad_source")
         out = out.mask(n_tok.isna() | (n_tok != tok_len), "bad_n_tok")
@@ -149,76 +70,14 @@ def make_slim_validation_pandas_udf(whitelist: list[str]):
     return _reason
 
 
-def with_reason(df, whitelist: list[str], mode: str = "slim"):
-    """Append the validation ``reason`` column by the chosen vectorized
-    path: 'slim' (Arrow scalar UDF over narrow columns — engine default),
-    'arrow' (mapInArrow kernels over full batches), 'pandas' (pandas_udf
-    over the raw token arrays), or 'expr' (Catalyst whole-stage codegen).
-    All four are semantics-identical (tested)."""
-    if mode == "slim":
-        fn = make_slim_validation_pandas_udf(whitelist)
-        tok_len = (
-            F.when(F.col("tokens").isNull(), F.lit(None).cast("int"))
-            .otherwise(F.size("tokens"))
-        )
-        return df.withColumn(
-            "reason", fn(F.col("op"), tok_len, F.col("n_tok"), F.col("source"))
-        )
-    if mode == "arrow":
-        return with_reason_arrow(df, whitelist)
-    if mode == "pandas":
-        fn = make_validation_reason_pandas_udf(whitelist)
-        return df.withColumn(
-            "reason", fn(F.col("op"), F.col("tokens"), F.col("n_tok"), F.col("source"))
-        )
+def with_reason(df: DataFrame, whitelist: list[str]) -> DataFrame:
+    """Append the validation ``reason`` column (null = valid) through the
+    slim Arrow UDF."""
+    fn = make_slim_validation_pandas_udf(whitelist)
+    tok_len = (
+        F.when(F.col("tokens").isNull(), F.lit(None).cast("int"))
+        .otherwise(F.size("tokens"))
+    )
     return df.withColumn(
-        "reason",
-        validation_reason_expr(
-            F.col("op"), F.col("tokens"), F.col("n_tok"), F.col("source"), whitelist
-        ),
-    )
-
-
-def split_with_reason(df, whitelist: list[str], mode: str = "hybrid"):
-    """(valid, quarantine_with_reason) split by the chosen path.
-
-    ``hybrid`` (engine default): a whole-stage-codegen expression
-    pre-filters quarantine *candidates* JVM-side, and the Arrow-vectorized
-    UDF assigns the authoritative reason to only those rows — valid rows
-    (the overwhelming majority) never cross the Python boundary, so the
-    rule's "vectorized pandas/Arrow UDF, no per-row Python" validation
-    costs ~nothing on the hot path. Parity of the expression and the UDF
-    is pinned by tests (both must match the pure-Python oracle bitwise).
-    """
-    if mode == "hybrid":
-        expr_r = validation_reason_expr(
-            F.col("op"), F.col("tokens"), F.col("n_tok"), F.col("source"), whitelist
-        )
-        valid = df.filter(expr_r.isNull())
-        fn = make_slim_validation_pandas_udf(whitelist)
-        tok_len = (
-            F.when(F.col("tokens").isNull(), F.lit(None).cast("int"))
-            .otherwise(F.size("tokens"))
-        )
-        quar = df.filter(expr_r.isNotNull()).withColumn(
-            "reason", fn(F.col("op"), tok_len, F.col("n_tok"), F.col("source"))
-        )
-        return valid, quar
-    r = with_reason(df, whitelist, mode)
-    return r.filter(F.col("reason").isNull()).drop("reason"), r.filter(
-        F.col("reason").isNotNull()
-    )
-
-
-def split_valid_quarantine(df, whitelist: list[str], use_pandas_udf: bool = False):
-    """Add a ``reason`` column and split into (valid, quarantine) frames.
-
-    Single pass over the batch: the reason expression is computed once and
-    the two outputs are complementary filters on it (the reference instead
-    dropped invalid rows silently, ``repomix-output.xml:8519-8541``; the
-    north rule requires a quarantine path — P8 in SURVEY.md §2.2).
-    """
-    reasoned = with_reason(df, whitelist, mode="pandas" if use_pandas_udf else "expr")
-    return reasoned.filter(F.col("reason").isNull()).drop("reason"), reasoned.filter(
-        F.col("reason").isNotNull()
+        "reason", fn(F.col("op"), tok_len, F.col("n_tok"), F.col("source"))
     )

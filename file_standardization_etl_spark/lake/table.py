@@ -914,15 +914,6 @@ class LakeTable:
         its vocab-outbox stage here (transactional-outbox ordering:
         stage durable before watermark advance).
         """
-        _t = time.time()
-        _timing = os.environ.get("SPARK_CDC_TIMING") == "1"
-
-        def _mark(label):
-            nonlocal _t
-            if _timing:
-                print(f"[merge-timing] {label}: {time.time() - _t:.2f}s", flush=True)
-            _t = time.time()
-
         snap = self.snapshot()
         v = snap["version"]
         key = snap["key_column"]
@@ -945,7 +936,6 @@ class LakeTable:
                 self._commit(snap, v)
             return
 
-        _mark("affected")
         names = cur.names()
         new_names = list(delta.columns)
 
@@ -1023,9 +1013,7 @@ class LakeTable:
                 .withColumn("_bucket", bucket_expr(F.col(key), n_buckets))
                 .withColumn("_seq", F.lit(v + 1))
             )
-            _mark("build_plan")
             ddir, dbytes = self._write_delta(merged, key, v + 1, n_buckets, est_delta)
-            _mark("write_delta")
             if affected_buckets is not None:
                 # same superset invariant as CoW: an undeclared bucket's
                 # rows would sit in the shared file with no entry
@@ -1058,7 +1046,6 @@ class LakeTable:
             return
 
         old = self.read(buckets=affected)
-        _mark("plan_old")
         use_broadcast = broadcast_threshold_rows is not None and n <= broadcast_threshold_rows
 
         old_pref = old.select([F.col(c).alias(f"__o_{c}") for c in old.columns])
@@ -1097,7 +1084,6 @@ class LakeTable:
             )
             merged = resolved(joined)
         merged = merged.withColumn("_bucket", bucket_expr(F.col(key), n_buckets))
-        _mark("build_plan")
 
         # output-size estimate = existing affected-bucket bytes + delta
         # bytes (caller-supplied from its staged files, else a row-count
@@ -1113,7 +1099,6 @@ class LakeTable:
         new_files = self._write_buckets(
             merged, v + 1, est_bytes=est, n_files_hint=len(affected)
         )
-        _mark("write_buckets")
         # Enforce the affected_buckets superset invariant (docstring): if
         # the delta wrote a bucket the caller didn't declare, committing
         # would drop that bucket's prior rows (files[b] replaced by a

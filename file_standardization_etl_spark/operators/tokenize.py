@@ -24,6 +24,9 @@ Scale notes:
 
 from __future__ import annotations
 
+import threading
+
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -402,12 +405,7 @@ def _gate_broadcast(df: DataFrame, mode, row_bytes):
     either way: the gate aggregate materializes the frame once and the
     downstream join reuses it instead of recomputing the corpus scan.
 
-    Cache lifetime: persisted gate frames are tracked in a bounded FIFO
-    (``_GATE_CACHE_MAX`` most recent); older ones are unpersisted
-    automatically so a resident session running many gated queries does
-    not accumulate block-store entries without bound — an evicted frame
-    that a still-pending plan references is simply recomputed.
-    ``clear_gate_caches()`` drops them all eagerly.
+    Cache lifetime: see :func:`persist_bounded`.
 
     ``row_bytes``: a Column estimating that row's in-memory bytes.
     """
@@ -415,12 +413,7 @@ def _gate_broadcast(df: DataFrame, mode, row_bytes):
         return F.broadcast(df)
     if mode is False:
         return df
-    from pyspark import StorageLevel
-
-    df = df.persist(StorageLevel.MEMORY_AND_DISK)
-    _GATE_CACHE.append(df)
-    while len(_GATE_CACHE) > _GATE_CACHE_MAX:
-        _GATE_CACHE.pop(0).unpersist()
+    df = persist_bounded(df)
     stats = df.agg(
         F.count(F.lit(1)).alias("n"),
         F.coalesce(F.sum(row_bytes), F.lit(0)).alias("b"),
@@ -433,18 +426,39 @@ def _gate_broadcast(df: DataFrame, mode, row_bytes):
     return df
 
 
-# Bounded FIFO of frames persisted by _gate_broadcast. The bound matters
-# most for the frames that FAILED the gate (the big ones, shuffled path):
-# without it a resident session would pin every one of them to
-# memory+disk for the JVM's life.
 _GATE_CACHE: list[DataFrame] = []
 _GATE_CACHE_MAX = 8
+_GATE_LOCK = threading.Lock()  # callers may persist from several threads
+
+
+def persist_bounded(df: DataFrame) -> DataFrame:
+    """Persist ``df`` (memory+disk) in a bounded FIFO: only the
+    ``_GATE_CACHE_MAX`` most recent frames stay persisted, so a resident
+    session running many gated queries does not pin every one (the big
+    frames that failed a gate above all) for the JVM's life. An evicted
+    frame that a still-pending plan references is simply recomputed;
+    :func:`clear_gate_caches` drops them all eagerly."""
+    df = df.persist(StorageLevel.MEMORY_AND_DISK)
+    with _GATE_LOCK:
+        # a re-persisted plan shares the cache entry of its earlier twin:
+        # move it to the newest slot rather than track it twice, since
+        # evicting the stale twin would uncache the plan the new one uses
+        _GATE_CACHE[:] = [f for f in _GATE_CACHE if not f.sameSemantics(df)]
+        _GATE_CACHE.append(df)
+        evicted = _GATE_CACHE[:-_GATE_CACHE_MAX]
+        del _GATE_CACHE[:-_GATE_CACHE_MAX]
+    for old in evicted:
+        old.unpersist()
+    return df
 
 
 def clear_gate_caches() -> None:
-    """Unpersist every gate frame _gate_broadcast is still holding."""
-    while _GATE_CACHE:
-        _GATE_CACHE.pop().unpersist()
+    """Unpersist every frame :func:`persist_bounded` is still holding."""
+    with _GATE_LOCK:
+        frames = list(_GATE_CACHE)
+        _GATE_CACHE.clear()
+    for df in frames:
+        df.unpersist()
 
 
 def dup_spans(
@@ -472,7 +486,9 @@ def dup_spans(
     auto; see :func:`_gate_broadcast`), shuffled semi-join otherwise.
     A hash collision can only ADD a gram to the
     gated set; the final filter re-applies ``min_docs`` on the exact
-    per-gram count, so the result is collision-proof. Reference scope:
+    per-gram count, so the result is collision-proof. Not fully lazy:
+    with ``broadcast_hot=None`` the gate runs one eager Spark job while
+    this call builds the plan. Reference scope:
     the reference dedups rows by business key (file_standardization_job
     .py:214 drop_duplicates); span-level corpus dedup is the
     training-data extension of that same exact-match family.
@@ -627,7 +643,9 @@ def strip_dup_spans(
     Gating, keeper election, and skew behavior: :func:`_masked_positions`.
     Per-doc coverage explodes each masked span into its n positions
     row-locally (bounded by n) and hash-aggregates distinct positions —
-    no per-doc buffer is ever collected. For the rewritten corpus (the
+    no per-doc buffer is ever collected. Not fully lazy: with
+    ``broadcast_hot=None`` each of the two gates runs one eager Spark job
+    while this call builds the plan. For the rewritten corpus (the
     artifact a training pipeline consumes) see
     :func:`strip_dup_spans_rewrite`.
     """

@@ -23,8 +23,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..cdc.dedup import lww_maxby
-
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
@@ -52,12 +50,14 @@ def q_cdc_lww_state(spark, sf_dir):
         F.col("event_type"),
         F.col("value"),
     )
-    out = lww_maxby(ev, key="user_id", order="lsn")
+    out = ev.groupBy("user_id").agg(
+        F.max_by(F.struct("lsn", "event_type", "value"), F.col("lsn")).alias("__r")
+    )
     return out.select(
         "user_id",
-        F.col("lsn").alias("last_lsn"),
-        F.col("event_type").alias("last_type"),
-        F.col("value").alias("last_value"),
+        F.col("__r.lsn").alias("last_lsn"),
+        F.col("__r.event_type").alias("last_type"),
+        F.col("__r.value").alias("last_value"),
     )
 
 

@@ -9,7 +9,26 @@ from __future__ import annotations
 
 import os
 
+from pyspark import SparkConf
 from pyspark.sql import SparkSession
+
+# a resident engine compiles thousands of whole-stage-codegen classes (one
+# per stage per query); JDK 17's default 240 MB ReservedCodeCacheSize fills
+# after a few hundred stages and the JIT then runs expression-heavy codegen
+# interpreted/recompiling (measured: the 54-format date battery at 2.7 s
+# steady-state in a fresh JVM degrades to 6.5-7 s late in a long bench
+# session). Applies at JVM launch only — i.e. to the process's FIRST session.
+CODE_CACHE_OPT = "-XX:ReservedCodeCacheSize=512m"
+
+
+def driver_java_options(existing: str | None) -> str:
+    """``spark.driver.extraJavaOptions`` with the code-cache flag appended
+    to whatever the deployment already passes (a deployment that sizes the
+    code cache itself keeps its own value)."""
+    existing = (existing or "").strip()
+    if "ReservedCodeCacheSize" in existing:
+        return existing
+    return f"{existing} {CODE_CACHE_OPT}".strip()
 
 
 def get_spark(
@@ -49,20 +68,12 @@ def get_spark(
         # MERGE writes many small per-bucket files per micro-batch
         .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
-        # a resident engine compiles thousands of whole-stage-codegen
-        # classes (one per stage per query); JDK 17's default 240 MB
-        # ReservedCodeCacheSize fills after a few hundred stages and the
-        # JIT then runs expression-heavy codegen interpreted/recompiling
-        # (measured: the 54-format date battery at 2.7 s steady-state in
-        # a fresh JVM degrades to 6.5-7 s late in a long bench session).
-        # Applies at JVM launch only — i.e. to the process's FIRST session
-        .config(
-            "spark.driver.extraJavaOptions",
-            "-XX:ReservedCodeCacheSize=512m",
-        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
-    for k, v in (extra_conf or {}).items():
+    conf = dict(extra_conf or {})
+    key = "spark.driver.extraJavaOptions"
+    conf[key] = driver_java_options(conf.get(key) or SparkConf().get(key))
+    for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

@@ -192,13 +192,6 @@ def write_jdbc(df: DataFrame, url: str, table: str, mode: str = "append", **opti
     ).mode(mode).save()
 
 
-def write_wal_segment(df: DataFrame, log_dir: str, coalesce: int | None = None) -> None:
-    """Append one WAL segment (a set of parquet files) to the change-log
-    directory consumed by the streaming runner."""
-    w = df.coalesce(coalesce) if coalesce else df
-    w.write.mode("append").parquet(log_dir)
-
-
 def documents_as_change_events(docs: DataFrame, lsn_start: int = 1) -> DataFrame:
     """Bridge the shared `documents` fixture into the change-event shape
     (FIXTURES.md §6): deterministic md5-based tokenization of `text`, doc_id
@@ -316,7 +309,7 @@ def rewrites_as_update_events(
     rewrite side broadcast-eligible, and LSNs are assigned with the same
     partition-parallel numbering as the WAL bridge.
     """
-    from pyspark import StorageLevel
+    from ..operators.tokenize import persist_bounded
 
     src = state.select(F.col("doc_id").cast("string").alias("doc_id"), "source")
     base = (
@@ -331,8 +324,10 @@ def rewrites_as_update_events(
     # job and the caller's write/apply is a second job, and without the
     # persist each would re-run the whole detect+rewrite pipeline
     # (including its table-state scans). The persist also pins the
-    # partitioning the per-partition offsets were computed from.
-    base = base.persist(StorageLevel.MEMORY_AND_DISK)
+    # partitioning the per-partition offsets were computed from. Tracked
+    # in the bounded gate FIFO, so a resident session never accumulates
+    # them; ``clear_gate_caches()`` releases it once the events are applied.
+    base = persist_bounded(base)
     numbered = assign_partition_parallel_lsns(base, lsn_start)
     empty = F.size("tokens") == 0
     return numbered.select(

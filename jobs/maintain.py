@@ -32,6 +32,48 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
+def dedup_correct(engine, n: int, wal_dir: str) -> dict:
+    """ExactSubstr corrective pass over ``engine``'s live state: persist
+    the corrective event segment under ``wal_dir``, then apply it through
+    the exactly-once merge. Returns the pass's report."""
+    from file_standardization_etl_spark.operators.tokenize import clear_gate_caches
+
+    from_lsn = engine.applied_lsn() + 1
+    seg = os.path.join(wal_dir, f"from_lsn_{from_lsn}")
+    # Persist-then-apply, resumable: a COMMITTED segment (_SUCCESS) at the
+    # current watermark means a previous pass either crashed between write
+    # and apply, or applied an all-no-op segment (empty / all-quarantined —
+    # the watermark didn't move). Re-applying THAT segment is the correct
+    # action in both cases: its events were generated against the state a
+    # half-applied pass may already have changed, and re-application is
+    # LSN-idempotent. A segment dir without the marker is a write that
+    # crashed midway (the v2 output committer leaves its finished tasks'
+    # files readable); nothing of it was applied, so it is regenerated.
+    # New corrections can only exist once new events moved the watermark,
+    # which changes the path.
+    resumed = os.path.exists(os.path.join(seg, "_SUCCESS"))
+    if not resumed:
+        engine.dedup_correct_events(n=n).write.mode("overwrite").parquet(seg)
+    # idempotency is LSN-based; the batch id is informational (lineage,
+    # quarantine paths) — continue the table's own numbering
+    next_bid = int(engine.table.properties().get("last_batch_id", -1)) + 1
+    m = engine.apply_batch(engine.spark.read.parquet(seg), batch_id=next_bid)
+    # the detect/rewrite frames persisted for this pass are done with
+    clear_gate_caches()
+    return {
+        "n": n,
+        "segment": seg,
+        "resumed_existing_segment": resumed,
+        "rows_in": m.rows_in,
+        "rows_upserts": m.rows_upserts,
+        "rows_deletes": m.rows_deletes,
+        # non-zero here means corrections were REJECTED (e.g. the engine's
+        # whitelist is narrower than what previously admitted these
+        # sources — rerun with --whitelist)
+        "rows_quarantined": m.rows_quarantined,
+    }
+
+
 def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("--table-dir", required=True)
@@ -133,40 +175,11 @@ def main():
     if args.compact_quarantine:
         report["quarantine_rows_archived"] = engine.compact_quarantine()
     if args.dedup_correct:
-        from_lsn = engine.applied_lsn() + 1
-        seg = os.path.join(
+        report["dedup_correct"] = dedup_correct(
+            engine,
+            args.dedup_correct,
             args.corrective_wal_dir or (args.table_dir.rstrip("/") + "_corrective"),
-            f"from_lsn_{from_lsn}",
         )
-        # Persist-then-apply, resumable: an EXISTING segment at the current
-        # watermark means a previous pass either crashed between write and
-        # apply, or applied an all-no-op segment (empty / all-quarantined —
-        # the watermark didn't move). Re-applying THAT segment is the
-        # correct action in both cases: its events were generated against
-        # the state a half-applied pass may already have changed, and
-        # re-application is LSN-idempotent. New corrections can only exist
-        # once new events moved the watermark, which changes the path.
-        resumed = os.path.isdir(seg)
-        if not resumed:
-            engine.dedup_correct_events(n=args.dedup_correct).write.mode(
-                "error"
-            ).parquet(seg)
-        # idempotency is LSN-based; the batch id is informational (lineage,
-        # quarantine paths) — continue the table's own numbering
-        next_bid = int(engine.table.properties().get("last_batch_id", -1)) + 1
-        m = engine.apply_batch(spark.read.parquet(seg), batch_id=next_bid)
-        report["dedup_correct"] = {
-            "n": args.dedup_correct,
-            "segment": seg,
-            "resumed_existing_segment": resumed,
-            "rows_in": m.rows_in,
-            "rows_upserts": m.rows_upserts,
-            "rows_deletes": m.rows_deletes,
-            # non-zero here means corrections were REJECTED (e.g. the
-            # engine's whitelist is narrower than what previously admitted
-            # these sources — rerun with --whitelist)
-            "rows_quarantined": m.rows_quarantined,
-        }
     if args.expire_snapshots:
         report["gc"] = engine.table.expire_snapshots(
             keep_last=args.expire_snapshots, grace_seconds=args.gc_grace

@@ -11,6 +11,12 @@ Cluster usage (the north-rule deployment shape)::
 Local smoke::
 
     python jobs/run_cdc.py --log-dir /tmp/wal --table-dir /tmp/lake --synthesize 100000
+
+Each micro-batch runs one fixed path: a Catalyst expression routes rows
+to the merge or to quarantine, and a single Arrow UDF assigns the
+quarantine reason to the invalid slice only (``functions/validation.py``).
+``--salt-threshold`` is the one dedup knob: chunks at or above it use the
+two-phase salted last-writer-wins (``cdc/dedup.py``).
 """
 
 from __future__ import annotations
@@ -35,10 +41,6 @@ def main():
         help="rows/chunk above which the two-phase salted LWW engages "
         "(max_by already pre-reduces hot keys map-side; lower only for "
         "adversarial distributions)",
-    )
-    ap.add_argument(
-        "--validation-mode", default="hybrid",
-        choices=["hybrid", "slim", "arrow", "pandas", "expr"],
     )
     ap.add_argument("--synthesize", type=int, default=0, help="generate N synthetic events into --log-dir first")
     ap.add_argument(
@@ -73,7 +75,6 @@ def main():
         args.table_dir,
         n_buckets=args.n_buckets,
         salt_threshold=args.salt_threshold,
-        validation_mode=args.validation_mode,
         maintain_vocab=args.maintain_vocab,
     )
     engine.init()

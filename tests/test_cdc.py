@@ -6,7 +6,7 @@ from __future__ import annotations
 import pytest
 
 from file_standardization_etl_spark.cdc.apply import CdcEngine
-from file_standardization_etl_spark.cdc.dedup import lww_maxby, lww_maxby_salted, lww_window
+from file_standardization_etl_spark.cdc.dedup import lww_winners
 from file_standardization_etl_spark.cdc.events import (
     EventGenConfig,
     events_df,
@@ -145,14 +145,22 @@ def test_hot_key_salted_path_equals_unsalted(spark, tmp_path):
 
 
 def test_lww_variants_agree(spark):
+    """dedup's LWW, salted and unsalted, picks the oracle's winner per doc
+    (greatest lsn, its op) and counts the doc's rows."""
     cfg = EventGenConfig(n_events=5000, n_docs=50, seed=17, zipf_a=1.1)
-    df = events_df(spark, generate_events(cfg)).filter("op != 'schema_change'")
-    cols = ["doc_id", "lsn", "op", "n_tok"]
-    a = {tuple(r) for r in lww_maxby(df.select(*cols)).collect()}
-    b = {tuple(r) for r in lww_maxby_salted(df.select(*cols), salt_buckets=8).collect()}
-    c = {tuple(r) for r in lww_window(df.select(*cols)).collect()}
-    d = {tuple(r) for r in lww_window(df.select(*cols), salt_buckets=8).collect()}
-    assert a == b == c == d
+    events = [e for e in generate_events(cfg) if e["op"] != "schema_change"]
+    want: dict = {}
+    for e in sorted(events, key=lambda e: e["lsn"]):
+        cnt = want.get(e["doc_id"], (0, False, 0))[2]
+        want[e["doc_id"]] = (e["lsn"], e["op"] == "delete", cnt + 1)
+    df = events_df(spark, events)
+    for salted in (False, True):
+        got = {
+            r["doc_id"]: (r["lsn"], r["win_del"], r["cnt"])
+            for r in lww_winners(df, salted=salted).collect()
+        }
+        assert got == want, f"salted={salted}"
+    assert any(d for _, d, _ in want.values())  # fixture has delete winners
 
 
 def test_manifest_lineage(spark, tmp_path):

@@ -511,3 +511,71 @@ def test_fuzz_maintenance_interleaved_with_ingest(spark, tmp_path):
         eng._vocab.fold_ready()
         assert maintained(eng) == recompute(eng), f"case {case} ops {ops_run}"
     assert ops_seen >= {"compact", "expire", "rebucket", "gc", "requeue"}, ops_seen
+
+
+def _dup_engine(spark, path):
+    """dup0..dup2 share a 4-token span (dup0 keeps it); `other` has none."""
+    engine = CdcEngine(spark, path)
+    engine.init()
+    boiler = [3, 5, 7, 9]
+    rows = [
+        {"lsn": 1 + j, "op": "insert", "doc_id": f"dup{j}",
+         "tokens": [400 + j] + boiler + [500 + j], "n_tok": 6,
+         "source": "web", "schema_change": None, "ts": None}
+        for j in range(3)
+    ] + [
+        {"lsn": 4, "op": "insert", "doc_id": "other", "tokens": [1, 2],
+         "n_tok": 2, "source": "web", "schema_change": None, "ts": None}
+    ]
+    engine.apply_batch(events_df(spark, rows), batch_id=0)
+    return engine
+
+
+def _live(engine):
+    return {r["doc_id"]: list(r["tokens"]) for r in engine.state().collect()}
+
+
+def test_dedup_correct_regenerates_uncommitted_segment(spark, tmp_path):
+    """A corrective segment whose write crashed midway (files readable, no
+    _SUCCESS) was never applied: the next pass regenerates it from the
+    live state instead of applying the partial events."""
+    import os
+
+    from jobs.maintain import dedup_correct
+
+    engine = _dup_engine(spark, str(tmp_path / "cdc"))
+    wal = str(tmp_path / "corrective")
+    seg = os.path.join(wal, f"from_lsn_{engine.applied_lsn() + 1}")
+    bogus = [{"lsn": engine.applied_lsn() + 1, "op": "delete", "doc_id": "other",
+              "tokens": None, "n_tok": None, "source": None,
+              "schema_change": None, "ts": None}]
+    events_df(spark, bogus).write.parquet(seg)
+    os.remove(os.path.join(seg, "_SUCCESS"))
+
+    rep = dedup_correct(engine, 4, wal)
+    assert rep["resumed_existing_segment"] is False
+    assert rep["rows_in"] == 2 and rep["rows_deletes"] == 0
+    assert os.path.exists(os.path.join(seg, "_SUCCESS"))
+    assert _live(engine) == {
+        "dup0": [400, 3, 5, 7, 9, 500],
+        "dup1": [401, 501],
+        "dup2": [402, 502],
+        "other": [1, 2],
+    }
+    # a committed segment at the (unmoved) watermark is resumed, not rebuilt
+    assert dedup_correct(engine, 4, wal)["resumed_existing_segment"] is False
+    again = dedup_correct(engine, 4, wal)
+    assert again["resumed_existing_segment"] is True and again["rows_in"] == 0
+
+
+def test_dedup_correct_releases_persisted_frames(spark, tmp_path):
+    """One corrective pass leaves no cached frame behind in the session."""
+    from file_standardization_etl_spark.operators.tokenize import clear_gate_caches
+    from jobs.maintain import dedup_correct
+
+    engine = _dup_engine(spark, str(tmp_path / "cdc"))
+    clear_gate_caches()
+    baseline = spark.sparkContext._jsc.getPersistentRDDs().size()
+    rep = dedup_correct(engine, 4, str(tmp_path / "corrective"))
+    assert rep["rows_in"] == 2
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == baseline

@@ -612,3 +612,68 @@ def test_dup_span_hot_gate_is_measured_not_assumed(spark, docs, monkeypatch):
         assert "BroadcastHashJoin" not in top
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+
+
+def test_persist_bounded_fifo_is_thread_safe(monkeypatch):
+    """Concurrent persists never evict below _GATE_CACHE_MAX frames, keep
+    exactly that many, and unpersist every other frame exactly once."""
+    import sys
+    import threading
+
+    from file_standardization_etl_spark.operators import tokenize
+
+    short = []  # cache sizes seen below the bound at an eviction
+
+    class Frame:
+        def __init__(self):
+            self.unpersists = 0
+
+        def persist(self, level):
+            return self
+
+        def sameSemantics(self, other):
+            return self is other
+
+        def unpersist(self):
+            self.unpersists += 1
+            if len(tokenize._GATE_CACHE) < tokenize._GATE_CACHE_MAX:
+                short.append(len(tokenize._GATE_CACHE))
+
+    monkeypatch.setattr(tokenize, "_GATE_CACHE", [])
+    frames = [Frame() for _ in range(16 * 300)]
+
+    def work(fs):
+        for f in fs:
+            tokenize.persist_bounded(f)
+
+    threads = [threading.Thread(target=work, args=(frames[i::16],)) for i in range(16)]
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert not short
+    kept = {id(f) for f in tokenize._GATE_CACHE}
+    assert len(kept) == tokenize._GATE_CACHE_MAX
+    assert all(f.unpersists == (0 if id(f) in kept else 1) for f in frames)
+
+
+def test_persist_bounded_keeps_repersisted_plan_cached(spark, monkeypatch):
+    """Persisting the same plan again (a re-run of a gated query) must not
+    leave a stale twin in the FIFO whose eviction uncaches the live plan."""
+    from file_standardization_etl_spark.operators import tokenize
+
+    monkeypatch.setattr(tokenize, "_GATE_CACHE", [])
+    try:
+        tokenize.persist_bounded(spark.range(10).filter("id > 1"))
+        for i in range(tokenize._GATE_CACHE_MAX - 1):
+            tokenize.persist_bounded(spark.range(20 + i))
+        again = tokenize.persist_bounded(spark.range(10).filter("id > 1"))
+        assert again.storageLevel.useMemory
+    finally:
+        tokenize.clear_gate_caches()

@@ -32,6 +32,16 @@ _PYSPARK_SUBMIT = os.path.join(
 SPARK_SUBMIT = _PYSPARK_SUBMIT if os.path.exists(_PYSPARK_SUBMIT) else shutil.which("spark-submit")
 
 
+def _last_report(stdout: str) -> dict:
+    """The report is the LAST JSON object on stdout (indent=1, multi-line):
+    parse from the last line-initial '{' so an earlier brace-bearing log
+    line cannot corrupt the parse, or from the first '{' when the report
+    starts at byte 0."""
+    nl = stdout.rfind("\n{")
+    start = nl + 1 if nl >= 0 else stdout.index("{")
+    return json.loads(stdout[start : stdout.rindex("}") + 1])
+
+
 def _state_dict(engine):
     return {
         r["doc_id"]: (list(r["tokens"]), r["n_tok"], r["source"], r["last_lsn"])
@@ -137,11 +147,7 @@ def test_spark_submit_py_files_replay_matches_oracle(spark, tmp_path):
         cwd=str(scratch), env=env, capture_output=True, text=True, timeout=600,
     )
     assert proc.returncode == 0, f"maintain failed:\n{proc.stdout[-3000:]}\n{proc.stderr[-3000:]}"
-    # the report is the LAST JSON object on stdout (indent=1, multi-line);
-    # slice from the last line-initial '{' so an earlier brace-bearing log
-    # line cannot corrupt the parse
-    start = proc.stdout.rindex("\n{") + 1
-    report = json.loads(proc.stdout[start : proc.stdout.rindex("}") + 1])
+    report = _last_report(proc.stdout)
     assert report["dedup_correct"]["rows_in"] == 2  # dup1, dup2 (dup0 keeps)
     assert report["dedup_correct"]["rows_deletes"] == 0
     eng2 = CdcEngine(spark, str(table_dir))
@@ -180,7 +186,6 @@ def test_spark_submit_py_files_replay_matches_oracle(spark, tmp_path):
         assert proc.returncode == 0, (
             f"repeat maintain failed:\n{proc.stdout[-3000:]}\n{proc.stderr[-3000:]}"
         )
-        start = proc.stdout.rindex("\n{") + 1
-        rep = json.loads(proc.stdout[start : proc.stdout.rindex("}") + 1])
+        rep = _last_report(proc.stdout)
         assert rep["dedup_correct"]["rows_in"] == 0
         assert rep["dedup_correct"]["resumed_existing_segment"] is expect_resumed

@@ -39,8 +39,8 @@ AUDIT = {
     "join_anti_unshipped": ["BroadcastHashJoin LeftAnti", "PushedFilters"],
     "join_scalar_subquery": ["BroadcastHashJoin"],
     # max_by(struct) aggregates a struct buffer -> sort-based partial+final
-    # agg; still map-side combined (the scale path in cdc/apply.py uses the
-    # all-primitive encoded max -> HashAggregate; the narrow LWW now lives inline in cdc/apply.py apply_batch)
+    # agg; still map-side combined (the engine's LWW, cdc/dedup.py
+    # lww_winners, uses the all-primitive encoded max -> HashAggregate)
     "cdc_lww_state": ["SortAggregate", "Exchange"],
     "window_ffill": ["Window", "Sort"],
     "order_topk": ["TakeOrderedAndProject"],
@@ -161,7 +161,7 @@ AUDIT = {
     "tokens_hash_split": ["Project"],
     "tokens_clean_train": ["BroadcastHashJoin", "HashAggregate"],
     # LWW replay state: max_by(struct) partial+final (same trade as
-    # cdc_lww_state); all-primitive variants live in cdc/apply.py
+    # cdc_lww_state); the engine's all-primitive LWW is cdc/dedup.py
     "cdc_replay_state": ["SortAggregate", "Exchange"],
     "cdc_validate_split": ["HashAggregate"],
     "join_derived_key": ["BroadcastHashJoin"],
