@@ -311,68 +311,48 @@ def run_cdc_incremental(
 ) -> dict:
     """The live-table scenario the merge-on-read path exists for: seed a
     populated lake table, then apply small micro-batches and time ONLY
-    the incremental applies. Round 2's copy-on-write merge rewrote every
-    affected bucket per micro-batch — O(table's hot buckets) I/O for a
-    20k-row delta; the MOR stack commits O(delta) files instead. Reported
-    per mode so the structural win is measured, not argued (same inputs,
-    same JVM, back-to-back)."""
+    the incremental applies (the engine's default ``auto`` merge: MOR
+    delta stacks that fold back copy-on-write)."""
     from file_standardization_etl_spark.cdc.apply import CdcEngine
     from file_standardization_etl_spark.cdc.events import spark_generate_events
 
-    out = {}
-    for mode in ("cow", "auto"):
-        walls = []
-        merges = []
-        for r in range(repeats):
-            work = tempfile.mkdtemp(prefix=f"bench_incr_{mode}_")
-            eng = CdcEngine(
-                spark, os.path.join(work, "lake"), n_buckets=64, merge_mode=mode
-            )
-            eng.init()
+    walls = []
+    merges = []
+    for r in range(repeats):
+        work = tempfile.mkdtemp(prefix="bench_incr_")
+        eng = CdcEngine(spark, os.path.join(work, "lake"), n_buckets=64)
+        eng.init()
+        eng.apply_batch(
+            spark_generate_events(spark, n_seed, n_docs=n_docs, lsn_start=1),
+            batch_id=0,
+        )
+        merge0 = eng.timings.get("merge", 0.0)
+        t0 = time.time()
+        lsn = n_seed + 1
+        for b in range(1, n_batches + 1):
             eng.apply_batch(
-                spark_generate_events(spark, n_seed, n_docs=n_docs, lsn_start=1),
-                batch_id=0,
+                spark_generate_events(spark, batch_rows, n_docs=n_docs, lsn_start=lsn),
+                batch_id=b,
             )
-            merge0 = eng.timings.get("merge", 0.0)
-            t0 = time.time()
-            lsn = n_seed + 1
-            for b in range(1, n_batches + 1):
-                eng.apply_batch(
-                    spark_generate_events(
-                        spark, batch_rows, n_docs=n_docs, lsn_start=lsn
-                    ),
-                    batch_id=b,
-                )
-                lsn += batch_rows
-            walls.append(time.time() - t0)
-            merges.append(eng.timings.get("merge", 0.0) - merge0)
-            shutil.rmtree(work, ignore_errors=True)
-        best = min(walls)
-        out[mode] = {
-            "sec_per_batch": round(best / n_batches, 3),
-            "events_per_sec": round(batch_rows * n_batches / best, 1),
-            "runs_sec": [round(w, 2) for w in walls],
-            # merge phase alone (engine _mark timings): the micro-batch
-            # pipeline carries fixed per-batch cost (LWW, lineage, routed
-            # write) identical across modes — the structural CoW-vs-MOR
-            # difference is the commit, so report it unmasked
-            "merge_sec_per_batch": round(min(merges) / n_batches, 3),
-        }
-    out["mor_speedup"] = round(
-        out["cow"]["sec_per_batch"] / out["auto"]["sec_per_batch"], 2
-    )
-    out["mor_merge_speedup"] = round(
-        out["cow"]["merge_sec_per_batch"]
-        / max(out["auto"]["merge_sec_per_batch"], 1e-9),
-        2,
-    )
-    out["config"] = {
-        "n_seed": n_seed,
-        "n_batches": n_batches,
-        "batch_rows": batch_rows,
-        "n_docs": n_docs,
+            lsn += batch_rows
+        walls.append(time.time() - t0)
+        merges.append(eng.timings.get("merge", 0.0) - merge0)
+        shutil.rmtree(work, ignore_errors=True)
+    best = min(walls)
+    return {
+        "sec_per_batch": round(best / n_batches, 3),
+        "events_per_sec": round(batch_rows * n_batches / best, 1),
+        "runs_sec": [round(w, 2) for w in walls],
+        # merge phase alone (engine _mark timings), unmasked by the fixed
+        # per-batch cost (LWW, lineage, routed write)
+        "merge_sec_per_batch": round(min(merges) / n_batches, 3),
+        "config": {
+            "n_seed": n_seed,
+            "n_batches": n_batches,
+            "batch_rows": batch_rows,
+            "n_docs": n_docs,
+        },
     }
-    return out
 
 
 def run_changefeed(
@@ -578,48 +558,29 @@ def run_vocab_maintenance(
     # EVERY bucket, so the stage's "pruned" old-side read was a
     # full-corpus scan and the speedup-vs-recompute number measured a
     # degenerate geometry (see run_vocab_crossover for the sweep)
-    out = {}
-    # each fold policy gets its OWN freshly seeded table: reusing one
-    # table made the second policy inherit the first's MOR delta stacks,
-    # conflating fold cadence with accumulated stack depth
-    for label, fe in (("fold_every_1", 1), ("fold_every_4", 4)):
-        work = tempfile.mkdtemp(prefix="bench_vocab_")
-        eng = CdcEngine(
-            spark, os.path.join(work, "lake"), n_buckets=2048, maintain_vocab=True
-        )
-        eng.init()
+    work = tempfile.mkdtemp(prefix="bench_vocab_")
+    eng = CdcEngine(
+        spark, os.path.join(work, "lake"), n_buckets=2048, maintain_vocab=True
+    )
+    eng.init()
+    eng.apply_batch(
+        spark_generate_events(spark, n_seed, n_docs=n_docs, lsn_start=1),
+        batch_id=0,
+    )
+    lsn = n_seed + 1
+    base_stage = eng.timings.get("vocab_stage", 0.0)
+    base_fold = eng.timings.get("vocab_fold", 0.0)
+    t0 = time.time()
+    for batch_id in range(1, n_batches + 1):
         eng.apply_batch(
-            spark_generate_events(spark, n_seed, n_docs=n_docs, lsn_start=1),
-            batch_id=0,
+            spark_generate_events(spark, batch_rows, n_docs=n_docs, lsn_start=lsn),
+            batch_id=batch_id,
         )
-        lsn = n_seed + 1
-        batch_id = 1
-        eng._vocab.fold_every = fe
-        base_stage = eng.timings.get("vocab_stage", 0.0)
-        base_fold = eng.timings.get("vocab_fold", 0.0)
-        t0 = time.time()
-        for _ in range(n_batches):
-            eng.apply_batch(
-                spark_generate_events(spark, batch_rows, n_docs=n_docs, lsn_start=lsn),
-                batch_id=batch_id,
-            )
-            lsn += batch_rows
-            batch_id += 1
-        t_drain = time.time()
-        eng._vocab.fold_ready()  # charge the deferred folds to this window
-        drain = time.time() - t_drain
-        wall = time.time() - t0
-        stage_sec = eng.timings.get("vocab_stage", 0.0) - base_stage
-        fold_sec = eng.timings.get("vocab_fold", 0.0) - base_fold + drain
-        per_batch = (stage_sec + fold_sec) / n_batches
-        out[label] = {
-            "maintain_sec_per_batch": round(per_batch, 3),
-            "stage_sec_per_batch": round(stage_sec / n_batches, 3),
-            "fold_sec_per_batch": round(fold_sec / n_batches, 3),
-            "incremental_wall_sec": round(wall, 2),
-        }
-        if label != "fold_every_4":  # last table feeds the recompute below
-            shutil.rmtree(work, ignore_errors=True)
+        lsn += batch_rows
+    wall = time.time() - t0
+    stage_sec = eng.timings.get("vocab_stage", 0.0) - base_stage
+    fold_sec = eng.timings.get("vocab_fold", 0.0) - base_fold
+    per_batch = round((stage_sec + fold_sec) / n_batches, 3)
 
     n_vocab = eng.vocab().count()
     t1 = time.time()
@@ -633,29 +594,28 @@ def run_vocab_maintenance(
     recompute_sec = time.time() - t1
     assert recompute >= n_vocab  # recompute includes nothing vocab misses
     shutil.rmtree(work, ignore_errors=True)
-    best = min(v["maintain_sec_per_batch"] for v in out.values())
-    out.update(
-        {
-            "maintain_sec_per_batch": best,
-            "recompute_sec": round(recompute_sec, 3),
-            # maintenance cost is flat in corpus size (delta-bounded);
-            # the recompute is a full token-array scan — linear. The
-            # ratio at this sf understates the 10^10-event gap by the
-            # corpus-size ratio.
-            "refresh_speedup_vs_recompute": round(recompute_sec / max(best, 1e-9), 2),
-            # single-geometry number; the corpus-growth sweep that shows
-            # the crossover widening is run_vocab_crossover
-            "see_also": "vocab_crossover",
-            "n_vocab_tokens": n_vocab,
-            "config": {
-                "n_seed": n_seed,
-                "n_batches": n_batches,
-                "batch_rows": batch_rows,
-                "n_docs": n_docs,
-            },
-        }
-    )
-    return out
+    return {
+        "maintain_sec_per_batch": per_batch,
+        "stage_sec_per_batch": round(stage_sec / n_batches, 3),
+        "fold_sec_per_batch": round(fold_sec / n_batches, 3),
+        "incremental_wall_sec": round(wall, 2),
+        "recompute_sec": round(recompute_sec, 3),
+        # maintenance cost is flat in corpus size (delta-bounded);
+        # the recompute is a full token-array scan — linear. The
+        # ratio at this sf understates the 10^10-event gap by the
+        # corpus-size ratio.
+        "refresh_speedup_vs_recompute": round(recompute_sec / max(per_batch, 1e-9), 2),
+        # single-geometry number; the corpus-growth sweep that shows
+        # the crossover widening is run_vocab_crossover
+        "see_also": "vocab_crossover",
+        "n_vocab_tokens": n_vocab,
+        "config": {
+            "n_seed": n_seed,
+            "n_batches": n_batches,
+            "batch_rows": batch_rows,
+            "n_docs": n_docs,
+        },
+    }
 
 
 def _time_streaming_ops(
@@ -908,7 +868,7 @@ def main():
     cdc["bootstrap"] = run_bootstrap(spark)
     cdc["requeue"] = run_requeue(spark)
     queries = {"cdc_full_replay": cdc["replay_sec"]}
-    queries["cdc_incremental_batch"] = cdc["incremental"]["auto"]["sec_per_batch"]
+    queries["cdc_incremental_batch"] = cdc["incremental"]["sec_per_batch"]
     queries["cdc_bootstrap"] = cdc["bootstrap"]["bootstrap_sec"]
     queries["vocab_maintain_batch"] = cdc["vocab_maintenance"]["maintain_sec_per_batch"]
     queries["cdc_requeue"] = cdc["requeue"]["requeue_sec"]
@@ -955,7 +915,7 @@ def main():
             "events": cdc["events"],
             "replay_sec": cdc["replay_sec"],
             "events_per_sec": cdc["events_per_sec"],
-            "mor_merge_speedup": cdc["incremental"]["mor_merge_speedup"],
+            "incremental_merge_sec_per_batch": cdc["incremental"]["merge_sec_per_batch"],
             "bootstrap_speedup": cdc["bootstrap"]["speedup_vs_history_replay"],
             "requeue_rescued_per_sec": cdc["requeue"]["rescued_events_per_sec"],
             "vocab_crossover_speedup": [

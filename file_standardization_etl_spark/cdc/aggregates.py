@@ -61,13 +61,6 @@ class TokenVocab:
         target: LakeTable,
         fids: tuple[int, int, int, int],
         n_buckets: int = 8,
-        # fold the outbox into the vocab table every N staged deltas.
-        # 1 = fold right after each merge (vocab always materialized
-        # fresh); >1 amortizes the fold's fixed cost across batches —
-        # reads stay exact either way because :meth:`counts` folds every
-        # ready pending delta first (fold-on-read), and crash recovery
-        # already replays arbitrary backlogs.
-        fold_every: int = 1,
     ):
         self.spark = spark
         self.root = os.path.abspath(root)
@@ -77,7 +70,6 @@ class TokenVocab:
         # read, same binding rule as the merge resolver
         self._fid_doc, self._fid_tokens, self._fid_lsn, self._fid_deleted = fids
         self.n_buckets = n_buckets
-        self.fold_every = max(1, int(fold_every))
         self.table = LakeTable(spark, os.path.join(self.root, "vocab"))
         self.pending_dir = os.path.join(self.root, "vocab_pending")
 
@@ -153,56 +145,21 @@ class TokenVocab:
             return int(rv) <= int(p.get("folded_requeue_version", -1))
         return (int(meta["batch_id"]), int(meta["chunk"])) <= self._marker()
 
-    def fold_ready(self) -> int:
-        """Fold every pending delta whose target merge has committed
-        (watermark at or below the target's applied LSN); returns how
-        many folded. A stream backlog folds as ONE combined merge (union
-        the staged parquet, re-sum by token, single commit at the max
-        marker) — this is what makes ``fold_every > 1`` an amortization
-        instead of a deferral. Pendings beyond the watermark are left in
-        place — mid-run that just means their merge hasn't happened yet.
-        Requeue pendings (rare, version-markered) fold individually."""
+    def fold_ready(self) -> None:
+        """Fold, in staging order, every pending delta whose target merge
+        has committed (:meth:`_merge_committed`); :meth:`fold` drops one
+        whose fold already committed. Pendings beyond the watermark are
+        left in place — mid-run that just means their merge hasn't
+        happened yet."""
         applied = int(self.target.properties().get("max_applied_lsn", 0))
         version = self.target.current_version()
-        ready = []
-        folded = 0
         for pend, meta in self._pending():
-            if meta is None or not self._merge_committed(meta, applied, version):
-                continue
-            if self._already_folded(meta):
-                shutil.rmtree(pend, ignore_errors=True)  # fold committed, delete died
-            elif meta.get("requires_version") is not None:
+            if meta is not None and self._merge_committed(meta, applied, version):
                 self.fold(pend)
-                folded += 1
-            else:
-                ready.append((pend, meta))
-        if not ready:
-            return folded
-        if len(ready) == 1:
-            self.fold(ready[0][0])
-            return folded + 1
-        d = (
-            self.spark.read.parquet(*[os.path.join(p, "data") for p, _ in ready])
-            .groupBy("token")
-            .agg(F.sum("d_occ").alias("d_occ"), F.sum("d_docs").alias("d_docs"))
-        )
-        mark = max((int(m["batch_id"]), int(m["chunk"])) for _, m in ready)
-        self.table.merge(
-            d,
-            self._resolve,
-            properties_update={"folded_batch": mark[0], "folded_chunk": mark[1]},
-            delta_rows=sum(int(m.get("n_rows", 0)) for _, m in ready),
-            affected_buckets=list(range(self.table.snapshot()["n_buckets"])),
-            mode="cow",
-        )
-        for pend, _ in ready:
-            shutil.rmtree(pend, ignore_errors=True)
-        return folded + len(ready)
 
     def maybe_fold(self) -> None:
-        """Post-merge hook: fold once the outbox reaches ``fold_every``."""
-        ready = [m for _, m in self._pending() if m is not None]
-        if len(ready) >= self.fold_every:
+        """Post-merge hook: fold whatever the outbox holds."""
+        if any(meta is not None for _, meta in self._pending()):
             self.fold_ready()
 
     def recover(self) -> None:
@@ -211,15 +168,12 @@ class TokenVocab:
         applied = int(self.target.properties().get("max_applied_lsn", 0))
         version = self.target.current_version()
         for pend, meta in self._pending():
-            if meta is None:
-                # crash mid-stage (meta is written last): never folded,
-                # never committed against — redelivery re-stages it
-                shutil.rmtree(pend, ignore_errors=True)
-            elif self._merge_committed(meta, applied, version):
+            if meta is not None and self._merge_committed(meta, applied, version):
                 self.fold(pend)
             else:
-                # merge never committed: the chunk will be redelivered
-                # and the delta re-staged bit-identically
+                # crash mid-stage (meta is written last) or merge never
+                # committed: the chunk will be redelivered and its delta
+                # re-staged bit-identically
                 shutil.rmtree(pend, ignore_errors=True)
 
     # ---------- per-chunk maintenance ----------
@@ -457,7 +411,7 @@ class TokenVocab:
     def counts(self) -> DataFrame:
         """(token, n_occ, n_docs) for every token with live occurrences.
         Folds any ready outbox backlog first, so reads are exact even
-        with ``fold_every > 1``. Zero rows (every occurrence
+        between a merge's commit and its fold. Zero rows (every occurrence
         deleted/replaced away) are retained physically and filtered here
         — cheaper than delete-on-zero churn for tokens that oscillate in
         and out of the corpus."""

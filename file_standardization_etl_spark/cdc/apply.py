@@ -119,21 +119,11 @@ class CdcEngine:
         # cardinality overflows the agg hash table.
         salt_threshold: int = 500_000_000,
         n_buckets: int = 16,
-        # merge commit strategy, passed to LakeTable.merge. The CDC
-        # resolver is LWW-by-LSN with a monotone watermark — exactly the
-        # contract merge-on-read requires — so "auto" is safe: micro-batch
-        # deltas append O(delta) MOR files and the occasional oversized
-        # delta / deep stack folds back copy-on-write. "cow" forces the
-        # round-2 behavior (every merge rewrites its affected buckets).
-        merge_mode: str = "auto",
         # maintain the token-frequency aggregate (cdc/aggregates.py)
         # incrementally alongside every merge — O(delta) per chunk vs
         # O(corpus) per recompute; opt-in because it adds a bucket-pruned
         # old-side read + two explode passes per chunk
         maintain_vocab: bool = False,
-        # fold the vocab outbox every N staged deltas (amortizes the
-        # fold's fixed cost; reads stay exact via fold-on-read)
-        vocab_fold_every: int = 1,
     ):
         self.spark = spark
         self.table_path = os.path.abspath(table_path)
@@ -146,7 +136,6 @@ class CdcEngine:
         # chunks with more rows than this use the two-phase salted LWW
         self.salt_threshold = salt_threshold
         self.n_buckets = n_buckets
-        self.merge_mode = merge_mode
         self.table = LakeTable(spark, os.path.join(self.table_path, "target"))
         self._vocab = None
         if maintain_vocab:
@@ -157,7 +146,6 @@ class CdcEngine:
                 self.table_path,
                 self.table,
                 fids=(FID_DOC, FID_TOKENS, FID_LSN, FID_DELETED),
-                fold_every=vocab_fold_every,
             )
         # one pool per engine: quarantine writes + lineage scans run as
         # concurrent Spark jobs overlapping the LWW/merge critical path
@@ -908,7 +896,7 @@ class CdcEngine:
         affected_buckets: list[int] | None = None,
         delta_bytes: int | None = None,
         pre_commit=None,
-        mode: str | None = None,
+        mode: str = "auto",
     ) -> None:
         n = self._names()
         key = n[FID_DOC]
@@ -930,8 +918,8 @@ class CdcEngine:
         def resolve(old: dict, new: dict) -> dict:
             # The merged-row expressions depend only on column NAMES, so
             # the Column tree is cached per schema version: building it is
-            # ~100 Py4J round trips (~0.5-1.5 s/batch of pure driver time)
-            # and merge evaluates apply_fn twice (upsert + insert branch).
+            # ~100 Py4J round trips (~0.5-1.5 s/batch of pure driver time),
+            # and merge evaluates it once per call, i.e. once per chunk.
             cached = self._resolve_cache.get(schema_ver)
             if cached is not None:
                 return cached
@@ -970,7 +958,7 @@ class CdcEngine:
             delta_rows=delta_rows,
             affected_buckets=affected_buckets,
             delta_bytes=delta_bytes,
-            mode=mode if mode is not None else self.merge_mode,
+            mode=mode,
             pre_commit=pre_commit,
             # vocab maintenance re-reads the affected buckets' old rows
             # EVERY batch (stage_delta's pre-merge snapshot scan), so read
@@ -1330,10 +1318,11 @@ class CdcEngine:
         # this batch changed nothing else (e.g. fully-filtered replay)
         snap = self.table.snapshot()
         props = snap["properties"]
-        if props.get("last_batch_id") != batch_id or props.get("max_applied_lsn", 0) < applied:
-            props["last_batch_id"] = batch_id
-            props["max_applied_lsn"] = max(applied, props.get("max_applied_lsn", 0))
-            self.table._commit(snap, snap["version"])
+        lsn = max(applied, props.get("max_applied_lsn", 0))
+        if props.get("last_batch_id") != batch_id or lsn > props.get("max_applied_lsn", 0):
+            self.table._publish(
+                snap, {}, properties_update={"last_batch_id": batch_id, "max_applied_lsn": lsn}
+            )
         return metrics
 
     def _write_manifest(self, m: BatchMetrics) -> None:

@@ -52,7 +52,8 @@ import re
 import tempfile
 import time
 import uuid
-from dataclasses import dataclass, field
+from dataclasses import dataclass
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -251,7 +252,6 @@ class LakeTable:
         add_entries: dict,
         version_hint: int,
         replace_all: bool = False,
-        n_buckets: int | None = None,
     ) -> None:
         """Mutate ``snap``'s file pointers: drop ``remove_buckets``, then
         add ``add_entries`` (bucket str -> entry). Layouts at or below
@@ -259,10 +259,8 @@ class LakeTable:
         larger layouts write bucket-range manifest chunks, rewriting ONLY
         chunks that intersect the touched buckets and carrying the rest
         forward by reference (commit metadata I/O ~ touched buckets).
-        ``replace_all`` discards every prior entry (overwrite/rebucket)."""
-        if n_buckets is None:
-            n_buckets = snap["n_buckets"]
-        if n_buckets <= self.MANIFEST_INLINE_MAX:
+        ``replace_all`` discards every prior entry (overwrite)."""
+        if snap["n_buckets"] <= self.MANIFEST_INLINE_MAX:
             files = {} if replace_all else dict(self._files_load(snap))
             for b in remove_buckets:
                 files.pop(str(b), None)
@@ -317,6 +315,29 @@ class LakeTable:
             )
         snap.pop("files", None)
         snap["manifest_list"] = sorted(new_list, key=lambda c: c["lo"])
+
+    def _publish(
+        self,
+        snap: dict,
+        add: dict,
+        remove=(),
+        pre_commit=None,
+        properties_update: dict | None = None,
+        replace_all: bool = False,
+    ) -> None:
+        """The one commit tail: point ``snap`` at the written files
+        (``add``: bucket str -> entry, dropping ``remove``), run
+        ``pre_commit`` durably, fold ``properties_update`` into the same
+        snapshot, then commit against the version ``snap`` was read at.
+        If ``pre_commit`` raises nothing is committed (the written files
+        are unreferenced stragglers swept by GC)."""
+        v = snap["version"]
+        self._files_replace(snap, remove, add, v + 1, replace_all=replace_all)
+        if pre_commit is not None:
+            pre_commit()
+        if properties_update:
+            snap["properties"].update(properties_update)
+        self._commit(snap, v)
 
     def _commit(self, snap: dict, expected_version: int) -> None:
         """Optimistic single-writer commit: snapshot file then pointer swap."""
@@ -436,7 +457,7 @@ class LakeTable:
         snap = self.snapshot(as_of_version)
         cur = TableSchema.from_json(snap["schema"])
         groups: dict[int, list[str]] = {}
-        # delta path -> {"seq", "sv", "buckets": referencing bucket ids}
+        # delta path -> {"sv", "cols", "bytes", "buckets": referencing bucket ids}
         delta_paths: dict[str, dict] = {}
         for b, entry in self._files_load(snap, buckets).items():
             if buckets is not None and int(b) not in buckets:
@@ -447,7 +468,6 @@ class LakeTable:
                 rec = delta_paths.setdefault(
                     d["path"],
                     {
-                        "seq": d["seq"],
                         "sv": d["schema_version"],
                         "cols": tuple(d["column_ids"]) if d.get("column_ids") else None,
                         "bytes": d.get("bytes", 0),
@@ -462,37 +482,98 @@ class LakeTable:
             return base
         return self._resolve_mor(snap, cur, base, delta_paths)
 
+    @staticmethod
+    def _by_id(
+        cur: TableSchema, old: TableSchema, present: set[int] | None = None
+    ) -> list[Column]:
+        """Project columns written under schema ``old`` onto ``cur`` by
+        column id: rename = alias, widen = cast, and a typed null for a
+        column ``old`` lacks (added later) or whose id is outside
+        ``present`` (one a MOR delta file does not carry)."""
+        old_by_id = old.by_id()
+        cols = []
+        for c in cur.columns:
+            o = old_by_id.get(c.id)
+            if o is None or (present is not None and c.id not in present):
+                cols.append(F.lit(None).cast(c.type).alias(c.name))
+            else:
+                col = F.col(o.name)
+                cols.append((col if o.type == c.type else col.cast(c.type)).alias(c.name))
+        return cols
+
     def _reconcile_union(
         self, snap: dict, cur: TableSchema, groups: dict[int, list[str]]
     ) -> DataFrame | None:
         """Union base file groups reconciled by column id to ``cur``."""
         if not groups:
             return None
-        parts: list[DataFrame] = []
-        for sv, paths in sorted(groups.items()):
-            old = TableSchema.from_json(snap["schema_versions"][str(sv)])
-            old_by_id = old.by_id()
-            df = self.spark.read.parquet(*paths)
-            cols = []
-            for c in cur.columns:
-                o = old_by_id.get(c.id)
-                if o is None:
-                    cols.append(F.lit(None).cast(c.type).alias(c.name))
-                else:
-                    col = F.col(o.name)
-                    if o.type != c.type:
-                        col = col.cast(c.type)
-                    cols.append(col.alias(c.name))
-            parts.append(df.select(*cols))
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+        return reduce(
+            DataFrame.unionByName,
+            [
+                self.spark.read.parquet(*paths).select(
+                    *self._by_id(cur, TableSchema.from_json(snap["schema_versions"][str(sv)]))
+                )
+                for sv, paths in sorted(groups.items())
+            ],
+        )
 
-    # Above this many bytes of live delta files the MOR read resolution
-    # stops broadcasting the winner side and falls back to a shuffled
-    # full-outer join (the stack should have been compacted long before).
+    # Byte gate for broadcasting a PAYLOAD-carrying frame in a keyed
+    # upsert (_upsert): the CoW merge's delta side (caller-supplied bytes,
+    # else rows x 512) and the MOR read's winner side (live delta file
+    # bytes). Above it both fall back to one shuffled full-outer join.
     MOR_BROADCAST_MAX_BYTES = 256 << 20
+
+    def _upsert(
+        self,
+        old: DataFrame | None,
+        new: DataFrame,
+        key: str,
+        cur: TableSchema,
+        resolve,
+        broadcast: bool,
+    ) -> DataFrame:
+        """The keyed upsert plan: the rows of ``old`` (columns ``cur``)
+        and ``new`` (at most one row per key) joined on ``key``, each
+        output row built by ``resolve(old_cols, new_cols)`` — dicts of
+        name-based Columns over ``__o_<name>`` / ``__n_<name>``, either
+        side null where the key is one-sided — evaluated once. ``old`` is
+        None when nothing is stored in scope: every row is an insert and
+        no join is planned.
+
+        Physical strategy:
+
+        - **broadcast** (micro-batch path): the ``old`` side is NEVER
+          shuffled. Three broadcast-hash joins against the small ``new``
+          side — ``old LEFT JOIN new`` (updates + untouched in one scan),
+          ``old SEMI new`` (matched keys, tiny), ``new ANTI matched``
+          (brand-new keys) — then a union. Cost: two scans of ``old``,
+          zero exchanges of table data. At 100 TB this is the difference
+          between rewriting buckets at disk bandwidth and paying a
+          cluster-wide shuffle per micro-batch.
+        - **shuffle** (oversized ``new`` side): one full-outer join on
+          the key with AQE skew handling.
+        """
+        out = resolve(
+            {c.name: F.col(f"__o_{c.name}") for c in cur.columns},
+            {c: F.col(f"__n_{c}") for c in new.columns},
+        )
+        exprs = [ex.alias(nm) for nm, ex in out.items()]
+        null_old = [F.lit(None).cast(c.type).alias(f"__o_{c.name}") for c in cur.columns]
+
+        def prefixed(df: DataFrame) -> DataFrame:
+            return df.select(*[F.col(c).alias(f"__n_{c}") for c in new.columns])
+
+        if old is None:
+            return prefixed(new).select(*null_old, "*").select(*exprs)
+        old_pref = old.select(*[F.col(c.name).alias(f"__o_{c.name}") for c in cur.columns])
+        new_pref = prefixed(new)
+        cond = old_pref[f"__o_{key}"] == new_pref[f"__n_{key}"]
+        if not broadcast:
+            return old_pref.join(new_pref, cond, "full_outer").select(*exprs)
+        upserts = old_pref.join(F.broadcast(new_pref), cond, "left_outer").select(*exprs)
+        matched = old.join(F.broadcast(new.select(key)), on=key, how="left_semi").select(key)
+        inserts = prefixed(new.join(F.broadcast(matched), on=key, how="left_anti"))
+        return upserts.unionByName(inserts.select(*null_old, "*").select(*exprs))
 
     def _resolve_mor(
         self,
@@ -516,9 +597,10 @@ class LakeTable:
         row's value, matching what the CoW resolver would have produced.
         """
         key = snap["key_column"]
-        names = cur.names()
-        # --- load + reconcile each delta file with its bucket filter ---
-        parts: list[DataFrame] = []  # (df, present column-id set) per tag
+        # --- load + reconcile each delta file with its bucket filter;
+        # rows carry their file group's _tag, whose present column ids
+        # are present_sets[_tag] ---
+        parts: list[DataFrame] = []
         present_sets: list[set[int]] = []
         by_sig: dict[tuple, list] = {}
         sv_ids = {
@@ -532,90 +614,53 @@ class LakeTable:
         for (sv, cols_ids, bks), paths in sorted(
             by_sig.items(), key=lambda kv: (kv[0][0], kv[0][2])
         ):
-            old = TableSchema.from_json(snap["schema_versions"][str(sv)])
-            old_by_id = old.by_id()
             present = set(cols_ids) if cols_ids is not None else sv_ids[int(sv)]
-            tag = len(present_sets)
-            df = self.spark.read.parquet(*paths)
-            df = df.filter(F.col("_bucket").isin(*[int(b) for b in bks]))
-            cols = [F.col("_seq"), F.lit(tag).alias("_tag")]
-            for c in cur.columns:
-                o = old_by_id.get(c.id)
-                if o is None or c.id not in present:
-                    cols.append(F.lit(None).cast(c.type).alias(c.name))
-                else:
-                    col = F.col(o.name)
-                    if o.type != c.type:
-                        col = col.cast(c.type)
-                    cols.append(col.alias(c.name))
-            parts.append(df.select(*cols))
+            old = TableSchema.from_json(snap["schema_versions"][str(sv)])
+            parts.append(
+                self.spark.read.parquet(*paths)
+                .filter(F.col("_bucket").isin(*[int(b) for b in bks]))
+                .select(
+                    F.col("_seq"),
+                    F.lit(len(present_sets)).alias("_tag"),
+                    *self._by_id(cur, old, present),
+                )
+            )
             present_sets.append(present)
-        deltas = parts[0]
-        for p in parts[1:]:
-            deltas = deltas.unionByName(p)
+        deltas = reduce(DataFrame.unionByName, parts)
 
         # --- newest delta row per key (argmax on _seq; (key, _seq) is
         # unique because each MOR commit carries at most one row per key
         # and commits have distinct versions). The per-key max frame is
-        # broadcast only under the SAME byte gate as the base join below:
-        # an oversized stack (forced mode="mor", no fold) would otherwise
+        # broadcast only under the SAME byte gate as the base upsert: an
+        # oversized stack (forced mode="mor", no fold) would otherwise
         # ship a delta-sized key set to every executor even as the base
         # join correctly falls back to shuffle. ---
-        total_bytes = sum(rec.get("bytes", 0) for rec in delta_paths.values())
+        broadcast = (
+            sum(rec.get("bytes", 0) for rec in delta_paths.values())
+            <= self.MOR_BROADCAST_MAX_BYTES
+        )
         mx = deltas.groupBy(key).agg(F.max("_seq").alias("_seq"))
-        if total_bytes <= self.MOR_BROADCAST_MAX_BYTES:
-            mx = F.broadcast(mx)
-        win = deltas.join(mx, on=[key, "_seq"], how="left_semi")
-        if base is None:
-            return win.select(*names)
+        win = deltas.join(
+            F.broadcast(mx) if broadcast else mx, on=[key, "_seq"], how="left_semi"
+        ).drop("_seq")
 
-        def sv_has(c: SchemaColumn) -> Column:
-            """Does the WINNING row's delta file carry column ``c``?"""
+        def carried(c: SchemaColumn, tag: Column) -> Column:
+            """Does the winning row's delta file carry column ``c``?"""
             tags = [t for t, ids in enumerate(present_sets) if c.id in ids]
             if len(tags) == len(present_sets):
                 return F.lit(True)
-            if not tags:
-                return F.lit(False)
-            return F.col("__w__tag").isin(*tags)
+            return tag.isin(*tags) if tags else F.lit(False)
 
-        win_pref = win.select(
-            *[F.col(c).alias(f"__w_{c}") for c in names],
-            F.col("_tag").alias("__w__tag"),
-        )
-        exists = F.col(f"__w_{key}").isNotNull()
-        merged_cols = [
-            F.when(exists & sv_has(c), F.col(f"__w_{c.name}"))
-            .otherwise(F.col(c.name))
-            .alias(c.name)
-            for c in cur.columns
-        ]
-        if total_bytes <= self.MOR_BROADCAST_MAX_BYTES:
-            # three-branch broadcast plan: the base side never shuffles
-            upserts = base.join(
-                F.broadcast(win_pref),
-                base[key] == win_pref[f"__w_{key}"],
-                "left_outer",
-            ).select(*merged_cols)
-            matched = base.join(
-                F.broadcast(win.select(key)), on=key, how="left_semi"
-            ).select(key)
-            inserts = win.join(F.broadcast(matched), on=key, how="left_anti")
-            return upserts.unionByName(inserts.select(*names))
-        # oversized stack: one shuffled full-outer join
-        joined = base.join(
-            win_pref, base[key] == win_pref[f"__w_{key}"], "full_outer"
-        )
-        full_cols = [
-            (
-                F.coalesce(F.col(c.name), F.col(f"__w_{c.name}")).alias(c.name)
-                if c.name == key
-                else F.when(exists & sv_has(c), F.col(f"__w_{c.name}"))
-                .otherwise(F.col(c.name))
-                .alias(c.name)
-            )
-            for c in cur.columns
-        ]
-        return joined.select(*full_cols)
+        def pick(old: dict, new: dict) -> dict:
+            won = new[key].isNotNull()
+            return {
+                c.name: F.when(won & carried(c, new["_tag"]), new[c.name]).otherwise(
+                    old[c.name]
+                )
+                for c in cur.columns
+            }
+
+        return self._upsert(base, win, key, cur, pick, broadcast)
 
     # ---------- write helpers ----------
 
@@ -641,26 +686,22 @@ class LakeTable:
     MOR_MAX_STACK = 8
     MOR_COMPACT_RATIO = 8
 
-    def _write_delta(
-        self,
-        df: DataFrame,
-        key: str,
-        version_hint: int,
-        n_buckets: int,
-        est_bytes: int,
-    ) -> tuple[str, int]:
-        """Write a merge-on-read delta as a handful of bucket-RANGE files
-        (no ``partitionBy``): rows sorted by ``(_bucket, key)`` so parquet
-        row-group stats prune bucket-filtered reads. A micro-batch delta
-        lands in ~1 task and ~1 file instead of one file per affected
-        bucket dir — profiling showed the 64 per-dir file commits were
-        the dominant cost of small CoW merges."""
-        ddir = os.path.join(
-            self.path, self.DATA, f"d{version_hint}-{uuid.uuid4().hex[:8]}"
-        )
+    def _write_delta(self, df: DataFrame, snap: dict, est_bytes: int) -> tuple[str, int]:
+        """Write a merge-on-read delta for the commit after ``snap`` as a
+        handful of bucket-RANGE files (no ``partitionBy``), tagged with
+        the ``_bucket`` and ``_seq`` layout columns: rows sorted by
+        ``(_bucket, key)`` so parquet row-group stats prune
+        bucket-filtered reads. A micro-batch delta lands in ~1 task and
+        ~1 file instead of one file per affected bucket dir — profiling
+        showed the 64 per-dir file commits were the dominant cost of
+        small CoW merges. Returns (directory, bytes)."""
+        v, n_buckets, key = snap["version"] + 1, snap["n_buckets"], snap["key_column"]
+        ddir = os.path.join(self.path, self.DATA, f"d{v}-{uuid.uuid4().hex[:8]}")
         tasks = max(1, min(n_buckets, -(-(est_bytes or 1) // self.TARGET_WRITE_BYTES)))
         (
-            df.repartition(tasks, "_bucket")
+            df.withColumn("_bucket", bucket_expr(F.col(key), n_buckets))
+            .withColumn("_seq", F.lit(v))
+            .repartition(tasks, "_bucket")
             .sortWithinPartitions("_bucket", key)
             .write.parquet(ddir)
         )
@@ -713,40 +754,47 @@ class LakeTable:
     def _write_buckets(
         self,
         df: DataFrame,
-        version_hint: int,
-        n_buckets: int | None = None,
+        snap: dict,
         est_bytes: int | None = None,
         n_files_hint: int | None = None,
-    ) -> dict[str, str]:
-        """Write df (with ``_bucket`` column) partitioned by bucket; return
-        bucket -> directory map. Hash-repartition on ``_bucket`` keeps every
-        bucket's rows in exactly ONE task → one file per bucket (bounded
-        small-file count at scale); the task COUNT adapts to ``est_bytes``
-        (output-size estimate) so tiny merges don't pay per-task overhead
-        for empty shares. ``n_buckets`` defaults to the current snapshot's
-        (rebucket passes the new layout)."""
-        snap_dir = os.path.join(self.path, self.DATA, f"s{version_hint}-{uuid.uuid4().hex[:8]}")
-        if n_buckets is None:
-            n_buckets = self.snapshot()["n_buckets"]
+    ) -> dict[str, dict]:
+        """Write df hash-bucketed under ``snap``'s layout (``n_buckets``,
+        key column) as the files of the commit after it; return the
+        bucket -> ``{path, schema_version, bytes}`` entries. Hash-
+        repartition on ``_bucket`` keeps every bucket's rows in exactly
+        ONE task → one file per bucket (bounded small-file count at
+        scale); the task COUNT adapts to ``est_bytes`` (output-size
+        estimate) so tiny merges don't pay per-task overhead for empty
+        shares."""
+        n_buckets = snap["n_buckets"]
+        key = snap["key_column"]
+        snap_dir = os.path.join(
+            self.path, self.DATA, f"s{snap['version'] + 1}-{uuid.uuid4().hex[:8]}"
+        )
         tasks = n_buckets
         if est_bytes is not None:
             by_bytes = -(-est_bytes // self.TARGET_WRITE_BYTES)
             by_files = -(-(n_files_hint or 1) // self.FILES_PER_WRITE_TASK)
             tasks = max(1, min(n_buckets, max(by_bytes, by_files)))
         (
-            df.repartition(tasks, "_bucket")
+            df.withColumn("_bucket", bucket_expr(F.col(key), n_buckets))
+            .repartition(tasks, "_bucket")
             # sort by (_bucket, key): a task holding several buckets writes
             # each partition dir in one sequential run instead of churning
             # open files across interleaved buckets
-            .sortWithinPartitions("_bucket", self.snapshot()["key_column"])
+            .sortWithinPartitions("_bucket", key)
             .write.partitionBy("_bucket")
             .mode("overwrite")
             .parquet(snap_dir)
         )
-        out: dict[str, str] = {}
+        sv = snap["schema"]["version"]
+        out: dict[str, dict] = {}
         for name in os.listdir(snap_dir):
             if name.startswith("_bucket="):
-                out[name.split("=", 1)[1]] = os.path.join(snap_dir, name)
+                p = os.path.join(snap_dir, name)
+                out[name.split("=", 1)[1]] = {
+                    "path": p, "schema_version": sv, "bytes": self._dir_bytes(p)
+                }
         return out
 
     @staticmethod
@@ -763,49 +811,42 @@ class LakeTable:
         expected_version: int | None = None,
         properties_update: dict | None = None,
         pre_commit=None,
+        n_buckets: int | None = None,
     ) -> None:
         """Replace the whole table content (used for seeding/compaction).
 
         ``expected_version``: the snapshot version ``df`` was derived
         from. Callers that compute ``df`` from ``self.read()`` (compact,
-        delete_where, update_where) MUST pass the version they read at —
-        otherwise a concurrent commit landing between their read and this
-        overwrite would be silently erased (this method's own snapshot()
-        would see the newer version, pass the optimistic check, and
-        commit stale data over it). With it, the race surfaces as
-        CommitConflict and the caller retries against fresh state.
+        delete_where, update_where, rebucket) MUST pass the version they
+        read at — otherwise a concurrent commit landing between their
+        read and this overwrite would be silently erased (this method's
+        own snapshot() would see the newer version, pass the optimistic
+        check, and commit stale data over it). With it, the race surfaces
+        as CommitConflict and the caller retries against fresh state.
 
         ``properties_update`` rides in the SAME commit and ``pre_commit``
         runs durably before it — the same exactly-once contract
         :meth:`merge` gives the CDC engine (watermark + outbox staging
-        atomic with the data), used by the snapshot-bootstrap path."""
+        atomic with the data), used by the snapshot-bootstrap path.
+        ``n_buckets`` lays the content out under a new bucket count in
+        the same commit (:meth:`rebucket`)."""
         snap = self.snapshot()
         v = snap["version"]
         if expected_version is not None and v != expected_version:
             raise CommitConflict(
                 f"table advanced to v{v} since read at v{expected_version}"
             )
-        key = snap["key_column"]
-        cur = TableSchema.from_json(snap["schema"])
-        withb = df.select(*[F.col(n) for n in cur.names()]).withColumn(
-            "_bucket", bucket_expr(F.col(key), snap["n_buckets"])
-        )
-        new_files = self._write_buckets(withb, v + 1)
-        if pre_commit is not None:
-            pre_commit()
-        if properties_update:
-            snap["properties"].update(properties_update)
-        self._files_replace(
+        if n_buckets is not None:
+            snap["n_buckets"] = n_buckets
+        names = TableSchema.from_json(snap["schema"]).names()
+        add = self._write_buckets(df.select(*[F.col(n) for n in names]), snap)
+        self._publish(
             snap,
-            [],
-            {
-                b: {"path": p, "schema_version": cur.version, "bytes": self._dir_bytes(p)}
-                for b, p in new_files.items()
-            },
-            v + 1,
+            add,
+            pre_commit=pre_commit,
+            properties_update=properties_update,
             replace_all=True,
         )
-        self._commit(snap, v)
 
     # ---------- MERGE ----------
 
@@ -814,7 +855,6 @@ class LakeTable:
         delta: DataFrame,
         apply_fn,
         properties_update: dict | None = None,
-        broadcast_threshold_rows: int | None = 2_000_000,
         delta_rows: int | None = None,
         affected_buckets: list[int] | None = None,
         delta_bytes: int | None = None,
@@ -849,21 +889,10 @@ class LakeTable:
         is enforced post-write: any output bucket outside the set aborts
         the commit.
 
-        Physical strategy, chosen by delta size:
-
-        - **broadcast** (micro-batch path): the lake side is NEVER
-          shuffled. Three broadcast-hash joins against the small delta —
-          ``old LEFT JOIN delta`` (updates + untouched in one scan),
-          ``old SEMI delta`` (matched keys, tiny), ``delta ANTI matched``
-          (brand-new keys) — then a union. Cost: two scans of the affected
-          buckets, zero exchanges of table data. At 100 TB this is the
-          difference between rewriting buckets at disk bandwidth and
-          paying a cluster-wide shuffle per micro-batch.
-        - **shuffle** (huge-delta fallback): plain full-outer join on the
-          key with AQE skew handling.
-
-        Unaffected buckets are carried forward by reference — no read, no
-        write.
+        The join is :meth:`_upsert`'s plan; the delta side is broadcast
+        while its size estimate — ``delta_bytes``, else ``delta_rows`` x
+        512 — is within ``MOR_BROADCAST_MAX_BYTES``. Unaffected buckets
+        are carried forward by reference — no read, no write.
 
         ``mode`` selects the physical commit strategy:
 
@@ -920,60 +949,49 @@ class LakeTable:
         n_buckets = snap["n_buckets"]
         cur = TableSchema.from_json(snap["schema"])
 
-        delta = delta.withColumn("_bucket", bucket_expr(F.col(key), n_buckets))
         # callers that already know the delta's bucket set (the CDC engine
         # folds it into the LWW stats job) skip this extra Spark job
         affected = (
             list(affected_buckets)
             if affected_buckets is not None
-            else [r["_bucket"] for r in delta.select("_bucket").distinct().collect()]
+            else [
+                r[0]
+                for r in delta.select(bucket_expr(F.col(key), n_buckets)).distinct().collect()
+            ]
         )
         if not affected:
-            if pre_commit is not None:
-                pre_commit()
             if properties_update:
-                snap["properties"].update(properties_update)
-                self._commit(snap, v)
+                self._publish(
+                    snap, {}, pre_commit=pre_commit, properties_update=properties_update
+                )
+            elif pre_commit is not None:
+                pre_commit()
             return
 
-        names = cur.names()
-        new_names = list(delta.columns)
-
-        def resolved(joined):
-            old_cols = {c: F.col(f"__o_{c}") for c in names}
-            new_cols = {c: F.col(f"__n_{c}") for c in new_names}
-            out = apply_fn(old_cols, new_cols)
-            return joined.select(*[expr.alias(name) for name, expr in out.items()])
-
-        n = delta_rows if delta_rows is not None else delta.count()
+        # delta-size estimate: caller-supplied bytes from its staged
+        # files, else a row-count heuristic; gates the MOR policy, the
+        # CoW broadcast and the write-task count
+        if delta_bytes is not None:
+            est_delta = delta_bytes
+        else:
+            est_delta = (delta_rows if delta_rows is not None else delta.count()) * 512
         aff_files = self._files_load(snap, affected)
-        est_delta = delta_bytes if delta_bytes is not None else (n or 0) * 512
+        aff_bytes = sum(
+            self._entry_bytes(aff_files[str(b)]) for b in affected if str(b) in aff_files
+        )
         if mode == "auto":
-            aff_bytes_all = sum(
-                self._entry_bytes(aff_files[str(b)])
-                for b in affected
-                if str(b) in aff_files
-            )
             stack = max(
                 (len(aff_files.get(str(b), {}).get("deltas") or []) for b in affected),
                 default=0,
             )
             cap = max_stack if max_stack is not None else self.MOR_MAX_STACK
             use_mor = stack < cap and est_delta <= max(
-                self.TARGET_WRITE_BYTES, aff_bytes_all // self.MOR_COMPACT_RATIO
+                self.TARGET_WRITE_BYTES, aff_bytes // self.MOR_COMPACT_RATIO
             )
         else:
             use_mor = mode == "mor"
 
         if use_mor:
-            ins_pref = delta.select(
-                *[F.lit(None).cast(c.type).alias(f"__o_{c.name}") for c in cur.columns],
-                *[F.col(c).alias(f"__n_{c}") for c in delta.columns],
-            )
-            out_exprs = apply_fn(
-                {c: F.col(f"__o_{c}") for c in names},
-                {c: F.col(f"__n_{c}") for c in new_names},
-            )
             # Old-only "carry" columns (merged expression never touches
             # the __n_ side — e.g. columns added by schema evolution that
             # the resolver passes through) are EXCLUDED from the delta
@@ -981,39 +999,26 @@ class LakeTable:
             # would store null and clobber the base value at read time.
             # The MOR read falls back to the base row for absent columns.
             # Dependence on the new side is read from the expression's
-            # attribute references (JVM expr, exact); the fallback for
-            # backends without py4j expression access matches the exact
-            # prefixed tokens `__n_<col>` — never a bare substring, which
-            # would also hit a USER column like 'x__n_y' inside its
-            # '__o_x__n_y' alias and silently null base values at read.
-            def _refs_new_side(ex: Column) -> bool:
-                try:
-                    it = ex._jc.expr().references().iterator()
-                    while it.hasNext():
-                        if it.next().name().startswith("__n_"):
-                            return True
-                    return False
-                except Exception:
-                    r = repr(ex)
-                    return any(
-                        re.search(
-                            rf"(?<![0-9A-Za-z_]){re.escape('__n_' + c)}(?![0-9A-Za-z_])",
-                            r,
-                        )
-                        for c in new_names
-                    )
+            # rendering by the exact prefixed tokens `__n_<col>` — never a
+            # bare substring, which would also hit a USER column like
+            # 'x__n_y' inside its '__o_x__n_y' alias and silently null
+            # base values at read.
+            def refs_new_side(ex: Column) -> bool:
+                r = repr(ex)
+                return any(
+                    re.search(rf"(?<![0-9A-Za-z_]){re.escape('__n_' + c)}(?![0-9A-Za-z_])", r)
+                    for c in delta.columns
+                )
 
-            mor_names = [
-                nm
-                for nm, ex in out_exprs.items()
-                if nm == key or _refs_new_side(ex)
-            ]
-            merged = (
-                ins_pref.select(*[out_exprs[nm].alias(nm) for nm in mor_names])
-                .withColumn("_bucket", bucket_expr(F.col(key), n_buckets))
-                .withColumn("_seq", F.lit(v + 1))
-            )
-            ddir, dbytes = self._write_delta(merged, key, v + 1, n_buckets, est_delta)
+            def resolve_new_side(old: dict, new: dict) -> dict:
+                return {
+                    nm: ex
+                    for nm, ex in apply_fn(old, new).items()
+                    if nm == key or refs_new_side(ex)
+                }
+
+            merged = self._upsert(None, delta, key, cur, resolve_new_side, False)
+            ddir, dbytes = self._write_delta(merged, snap, est_delta)
             if affected_buckets is not None:
                 # same superset invariant as CoW: an undeclared bucket's
                 # rows would sit in the shared file with no entry
@@ -1027,7 +1032,7 @@ class LakeTable:
                 "seq": v + 1,
                 "bytes": dbytes,
                 "share_bytes": -(-dbytes // len(affected)),
-                "column_ids": [by_name[nm].id for nm in mor_names],
+                "column_ids": [by_name[nm].id for nm in merged.columns],
             }
             add = {}
             for b in affected:
@@ -1037,93 +1042,42 @@ class LakeTable:
                 )
                 e["deltas"] = list(e.get("deltas", [])) + [item]
                 add[str(b)] = e
-            self._files_replace(snap, [], add, v + 1)
-            if pre_commit is not None:
-                pre_commit()
-            if properties_update:
-                snap["properties"].update(properties_update)
-            self._commit(snap, v)
+            self._publish(
+                snap, add, pre_commit=pre_commit, properties_update=properties_update
+            )
             return
 
-        old = self.read(buckets=affected)
-        use_broadcast = broadcast_threshold_rows is not None and n <= broadcast_threshold_rows
-
-        old_pref = old.select([F.col(c).alias(f"__o_{c}") for c in old.columns])
-        new_pref = delta.select([F.col(c).alias(f"__n_{c}") for c in delta.columns])
-
+        # all-fresh buckets (first load): no old side, so no join is
+        # planned — building the three-branch plan driver-side costs
+        # ~1 s of Py4J per merge even though Catalyst would fold it away
         have_old = any(
-            str(b) in aff_files
-            and (aff_files[str(b)].get("path") or aff_files[str(b)].get("deltas"))
+            aff_files.get(str(b), {}).get("path") or aff_files.get(str(b), {}).get("deltas")
             for b in affected
         )
-        if not have_old:
-            # first load / all-fresh buckets: every delta row is an insert.
-            # Catalyst would fold the joins against the empty LocalRelation
-            # anyway, but skipping them here also skips building the
-            # three-branch plan driver-side (~1 s of Py4J per merge).
-            ins_pref = delta.select(
-                *[F.lit(None).cast(f.dataType).alias(f"__o_{f.name}") for f in old.schema.fields],
-                *[F.col(c).alias(f"__n_{c}") for c in delta.columns],
-            )
-            merged = resolved(ins_pref)
-        elif use_broadcast:
-            cond = old_pref[f"__o_{key}"] == new_pref[f"__n_{key}"]
-            upserts = resolved(old_pref.join(F.broadcast(new_pref), cond, "left_outer"))
-            matched = old.join(
-                F.broadcast(delta.select(key)), on=key, how="left_semi"
-            ).select(key)
-            inserts_raw = delta.join(F.broadcast(matched), on=key, how="left_anti")
-            ins_pref = inserts_raw.select(
-                *[F.lit(None).cast(f.dataType).alias(f"__o_{f.name}") for f in old.schema.fields],
-                *[F.col(c).alias(f"__n_{c}") for c in inserts_raw.columns],
-            )
-            merged = upserts.unionByName(resolved(ins_pref))
-        else:
-            joined = old_pref.join(
-                new_pref, old_pref[f"__o_{key}"] == new_pref[f"__n_{key}"], "full_outer"
-            )
-            merged = resolved(joined)
-        merged = merged.withColumn("_bucket", bucket_expr(F.col(key), n_buckets))
-
-        # output-size estimate = existing affected-bucket bytes + delta
-        # bytes (caller-supplied from its staged files, else a row-count
-        # heuristic); sizes the number of write tasks
-        aff_bytes = sum(
-            self._entry_bytes(aff_files[str(b)])
-            for b in affected
-            if str(b) in aff_files
-        )
-        est = aff_bytes + (
-            delta_bytes if delta_bytes is not None else (n or 0) * 512
-        )
-        new_files = self._write_buckets(
-            merged, v + 1, est_bytes=est, n_files_hint=len(affected)
+        old = self.read(buckets=affected) if have_old else None
+        broadcast = est_delta <= self.MOR_BROADCAST_MAX_BYTES
+        merged = self._upsert(old, delta, key, cur, apply_fn, broadcast)
+        add = self._write_buckets(
+            merged, snap, est_bytes=aff_bytes + est_delta, n_files_hint=len(affected)
         )
         # Enforce the affected_buckets superset invariant (docstring): if
         # the delta wrote a bucket the caller didn't declare, committing
         # would drop that bucket's prior rows (files[b] replaced by a
         # delta-only file). Cheap driver-side check; abort, don't commit.
-        stray = set(new_files) - {str(b) for b in affected}
+        stray = set(add) - {str(b) for b in affected}
         if stray:
             raise ValueError(
                 f"merge wrote undeclared buckets {sorted(stray)}; "
                 f"affected_buckets={sorted(affected)} is not a superset — "
                 "aborting before commit to avoid erasing prior rows"
             )
-        self._files_replace(
+        self._publish(
             snap,
-            affected,
-            {
-                b: {"path": p, "schema_version": cur.version, "bytes": self._dir_bytes(p)}
-                for b, p in new_files.items()
-            },
-            v + 1,
+            add,
+            remove=affected,
+            pre_commit=pre_commit,
+            properties_update=properties_update,
         )
-        if pre_commit is not None:
-            pre_commit()
-        if properties_update:
-            snap["properties"].update(properties_update)
-        self._commit(snap, v)
 
     # ---------- DML (the reference's raw-JDBC UPDATE/DELETE side-channel,
     # S7, as snapshot-atomic table ops — `spark.sql("UPDATE/DELETE")` on
@@ -1192,17 +1146,8 @@ class LakeTable:
 
         new = self.read(buckets=buckets, as_of_version=v_to)
         old = self.read(buckets=buckets, as_of_version=v_from)
-        # align the v_from side to the v_to schema by column id (rename =
-        # alias, widen = cast, column added after v_from = null)
-        from_by_id = TableSchema.from_json(snap_from["schema"]).by_id()
-        old = old.select(
-            *[
-                F.lit(None).cast(c.type).alias(c.name)
-                if c.id not in from_by_id
-                else F.col(from_by_id[c.id].name).cast(c.type).alias(c.name)
-                for c in sch_to.columns
-            ]
-        )
+        # align the v_from side to the v_to schema by column id
+        old = old.select(*self._by_id(sch_to, TableSchema.from_json(snap_from["schema"])))
 
         def live(side: DataFrame) -> Column:
             if deleted_column and deleted_column in side.columns:
@@ -1294,7 +1239,6 @@ class LakeTable:
         (``/root/reference/repomix-output.xml:7637-7649``) as real DDL.
         """
         snap = self.snapshot()
-        v = snap["version"]
         cur = TableSchema.from_json(snap["schema"])
         action = change["action"]
         cols = {c.name: c for c in cur.columns}
@@ -1342,9 +1286,7 @@ class LakeTable:
         snap["schema"] = new_schema.to_json()
         snap["schema_versions"][str(new_schema.version)] = new_schema.to_json()
         snap["schema_log"].append({"lsn": lsn, "change": change})
-        if properties_update:
-            snap["properties"].update(properties_update)
-        self._commit(snap, v)
+        self._publish(snap, {}, properties_update=properties_update)
 
     # ---------- maintenance ----------
 
@@ -1365,27 +1307,8 @@ class LakeTable:
         """
         if n_buckets < 1:
             raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
-        snap = self.snapshot()
-        v = snap["version"]
-        key = snap["key_column"]
-        cur = TableSchema.from_json(snap["schema"])
-        withb = self.read().select(*[F.col(n) for n in cur.names()]).withColumn(
-            "_bucket", bucket_expr(F.col(key), n_buckets)
-        )
-        new_files = self._write_buckets(withb, v + 1, n_buckets=n_buckets)
-        snap["n_buckets"] = n_buckets
-        self._files_replace(
-            snap,
-            [],
-            {
-                b: {"path": p, "schema_version": cur.version, "bytes": self._dir_bytes(p)}
-                for b, p in new_files.items()
-            },
-            v + 1,
-            replace_all=True,
-            n_buckets=n_buckets,
-        )
-        self._commit(snap, v)
+        v = self.current_version()
+        self.overwrite(self.read(), expected_version=v, n_buckets=n_buckets)
 
     def expire_snapshots(self, keep_last: int = 2, grace_seconds: float = 600.0) -> dict:
         """Metadata + data garbage collection (Iceberg's

@@ -161,8 +161,9 @@ def connected_components_star(
 
     for _ in range(max_iters):
         nxt = star(star(cur, large=True), large=False).localCheckpoint(eager=True)
-        # fixpoint when the downhill edge set is stable
-        delta = nxt.exceptAll(cur).count() + cur.exceptAll(nxt).count()
+        # fixpoint when the downhill edge set is stable: both sides of
+        # the symmetric difference counted in one Spark action
+        delta = nxt.exceptAll(cur).union(cur.exceptAll(nxt)).count()
         cur = nxt
         if delta == 0:
             break

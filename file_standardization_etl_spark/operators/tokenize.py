@@ -29,6 +29,7 @@ import threading
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..lake.table import BROADCAST_MAX_KEY_ROWS, LakeTable
 
@@ -756,22 +757,34 @@ def strip_dup_token_spans_rewrite(
 
     Same scale shape as the text variant (:func:`_masked_positions_core`
     — hash-gated position stream, two-phase keeper election, measured
-    broadcasts): grams are ':'-joined string casts of the token slice,
-    injective because token renderings contain no ':'. A NULL element
-    renders as chr(1) rather than disappearing — ``concat_ws`` SKIPS
-    nulls, which would make slices of different lengths compare equal
-    and mask content that was never duplicated; chr(1) cannot collide
-    with an int rendering (string token ids must not contain chr(1),
-    a non-printing control byte no real tokenizer emits). The rebuild
-    filters the ORIGINAL typed array row-locally, so payloads are never
-    shuffled when the mask side broadcasts.
+    broadcasts): grams are ':'-joined string renderings of the token
+    slice. A NULL element renders as chr(1) rather than disappearing —
+    ``concat_ws`` SKIPS nulls, which would make slices of different
+    lengths compare equal and mask content that was never duplicated.
+    The rebuild filters the ORIGINAL typed array row-locally, so
+    payloads are never shuffled when the mask side broadcasts.
+
+    Input contract: grams are injective only if no rendering contains
+    ':' or chr(1) — else ``["a:b", "c"]`` and ``["a", "b:c"]`` share a
+    gram. Integral ids satisfy it; string ids (e.g. :func:`tokenized`'s
+    hex ids) are checked inside the rendering projection and fail the
+    query via ``raise_error`` (no extra job); other types raise
+    ``ValueError``.
     """
+    et = df.schema[col].dataType.elementType
+    if isinstance(et, T.IntegralType):
+        render = "cast(x as string)"
+    elif isinstance(et, T.StringType):
+        render = (
+            "if(instr(x, ':') + instr(x, chr(1)) > 0, raise_error(concat("
+            "'token contains a reserved separator (: or chr(1)): ', x)), x)"
+        )
+    else:
+        raise ValueError(f"{col!r} must hold integral or string token ids, not {et}")
     base = df.select(
         "doc_id",
         F.col(col).alias("_toks"),
-        F.expr(
-            f"transform({col}, x -> coalesce(cast(x as string), chr(1)))"
-        ).alias("w"),
+        F.expr(f"transform({col}, x -> coalesce({render}, chr(1)))").alias("w"),
     ).select("doc_id", "_toks", "w", F.size("w").alias("n_words"))
     masked = _masked_positions_core(
         base.select("doc_id", "w", "n_words"), n, broadcast_hot, sep=":"

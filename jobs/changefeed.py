@@ -3,7 +3,7 @@
 One-shot range export::
 
     spark-submit --py-files dist/engine.zip jobs/changefeed.py \
-        --table-dir s3a://bucket/lake --from-version 12 [--to-version 19] \
+        --table-dir /mnt/lake/cdc --from-version 12 [--to-version 19] \
         --out s3a://bucket/feeds/lake_changes
 
 Cursor-driven incremental export (each run ships exactly the commits
@@ -11,8 +11,12 @@ since the last run; crash before the cursor write redelivers the same
 window bit-identically)::
 
     spark-submit ... jobs/changefeed.py \
-        --table-dir s3a://bucket/lake --cursor s3a://.../cursor.json \
+        --table-dir /mnt/lake/cdc --cursor /mnt/lake/feeds/cursor.json \
         --out s3a://bucket/feeds/lake_changes
+
+``--table-dir`` and ``--cursor`` must be local or POSIX-mounted paths:
+the lake layer and the cursor file are read and written through ``os``.
+Only ``--out`` is written by Spark and may be a Hadoop URI.
 
 Output parquet is partitioned by the feed window's end version so each
 export lands in its own directory and re-exports overwrite idempotently.

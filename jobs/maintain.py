@@ -5,10 +5,13 @@ atomic and micro-batches fast); this job is where the periodic
 housekeeping runs, typically off-peak::
 
     spark-submit --py-files dist/engine.zip jobs/maintain.py \
-        --table-dir s3a://bucket/lake \
+        --table-dir /mnt/lake/cdc \
         [--compact] [--expire-tombstones] \
         [--rebucket N] [--expire-snapshots KEEP] [--compact-quarantine] \
         [--requeue-whitelist web,books,newsource]
+
+``--table-dir`` (and ``--corrective-wal-dir``) must be local or
+POSIX-mounted paths: the lake layer commits snapshots through ``os``.
 
 Every op is independently safe: compaction/rebucket are single atomic
 snapshot swaps, snapshot GC only deletes below the retention horizon,

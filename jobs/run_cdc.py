@@ -4,9 +4,14 @@ Cluster usage (the north-rule deployment shape)::
 
     python tools/package.py                      # builds dist/engine.zip
     spark-submit --py-files dist/engine.zip \
-        jobs/run_cdc.py --log-dir s3a://bucket/wal --table-dir s3a://bucket/lake \
+        jobs/run_cdc.py --log-dir /mnt/lake/wal --table-dir /mnt/lake/cdc \
         [--continuous] [--processing-time "10 seconds"] [--maintain-vocab] \
         [--bootstrap-snapshot s3a://bucket/snap --bootstrap-lsn 123456789]
+
+``--log-dir`` and ``--table-dir`` must be local or POSIX-mounted paths:
+the lake commit, the WAL listing and the stream checkpoint go through
+``os`` (``os.path.abspath`` mangles ``s3a://``). Only the Spark-read
+``--bootstrap-snapshot`` may be a Hadoop URI.
 
 Local smoke::
 

@@ -8,6 +8,8 @@ judging criterion)."""
 
 from __future__ import annotations
 
+import pytest
+
 from file_standardization_etl_spark.cdc.apply import CdcEngine
 from file_standardization_etl_spark.cdc.events import SOURCE_WHITELIST, events_df
 from file_standardization_etl_spark.operators import tokenize
@@ -162,3 +164,30 @@ def test_null_tokens_do_not_collide_grams(spark):
     # only d (the non-keeper of the c/d duplicate) is corrected — to empty;
     # a and b are NOT duplicates of each other and must be untouched
     assert got == [("d", [])]
+
+
+def test_string_tokens_with_separator_raise_instead_of_masking(spark):
+    """The ':'-joined grams are injective only if no token rendering
+    contains ':' (or chr(1), the null rendering). ["a:b", "c"] and
+    ["a", "b:c"] would both render the 2-gram "a:b:c" and mask each
+    other; the rewrite must fail the query instead. Integral ids and
+    separator-free string ids pass; other element types are rejected
+    before any plan is built."""
+    bad = spark.createDataFrame(
+        [("x", ["a:b", "c"]), ("y", ["a", "b:c"])], "doc_id string, tokens array<string>"
+    )
+    with pytest.raises(Exception, match="reserved separator"):
+        tokenize.strip_dup_token_spans_rewrite(bad, n=2, k=None).collect()
+
+    ok = spark.createDataFrame(
+        [("x", ["ab", "c", None]), ("y", ["ab", "c", None])],
+        "doc_id string, tokens array<string>",
+    )
+    got = tokenize.strip_dup_token_spans_rewrite(ok, n=2, k=None).collect()
+    assert [(r["doc_id"], r["n_tok_masked"]) for r in got] == [("y", 3)]
+
+    with pytest.raises(ValueError, match="integral or string token ids"):
+        tokenize.strip_dup_token_spans_rewrite(
+            spark.createDataFrame([("x", [1.5])], "doc_id string, tokens array<double>"),
+            n=2,
+        )

@@ -358,3 +358,52 @@ def test_oversized_stack_read_never_broadcasts(spark, tmp_path, monkeypatch):
         assert got == state(t_cow)
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thresh)
+
+
+def test_cow_merge_byte_gate_never_broadcasts_payload(spark, tmp_path, monkeypatch):
+    """A CoW merge gates its payload-side broadcast on BYTES, not rows: a
+    one-row delta whose caller-declared ``delta_bytes`` exceeds
+    MOR_BROADCAST_MAX_BYTES (a few huge token arrays) must take the
+    shuffled full-outer plan, and that plan must land the same state as
+    the broadcast plan does for the same merges."""
+    seed = spark.createDataFrame(
+        [(f"d{i}", i, 1, False) for i in range(1, 65)],  # every bucket stored
+        "doc_id string, v int, last_lsn long, deleted boolean",
+    )
+    merges = [[("d1", 99, 5, "upsert")], [("d99", 70, 6, "upsert")]]
+    plans = []
+    real = LakeTable._write_buckets
+
+    def spy(self, df, *args, **kwargs):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return real(self, df, *args, **kwargs)
+
+    t_small = make(spark, str(tmp_path / "small"))
+    t_big = make(spark, str(tmp_path / "big"))
+    t_small.overwrite(seed)
+    t_big.overwrite(seed)
+    thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    monkeypatch.setattr(LakeTable, "_write_buckets", spy)
+    try:
+        for rows in merges:
+            t_small.merge(delta_df(spark, rows), lww, mode="cow", delta_rows=1, delta_bytes=1)
+        assert all("BroadcastHashJoin" in p for p in plans), plans
+        plans.clear()
+        for rows in merges:
+            t_big.merge(
+                delta_df(spark, rows),
+                lww,
+                mode="cow",
+                delta_rows=1,
+                delta_bytes=LakeTable.MOR_BROADCAST_MAX_BYTES + 1,
+            )
+        assert len(plans) == len(merges)
+        assert all("SortMergeJoin" in p and "FullOuter" in p for p in plans), plans
+        assert all("Broadcast" not in p for p in plans), plans
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thresh)
+    got = state(t_big)
+    assert got == state(t_small)
+    assert got["d1"] == (99, 5, False) and got["d99"] == (70, 6, False)
+    assert len(got) == 65

@@ -5,7 +5,10 @@ small dims, whole-stage codegen on the hot path, no Python UDF in any
 query plan (UDFs exist only in the CDC quarantine finalize, off the
 analytic path).
 
-Writes PLANS.md; exits non-zero if an audited property regresses.
+Writes a compact per-query table (asserted properties, scan column
+counts) to PLANS.md and the full formatted plans to PLANS.full.md (not
+committed: expression ids churn on every run); exits non-zero if an
+audited property regresses.
 """
 
 from __future__ import annotations
@@ -438,29 +441,35 @@ def main() -> int:
     sections.append((name, needles, read_schema_width(plan), plan))
     spark.stop()
 
-    with open(os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md"), "w") as f:
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    with open(os.path.join(root, "PLANS.md"), "w") as f:
         f.write(
             "# PLANS — physical-plan audit of the headline queries\n\n"
             "Generated by `python tools/explain_plans.py` (re-run to refresh; it\n"
-            "exits non-zero if an audited plan property regresses). Each section\n"
+            "exits non-zero if an audited plan property regresses). Each row\n"
             "lists the properties asserted for that query — filter pushdown\n"
             "reaching the parquet scan, broadcast joins on small sides,\n"
             "whole-stage codegen, no Python eval nodes in analytic plans — and\n"
             "the per-scan `ReadSchema` column counts as column-pruning\n"
-            f"evidence. Scale factor: `{SF}`.\n\n"
+            "evidence. The full formatted plans are written next to it to\n"
+            f"`PLANS.full.md`, which is not committed. Scale factor: `{SF}`.\n\n"
+            "| query | asserted | scan column counts |\n|---|---|---|\n"
         )
-        for name, needles, widths, plan in sections:
-            f.write(f"## {name}\n\nAsserted: {', '.join('`'+n+'`' for n in needles)}\n\n")
-            if widths:
-                f.write("Scan column counts: " + ", ".join(f"{t}={n}" for t, n in widths) + "\n\n")
-            f.write("```\n" + plan.strip()[:4000] + "\n```\n\n")
+        for name, needles, widths, _plan in sections:
+            asserted = ", ".join(f"`{n}`" for n in needles)
+            scans = ", ".join(f"{t}={n}" for t, n in widths)
+            f.write(f"| {name} | {asserted} | {scans} |\n")
+    with open(os.path.join(root, "PLANS.full.md"), "w") as f:
+        f.write(f"# Full formatted plans (`tools/explain_plans.py`, `{SF}`)\n\n")
+        for name, _needles, _widths, plan in sections:
+            f.write(f"## {name}\n\n```\n" + plan.strip() + "\n```\n\n")
 
     if failures:
         print("PLAN AUDIT FAILURES:")
         for x in failures:
             print(" -", x)
         return 1
-    print(f"plan audit OK: {len(AUDIT)} queries, PLANS.md written")
+    print(f"plan audit OK: {len(AUDIT)} queries, PLANS.md and PLANS.full.md written")
     return 0
 
 
