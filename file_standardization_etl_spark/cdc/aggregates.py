@@ -49,6 +49,11 @@ from pyspark.sql import functions as F
 from ..lake.table import BROADCAST_MAX_KEY_ROWS, LakeTable
 
 VOCAB_COLUMNS = [("token", "bigint"), ("n_occ", "bigint"), ("n_docs", "bigint")]
+# a staged pending delta's columns: stage_delta writes its counts cast to
+# them and fold reads the files with PENDING_SCHEMA, so planning the fold
+# infers nothing
+PENDING_COLUMNS = [("token", "bigint"), ("d_occ", "bigint"), ("d_docs", "bigint")]
+PENDING_SCHEMA = ", ".join(f"{n} {t}" for n, t in PENDING_COLUMNS)
 
 
 class TokenVocab:
@@ -318,6 +323,7 @@ class TokenVocab:
                 F.sum("ts.d").alias("d_docs"),
             )
             .filter((F.col("d_occ") != 0) | (F.col("d_docs") != 0))
+            .select(*[F.col(n).cast(t) for n, t in PENDING_COLUMNS])
         )
         # requeue pendings get their own namespace: their synthetic chunk
         # ids must never be confusable with (or sort against) the stream's
@@ -388,7 +394,7 @@ class TokenVocab:
                 "folded_batch": int(meta["batch_id"]),
                 "folded_chunk": int(meta["chunk"]),
             }
-        d = self.spark.read.parquet(os.path.join(pend, "data"))
+        d = self.spark.read.schema(PENDING_SCHEMA).parquet(os.path.join(pend, "data"))
         resolve = self._resolve
 
         # accumulating resolver -> CoW required (LakeTable.merge contract).

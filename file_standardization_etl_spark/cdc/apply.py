@@ -50,6 +50,28 @@ from .events import EVENT_SCHEMA, SOURCE_WHITELIST
 
 QUARANTINE_REASONS = ["null_tokens", "empty_tokens", "bad_n_tok", "bad_source"]
 
+# the wire columns the engine stages (routed route=d/route=q slices,
+# quarantine chunks, the requeue rescue set): DDL rows never reach
+# staging. Staged files are written through staged() and read with this
+# schema, so planning a staged read infers nothing.
+STAGED_SCHEMA = T.StructType([f for f in EVENT_SCHEMA.fields if f.name != "schema_change"])
+
+
+def staged(df: DataFrame, *keep: str) -> DataFrame:
+    """``df``'s wire columns laid out as :data:`STAGED_SCHEMA`: in its
+    order, cast to its types (events or a snapshot may carry wider ones,
+    e.g. ``n_tok bigint``), a column ``df`` lacks (a bootstrap snapshot
+    has no ``ts``) null; then the ``keep`` columns as they are. Other
+    columns of ``df`` are dropped."""
+    have = set(df.columns)
+    return df.select(
+        *[
+            (F.col(f.name) if f.name in have else F.lit(None)).cast(f.dataType).alias(f.name)
+            for f in STAGED_SCHEMA.fields
+        ],
+        *keep,
+    )
+
 # Table-column names a rename_column may NOT target: the event wire
 # format's field names plus the engine's internal columns. A table column
 # renamed onto one of these would collide with delta/staging columns in
@@ -205,7 +227,9 @@ class CdcEngine:
                             self._promote_quarantine(path, qdir)
                             continue
                     elif os.path.isdir(qsrc):
-                        self._finalize_quarantine(self.spark.read.parquet(qsrc), b, c)
+                        self._finalize_quarantine(
+                            self.spark.read.schema(STAGED_SCHEMA).parquet(qsrc), b, c
+                        )
                 shutil.rmtree(path, ignore_errors=True)
         # vocab outbox lives OUTSIDE _staging (the sweep above must never
         # eat a committed-but-unfolded delta); recover() folds or drops it
@@ -447,7 +471,7 @@ class CdcEngine:
         # rewrite); no such deployments exist — the format is
         # sandbox-internal and versioned with the repo.
         return (
-            T.StructType([f for f in EVENT_SCHEMA.fields if f.name != "schema_change"])
+            T.StructType(list(STAGED_SCHEMA.fields))  # add() appends in place
             .add("reason", T.StringType())
             .add("batch_id", T.LongType())
             .add("chunk", T.LongType())
@@ -473,7 +497,7 @@ class CdcEngine:
         Returns ``{"n": rows, <reason>: rows, ...}``.
         """
         obs = Observation(f"quar-{batch_id}-{ck}")
-        reasoned = with_reason(rows, self.whitelist).observe(
+        reasoned = with_reason(staged(rows), self.whitelist).observe(
             obs,
             F.count(F.lit(1)).alias("n"),
             *[
@@ -748,11 +772,10 @@ class CdcEngine:
         # examined is observed BELOW the rescue filter in the same plan —
         # one quarantine scan produces both counts (CollectMetrics blocks
         # predicate pushdown, so the filter cannot shrink what obs_q sees)
+        rescue_cols = ["doc_id", "lsn", "op", "tokens", "n_tok", "source"]
         q.observe(obs_q, F.count(F.lit(1)).alias("n")).filter(
             expr_r.isNull() & (F.col("lsn") >= F.lit(fence))
-        ).select(
-            "doc_id", "lsn", "op", "tokens", "n_tok", "source"
-        ).observe(obs_r, F.count(F.lit(1)).alias("n")).write.mode(
+        ).select(*rescue_cols).observe(obs_r, F.count(F.lit(1)).alias("n")).write.mode(
             "overwrite"
         ).parquet(rescued_stage)
         examined = int(obs_q.get.get("n") or 0)
@@ -760,7 +783,9 @@ class CdcEngine:
         if rescued_n == 0:
             shutil.rmtree(rescued_stage, ignore_errors=True)
             return {"examined": examined, "rescued": 0, "merged": 0}
-        rescued = self.spark.read.parquet(rescued_stage)
+        rescued = (
+            self.spark.read.schema(STAGED_SCHEMA).parquet(rescued_stage).select(*rescue_cols)
+        )
         # LWW within the rescued set (one doc may have several rescued
         # events), by the same aggregate as the hot path
         winners = lww_winners(rescued).select("doc_id", "lsn")
@@ -970,19 +995,52 @@ class CdcEngine:
 
     # ---------- apply one micro-batch ----------
 
+    @staticmethod
+    def _lineage(events: DataFrame) -> list:
+        """Per-partition lineage ``(pid, rows, lsn_min, lsn_max)`` of the
+        data events, plus the partition's count of DDL events (``ddl``),
+        in one narrow aggregate (no arrays)."""
+        is_ddl = F.col("op") == "schema_change"
+        lsn = F.when(~is_ddl, F.col("lsn"))
+        return (
+            events.groupBy(F.spark_partition_id().alias("pid"))
+            .agg(
+                F.count(lsn).alias("rows"),
+                F.min(lsn).alias("lsn_min"),
+                F.max(lsn).alias("lsn_max"),
+                F.count(F.when(is_ddl, 1)).alias("ddl"),
+            )
+            .collect()
+        )
+
     def apply_batch(self, events: DataFrame, batch_id: int) -> BatchMetrics:
+        _t = time.time()
+
+        def _mark(label):
+            nonlocal _t
+            self.timings[label] = self.timings.get(label, 0.0) + time.time() - _t
+            _t = time.time()
+
         applied = self.applied_lsn()
         events = events.filter(F.col("lsn") > F.lit(applied))
 
-        # DDL boundaries (schema_change events are rare; collect is tiny)
-        ddl = sorted(
-            (
-                (r["lsn"], json.loads(r["schema_change"]))
-                for r in events.filter(F.col("op") == "schema_change").collect()
-            ),
-            key=lambda x: x[0],
-        )
-        data = events.filter(F.col("op") != "schema_change")
+        # one probe aggregate: per-partition lineage of the data rows and
+        # the count of DDL rows; the DDL rows themselves (rare, tiny) are
+        # collected only when there are some. A batch without DDL is one
+        # chunk whose lineage IS the probe's.
+        is_ddl = F.col("op") == "schema_change"
+        probe = self._lineage(events)
+        ddl = []
+        if any(r["ddl"] for r in probe):
+            ddl = sorted(
+                (
+                    (r["lsn"], json.loads(r["schema_change"]))
+                    for r in events.filter(is_ddl).select("lsn", "schema_change").collect()
+                ),
+                key=lambda x: x[0],
+            )
+        data = events.filter(~is_ddl)
+        _mark("lineage_join")
 
         bounds: list[tuple[int | None, int | None, dict | None]] = []
         lo = None
@@ -1014,9 +1072,10 @@ class CdcEngine:
             # Pass structure — the WAL chunk's token arrays are decoded in
             # exactly TWO full passes, everything else rides those jobs or
             # touches only small staged outputs:
-            #   async  lineage: per-partition rows + LSN span over the raw
-            #          chunk — narrow columnar scan (no arrays), joined
-            #          before the salt gate / watermark commit.
+            #   lineage: per-partition rows + LSN span over the raw chunk —
+            #          the batch probe's when the batch has no DDL, else an
+            #          async narrow columnar scan (no arrays) per chunk,
+            #          joined before the salt gate / watermark commit.
             #   pass 1 LWW: narrow (doc_id → max lsn, cnt, winner-op) agg
             #          over validity-filtered rows (validity needs
             #          size(tokens), so arrays decode once); one collect
@@ -1034,23 +1093,8 @@ class CdcEngine:
             #          persist, no recompute races) into the bucket-pruned
             #          MERGE (no internal distinct/count jobs).
             _t = time.time()
-
-            def _mark(label):
-                nonlocal _t
-                self.timings[label] = self.timings.get(label, 0.0) + time.time() - _t
-                _t = time.time()
-
-            lineage_future = self._pool.submit(
-                lambda chunk=chunk: chunk.groupBy(
-                    F.spark_partition_id().alias("pid")
-                )
-                .agg(
-                    F.count(F.lit(1)).alias("rows"),
-                    F.min("lsn").alias("lsn_min"),
-                    F.max("lsn").alias("lsn_max"),
-                )
-                .collect()
-            )
+            if ddl:
+                lineage_future = self._pool.submit(self._lineage, chunk)
 
             expr_r = validation_reason_expr(
                 F.col("op"),
@@ -1063,7 +1107,7 @@ class CdcEngine:
 
             # lineage joins here: the narrow scan overlapped plan
             # construction, and rows_in gates the salt path
-            cells = lineage_future.result()
+            cells = lineage_future.result() if ddl else probe
             rows_in = sum(r["rows"] for r in cells)
             totals["rows_in"] += rows_in
             chunk_lsn_max = None
@@ -1140,8 +1184,7 @@ class CdcEngine:
                     if n_delta <= BROADCAST_MAX_KEY_ROWS:
                         keys = F.broadcast(keys)
                     routed = (
-                        chunk.drop("schema_change")
-                        .join(keys, on=["doc_id", "lsn"], how="left")
+                        chunk.join(keys, on=["doc_id", "lsn"], how="left")
                         .withColumn(
                             "route",
                             F.when(expr_r.isNotNull(), F.lit("q")).when(
@@ -1149,9 +1192,10 @@ class CdcEngine:
                             ),
                         )
                         .filter(F.col("route").isNotNull())
-                        .drop("__win")
                     )
-                    routed.write.mode("overwrite").partitionBy("route").parquet(staging)
+                    staged(routed, "route").write.mode("overwrite").partitionBy(
+                        "route"
+                    ).parquet(staging)
                     _mark("routed_write")
 
                     # quarantine finalize (async, small): authoritative
@@ -1160,7 +1204,9 @@ class CdcEngine:
                     if os.path.isdir(qsrc):  # no invalid rows staged otherwise
                         q_future = self._pool.submit(
                             lambda qsrc=qsrc, ck=ck: self._finalize_quarantine(
-                                self.spark.read.parquet(qsrc), batch_id, ck
+                                self.spark.read.schema(STAGED_SCHEMA).parquet(qsrc),
+                                batch_id,
+                                ck,
                             )
                         )
 
@@ -1174,7 +1220,9 @@ class CdcEngine:
                     ddir = os.path.join(staging, "route=d")
                     delta_bytes = None
                     if os.path.isdir(ddir):
-                        delta = self.spark.read.parquet(ddir).select(*dedup_cols)
+                        delta = self.spark.read.schema(STAGED_SCHEMA).parquet(ddir).select(
+                            *dedup_cols
+                        )
                         delta_bytes = LakeTable._dir_bytes(ddir)
                     else:
                         delta = self.spark.createDataFrame(

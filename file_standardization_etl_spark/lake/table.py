@@ -100,6 +100,18 @@ class TableSchema:
     def struct_type(self) -> T.StructType:
         return T.StructType([T.StructField(c.name, c.spark_type(), True) for c in self.columns])
 
+    def typed(self, df: DataFrame) -> DataFrame:
+        """``df`` with each of its columns this schema records cast to the
+        recorded type. The table's writers pass their output through it,
+        so every file holds the types its schema version declares — the
+        types the schema-bound reads (:meth:`LakeTable.read`) expect; a
+        wider input (``bigint`` into an ``int`` column) is cast, and a
+        value out of range fails the write before anything commits."""
+        types = {c.name: c.type for c in self.columns}
+        return df.select(
+            *[F.col(n).cast(types[n]).alias(n) if n in types else F.col(n) for n in df.columns]
+        )
+
 
 # Widenings we allow, mirroring Iceberg's metadata-only type promotions.
 _WIDEN_OK = {
@@ -122,6 +134,13 @@ def bucket_expr(key: Column, n_buckets: int) -> Column:
 # apply_schema_change — the collision would corrupt or wedge reads, not
 # error cleanly.
 LAYOUT_RESERVED = frozenset({"_bucket", "_seq", "_tag"})
+
+# the MOR delta layout columns as _write_delta writes them (bucket_expr
+# yields int; _seq is the commit version), declared by the schema-bound
+# delta read in _resolve_mor
+DELTA_LAYOUT = T.StructType(
+    [T.StructField("_bucket", T.IntegerType()), T.StructField("_seq", T.IntegerType())]
+)
 
 # Engine-wide broadcast gate for KEY-ONLY frames (doc_id / (doc_id, lsn)
 # rows, no payload arrays): above this many rows the frame is too big to
@@ -504,18 +523,20 @@ class LakeTable:
     def _reconcile_union(
         self, snap: dict, cur: TableSchema, groups: dict[int, list[str]]
     ) -> DataFrame | None:
-        """Union base file groups reconciled by column id to ``cur``."""
+        """Union base file groups reconciled by column id to ``cur``. Each
+        group is read with the schema its version recorded, so planning
+        runs no schema-inference job."""
         if not groups:
             return None
-        return reduce(
-            DataFrame.unionByName,
-            [
-                self.spark.read.parquet(*paths).select(
-                    *self._by_id(cur, TableSchema.from_json(snap["schema_versions"][str(sv)]))
-                )
-                for sv, paths in sorted(groups.items())
-            ],
-        )
+        parts = []
+        for sv, paths in sorted(groups.items()):
+            old = TableSchema.from_json(snap["schema_versions"][str(sv)])
+            parts.append(
+                self.spark.read.schema(old.struct_type())
+                .parquet(*paths)
+                .select(*self._by_id(cur, old))
+            )
+        return reduce(DataFrame.unionByName, parts)
 
     # Byte gate for broadcasting a PAYLOAD-carrying frame in a keyed
     # upsert (_upsert): the CoW merge's delta side (caller-supplied bytes,
@@ -616,8 +637,15 @@ class LakeTable:
         ):
             present = set(cols_ids) if cols_ids is not None else sv_ids[int(sv)]
             old = TableSchema.from_json(snap["schema_versions"][str(sv)])
+            # the file's own columns (those it carries, plus the layout
+            # pair): a schema-bound read infers nothing while planning
+            written = T.StructType(
+                [T.StructField(c.name, c.spark_type()) for c in old.columns if c.id in present]
+                + DELTA_LAYOUT.fields
+            )
             parts.append(
-                self.spark.read.parquet(*paths)
+                self.spark.read.schema(written)
+                .parquet(*paths)
                 .filter(F.col("_bucket").isin(*[int(b) for b in bks]))
                 .select(
                     F.col("_seq"),
@@ -687,7 +715,8 @@ class LakeTable:
     MOR_COMPACT_RATIO = 8
 
     def _write_delta(self, df: DataFrame, snap: dict, est_bytes: int) -> tuple[str, int]:
-        """Write a merge-on-read delta for the commit after ``snap`` as a
+        """Write a merge-on-read delta for the commit after ``snap``, typed
+        to its schema (:meth:`TableSchema.typed`), as a
         handful of bucket-RANGE files (no ``partitionBy``), tagged with
         the ``_bucket`` and ``_seq`` layout columns: rows sorted by
         ``(_bucket, key)`` so parquet row-group stats prune
@@ -699,8 +728,10 @@ class LakeTable:
         ddir = os.path.join(self.path, self.DATA, f"d{v}-{uuid.uuid4().hex[:8]}")
         tasks = max(1, min(n_buckets, -(-(est_bytes or 1) // self.TARGET_WRITE_BYTES)))
         (
-            df.withColumn("_bucket", bucket_expr(F.col(key), n_buckets))
-            .withColumn("_seq", F.lit(v))
+            TableSchema.from_json(snap["schema"])
+            .typed(df)
+            .withColumn("_bucket", bucket_expr(F.col(key), n_buckets))
+            .withColumn("_seq", F.lit(v).cast(DELTA_LAYOUT["_seq"].dataType))
             .repartition(tasks, "_bucket")
             .sortWithinPartitions("_bucket", key)
             .write.parquet(ddir)
@@ -758,8 +789,9 @@ class LakeTable:
         est_bytes: int | None = None,
         n_files_hint: int | None = None,
     ) -> dict[str, dict]:
-        """Write df hash-bucketed under ``snap``'s layout (``n_buckets``,
-        key column) as the files of the commit after it; return the
+        """Write df, typed to ``snap``'s schema (:meth:`TableSchema.typed`),
+        hash-bucketed under ``snap``'s layout (``n_buckets``, key column)
+        as the files of the commit after it; return the
         bucket -> ``{path, schema_version, bytes}`` entries. Hash-
         repartition on ``_bucket`` keeps every bucket's rows in exactly
         ONE task → one file per bucket (bounded small-file count at
@@ -777,7 +809,9 @@ class LakeTable:
             by_files = -(-(n_files_hint or 1) // self.FILES_PER_WRITE_TASK)
             tasks = max(1, min(n_buckets, max(by_bytes, by_files)))
         (
-            df.withColumn("_bucket", bucket_expr(F.col(key), n_buckets))
+            TableSchema.from_json(snap["schema"])
+            .typed(df)
+            .withColumn("_bucket", bucket_expr(F.col(key), n_buckets))
             .repartition(tasks, "_bucket")
             # sort by (_bucket, key): a task holding several buckets writes
             # each partition dir in one sequential run instead of churning

@@ -689,8 +689,8 @@ def strip_dup_spans_rewrite(
     corpus-wide buffer). That per-doc mask frame — affected docs only,
     orders of magnitude smaller than the corpus — joins back to the
     word-split corpus through the same measured broadcast gate, and the
-    rewrite itself is one row-local ``filter(w, (x, i) -> NOT
-    array_contains(mask, i))`` projection: no shuffle touches document
+    rewrite itself is one row-local projection (:func:`_unmasked`,
+    linear in the doc and its mask): no shuffle touches document
     payloads when the mask side broadcasts. Unaffected documents are
     untouched by construction (inner join); a full-corpus emit is the
     caller's ``docs.join(this, "doc_id", "left")`` +
@@ -704,12 +704,23 @@ def strip_dup_spans_rewrite(
             "doc_id",
             "n_words",
             F.size("mask").cast("long").alias("n_words_masked"),
-            F.expr(
-                "concat_ws(' ', filter(w, (x, i) -> NOT array_contains(mask, i)))"
-            ).alias("clean_text"),
+            F.expr(f"concat_ws(' ', {_unmasked('w', 'mask')})").alias("clean_text"),
         )
         .orderBy(F.col("n_words_masked").desc(), F.col("doc_id"))
         .limit(k)
+    )
+
+
+def _unmasked(arr: str, mask: str) -> str:
+    """SQL for ``arr`` without the elements at the 0-based positions listed
+    in ``mask``, order kept, in O(size(arr) + size(mask)): the kept
+    positions are the hash-based ``array_except`` of all positions and the
+    mask (it keeps the first array's order), then looked up. A per-element
+    ``array_contains(mask, i)`` would be O(size(arr) x size(mask)). Empty
+    (and NULL) arrays pass through: ``sequence(0, -1)`` is ``[0, -1]``."""
+    return (
+        f"if(size({arr}) > 0, transform(array_except("
+        f"sequence(0, size({arr}) - 1), {mask}), i -> {arr}[i]), {arr})"
     )
 
 
@@ -794,9 +805,7 @@ def strip_dup_token_spans_rewrite(
         "doc_id",
         F.col("n_words").alias("n_tok"),
         F.size("mask").cast("long").alias("n_tok_masked"),
-        F.expr(
-            "filter(_toks, (x, i) -> NOT array_contains(mask, i))"
-        ).alias("clean_tokens"),
+        F.expr(_unmasked("_toks", "mask")).alias("clean_tokens"),
     )
     if k is None:
         return out

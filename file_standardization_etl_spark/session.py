@@ -20,6 +20,19 @@ from pyspark.sql import SparkSession
 # session). Applies at JVM launch only — i.e. to the process's FIRST session.
 CODE_CACHE_OPT = "-XX:ReservedCodeCacheSize=512m"
 
+# Spark's whole-stage-codegen class cache (a static conf, fixed at JVM
+# launch like CODE_CACHE_OPT) holds 100 classes by default. A resident
+# engine's working set is larger: one serve-while-ingest benchmark run
+# compiles 456 distinct classes (253 on backlog replay), so at 100 entries
+# most of a micro-batch's ~96 compiles are evictions of classes the JVM had
+# already compiled. The cache stays bounded on purpose: per-batch literals
+# are inlined into the generated Java (the watermark in apply_batch's
+# ``lsn > applied`` filter, a MOR delta's ``_seq`` version), so every batch
+# adds a few classes that are never reused, and LRU eviction drops them.
+CODEGEN_CACHE_KEY = "spark.sql.codegen.cache.maxEntries"
+CODEGEN_CACHE_ENTRIES = "2000"
+JAVA_OPTIONS_KEY = "spark.driver.extraJavaOptions"
+
 
 def driver_java_options(existing: str | None) -> str:
     """``spark.driver.extraJavaOptions`` with the code-cache flag appended
@@ -29,6 +42,23 @@ def driver_java_options(existing: str | None) -> str:
     if "ReservedCodeCacheSize" in existing:
         return existing
     return f"{existing} {CODE_CACHE_OPT}".strip()
+
+
+def resident_conf(
+    extra_conf: dict[str, str] | None, deployment: SparkConf | dict[str, str]
+) -> dict[str, str]:
+    """``extra_conf`` plus the resident-session JVM settings (code-cache
+    flag, codegen class cache). A value the caller passes in ``extra_conf``
+    or the deployment already set in ``deployment`` (e.g. spark-submit
+    ``--conf``, read through ``SparkConf()``) wins over the engine's."""
+    conf = dict(extra_conf or {})
+    conf[JAVA_OPTIONS_KEY] = driver_java_options(
+        conf.get(JAVA_OPTIONS_KEY) or deployment.get(JAVA_OPTIONS_KEY)
+    )
+    conf.setdefault(
+        CODEGEN_CACHE_KEY, deployment.get(CODEGEN_CACHE_KEY) or CODEGEN_CACHE_ENTRIES
+    )
+    return conf
 
 
 def get_spark(
@@ -44,6 +74,8 @@ def get_spark(
     - Arrow on for every pandas-UDF / createDataFrame boundary.
     - Session timezone pinned to UTC so results compare bitwise against
       the DuckDB oracle (DuckDB timestamps are UTC-naive).
+    - JIT code cache and codegen class cache sized for a resident engine
+      (:func:`resident_conf`).
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
     master = master or os.environ.get("SPARK_MASTER", f"local[{cpus}]")
@@ -71,9 +103,6 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
-    conf = dict(extra_conf or {})
-    key = "spark.driver.extraJavaOptions"
-    conf[key] = driver_java_options(conf.get(key) or SparkConf().get(key))
-    for k, v in conf.items():
+    for k, v in resident_conf(extra_conf, SparkConf()).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

@@ -209,3 +209,62 @@ def test_bootstrap_maintains_vocab(spark, tmp_path):
     assert maintained(eng) == recompute(eng)  # exact right after bootstrap
     eng.apply_batch(events_df(spark, post), batch_id=1)
     assert maintained(eng) == recompute(eng)  # and after tailing
+
+
+# the snapshot and WAL types a source may hand over: wider than the
+# table's schema v0 (tokens array<int>, n_tok int)
+WIDE_SNAP_DDL = "doc_id string, tokens array<bigint>, n_tok long, source string, lsn long"
+WIDE_EVENT_DDL = (
+    "lsn long, op string, doc_id string, tokens array<bigint>, n_tok bigint, "
+    "source string, schema_change string, ts timestamp"
+)
+
+
+def test_wider_input_types_are_written_as_the_recorded_types(spark, tmp_path):
+    """A snapshot and a WAL carrying wider types than the table records,
+    and an ``update_where`` assigning a bigint: every write lands the
+    types its schema version records (the types the schema-bound reads
+    declare), so later reads, MOR merges, the state, the vocab and the
+    quarantine keep working and equal the oracle."""
+    from pyspark.sql import functions as F
+
+    from tests.test_vocab import maintained, recompute
+
+    cfg = EventGenConfig(n_events=2400, n_docs=250, seed=43, disorder_window=40)
+    events = generate_events(cfg)
+    L = 1200
+    pre = [e for e in events if e["lsn"] <= L]
+    post = [e for e in events if e["lsn"] > L]
+    eng = make_engine(spark, tmp_path, maintain_vocab=True)
+    rows = [
+        (k, list(v["tokens"]), v["n_tok"], v["source"], v["last_lsn"])
+        for k, v in replay(pre).live_docs().items()
+    ]
+    bad = ("bad_snapshot_row", [1, 2], 3, "web", 1)  # bad_n_tok
+    m = eng.bootstrap(spark.createDataFrame(rows + [bad], WIDE_SNAP_DDL), as_of_lsn=L)
+    assert m.rows_quarantined == 1 and m.rows_valid == len(rows)
+
+    # a bigint assignment of the stored value: the state stays the
+    # oracle's, the rewrite's input type does not
+    doc, n_tok = rows[0][0], rows[0][2]
+    eng.table.update_where(
+        F.col("doc_id") == doc, {"n_tok": F.lit(n_tok).cast("bigint")}
+    )
+
+    def wide(evs):
+        return spark.createDataFrame(evs, WIDE_EVENT_DDL)
+
+    eng.apply_batch(wide([e for e in post if e["lsn"] <= 1800]), batch_id=1)
+    eng.apply_batch(wide([e for e in post if e["lsn"] > 1800]), batch_id=2)
+    entries = eng.table._files_load(eng.table.snapshot()).values()
+    assert any(e.get("deltas") for e in entries)  # the MOR read path runs
+
+    read = eng.table.read()
+    assert {f.name: f.dataType.simpleString() for f in read.schema} == {
+        c.name: c.type for c in eng.table.schema().columns
+    }
+    assert_state_matches(eng, replay(events))
+    assert maintained(eng) == recompute(eng)
+    got = {r["lsn"]: r["reason"] for r in eng.quarantine().collect()}
+    want = {e["lsn"]: e["reason"] for e in replay(post).quarantine}
+    assert got == {**want, 1: "bad_n_tok"}

@@ -407,3 +407,75 @@ def test_cow_merge_byte_gate_never_broadcasts_payload(spark, tmp_path, monkeypat
     assert got == state(t_small)
     assert got["d1"] == (99, 5, False) and got["d99"] == (70, 6, False)
     assert len(got) == 65
+
+
+def test_internal_reads_plan_without_spark_jobs(spark, tmp_path):
+    """Every parquet read of files the engine wrote itself declares the
+    schema its metadata records, so PLANNING a read runs no Spark job (no
+    schema inference) — on a table with base files, a MOR delta stack
+    written under two schema versions and a renamed column, for the
+    current and a time-travel read, the engine's state and its vocab.
+    The planned reads still equal the oracle."""
+    from file_standardization_etl_spark.cdc.apply import CdcEngine
+    from file_standardization_etl_spark.cdc.events import (
+        EventGenConfig,
+        events_df,
+        generate_events,
+    )
+    from file_standardization_etl_spark.cdc.oracle import replay
+    from tests.test_bootstrap import snapshot_df
+
+    cfg = EventGenConfig(
+        n_events=1600, n_docs=150, seed=31,
+        schema_change_lsns=(1300,),
+        schema_changes=({"action": "rename_column", "name": "source", "new_name": "origin"},),
+    )
+    events = generate_events(cfg)
+    eng = CdcEngine(spark, str(tmp_path / "cdc"), maintain_vocab=True)
+    eng.init()
+    eng.bootstrap(snapshot_df(spark, replay([e for e in events if e["lsn"] <= 800])), 800)
+    eng.apply_batch(events_df(spark, [e for e in events if 800 < e["lsn"] <= 1000]), 1)
+    v1 = eng.table.current_version()
+    eng.apply_batch(events_df(spark, [e for e in events if e["lsn"] > 1000]), 2)
+
+    snap = eng.table.snapshot()
+    entries = eng.table._files_load(snap).values()
+    assert any(e.get("path") and len(e.get("deltas", [])) >= 2 for e in entries)
+    assert len({d["schema_version"] for e in entries for d in e.get("deltas", [])}) == 2
+    assert "origin" in eng.table.schema().names()
+
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    eng.vocab()  # folds nothing: every pending folded after its merge
+    jobs = dag.numTotalJobs()
+    current = eng.table.read()
+    as_of = eng.table.read(as_of_version=v1)
+    state = eng.state()
+    vocab = eng.vocab()
+    assert dag.numTotalJobs() == jobs
+
+    def live(oracle, source):
+        return {
+            k: (list(v["tokens"]), v["n_tok"], v[source], v["last_lsn"])
+            for k, v in oracle.live_docs().items()
+        }
+
+    def rows(df, source):
+        return {
+            r["doc_id"]: (list(r["tokens"]), r["n_tok"], r[source], r["last_lsn"])
+            for r in df.filter(~F.col("deleted")).collect()
+        }
+
+    final = replay(events)
+    assert rows(current, "origin") == live(final, "source")
+    assert rows(state, "origin") == live(final, "source")
+    assert rows(as_of, "source") == live(
+        replay([e for e in events if e["lsn"] <= 1000]), "source"
+    )
+    occ: dict = {}
+    docs: dict = {}
+    for k, v in final.live_docs().items():
+        for t in v["tokens"]:
+            occ[t] = occ.get(t, 0) + 1
+            docs.setdefault(t, set()).add(k)
+    got = {r["token"]: (r["n_occ"], r["n_docs"]) for r in vocab.collect()}
+    assert got == {t: (occ[t], len(docs[t])) for t in occ}
