@@ -170,16 +170,12 @@ class TokenVocab:
     def recover(self) -> None:
         """Apply or discard pending deltas left by a crash (see module
         docstring for the three-way decision)."""
-        applied = int(self.target.properties().get("max_applied_lsn", 0))
-        version = self.target.current_version()
-        for pend, meta in self._pending():
-            if meta is not None and self._merge_committed(meta, applied, version):
-                self.fold(pend)
-            else:
-                # crash mid-stage (meta is written last) or merge never
-                # committed: the chunk will be redelivered and its delta
-                # re-staged bit-identically
-                shutil.rmtree(pend, ignore_errors=True)
+        self.fold_ready()
+        # what is left crashed mid-stage (meta is written last) or staged
+        # for a merge that never committed: the chunk will be redelivered
+        # and its delta re-staged bit-identically
+        for pend, _ in self._pending():
+            shutil.rmtree(pend, ignore_errors=True)
 
     # ---------- per-chunk maintenance ----------
 

@@ -12,7 +12,11 @@ Pipeline per batch (≈ one "job run" of the reference,
    after it under the new one (SURVEY.md §7.4 "schema-change/data
    interleaving").
 3. **Validation split** — vectorized reason column → (valid, quarantine);
-   quarantine is written idempotently per (batch, chunk) directory.
+   quarantine is written idempotently per (batch, chunk) directory. Every
+   side output of a commit (quarantine chunk, vocab outbox) settles in
+   that commit's ``pre_commit``, so it is durable before the watermark
+   moves; ``_staging`` only ever holds outputs no commit references yet
+   and is disposable.
 4. **LWW dedup** — :func:`.dedup.lww_winners`, a primitive max per doc_id
    (map-side combine kills most skew); its salted two-phase form engages
    when a chunk exceeds ``salt_threshold`` rows.
@@ -32,8 +36,8 @@ the reference got the same effect from its dd_attribute_detail lookup
 from __future__ import annotations
 
 import json
+import logging
 import os
-import re
 import shutil
 import time
 from concurrent.futures import ThreadPoolExecutor
@@ -47,6 +51,8 @@ from ..functions.validation import validation_reason_expr, with_reason
 from ..lake.table import BROADCAST_MAX_KEY_ROWS, LakeTable, bucket_expr
 from .dedup import lww_winners
 from .events import EVENT_SCHEMA, SOURCE_WHITELIST
+
+log = logging.getLogger(__name__)
 
 QUARANTINE_REASONS = ["null_tokens", "empty_tokens", "bad_n_tok", "bad_source"]
 
@@ -193,44 +199,14 @@ class CdcEngine:
                 properties={"max_applied_lsn": 0, "last_batch_id": -1},
             )
         os.makedirs(self.manifest_dir, exist_ok=True)
-        # staging leftovers from a crashed run are RECOVERED, not swept:
-        # a crash between the merge's watermark commit and the async
-        # quarantine finalize would otherwise lose that chunk's
-        # quarantine rows forever (redelivery is LSN-filtered past
-        # finalize). Two shapes, both idempotent against redelivery —
-        # if the chunk's merge never committed, the redelivered finalize
-        # simply replaces the recovered dir with bit-identical content:
-        #   b{B}_c{C}/route=q  crash before the reason pass — run it now
-        #                      (sorts first, so it supersedes a partial
-        #                      staged output of the same chunk).
-        #   quar_ + b{B}_c{C}  reasons already assigned; crash was between
-        #                      write and rename — finish the rename if the
-        #                      write committed (_SUCCESS).
-        # Anything else (route=d intermediates, partial writes,
-        # unparseable names) is swept; the data path's correctness never
-        # depends on staging. Safe here: ingest is single-writer and this
-        # engine has not started its own staging yet.
         self._recover_archive_swap()
-        stg = os.path.join(self.table_path, "_staging")
-        if os.path.isdir(stg):
-            for d in sorted(os.listdir(stg)):
-                path = os.path.join(stg, d)
-                m = re.fullmatch(r"(quar_)?b(\d+)_c(\d+)", d)
-                if m:
-                    b, c = int(m.group(2)), int(m.group(3))
-                    qdir = self._quarantine_dir(b, c)
-                    qsrc = os.path.join(path, "route=q")
-                    if os.path.exists(qdir):
-                        pass  # already finalized
-                    elif m.group(1):
-                        if os.path.exists(os.path.join(path, "_SUCCESS")):
-                            self._promote_quarantine(path, qdir)
-                            continue
-                    elif os.path.isdir(qsrc):
-                        self._finalize_quarantine(
-                            self.spark.read.schema(STAGED_SCHEMA).parquet(qsrc), b, c
-                        )
-                shutil.rmtree(path, ignore_errors=True)
+        # staging is disposable: every side output settles before its
+        # commit (_settle in pre_commit), so whatever a crashed run left
+        # here belongs to a commit that either happened (its outputs are
+        # already in place) or never did (redelivery, or a re-run
+        # requeue, derives them again). Safe here: ingest is
+        # single-writer and this engine has not started its own staging.
+        shutil.rmtree(os.path.join(self.table_path, "_staging"), ignore_errors=True)
         # vocab outbox lives OUTSIDE _staging (the sweep above must never
         # eat a committed-but-unfolded delta); recover() folds or drops it
         if self._vocab is not None:
@@ -255,6 +231,24 @@ class CdcEngine:
             else:
                 shutil.rmtree(old, ignore_errors=True)
 
+    @staticmethod
+    def _settle(*futures, quiet: bool = False) -> None:
+        """Join every non-None pool job in ``futures``, then re-raise the
+        first job error unless ``quiet``. A commit passes this as its
+        ``pre_commit``, so its side outputs are durable before it and a
+        failed one aborts it; error paths pass ``quiet=True`` to quiesce
+        the pool before propagating the error that came first (a retry
+        would otherwise race a still-running job over the same paths)."""
+        err = None
+        for f in futures:
+            if f is not None:
+                try:
+                    f.result()
+                except Exception as e:
+                    err = err or e
+        if err is not None and not quiet:
+            raise err
+
     # ---------- snapshot bootstrap (initial load, then tail) ----------
 
     def bootstrap(
@@ -275,9 +269,9 @@ class CdcEngine:
         - Rows pass the SAME validation battery as the stream; invalid
           rows land in quarantine under this batch_id, valid rows become
           the table state with ``deleted=false``.
-        - Exactly-once: quarantine is stage-then-renamed (idempotent on
-          re-run), the vocab outbox (if enabled) is staged durably via
-          ``pre_commit``, and the data + ``max_applied_lsn=as_of_lsn``
+        - Exactly-once: the quarantine (stage-then-renamed, idempotent on
+          re-run) and the vocab outbox (if enabled) both settle in the
+          overwrite's ``pre_commit``, and the data + ``max_applied_lsn=as_of_lsn``
           watermark land in ONE commit. A crash anywhere before that
           commit leaves the table fresh — re-running bootstrap is safe;
           after it, re-running raises and tailing resumes at the
@@ -316,11 +310,7 @@ class CdcEngine:
             )
             .collect()
         )
-        # narrow integrity agg: doc_id/lsn only, map-side combined. Any
-        # error on the validation paths must JOIN the lineage future first
-        # (mirror of the stage_future handling around overwrite below):
-        # raising past a still-running pool job leaves an orphaned
-        # concurrent Spark collect and swallows its own failure.
+        # narrow integrity agg: doc_id/lsn only, map-side combined
         try:
             stats = snap_wire.agg(
                 F.count(F.lit(1)).alias("n"),
@@ -341,10 +331,7 @@ class CdcEngine:
                     f"outside [1, as_of_lsn={as_of_lsn}]"
                 )
         except BaseException:
-            try:
-                lineage_future.result()
-            except Exception:
-                pass
+            self._settle(lineage_future, quiet=True)
             raise
 
         expr_r = validation_reason_expr(
@@ -355,18 +342,6 @@ class CdcEngine:
         invalid = snap_wire.filter(expr_r.isNotNull())
 
         ck = as_of_lsn  # the chunk key: the snapshot's one "chunk"
-        qm = self._finalize_quarantine(invalid, batch_id, ck)
-        rows_q = qm["n"]
-        by_reason = {r: qm[r] for r in QUARANTINE_REASONS if qm[r]}
-
-        stage_future = None
-        if self._vocab is not None:
-            delta_wire = valid.select("doc_id", "lsn", "op", "tokens")
-            stage_future = self._pool.submit(
-                self._vocab.stage_delta,
-                batch_id, ck, delta_wire, [], as_of_lsn, True,
-            )
-
         n = self._names()
         target = valid.select(
             F.col("doc_id").alias(n[FID_DOC]),
@@ -376,7 +351,17 @@ class CdcEngine:
             F.col("lsn").alias(n[FID_LSN]),
             F.lit(False).alias(n[FID_DELETED]),
         )
+        # the quarantine finalize and the vocab outbox stage overlap the
+        # overwrite; its pre_commit settles both
+        q_future = self._pool.submit(self._finalize_quarantine, invalid, batch_id, ck)
+        stage_future = None
         try:
+            if self._vocab is not None:
+                delta_wire = valid.select("doc_id", "lsn", "op", "tokens")
+                stage_future = self._pool.submit(
+                    self._vocab.stage_delta,
+                    batch_id, ck, delta_wire, [], as_of_lsn, True,
+                )
             self.table.overwrite(
                 target,
                 expected_version=self.table.current_version(),
@@ -384,20 +369,17 @@ class CdcEngine:
                     "max_applied_lsn": as_of_lsn,
                     "last_batch_id": batch_id,
                 },
-                pre_commit=(
-                    stage_future.result if stage_future is not None else None
-                ),
+                pre_commit=lambda: self._settle(q_future, stage_future),
             )
         except BaseException:
-            if stage_future is not None:
-                try:
-                    stage_future.result()
-                except Exception:
-                    pass
+            self._settle(lineage_future, q_future, stage_future, quiet=True)
             raise
         if stage_future is not None:
             self._vocab.maybe_fold()
 
+        qm = q_future.result()
+        rows_q = qm["n"]
+        by_reason = {r: qm[r] for r in QUARANTINE_REASONS if qm[r]}
         cells = lineage_future.result()
         rows_valid = rows_in - rows_q
         metrics = BatchMetrics(
@@ -489,9 +471,11 @@ class CdcEngine:
         Staged OUTSIDE the partition-discovered quarantine tree (a crashed
         leftover named chunk=M.inprogress would poison partition
         discovery) and renamed whole, so the chunk dir is all-or-nothing:
-        a redelivered chunk replaces it with identical content, and a
-        crash leaves a staged dir that ``init()`` finishes or re-derives.
-        A chunk with no rows keeps whatever dir it already has. Spark's
+        a redelivered chunk replaces it with identical content. Callers
+        settle this before the chunk's commit, so a crash before the
+        rename leaves only disposable staging, swept by ``init()``; the
+        uncommitted chunk is redelivered and finalized again. A chunk
+        with no rows keeps whatever dir it already has. Spark's
         ``_SUCCESS`` marker rides the rename into the chunk dir.
 
         Returns ``{"n": rows, <reason>: rows, ...}``.
@@ -610,10 +594,13 @@ class CdcEngine:
         Why: the tree gains one directory per (batch, chunk) — the unit
         of idempotent redelivery replacement — which is exactly right for
         LIVE batches and exactly wrong at 10⁵ applied batches (partition
-        discovery cost, small files). Compaction is safe for everything
-        below the applied-LSN watermark, i.e. all of it: a redelivered
-        old batch is fully LSN-filtered before the quarantine path runs,
-        so nothing can ever rewrite those directories again.
+        discovery cost, small files). Every chunk dir is safe to archive:
+        a chunk's quarantine settles before its commit, so a dir either
+        belongs to a committed chunk (a redelivery is LSN-filtered before
+        the quarantine path runs, so nothing rewrites it again) or to a
+        chunk whose commit failed, whose redelivery writes the same rows
+        under the same LSNs into a new dir — which the ``lsn`` anti-join
+        below and in ``quarantine()`` keeps exactly-once.
 
         Crash-idempotent without a transaction log: rows are appended to
         the archive MINUS an anti-join on ``lsn`` against what the
@@ -829,9 +816,7 @@ class CdcEngine:
                 watermark=self.applied_lsn(),
                 batch_id=int(self.table.properties().get("last_batch_id", -1)),
                 affected_buckets=affected,
-                pre_commit=(
-                    stage_future.result if stage_future is not None else None
-                ),
+                pre_commit=lambda: self._settle(stage_future),
                 # MUST be copy-on-write: merge-on-read's read resolution
                 # lets the newest delta commit win per key, which is only
                 # correct when delta LSNs are monotone above the base
@@ -842,11 +827,7 @@ class CdcEngine:
                 mode="cow",
             )
         except BaseException:
-            if stage_future is not None:
-                try:
-                    stage_future.result()
-                except Exception:
-                    pass
+            self._settle(stage_future, quiet=True)
             raise
         if stage_future is not None:
             self._vocab.maybe_fold()
@@ -889,11 +870,10 @@ class CdcEngine:
             else 0
         )
         if drift:
-            print(
-                f"[cdc] requeue count drift {drift:+d} "
-                f"(kept={kept} rescued={rescued_n} examined={examined}) — "
+            log.warning(
+                "requeue count drift %+d (kept=%d rescued=%d examined=%d) — "
                 "concurrent writer during a documented single-writer op?",
-                flush=True,
+                drift, kept, rescued_n, examined,
             )
         return {
             "examined": examined,
@@ -1091,7 +1071,11 @@ class CdcEngine:
             #          stage-then-rename, counts from an Observation).
             #   sync   merge: reads the file-backed route=d delta (no
             #          persist, no recompute races) into the bucket-pruned
-            #          MERGE (no internal distinct/count jobs).
+            #          MERGE (no internal distinct/count jobs). Its
+            #          pre_commit settles the finalize and the vocab
+            #          stage, so both side outputs are durable before the
+            #          watermark moves and a failed one aborts the commit;
+            #          the chunk's staging dir is garbage after either.
             _t = time.time()
             if ddl:
                 lineage_future = self._pool.submit(self._lineage, chunk)
@@ -1235,7 +1219,6 @@ class CdcEngine:
                     # even an all-quarantined chunk advances the watermark
                     # (merge with an empty delta commits properties only)
                     watermark = max(applied, chunk_lsn_max or applied)
-                    stage_future = None
                     if self._vocab is not None and n_delta > 0:
                         # outbox stage: the delta is computed against the
                         # pre-merge snapshot (CoW writes new files, MOR
@@ -1271,9 +1254,7 @@ class CdcEngine:
                     self._merge_chunk(
                         delta, n_delta, watermark, batch_id,
                         affected_buckets=affected, delta_bytes=delta_bytes,
-                        pre_commit=(
-                            stage_future.result if stage_future is not None else None
-                        ),
+                        pre_commit=lambda: self._settle(q_future, stage_future),
                     )
                     _mark("merge")
                     applied = watermark
@@ -1282,23 +1263,12 @@ class CdcEngine:
                         _mark("vocab_fold")
 
             except BaseException:
-                # quiesce in-flight pool jobs before propagating: a
-                # same-session foreachBatch retry would otherwise race a
-                # still-running _finalize_quarantine / vocab stage against
-                # its own re-run over the identical staging/tmp/qdir paths
-                # (overwrite-under-reader, duelling renames). Their own
-                # errors are secondary to the one propagating.
-                for _fut in (q_future, stage_future):
-                    if _fut is not None:
-                        try:
-                            _fut.result()
-                        except Exception:
-                            pass
+                self._settle(q_future, stage_future, quiet=True)
                 raise
             finally:
                 winners.unpersist()
             if q_future is not None:
-                qm = q_future.result()  # finalize ran in parallel
+                qm = q_future.result()  # settled by the merge's pre_commit
                 for r in QUARANTINE_REASONS:
                     if qm[r]:
                         by_reason[r] = by_reason.get(r, 0) + qm[r]

@@ -41,7 +41,6 @@ class StreamingCdcRunner:
         engine: CdcEngine,
         checkpoint_dir: str | None = None,
         max_files_per_trigger: int | None = None,
-        batch_file_rewrite: bool = True,
     ):
         self.spark = spark
         self.log_dir = os.path.abspath(log_dir)
@@ -50,11 +49,6 @@ class StreamingCdcRunner:
             engine.table_path, "_stream_checkpoint"
         )
         self.max_files_per_trigger = max_files_per_trigger
-        # When True, re-read each micro-batch's immutable file list as a
-        # plain batch DataFrame for full Catalyst optimization; False
-        # forces the incremental-plan slow path (also the automatic
-        # fallback whenever the offset log doesn't parse).
-        self.batch_file_rewrite = batch_file_rewrite
         # recent batch ids (diagnostics/tests) — bounded so a long-running
         # continuous tail (~17k micro-batches/day at a 5 s trigger) doesn't
         # grow driver heap forever; batches_total keeps the full count
@@ -81,7 +75,7 @@ class StreamingCdcRunner:
         # unaffected (same immutable file list from the source's own
         # offset log, and the engine's LSN watermark guards redelivery
         # anyway).
-        files = self._batch_files(batch_id) if self.batch_file_rewrite else []
+        files = self._batch_files(batch_id)
         if files:
             df = self.spark.read.schema(EVENT_SCHEMA).parquet(*files)
         self.engine.apply_batch(df, batch_id=batch_id)

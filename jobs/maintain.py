@@ -138,7 +138,7 @@ def main():
     )
     if not engine.table.exists():
         raise SystemExit(f"no table at {args.table_dir}")
-    # run the engine's crash recovery (staged quarantine, archive swap,
+    # run the engine's crash recovery (staging sweep, archive swap,
     # vocab outbox) before any maintenance op reads those trees
     engine.init()
 

@@ -15,7 +15,7 @@ from file_standardization_etl_spark.cdc.events import (
 )
 from file_standardization_etl_spark.cdc.oracle import replay
 
-from tests.test_cdc import assert_state_matches
+from tests.test_cdc import assert_state_matches, fail_once
 
 SNAP_DDL = "doc_id string, tokens array<int>, n_tok int, source string, lsn long"
 
@@ -84,7 +84,7 @@ def test_bootstrap_default_lsn_and_redelivered_prefix_noop(spark, tmp_path):
     assert got == want  # payloads bitwise; last_lsn differs by design (=L)
 
 
-def test_bootstrap_validates_and_quarantines(spark, tmp_path):
+def test_bootstrap_validates_and_quarantines(spark, tmp_path, monkeypatch):
     eng = make_engine(spark, tmp_path)
     rows = [
         ("d1", [1, 2, 3], 3, "web", 5),
@@ -93,7 +93,15 @@ def test_bootstrap_validates_and_quarantines(spark, tmp_path):
         ("d4", None, 1, "web", 8),          # null_tokens
         ("d5", [], 0, "web", 9),            # empty_tokens
     ]
-    m = eng.bootstrap(spark.createDataFrame(rows, SNAP_DDL), as_of_lsn=10)
+    snap = spark.createDataFrame(rows, SNAP_DDL)
+    # a failed quarantine finalize aborts the bootstrap commit: the table
+    # stays fresh (v0) and bootstrap can simply run again
+    fail_once(monkeypatch, CdcEngine, "_finalize_quarantine", OSError("finalize failed"))
+    with pytest.raises(OSError, match="finalize failed"):
+        eng.bootstrap(snap, as_of_lsn=10)
+    assert eng.table.current_version() == 0
+
+    m = eng.bootstrap(snap, as_of_lsn=10)
     assert m.rows_in == 5 and m.rows_valid == 1 and m.rows_quarantined == 4
     assert m.quarantine_by_reason == {
         "bad_n_tok": 1, "bad_source": 1, "null_tokens": 1, "empty_tokens": 1,

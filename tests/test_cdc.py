@@ -34,6 +34,17 @@ def make_engine(spark, tmp_path, **kw) -> CdcEngine:
     return e
 
 
+def fail_once(monkeypatch, owner, attr: str, exc: BaseException) -> None:
+    """Make ``owner.attr`` raise ``exc`` on its next call only."""
+    orig = getattr(owner, attr)
+
+    def once(*a, **kw):
+        monkeypatch.setattr(owner, attr, orig)
+        raise exc
+
+    monkeypatch.setattr(owner, attr, once)
+
+
 def test_single_batch_matches_oracle(spark, tmp_path):
     cfg = EventGenConfig(n_events=3000, n_docs=300, seed=7)
     events = generate_events(cfg)
@@ -293,8 +304,8 @@ def test_add_column_onto_wire_reserved_name_rejected_before_commit(spark, tmp_pa
 
 def test_init_sweeps_stale_quarantine_staging(spark, tmp_path):
     """A crash between the quarantine staging write and its rename leaves
-    _staging/quar_b*_c* forever (redelivery is LSN-filtered past the
-    finalize), so engine init must sweep staging leftovers."""
+    _staging/quar_b*_c* behind; staging is disposable, so engine init
+    sweeps it and ingest proceeds normally."""
     import os
 
     root = str(tmp_path / "cdc")
@@ -554,108 +565,141 @@ def test_changes_feed_across_rename_and_widen(spark, tmp_path):
         assert r["origin"] == want[(op, d)]["source"], (op, d)
 
 
-def test_init_recovers_quarantine_staged_by_crashed_run(spark, tmp_path):
-    """A crash between the merge's watermark commit and the async
-    quarantine finalize must NOT lose that chunk's quarantine rows:
-    init() finishes the job from staging — both the reasoned-but-
-    unrenamed shape (quar_b*_c*) and the pre-reason shape (b*_c*/route=q)."""
+def _crash_batch_before_commit(spark, tmp_path, monkeypatch, events, cut):
+    """Apply ``events[:cut]``, then crash batch 1 after its chunk's
+    quarantine dir was promoted but before its merge committed."""
+    import os
+
+    from file_standardization_etl_spark.lake.table import LakeTable
+
+    engine = make_engine(spark, tmp_path)
+    engine.apply_batch(events_df(spark, events[:cut]), batch_id=0)
+    before = engine.applied_lsn()
+    fail_once(monkeypatch, LakeTable, "_commit", RuntimeError("crash before commit"))
+    with pytest.raises(RuntimeError, match="crash before commit"):
+        engine.apply_batch(events_df(spark, events[cut:]), batch_id=1)
+    assert engine.applied_lsn() == before
+    assert os.listdir(os.path.join(engine.quarantine_path, "batch_id=1"))
+    return engine
+
+
+def _assert_quarantine_matches(engine, oracle):
+    """Every oracle quarantine row once, none without a reason."""
+    from pyspark.sql import functions as F
+
+    q = engine.quarantine()
+    assert len(oracle.quarantine) > 0
+    assert q.count() == len(oracle.quarantine)
+    assert q.select("lsn").distinct().count() == q.count()
+    assert q.filter(F.col("reason").isNull()).count() == 0
+
+
+def test_init_recovers_quarantine_staged_by_crashed_run(spark, tmp_path, monkeypatch):
+    """A crash after a chunk's quarantine dir was promoted but before its
+    merge committed, with staged quarantine of every shape a dying run
+    can leave (routed b*_c*/route=q slices, a reasoned quar_b*_c* with
+    _SUCCESS): staging is disposable, so init() sweeps _staging whole and
+    redelivery recovers the oracle's state and quarantine."""
     import os
     import shutil
 
-    from file_standardization_etl_spark.functions.validation import (
-        validation_reason_expr,
-    )
-    from pyspark.sql import functions as F
-
     events = generate_events(EventGenConfig(n_events=2000, n_docs=100, seed=53))
-    engine = make_engine(spark, tmp_path)
-    engine.apply_batch(events_df(spark, events[:1000]), batch_id=0)
-    base = engine.quarantine().count()
-    assert base > 0
+    engine = _crash_batch_before_commit(spark, tmp_path, monkeypatch, events, 1000)
 
-    # fabricate the crash artifacts a dying run would leave behind
     stg = os.path.join(engine.table_path, "_staging")
-    wire = events_df(spark, events[1000:]).drop("schema_change")
-    invalid = wire.filter(
-        validation_reason_expr(
-            F.col("op"), F.col("tokens"), F.col("n_tok"), F.col("source"),
-            engine.whitelist,
-        ).isNotNull()
+    (crashed,) = os.listdir(stg)
+    shutil.copytree(
+        os.path.join(stg, crashed, "route=q"), os.path.join(stg, "b7_c0", "route=q")
     )
-    n_inv = invalid.count()
-    assert n_inv > 0
-    # shape 1: crash before the reason pass
-    invalid.write.parquet(os.path.join(stg, "b1_c0", "route=q"))
-    # shape 2: crash between reasoned write and rename — reuse batch 0's
-    # already-reasoned rows under a new batch id (chunk dirs are keyed by
-    # the chunk's max data LSN, so discover the actual dir name)
     b0 = os.path.join(engine.quarantine_path, "batch_id=0")
-    q0 = os.path.join(b0, sorted(os.listdir(b0))[0])
-    shutil.copytree(q0, os.path.join(stg, "quar_b2_c0"))
-    n_q0 = spark.read.parquet(q0).count()
+    shutil.copytree(
+        os.path.join(b0, sorted(os.listdir(b0))[0]), os.path.join(stg, "quar_b8_c0")
+    )
+    assert os.path.exists(os.path.join(stg, "quar_b8_c0", "_SUCCESS"))
 
     fresh = CdcEngine(spark, engine.table_path)
     fresh.init()
-    got = {
-        r["batch_id"]: r["n"]
-        for r in fresh.quarantine().groupBy("batch_id").count()
-        .withColumnRenamed("count", "n").collect()
-    }
-    assert got[1] == n_inv, got
-    assert got[2] == n_q0, got
-    assert not os.listdir(stg)  # staging fully drained
-    # recovered rows carry real reasons, not nulls
-    assert fresh.quarantine().filter(
-        F.col("batch_id").isin(1, 2) & F.col("reason").isNull()
-    ).count() == 0
+    assert not os.path.exists(stg)
+    fresh.apply_batch(events_df(spark, events[1000:]), batch_id=1)
+    oracle = replay(events)
+    assert_state_matches(fresh, oracle)
+    _assert_quarantine_matches(fresh, oracle)
 
 
-def test_init_recovery_crash_mid_recovery_write_loses_nothing(spark, tmp_path):
-    """Crash DURING a previous init()'s own recovery of a b*_c*/route=q
-    leftover: the re-reasoned rows must be staged (quar_b*_c*) and
-    renamed, never written directly to the final qdir — a partial direct
-    write would make the NEXT init treat the chunk as recovered and sweep
-    the staging source, truncating its quarantine forever. Here both
-    artifacts coexist (the original route=q dir and a partial staged
-    quar_ dir) and a fresh init must still recover every row."""
+def test_init_recovery_crash_mid_recovery_write_loses_nothing(spark, tmp_path, monkeypatch):
+    """Crashes during the recovery itself: a partial staged quar_ write
+    is left, the next init()'s sweep of _staging dies half-way, and the
+    redelivery after it crashes before its commit again. Each restart
+    (init + redelivery) must still end at the oracle's state and
+    quarantine, with nothing lost or doubled."""
     import os
+    import shutil
 
-    from pyspark.sql import functions as F
+    from file_standardization_etl_spark.lake.table import LakeTable
 
-    from file_standardization_etl_spark.functions.validation import (
-        validation_reason_expr,
-    )
-
-    events = generate_events(EventGenConfig(n_events=1500, n_docs=100, seed=77))
-    engine = make_engine(spark, tmp_path)
-    engine.apply_batch(events_df(spark, events[:700]), batch_id=0)
+    events = generate_events(EventGenConfig(n_events=1600, n_docs=100, seed=77))
+    engine = _crash_batch_before_commit(spark, tmp_path, monkeypatch, events, 800)
 
     stg = os.path.join(engine.table_path, "_staging")
-    wire = events_df(spark, events[700:]).drop("schema_change")
-    invalid = wire.filter(
-        validation_reason_expr(
-            F.col("op"), F.col("tokens"), F.col("n_tok"), F.col("source"),
-            engine.whitelist,
-        ).isNotNull()
-    )
-    n_inv = invalid.count()
-    assert n_inv > 0
-    invalid.write.parquet(os.path.join(stg, "b3_c0", "route=q"))
-    # the partial staged output of a recovery that crashed mid-write:
-    # a bare parquet dir with only a _temporary marker and one junk file
-    partial = os.path.join(stg, "quar_b3_c0")
-    os.makedirs(os.path.join(partial, "_temporary"), exist_ok=True)
+    partial = os.path.join(stg, "quar_b9_c0")
+    os.makedirs(os.path.join(partial, "_temporary"))
     with open(os.path.join(partial, "part-corrupt.parquet"), "w") as f:
         f.write("not parquet")
 
+    # restart 1: the sweep removes one staged dir, then the process dies
+    real_rmtree = shutil.rmtree
+
+    def dying_sweep(path, *a, **kw):
+        if os.path.normpath(path) == os.path.normpath(stg):
+            real_rmtree(os.path.join(stg, sorted(os.listdir(stg))[0]))
+            raise RuntimeError("crash mid sweep")
+        return real_rmtree(path, *a, **kw)
+
+    monkeypatch.setattr(shutil, "rmtree", dying_sweep)
+    with pytest.raises(RuntimeError, match="crash mid sweep"):
+        CdcEngine(spark, engine.table_path).init()
+    monkeypatch.setattr(shutil, "rmtree", real_rmtree)
+    assert os.listdir(stg)  # the sweep was cut short
+
+    # restart 2: the sweep completes; the redelivery crashes before commit
+    second = CdcEngine(spark, engine.table_path)
+    second.init()
+    assert not os.path.exists(stg)
+    fail_once(monkeypatch, LakeTable, "_commit", RuntimeError("crash again"))
+    with pytest.raises(RuntimeError, match="crash again"):
+        second.apply_batch(events_df(spark, events[800:]), batch_id=1)
+
+    # restart 3: init + redelivery land exactly the oracle
     fresh = CdcEngine(spark, engine.table_path)
     fresh.init()
-    got = fresh.quarantine().filter(F.col("batch_id") == 3).count()
-    assert got == n_inv
-    assert not os.listdir(stg)
-    assert fresh.quarantine().filter(
-        (F.col("batch_id") == 3) & F.col("reason").isNull()
-    ).count() == 0
+    assert not os.path.exists(stg)
+    fresh.apply_batch(events_df(spark, events[800:]), batch_id=1)
+    oracle = replay(events)
+    assert_state_matches(fresh, oracle)
+    _assert_quarantine_matches(fresh, oracle)
+
+
+def test_failed_side_job_aborts_the_commit(spark, tmp_path, monkeypatch):
+    """A quarantine finalize that fails aborts its chunk's commit: the
+    watermark stays put, and a same-engine retry with no init() — the
+    way a resident session retries a micro-batch — quarantines every
+    invalid row."""
+    from pyspark.sql import functions as F
+
+    events = generate_events(EventGenConfig(n_events=800, n_docs=60, seed=53))
+    engine = make_engine(spark, tmp_path)
+    fail_once(monkeypatch, CdcEngine, "_finalize_quarantine", OSError("finalize failed"))
+    with pytest.raises(OSError, match="finalize failed"):
+        engine.apply_batch(events_df(spark, events), batch_id=0)
+    assert engine.applied_lsn() == 0
+
+    engine.apply_batch(events_df(spark, events), batch_id=0)
+    oracle = replay(events)
+    assert_state_matches(engine, oracle)
+    q = engine.quarantine()
+    assert len(oracle.quarantine) > 0
+    assert q.count() == len(oracle.quarantine)
+    assert q.filter(F.col("reason").isNull()).count() == 0
 
 
 def test_crash_between_chunks_redelivery_no_wedge_no_quarantine_loss(
