@@ -412,11 +412,12 @@ def run_requeue(
     """Dead-letter replay cost: seed a table from a stream where 10% of
     events carry a non-whitelisted source (they quarantine), then widen
     the whitelist and requeue. This is the expensive maintenance mode —
-    the rescue merge is FORCED copy-on-write (requeued LSNs are below
-    the watermark, so merge-on-read's newest-commit-wins resolution
-    would be wrong) and it ends with a quarantine compact + filtered
-    archive swap. Reported per round so the CoW-forced cost is visible
-    round-over-round."""
+    the rescue set runs through the stream's chunk pipeline at the
+    unchanged watermark, so its merge is copy-on-write (requeued LSNs
+    are at or below the watermark, where merge-on-read's
+    newest-commit-wins resolution would be wrong), and it ends with a
+    quarantine compact + filtered archive swap. Reported per round so
+    the CoW cost is visible round-over-round."""
     from file_standardization_etl_spark.cdc.apply import CdcEngine
     from file_standardization_etl_spark.cdc.events import (
         BAD_SOURCES,

@@ -118,7 +118,7 @@ class TokenVocab:
 
         Stream chunks advance the watermark, so ``meta['watermark'] <=
         applied`` decides. A quarantine-requeue merge CANNOT advance the
-        watermark (its LSNs are all below it), so its pending meta
+        watermark (its LSNs are all at or below it), so its pending meta
         instead carries ``requires_version`` — the target version its
         merge will create (current+1, sound under the engine's
         single-writer contract) — and commit is decided by version.

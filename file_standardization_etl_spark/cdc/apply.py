@@ -48,7 +48,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.validation import validation_reason_expr, with_reason
-from ..lake.table import BROADCAST_MAX_KEY_ROWS, LakeTable, bucket_expr
+from ..lake.table import BROADCAST_MAX_KEY_ROWS, LakeTable, TableSchema, bucket_expr
 from .dedup import lww_winners
 from .events import EVENT_SCHEMA, SOURCE_WHITELIST
 
@@ -432,8 +432,6 @@ class CdcEngine:
         downstream CDC consumer could itself tail. Column names are
         bound by field id against the v_to snapshot, so a rename
         between the versions cannot misalign the LSN/tombstone checks."""
-        from ..lake.table import TableSchema
-
         snap_to = self.table.snapshot(v_to)
         names = {
             c.id: c.name for c in TableSchema.from_json(snap_to["schema"]).columns
@@ -690,41 +688,49 @@ class CdcEngine:
     def requeue_quarantine(self, whitelist: list[str] | None = None) -> dict:
         """Re-validate quarantined events against ``whitelist`` (typically
         a widened source whitelist after a config fix) and apply the
-        now-valid ones through the standard LWW merge — the dead-letter
-        replay every production CDC pipeline eventually needs.
+        now-valid ones through the stream's own chunk pipeline
+        (:meth:`_apply_chunk`: LWW, routed write, vocab stage, merge) —
+        the dead-letter replay every production CDC pipeline eventually
+        needs.
 
-        Correctness comes from the merge's own monotone-LSN guard: a
-        rescued event's LSN is below the watermark by construction, so if
-        its doc has since received a newer event the rescue loses the LWW
-        compare and changes nothing; otherwise it applies exactly as it
-        would have originally. The watermark itself never moves.
+        The rescue set is every quarantined event the whitelist admits
+        with an LSN at or below the watermark and at or above the
+        tombstone-expiry fence. It is applied as one chunk at the
+        current watermark, so the watermark never moves; such a chunk
+        merges copy-on-write and version-gates its vocab pending
+        (:meth:`_advances`). Correctness comes from the merge's
+        monotone-LSN guard: a rescued event whose doc has since received
+        a newer event loses the LWW compare and changes nothing;
+        otherwise it applies exactly as it would have originally.
+
+        Events above the watermark are never rescued: they belong to a
+        chunk whose quarantine settled but whose commit failed, and its
+        redelivery quarantines them again. Events below the
+        ``tombstones_expired_below_lsn`` fence (recorded by
+        jobs/maintain.py --expire-tombstones) are never rescued either:
+        the tombstones that would veto them are gone, so applying them
+        could resurrect deleted docs — they stay quarantined instead.
 
         Exactly-once across crashes, in commit order:
-        1. vocab outbox (if enabled) stages with ``requires_version`` =
-           the version this merge will create — recovery folds it only if
-           that version exists (a watermark comparison can't decide here
-           because requeue doesn't advance it);
-        2. the merge commits data (+ unchanged watermark properties);
-        3. rescued rows are dropped from quarantine via
-           compact-then-filtered-archive-swap. A crash before (3) leaves
+        1. the chunk's merge commits data (+ unchanged watermark
+           properties), its vocab pending settled in ``pre_commit``;
+        2. rescued rows are dropped from quarantine via
+           compact-then-filtered-archive-swap. A crash before (2) leaves
            them quarantined but already applied — a re-run re-rescues
            them and every merge no-ops on the LSN guard, then completes
            the cleanup. The archive swap itself is crash-recovered by
            ``init()`` (``quarantine_archive.old``).
 
         Ops contract: run with the ingester stopped (like ``rebucket``) —
-        the archive swap and the requires_version reasoning both assume
+        the archive swap and the version-gated vocab pending both assume
         this process is the single writer. A table whose vocab aggregate
         is maintained must requeue through a vocab-aware engine
-        (guarded). Events below the ``tombstones_expired_below_lsn``
-        fence (recorded by jobs/maintain.py --expire-tombstones) are
-        never rescued: the tombstones that would veto them are gone, so
-        applying them could resurrect deleted docs — they stay
-        quarantined instead.
+        (guarded).
 
         Returns {"examined", "count_drift", "rescued", "merged"} counts
-        (count_drift is 0 under the single-writer contract; nonzero
-        flags a concurrent writer racing the archive swap).
+        (``merged`` = the LWW winners of the rescue set; count_drift is 0
+        under the single-writer contract; nonzero flags a concurrent
+        writer racing the archive swap).
         """
         # a table whose vocab aggregate is maintained on disk MUST requeue
         # through a vocab-aware engine, or the rescue merge would commit
@@ -739,30 +745,33 @@ class CdcEngine:
         self._recover_archive_swap()
         wl = list(whitelist) if whitelist is not None else list(self.whitelist)
         q = self.quarantine()
+        props = self.table.properties()
+        applied = int(props.get("max_applied_lsn", 0))
         # tombstone-expiry fence: expiry physically dropped tombstones
         # below this LSN, so a rescue below it could resurrect a deleted
         # doc (the information needed to refuse it is gone). Such events
         # stay quarantined.
-        fence = int(
-            self.table.properties().get("tombstones_expired_below_lsn", 0)
-        )
+        fence = int(props.get("tombstones_expired_below_lsn", 0))
         expr_r = validation_reason_expr(
             F.col("op"), F.col("tokens"), F.col("n_tok"), F.col("source"), wl
         )
-        # materialize the rescued set FIRST: every later step (LWW, merge
-        # delta, cleanup anti-join) reads this file-backed frame, because
-        # the source quarantine paths are mutated by the cleanup below and
-        # a lazy plan over them would recompute against moved files
+        # materialize the rescued set FIRST: the chunk pipeline and the
+        # cleanup anti-join read this file-backed frame, because the
+        # source quarantine paths are mutated by the cleanup below and a
+        # lazy plan over them would recompute against moved files
         rescued_stage = os.path.join(self.table_path, "_staging", "requeue_rescued")
         obs_q = Observation("requeue-examined")
         obs_r = Observation("requeue-rescued")
         # examined is observed BELOW the rescue filter in the same plan —
         # one quarantine scan produces both counts (CollectMetrics blocks
         # predicate pushdown, so the filter cannot shrink what obs_q sees)
-        rescue_cols = ["doc_id", "lsn", "op", "tokens", "n_tok", "source"]
-        q.observe(obs_q, F.count(F.lit(1)).alias("n")).filter(
-            expr_r.isNull() & (F.col("lsn") >= F.lit(fence))
-        ).select(*rescue_cols).observe(obs_r, F.count(F.lit(1)).alias("n")).write.mode(
+        staged(
+            q.observe(obs_q, F.count(F.lit(1)).alias("n")).filter(
+                expr_r.isNull()
+                & (F.col("lsn") >= F.lit(fence))
+                & (F.col("lsn") <= F.lit(applied))
+            )
+        ).observe(obs_r, F.count(F.lit(1)).alias("n")).write.mode(
             "overwrite"
         ).parquet(rescued_stage)
         examined = int(obs_q.get.get("n") or 0)
@@ -770,67 +779,13 @@ class CdcEngine:
         if rescued_n == 0:
             shutil.rmtree(rescued_stage, ignore_errors=True)
             return {"examined": examined, "rescued": 0, "merged": 0}
-        rescued = (
-            self.spark.read.schema(STAGED_SCHEMA).parquet(rescued_stage).select(*rescue_cols)
-        )
-        # LWW within the rescued set (one doc may have several rescued
-        # events), by the same aggregate as the hot path
-        winners = lww_winners(rescued).select("doc_id", "lsn")
-        delta = rescued.join(winners, ["doc_id", "lsn"])
-        nb = self.table.snapshot()["n_buckets"]
-        stats = (
-            delta.select(bucket_expr(F.col("doc_id"), nb).alias("_b"))
-            .groupBy()
-            .agg(F.count(F.lit(1)).alias("n"), F.collect_set("_b").alias("buckets"))
-            .collect()[0]
-        )
-        n_delta = int(stats["n"] or 0)
-        affected = [int(b) for b in (stats["buckets"] or [])]
-
-        stage_future = None
-        if self._vocab is not None:
-            # requeue pendings live on their own marker axis
-            # (folded_requeue_version, keyed by the version this merge
-            # will create) — they must NOT borrow the stream's
-            # (batch, chunk) order: a synthetic chunk id above the
-            # watermark would advance the stream marker past a later
-            # REDELIVERED chunk of the same batch (whose lsn-keyed id is
-            # smaller), silently dropping that chunk's vocab delta.
-            # batch_id/chunk here are informational only.
-            rv = self.table.current_version() + 1
-            stage_future = self._pool.submit(
-                self._vocab.stage_delta,
-                int(self.table.properties().get("last_batch_id", -1)),
-                0,
-                delta,
-                affected,
-                self.applied_lsn(),
-                False,
-                rv,
-                n_delta,
-            )
-        try:
-            self._merge_chunk(
-                delta,
-                n_delta,
-                watermark=self.applied_lsn(),
-                batch_id=int(self.table.properties().get("last_batch_id", -1)),
-                affected_buckets=affected,
-                pre_commit=lambda: self._settle(stage_future),
-                # MUST be copy-on-write: merge-on-read's read resolution
-                # lets the newest delta commit win per key, which is only
-                # correct when delta LSNs are monotone above the base
-                # (stream batches, via the watermark filter). Requeued
-                # LSNs are below the watermark by construction — only the
-                # CoW resolver's explicit `new.lsn > old.last_lsn` guard
-                # evaluates them correctly.
-                mode="cow",
-            )
-        except BaseException:
-            self._settle(stage_future, quiet=True)
-            raise
-        if stage_future is not None:
-            self._vocab.maybe_fold()
+        rescued = self.spark.read.schema(STAGED_SCHEMA).parquet(rescued_stage)
+        # one chunk at the unchanged watermark; every row passes `wl`, so
+        # the routed write stages no route=q slice and no quarantine dir
+        # is touched
+        merged = self._apply_chunk(
+            rescued, rescued_n, applied, int(props.get("last_batch_id", -1)), 0, wl
+        )["winners"]
 
         # cleanup: fold the live tree into the archive, then swap in an
         # archive minus every rescued lsn (winners AND superseded losers —
@@ -879,7 +834,7 @@ class CdcEngine:
             "examined": examined,
             "count_drift": drift,
             "rescued": rescued_n,
-            "merged": n_delta,
+            "merged": merged,
         }
 
     def manifest(self) -> list[dict]:
@@ -901,11 +856,12 @@ class CdcEngine:
         affected_buckets: list[int] | None = None,
         delta_bytes: int | None = None,
         pre_commit=None,
-        mode: str = "auto",
     ) -> None:
-        n = self._names()
+        snap = self.table.snapshot()
+        cur = TableSchema.from_json(snap["schema"])
+        n = {c.id: c.name for c in cur.columns}
         key = n[FID_DOC]
-        schema_ver = self.table.schema().version
+        schema_ver = cur.version
         # Wire→table key binding: events always say 'doc_id' (the wire
         # format is fixed); if a schema_change renamed the TABLE's key
         # column, merge must see the delta's key under the table name —
@@ -950,7 +906,7 @@ class CdcEngine:
                 ),
             }
             # columns added by schema evolution: carry old value (null for new rows)
-            for c in self.table.schema().columns:
+            for c in cur.columns:
                 if c.name not in out:
                     out[c.name] = old[c.name]
             self._resolve_cache[schema_ver] = out
@@ -963,7 +919,9 @@ class CdcEngine:
             delta_rows=delta_rows,
             affected_buckets=affected_buckets,
             delta_bytes=delta_bytes,
-            mode=mode,
+            # a chunk at or below the watermark resolves through CoW's
+            # explicit `new.lsn > old.last_lsn` guard above
+            mode="auto" if self._advances(snap, watermark) else "cow",
             pre_commit=pre_commit,
             # vocab maintenance re-reads the affected buckets' old rows
             # EVERY batch (stage_delta's pre-merge snapshot scan), so read
@@ -993,14 +951,192 @@ class CdcEngine:
             .collect()
         )
 
+    @staticmethod
+    def _advances(snap: dict, watermark: int) -> bool:
+        """Does a chunk committed at ``watermark`` advance ``snap``'s
+        watermark? A stream chunk does (its events are filtered above
+        the watermark); a requeue rescue (every LSN at or below it) does
+        not. Two rules follow from it: merge-on-read resolves a key to
+        its newest delta row, the LWW winner only while every delta LSN
+        is above the stored state, so a chunk that does not advance
+        merges copy-on-write; and its vocab pending is gated on the
+        target version its merge creates, because the watermark cannot
+        tell whether that merge committed."""
+        return watermark > int(snap["properties"].get("max_applied_lsn", 0))
+
+    def _lap(self, label: str, t0: float) -> float:
+        """Add the wall seconds since ``t0`` to ``timings[label]``; return now."""
+        now = time.time()
+        self.timings[label] = self.timings.get(label, 0.0) + now - t0
+        return now
+
+    def _apply_chunk(
+        self,
+        chunk: DataFrame,
+        rows_in: int,
+        watermark: int,
+        batch_id: int,
+        ck: int,
+        whitelist: list[str],
+    ) -> dict:
+        """The one write path: apply ``chunk`` (``rows_in`` wire events,
+        DDL-free) in one commit that sets ``max_applied_lsn=watermark``.
+        The stream passes the chunk's max LSN; a requeue passes the
+        unchanged watermark (see :meth:`_advances` for what that
+        changes).
+
+        The chunk's token arrays are decoded in exactly TWO full passes;
+        everything else rides those jobs or touches only small staged
+        outputs:
+
+        - pass 1 LWW: narrow (doc_id → max lsn, cnt, winner-op) agg over
+          the rows valid under ``whitelist`` (validity needs
+          size(tokens), so arrays decode once); one collect returns delta
+          size, skew stats, delete count and the affected-bucket set.
+        - pass 2 routed write: ONE scan left-joins the broadcast winner
+          keys and writes partitionBy(route): invalid → route=q, valid
+          winner → route=d, valid loser dropped.
+        - async quarantine finalize: the small route=q slice through
+          :meth:`_finalize_quarantine` into ``(batch_id, ck)``.
+        - sync merge: reads the file-backed route=d delta (no persist, no
+          recompute races) into the bucket-pruned MERGE. Its pre_commit
+          settles the finalize and the vocab stage, so both side outputs
+          are durable before the commit and a failed one aborts it; the
+          chunk's staging dir is garbage after either.
+
+        ``ck`` keys the chunk's staging, quarantine and vocab dirs: the
+        stream passes the chunk's max data LSN, stable across partial
+        redelivery (a positional index renumbers when earlier chunks are
+        already past the watermark, and would replace — or look
+        already-folded next to — another chunk's outputs). Writes no
+        manifest. Returns ``{"winners", "max_key_rows", "deletes",
+        "salted", "quarantine"}`` (the finalize's counts, or None when no
+        row was invalid).
+        """
+        t = time.time()
+        expr_r = validation_reason_expr(
+            F.col("op"), F.col("tokens"), F.col("n_tok"), F.col("source"), whitelist
+        )
+        snap = self.table.snapshot()
+        staging = os.path.join(self.table_path, "_staging", f"b{batch_id}_c{ck}")
+        salted = rows_in >= self.salt_threshold
+        winners = lww_winners(chunk.filter(expr_r.isNull()), salted=salted).withColumn(
+            "_wb", bucket_expr(F.col("doc_id"), snap["n_buckets"])
+        ).persist()
+        q_future = None
+        stage_future = None
+        # unpersist on EVERY exit: an exception mid-chunk (commit
+        # conflict, IO error, rejected DDL) must not pin the cached
+        # winner set in executor storage for the session lifetime —
+        # retried foreachBatch failures would leak one per attempt
+        try:
+            w = winners.agg(
+                F.count(F.lit(1)).alias("n"),
+                F.max("cnt").alias("mx"),
+                F.sum(F.when(F.col("win_del"), 1).otherwise(0)).alias("deletes"),
+                F.collect_set("_wb").alias("buckets"),
+            ).collect()[0]
+            n_delta = w["n"]
+            affected = [int(b) for b in (w["buckets"] or [])]
+            t = self._lap("lww_and_stats", t)
+
+            keys = winners.select("doc_id", "lsn").withColumn("__win", F.lit(1))
+            if n_delta <= BROADCAST_MAX_KEY_ROWS:
+                keys = F.broadcast(keys)
+            routed = (
+                chunk.join(keys, on=["doc_id", "lsn"], how="left")
+                .withColumn(
+                    "route",
+                    F.when(expr_r.isNotNull(), F.lit("q")).when(
+                        F.col("__win") == 1, F.lit("d")
+                    ),
+                )
+                .filter(F.col("route").isNotNull())
+            )
+            staged(routed, "route").write.mode("overwrite").partitionBy(
+                "route"
+            ).parquet(staging)
+            t = self._lap("routed_write", t)
+
+            qsrc = os.path.join(staging, "route=q")
+            if os.path.isdir(qsrc):  # no invalid rows staged otherwise
+                q_future = self._pool.submit(
+                    lambda: self._finalize_quarantine(
+                        self.spark.read.schema(STAGED_SCHEMA).parquet(qsrc),
+                        batch_id,
+                        ck,
+                    )
+                )
+
+            # Existence-gated (driver-local staging), NOT a bare except:
+            # an unexpected read failure must propagate — substituting an
+            # empty delta and then committing the watermark would
+            # permanently drop every valid row in the chunk with no retry
+            # possible. An all-quarantined chunk still commits (properties
+            # only), so the watermark advances past it.
+            dedup_cols = ["doc_id", "lsn", "op", "tokens", "n_tok", "source"]
+            ddir = os.path.join(staging, "route=d")
+            delta_bytes = None
+            if os.path.isdir(ddir):
+                delta = self.spark.read.schema(STAGED_SCHEMA).parquet(ddir).select(
+                    *dedup_cols
+                )
+                delta_bytes = LakeTable._dir_bytes(ddir)
+            else:
+                delta = self.spark.createDataFrame(
+                    [],
+                    T.StructType([f for f in EVENT_SCHEMA.fields if f.name in dedup_cols]),
+                )
+
+            if self._vocab is not None and n_delta > 0:
+                # outbox stage against the pre-merge snapshot (CoW writes
+                # new files, MOR appends — the snapshot it planned against
+                # is immutable), concurrent with the merge's compute and
+                # settled by its pre_commit, so a crash on either side of
+                # the commit resolves exactly-once (see cdc/aggregates.py).
+                # A chunk at or below the watermark cannot be told
+                # committed by the watermark, so its pending waits on the
+                # target version its merge creates instead.
+                rv = None if self._advances(snap, watermark) else snap["version"] + 1
+
+                def _stage():
+                    t0 = time.time()
+                    p = self._vocab.stage_delta(
+                        batch_id, ck, delta, affected, watermark,
+                        requires_version=rv, delta_rows=n_delta,
+                        delta_bytes=delta_bytes,
+                    )
+                    self._lap("vocab_stage", t0)
+                    return p
+
+                stage_future = self._pool.submit(_stage)
+            self._merge_chunk(
+                delta, n_delta, watermark, batch_id,
+                affected_buckets=affected, delta_bytes=delta_bytes,
+                pre_commit=lambda: self._settle(q_future, stage_future),
+            )
+            t = self._lap("merge", t)
+            if stage_future is not None:
+                self._vocab.maybe_fold()
+                t = self._lap("vocab_fold", t)
+        except BaseException:
+            self._settle(q_future, stage_future, quiet=True)
+            raise
+        finally:
+            winners.unpersist()
+        qm = q_future.result() if q_future is not None else None  # settled
+        shutil.rmtree(staging, ignore_errors=True)
+        self._lap("quarantine_join", t)
+        return {
+            "winners": n_delta,
+            "max_key_rows": w["mx"] or 0,
+            "deletes": w["deletes"] or 0,
+            "salted": salted,
+            "quarantine": qm,
+        }
+
     def apply_batch(self, events: DataFrame, batch_id: int) -> BatchMetrics:
-        _t = time.time()
-
-        def _mark(label):
-            nonlocal _t
-            self.timings[label] = self.timings.get(label, 0.0) + time.time() - _t
-            _t = time.time()
-
+        t = time.time()
         applied = self.applied_lsn()
         events = events.filter(F.col("lsn") > F.lit(applied))
 
@@ -1020,7 +1156,7 @@ class CdcEngine:
                 key=lambda x: x[0],
             )
         data = events.filter(~is_ddl)
-        _mark("lineage_join")
+        self._lap("lineage_join", t)
 
         bounds: list[tuple[int | None, int | None, dict | None]] = []
         lo = None
@@ -1044,54 +1180,15 @@ class CdcEngine:
         salted_any = False
 
         for ci, (lo, hi, change) in enumerate(bounds):
+            t = time.time()
             chunk = data
             if lo is not None:
                 chunk = chunk.filter(F.col("lsn") > F.lit(lo))
             if hi is not None:
                 chunk = chunk.filter(F.col("lsn") < F.lit(hi))
-            # Pass structure — the WAL chunk's token arrays are decoded in
-            # exactly TWO full passes, everything else rides those jobs or
-            # touches only small staged outputs:
-            #   lineage: per-partition rows + LSN span over the raw chunk —
-            #          the batch probe's when the batch has no DDL, else an
-            #          async narrow columnar scan (no arrays) per chunk,
-            #          joined before the salt gate / watermark commit.
-            #   pass 1 LWW: narrow (doc_id → max lsn, cnt, winner-op) agg
-            #          over validity-filtered rows (validity needs
-            #          size(tokens), so arrays decode once); one collect
-            #          returns delta size, skew stats, delete count, and
-            #          the affected-bucket set.
-            #   pass 2 routed write: ONE scan left-joins the broadcast
-            #          winner keys and writes partitionBy(route):
-            #          invalid → route=q, valid winner → route=d, valid
-            #          loser dropped. This fuses what used to be two more
-            #          full passes (quarantine write + delta semi-join).
-            #   async  quarantine finalize: the small route=q slice
-            #          through _finalize_quarantine (Arrow UDF reasons,
-            #          stage-then-rename, counts from an Observation).
-            #   sync   merge: reads the file-backed route=d delta (no
-            #          persist, no recompute races) into the bucket-pruned
-            #          MERGE (no internal distinct/count jobs). Its
-            #          pre_commit settles the finalize and the vocab
-            #          stage, so both side outputs are durable before the
-            #          watermark moves and a failed one aborts the commit;
-            #          the chunk's staging dir is garbage after either.
-            _t = time.time()
-            if ddl:
-                lineage_future = self._pool.submit(self._lineage, chunk)
-
-            expr_r = validation_reason_expr(
-                F.col("op"),
-                F.col("tokens"),
-                F.col("n_tok"),
-                F.col("source"),
-                self.whitelist,
-            )
-            valid = chunk.filter(expr_r.isNull())
-
-            # lineage joins here: the narrow scan overlapped plan
-            # construction, and rows_in gates the salt path
-            cells = lineage_future.result() if ddl else probe
+            # lineage: the batch probe's when the batch has no DDL, else a
+            # narrow columnar scan (no arrays) of this chunk
+            cells = self._lineage(chunk) if ddl else probe
             rows_in = sum(r["rows"] for r in cells)
             totals["rows_in"] += rows_in
             chunk_lsn_max = None
@@ -1110,171 +1207,25 @@ class CdcEngine:
                 chunk_lsn_max = (
                     r["lsn_max"] if chunk_lsn_max is None else max(chunk_lsn_max, r["lsn_max"])
                 )
-            _mark("lineage_join")
+            self._lap("lineage_join", t)
 
-            # Quarantine/staging dirs are keyed by the chunk's MAX DATA
-            # LSN, not its positional index: on partial-batch redelivery
-            # (crash mid-batch, earlier chunks already past the
-            # watermark) the surviving events renumber to ci=0, and a
-            # positional key would collide with — and rmtree — an
-            # earlier chunk's already-finalized quarantine rows. The
-            # content-derived LSN key is identical across redeliveries
-            # of the SAME chunk (idempotent replacement, intended) and
-            # distinct across different chunks. An all-filtered chunk
-            # (chunk_lsn_max None) writes nothing; ci is only a
-            # placeholder there.
-            ck = chunk_lsn_max if chunk_lsn_max is not None else ci
-            staging = os.path.join(
-                self.table_path, "_staging", f"b{batch_id}_c{ck}"
-            )
-
-            # LWW: narrow (key -> max lsn, cnt, winner op) aggregation,
-            # then the routed pass fetches the winning payload rows
-            dedup_cols = ["doc_id", "lsn", "op", "tokens", "n_tok", "source"]
-            salted = rows_in >= self.salt_threshold
-            salted_any |= salted
-            nb = self.table.snapshot()["n_buckets"]
-            winners = lww_winners(valid, salted=salted).withColumn(
-                "_wb", bucket_expr(F.col("doc_id"), nb)
-            ).persist()
-            q_future = None
-            stage_future = None
-            # unpersist on EVERY exit: an exception mid-chunk (commit
-            # conflict, IO error, rejected DDL) must not pin the cached
-            # winner set in executor storage for the session lifetime —
-            # retried foreachBatch failures would leak one per attempt
-            try:
-                w = winners.agg(
-                    F.count(F.lit(1)).alias("n"),
-                    F.max("cnt").alias("mx"),
-                    F.sum(F.when(F.col("win_del"), 1).otherwise(0)).alias("deletes"),
-                    F.collect_set("_wb").alias("buckets"),
-                ).collect()[0]
-                n_delta = w["n"]
-                totals["max_key_rows"] = max(totals["max_key_rows"], w["mx"] or 0)
-                totals["rows_valid"] += n_delta
-                totals["distinct_keys"] = max(totals["distinct_keys"], n_delta)
-                totals["rows_deletes"] += w["deletes"] or 0
-                totals["rows_upserts"] += n_delta - (w["deletes"] or 0)
-                affected = [int(b) for b in (w["buckets"] or [])]
-                _mark("lww_and_stats")
-
-                if rows_in > 0:
-                    # pass 2: ONE routed scan writes quarantine candidates
-                    # and the LWW delta together
-                    keys = winners.select("doc_id", "lsn").withColumn(
-                        "__win", F.lit(1)
-                    )
-                    if n_delta <= BROADCAST_MAX_KEY_ROWS:
-                        keys = F.broadcast(keys)
-                    routed = (
-                        chunk.join(keys, on=["doc_id", "lsn"], how="left")
-                        .withColumn(
-                            "route",
-                            F.when(expr_r.isNotNull(), F.lit("q")).when(
-                                F.col("__win") == 1, F.lit("d")
-                            ),
-                        )
-                        .filter(F.col("route").isNotNull())
-                    )
-                    staged(routed, "route").write.mode("overwrite").partitionBy(
-                        "route"
-                    ).parquet(staging)
-                    _mark("routed_write")
-
-                    # quarantine finalize (async, small): authoritative
-                    # reasons over the staged q-slice only
-                    qsrc = os.path.join(staging, "route=q")
-                    if os.path.isdir(qsrc):  # no invalid rows staged otherwise
-                        q_future = self._pool.submit(
-                            lambda qsrc=qsrc, ck=ck: self._finalize_quarantine(
-                                self.spark.read.schema(STAGED_SCHEMA).parquet(qsrc),
-                                batch_id,
-                                ck,
-                            )
-                        )
-
-                    # merge consumes the file-backed delta: no persist, no
-                    # recompute races across the merge's three branches.
-                    # Existence-gated (driver-local staging), NOT a bare
-                    # except: an unexpected read failure must propagate —
-                    # substituting an empty delta and then committing the
-                    # watermark would permanently drop every valid row in
-                    # the chunk with no retry possible.
-                    ddir = os.path.join(staging, "route=d")
-                    delta_bytes = None
-                    if os.path.isdir(ddir):
-                        delta = self.spark.read.schema(STAGED_SCHEMA).parquet(ddir).select(
-                            *dedup_cols
-                        )
-                        delta_bytes = LakeTable._dir_bytes(ddir)
-                    else:
-                        delta = self.spark.createDataFrame(
-                            [],
-                            T.StructType(
-                                [f for f in EVENT_SCHEMA.fields if f.name in dedup_cols]
-                            ),
-                        )
-
-                    # even an all-quarantined chunk advances the watermark
-                    # (merge with an empty delta commits properties only)
-                    watermark = max(applied, chunk_lsn_max or applied)
-                    if self._vocab is not None and n_delta > 0:
-                        # outbox stage: the delta is computed against the
-                        # pre-merge snapshot (CoW writes new files, MOR
-                        # appends — the snapshot this read planned against is
-                        # immutable) and runs CONCURRENTLY with the merge's
-                        # compute; the merge's pre_commit hook joins it, so
-                        # the outbox is durable strictly before the watermark
-                        # advances — a crash on either side of the commit
-                        # resolves exactly-once (see cdc/aggregates.py)
-                        def _stage(
-                            # the LSN-stable chunk key (ck), NOT the
-                            # positional index: the outbox fold marker is
-                            # a monotonic (batch, chunk) pair, and a
-                            # partially-redelivered batch renumbers its
-                            # surviving chunks to 0 — a positional key
-                            # would compare <= the already-folded marker
-                            # and silently drop the redelivered chunk's
-                            # vocab delta
-                            _b=batch_id, _c=ck, _d=delta, _a=affected,
-                            _w=watermark, _n=n_delta, _db=delta_bytes
-                        ):
-                            t0 = time.time()
-                            p = self._vocab.stage_delta(
-                                _b, _c, _d, _a, _w, delta_rows=_n,
-                                delta_bytes=_db,
-                            )
-                            self.timings["vocab_stage"] = (
-                                self.timings.get("vocab_stage", 0.0) + time.time() - t0
-                            )
-                            return p
-
-                        stage_future = self._pool.submit(_stage)
-                    self._merge_chunk(
-                        delta, n_delta, watermark, batch_id,
-                        affected_buckets=affected, delta_bytes=delta_bytes,
-                        pre_commit=lambda: self._settle(q_future, stage_future),
-                    )
-                    _mark("merge")
-                    applied = watermark
-                    if stage_future is not None:
-                        self._vocab.maybe_fold()
-                        _mark("vocab_fold")
-
-            except BaseException:
-                self._settle(q_future, stage_future, quiet=True)
-                raise
-            finally:
-                winners.unpersist()
-            if q_future is not None:
-                qm = q_future.result()  # settled by the merge's pre_commit
-                for r in QUARANTINE_REASONS:
-                    if qm[r]:
-                        by_reason[r] = by_reason.get(r, 0) + qm[r]
-                totals["rows_quarantined"] += qm["n"]
-            shutil.rmtree(staging, ignore_errors=True)
-            _mark("quarantine_join")
+            if rows_in > 0:
+                applied = max(applied, chunk_lsn_max)
+                c = self._apply_chunk(
+                    chunk, rows_in, applied, batch_id, chunk_lsn_max, self.whitelist
+                )
+                totals["max_key_rows"] = max(totals["max_key_rows"], c["max_key_rows"])
+                totals["rows_valid"] += c["winners"]
+                totals["distinct_keys"] = max(totals["distinct_keys"], c["winners"])
+                totals["rows_deletes"] += c["deletes"]
+                totals["rows_upserts"] += c["winners"] - c["deletes"]
+                salted_any |= c["salted"]
+                qm = c["quarantine"]
+                if qm is not None:
+                    for r in QUARANTINE_REASONS:
+                        if qm[r]:
+                            by_reason[r] = by_reason.get(r, 0) + qm[r]
+                    totals["rows_quarantined"] += qm["n"]
 
             if change is not None:
                 # reject stream-wedging DDL BEFORE anything commits: a
@@ -1311,7 +1262,6 @@ class CdcEngine:
                         "last_batch_id": batch_id,
                     },
                 )
-
 
         metrics = BatchMetrics(
             batch_id=batch_id,

@@ -8,6 +8,8 @@ import pytest
 from file_standardization_etl_spark.cdc.apply import CdcEngine
 from file_standardization_etl_spark.cdc.dedup import lww_winners
 from file_standardization_etl_spark.cdc.events import (
+    BAD_SOURCES,
+    SOURCE_WHITELIST,
     EventGenConfig,
     events_df,
     generate_events,
@@ -775,6 +777,21 @@ def test_no_persisted_rdd_leak_on_chunk_failure(spark, tmp_path, monkeypatch):
         engine.apply_batch(events_df(spark, events), batch_id=0)
     jmap = spark.sparkContext._jsc.getPersistentRDDs()
     assert jmap.size() == 0, f"{jmap.size()} persisted RDDs leaked"
+
+    # requeue re-enters through the same chunk pipeline, so a failed
+    # rescue merge leaks nothing and changes neither state nor quarantine
+    monkeypatch.undo()
+    engine.apply_batch(events_df(spark, events), batch_id=0)
+    state_before = sorted(map(tuple, engine.state().collect()))
+    quar_before = sorted(map(tuple, engine.quarantine().collect()))
+    monkeypatch.setattr(CdcEngine, "_merge_chunk", boom)
+    widened = SOURCE_WHITELIST + [s for s in BAD_SOURCES if s]
+    with pytest.raises(RuntimeError, match="simulated merge failure"):
+        engine.requeue_quarantine(widened)
+    jmap = spark.sparkContext._jsc.getPersistentRDDs()
+    assert jmap.size() == 0, f"{jmap.size()} persisted RDDs leaked by requeue"
+    assert sorted(map(tuple, engine.state().collect())) == state_before
+    assert sorted(map(tuple, engine.quarantine().collect())) == quar_before
 
 
 def test_fuzz_crash_inject_redelivery_matches_oracle(spark, tmp_path, monkeypatch):

@@ -391,3 +391,61 @@ def test_init_recovers_interrupted_archive_swap(spark, tmp_path):
     again.init()
     assert not os.path.isdir(again.quarantine_archive_path + ".old")
     assert {r["lsn"] for r in again.quarantine().collect()} == before
+
+
+def test_requeue_skips_rows_above_watermark_after_failed_commit(
+    spark, tmp_path, monkeypatch
+):
+    """A chunk's quarantine settles before its commit, so a failed commit
+    leaves rows above the watermark in quarantine until the chunk is
+    redelivered. A requeue in that window must leave them there: applying
+    them would put live docs above the watermark (breaking merge-on-read's
+    newest-delta-wins read for the redelivered stream) while redelivery
+    quarantines the same events again."""
+    from file_standardization_etl_spark.lake.table import LakeTable
+
+    cfg = EventGenConfig(n_events=2000, n_docs=300, seed=67, bad_source_frac=0.1)
+    events = generate_events(cfg)
+    cut = 1000
+    b0 = [e for e in events if e["lsn"] <= cut]
+    b1 = [e for e in events if e["lsn"] > cut]
+    eng = make_engine(spark, tmp_path)
+    eng.apply_batch(events_df(spark, b0), batch_id=0)
+    wm = eng.applied_lsn()
+
+    real_commit = LakeTable._commit
+    calls = {"n": 0}
+
+    def failing_commit(self, *a, **kw):
+        calls["n"] += 1
+        if calls["n"] == 1:
+            raise RuntimeError("commit failed")
+        return real_commit(self, *a, **kw)
+
+    monkeypatch.setattr(LakeTable, "_commit", failing_commit)
+    try:
+        eng.apply_batch(events_df(spark, b1), batch_id=1)
+    except RuntimeError:
+        pass
+    monkeypatch.setattr(LakeTable, "_commit", real_commit)
+    assert calls["n"] == 1 and eng.applied_lsn() == wm
+    # the failed chunk's quarantine rows are in place, above the watermark
+    assert eng.quarantine().filter(F.col("lsn") > wm).count() > 0
+
+    eng = CdcEngine(spark, str(tmp_path / "cdc"))
+    eng.init()  # restarted process
+    m = eng.requeue_quarantine(WIDE)
+    assert m["rescued"] > 0
+    assert eng.applied_lsn() == wm
+    assert eng.state().filter(F.col("last_lsn") > wm).count() == 0
+
+    eng.apply_batch(events_df(spark, b1), batch_id=1)  # redelivery
+    st, rescued, _ = oracle_after_requeue(b0, WIDE)
+    replay(b1, st)
+    want = {
+        k: (list(v["tokens"]), v["n_tok"], v["source"], v["last_lsn"])
+        for k, v in st.docs.items() if not v["deleted"]
+    }
+    assert state_dict(eng) == want
+    got_q = {r["lsn"]: r["reason"] for r in eng.quarantine().collect()}
+    assert got_q == {q["lsn"]: q["reason"] for q in st.quarantine if q not in rescued}

@@ -419,3 +419,58 @@ def test_stream_stream_interval_join_matches_batch(spark, tmp_path):
     # idempotent: draining again with no new WAL appends nothing
     W.run_early_update_join(spark, str(log_dir), ckpt, out)
     assert len(spark.read.parquet(out).collect()) == len(got2_rows)
+
+
+def test_run_cdc_summary_reads_manifests_not_tables(spark, tmp_path, monkeypatch, capsys):
+    """jobs/run_cdc.py's drain summary sums this run's batch manifests:
+    it scans neither the table nor the quarantine, and a second run
+    reports only the batches it applied."""
+    import json
+
+    import jobs.run_cdc as run_cdc
+    from file_standardization_etl_spark.cdc.oracle import validation_reason
+
+    def expected(events):
+        data = [e for e in events if e["op"] != "schema_change"]
+        valid = [e for e in data if validation_reason(e) is None]
+        win: dict = {}
+        for e in sorted(valid, key=lambda e: e["lsn"]):
+            win[e["doc_id"]] = e["op"] == "delete"
+        deletes = sum(win.values())
+        return {
+            "rows_in": len(data),
+            "rows_quarantined": len(data) - len(valid),
+            "rows_upserts": len(win) - deletes,
+            "rows_deletes": deletes,
+        }
+
+    def summary():
+        run_cdc.main()
+        lines = [ln for ln in capsys.readouterr().out.splitlines() if ln.startswith("{")]
+        return json.loads(lines[-1])
+
+    def no_scan(self, *a, **kw):
+        raise AssertionError("the summary must not scan the engine's tables")
+
+    events = generate_events(EventGenConfig(n_events=1600, n_docs=150, seed=59))
+    log_dir = tmp_path / "wal"
+    lake = tmp_path / "lake"
+    monkeypatch.setattr(
+        "sys.argv",
+        ["run_cdc.py", "--log-dir", str(log_dir), "--table-dir", str(lake), "--n-buckets", "8"],
+    )
+    monkeypatch.setattr(CdcEngine, "state", no_scan)
+    monkeypatch.setattr(CdcEngine, "quarantine", no_scan)
+
+    # LSN-coherent segments: the generator's disorder stays within each
+    seg0 = [e for e in events if e["lsn"] <= 800]
+    seg1 = [e for e in events if e["lsn"] > 800]
+    write_segment(spark, log_dir, seg0, "seg0")
+    first = summary()
+    assert {k: first[k] for k in expected(seg0)} == expected(seg0)
+
+    write_segment(spark, log_dir, seg1, "seg1")
+    second = summary()
+    assert len(second["batches"]) == 1
+    assert {k: second[k] for k in expected(seg1)} == expected(seg1)
+    assert second["applied_lsn"] == max(e["lsn"] for e in events)
