@@ -462,12 +462,13 @@ def run_vocab_crossover(
 ) -> dict:
     """The vocab-IVM crossover, measured instead of asserted (VERDICT r3:
     refresh_speedup_vs_recompute was 0.7 at one sandbox geometry). The
-    claim is asymptotic: maintenance is O(delta + affected-bucket bytes)
-    per refresh while recompute is O(corpus). For bucket pruning to bite
-    the way it does at 10^10 events, bucket count must grow with the
-    corpus (every real deployment sizes buckets to a target file size —
-    here ~250 docs/bucket) while the micro-batch stays fixed, so the
-    affected fraction shrinks as the corpus grows. Sweep: corpus size ×
+    claim is asymptotic: maintenance is O(delta + affected-bucket bytes
+    + vocabulary) per refresh while recompute is O(corpus). For bucket
+    pruning to bite the way it does at 10^10 events, bucket count must
+    grow with the corpus (every real deployment sizes buckets to a
+    target file size — here ~250 docs/bucket) while the micro-batch
+    stays fixed, so the affected fraction shrinks as the corpus grows.
+    Sweep: corpus size ×
     bucket count up 16x, same micro-batches; report maintain-per-batch
     (flat) vs recompute (linear) at each point. Seeding uses the
     snapshot bootstrap so the sweep's cost is maintenance, not replay."""
@@ -496,7 +497,6 @@ def run_vocab_crossover(
         )
         eng.bootstrap(snap, as_of_lsn=n_docs)
         base_stage = eng.timings.get("vocab_stage", 0.0)
-        base_fold = eng.timings.get("vocab_fold", 0.0)
         lsn = n_docs + 1
         t0 = time.time()
         for b in range(1, n_batches + 1):
@@ -507,13 +507,10 @@ def run_vocab_crossover(
                 batch_id=b,
             )
             lsn += batch_rows
-        t_drain = time.time()
-        eng._vocab.fold_ready()
-        drain = time.time() - t_drain
         wall = time.time() - t0
-        stage_sec = eng.timings.get("vocab_stage", 0.0) - base_stage
-        fold_sec = eng.timings.get("vocab_fold", 0.0) - base_fold + drain
-        maintain = (stage_sec + fold_sec) / n_batches
+        # the stage writes the whole next vocab the batch's commit
+        # references: it is the entire maintenance cost
+        maintain = (eng.timings.get("vocab_stage", 0.0) - base_stage) / n_batches
         t1 = time.time()
         eng.state().select(F.explode("tokens").alias("t")).groupBy(
             F.col("t").cast("bigint").alias("token")
@@ -525,8 +522,6 @@ def run_vocab_crossover(
                 "n_docs": n_docs,
                 "n_buckets": n_buckets,
                 "maintain_sec_per_batch": round(maintain, 3),
-                "stage_sec_per_batch": round(stage_sec / n_batches, 3),
-                "fold_sec_per_batch": round(fold_sec / n_batches, 3),
                 "incremental_wall_sec": round(wall, 2),
                 "recompute_sec": round(recompute_sec, 3),
                 "speedup_vs_recompute": round(recompute_sec / max(maintain, 1e-9), 2),
@@ -545,8 +540,8 @@ def run_vocab_maintenance(
 ) -> dict:
     """Incremental-view-maintenance bench (cdc/aggregates.py): seed a
     table with the token-vocab aggregate maintained, apply micro-batches,
-    and report the per-batch maintenance overhead (outbox stage + fold)
-    against the O(corpus) alternative — recomputing the aggregate from
+    and report the per-batch maintenance overhead (the vocab stage, which
+    writes the whole next vocab each commit references) against the O(corpus) alternative — recomputing the aggregate from
     the final table state. At 10^10 events the recompute is a full-table
     token-array scan per refresh; maintenance stays O(delta)."""
     from pyspark.sql import functions as F
@@ -570,7 +565,6 @@ def run_vocab_maintenance(
     )
     lsn = n_seed + 1
     base_stage = eng.timings.get("vocab_stage", 0.0)
-    base_fold = eng.timings.get("vocab_fold", 0.0)
     t0 = time.time()
     for batch_id in range(1, n_batches + 1):
         eng.apply_batch(
@@ -579,9 +573,7 @@ def run_vocab_maintenance(
         )
         lsn += batch_rows
     wall = time.time() - t0
-    stage_sec = eng.timings.get("vocab_stage", 0.0) - base_stage
-    fold_sec = eng.timings.get("vocab_fold", 0.0) - base_fold
-    per_batch = round((stage_sec + fold_sec) / n_batches, 3)
+    per_batch = round((eng.timings.get("vocab_stage", 0.0) - base_stage) / n_batches, 3)
 
     n_vocab = eng.vocab().count()
     t1 = time.time()
@@ -597,8 +589,6 @@ def run_vocab_maintenance(
     shutil.rmtree(work, ignore_errors=True)
     return {
         "maintain_sec_per_batch": per_batch,
-        "stage_sec_per_batch": round(stage_sec / n_batches, 3),
-        "fold_sec_per_batch": round(fold_sec / n_batches, 3),
         "incremental_wall_sec": round(wall, 2),
         "recompute_sec": round(recompute_sec, 3),
         # maintenance cost is flat in corpus size (delta-bounded);

@@ -13,10 +13,13 @@ Pipeline per batch (≈ one "job run" of the reference,
    interleaving").
 3. **Validation split** — vectorized reason column → (valid, quarantine);
    quarantine is written idempotently per (batch, chunk) directory. Every
-   side output of a commit (quarantine chunk, vocab outbox) settles in
-   that commit's ``pre_commit``, so it is durable before the watermark
-   moves; ``_staging`` only ever holds outputs no commit references yet
-   and is disposable.
+   side output of a commit settles in that commit's ``pre_commit``, so it
+   is durable before the watermark moves: the quarantine chunk, and with
+   ``maintain_vocab`` the next token vocabulary, a dir under the target's
+   ``data/`` that the same commit references (cdc/aggregates.py). A
+   crash leaves either a commit that references its outputs or outputs
+   nothing references: ``_staging`` is disposable and an unreferenced
+   vocab dir is garbage for ``LakeTable.expire_snapshots``.
 4. **LWW dedup** — :func:`.dedup.lww_winners`, a primitive max per doc_id
    (map-side combine kills most skew); its salted two-phase form engages
    when a chunk exceeds ``salt_threshold`` rows.
@@ -49,6 +52,7 @@ from pyspark.sql import types as T
 
 from ..functions.validation import validation_reason_expr, with_reason
 from ..lake.table import BROADCAST_MAX_KEY_ROWS, LakeTable, TableSchema, bucket_expr
+from .aggregates import VOCAB_PROPERTY, TokenVocab
 from .dedup import lww_winners
 from .events import EVENT_SCHEMA, SOURCE_WHITELIST
 
@@ -150,7 +154,9 @@ class CdcEngine:
         # maintain the token-frequency aggregate (cdc/aggregates.py)
         # incrementally alongside every merge — O(delta) per chunk vs
         # O(corpus) per recompute; opt-in because it adds a bucket-pruned
-        # old-side read + two explode passes per chunk
+        # old-side read + two explode passes per chunk. A table records
+        # the setting it was created with, and the write path refuses an
+        # engine whose setting disagrees.
         maintain_vocab: bool = False,
     ):
         self.spark = spark
@@ -167,13 +173,8 @@ class CdcEngine:
         self.table = LakeTable(spark, os.path.join(self.table_path, "target"))
         self._vocab = None
         if maintain_vocab:
-            from .aggregates import TokenVocab
-
             self._vocab = TokenVocab(
-                spark,
-                self.table_path,
-                self.table,
-                fids=(FID_DOC, FID_TOKENS, FID_LSN, FID_DELETED),
+                spark, self.table, fids=(FID_DOC, FID_TOKENS, FID_LSN, FID_DELETED)
             )
         # one pool per engine: quarantine writes + lineage scans run as
         # concurrent Spark jobs overlapping the LWW/merge critical path
@@ -190,13 +191,16 @@ class CdcEngine:
 
     def init(self) -> None:
         if not self.table.exists():
+            props = {"max_applied_lsn": 0, "last_batch_id": -1}
+            if self._vocab is not None:
+                props[VOCAB_PROPERTY] = None  # the record; no vocab dir yet
             LakeTable.create(
                 self.spark,
                 self.table.path,
                 TARGET_COLUMNS,
                 key_column="doc_id",
                 n_buckets=self.n_buckets,
-                properties={"max_applied_lsn": 0, "last_batch_id": -1},
+                properties=props,
             )
         os.makedirs(self.manifest_dir, exist_ok=True)
         self._recover_archive_swap()
@@ -207,13 +211,25 @@ class CdcEngine:
         # requeue, derives them again). Safe here: ingest is
         # single-writer and this engine has not started its own staging.
         shutil.rmtree(os.path.join(self.table_path, "_staging"), ignore_errors=True)
-        # vocab outbox lives OUTSIDE _staging (the sweep above must never
-        # eat a committed-but-unfolded delta); recover() folds or drops it
-        if self._vocab is not None:
-            self._vocab.init()
 
     def applied_lsn(self) -> int:
         return int(self.table.properties().get("max_applied_lsn", 0))
+
+    def _check_vocab(self, snap: dict) -> None:
+        """Refuse to write when ``maintain_vocab`` disagrees with the
+        table's record (the ``vocab`` property a vocab table carries from
+        creation): a vocab-blind commit changes tokens the vocab never
+        sees, and a vocab engine on a table that never kept one would
+        count only from here on. Either desync is permanent."""
+        recorded = VOCAB_PROPERTY in snap["properties"]
+        if recorded != (self._vocab is not None):
+            raise ValueError(
+                "this table maintains a token-vocabulary aggregate; construct "
+                "CdcEngine(maintain_vocab=True) to write to it"
+                if recorded
+                else "this table keeps no token-vocabulary aggregate; construct "
+                "CdcEngine(maintain_vocab=False) to write to it"
+            )
 
     def _recover_archive_swap(self) -> None:
         """requeue_quarantine archive-swap recovery: a crash between the
@@ -270,10 +286,11 @@ class CdcEngine:
           rows land in quarantine under this batch_id, valid rows become
           the table state with ``deleted=false``.
         - Exactly-once: the quarantine (stage-then-renamed, idempotent on
-          re-run) and the vocab outbox (if enabled) both settle in the
-          overwrite's ``pre_commit``, and the data + ``max_applied_lsn=as_of_lsn``
-          watermark land in ONE commit. A crash anywhere before that
-          commit leaves the table fresh — re-running bootstrap is safe;
+          re-run) and the vocab (if enabled) both settle in the
+          overwrite's ``pre_commit``, and the data, the vocab reference
+          and the ``max_applied_lsn=as_of_lsn`` watermark land in ONE
+          commit. A crash anywhere before that commit leaves the table
+          fresh — re-running bootstrap is safe;
           after it, re-running raises and tailing resumes at the
           watermark, so redelivered WAL prefixes no-op.
         - Scale shape: token arrays are decoded in exactly one full pass
@@ -285,7 +302,9 @@ class CdcEngine:
         """
         if as_of_lsn < 1:
             raise ValueError(f"as_of_lsn must be >= 1, got {as_of_lsn}")
-        props = self.table.properties()
+        snap = self.table.snapshot()
+        self._check_vocab(snap)
+        props = snap["properties"]
         if int(props.get("max_applied_lsn", 0)) != 0 or int(
             props.get("last_batch_id", -1)
         ) != -1:
@@ -351,31 +370,29 @@ class CdcEngine:
             F.col("lsn").alias(n[FID_LSN]),
             F.lit(False).alias(n[FID_DELETED]),
         )
-        # the quarantine finalize and the vocab outbox stage overlap the
+        # the quarantine finalize and the vocab stage overlap the
         # overwrite; its pre_commit settles both
         q_future = self._pool.submit(self._finalize_quarantine, invalid, batch_id, ck)
         stage_future = None
+        new_props = {"max_applied_lsn": as_of_lsn, "last_batch_id": batch_id}
         try:
             if self._vocab is not None:
-                delta_wire = valid.select("doc_id", "lsn", "op", "tokens")
+                new_props[VOCAB_PROPERTY] = self._vocab.next_dir(snap)
                 stage_future = self._pool.submit(
                     self._vocab.stage_delta,
-                    batch_id, ck, delta_wire, [], as_of_lsn, True,
+                    valid.select("doc_id", "lsn", "op", "tokens"),
+                    snap,
+                    new_props[VOCAB_PROPERTY],
                 )
             self.table.overwrite(
                 target,
-                expected_version=self.table.current_version(),
-                properties_update={
-                    "max_applied_lsn": as_of_lsn,
-                    "last_batch_id": batch_id,
-                },
+                expected_version=snap["version"],
+                properties_update=new_props,
                 pre_commit=lambda: self._settle(q_future, stage_future),
             )
         except BaseException:
             self._settle(lineage_future, q_future, stage_future, quiet=True)
             raise
-        if stage_future is not None:
-            self._vocab.maybe_fold()
 
         qm = q_future.result()
         rows_q = qm["n"]
@@ -697,11 +714,11 @@ class CdcEngine:
         with an LSN at or below the watermark and at or above the
         tombstone-expiry fence. It is applied as one chunk at the
         current watermark, so the watermark never moves; such a chunk
-        merges copy-on-write and version-gates its vocab pending
-        (:meth:`_advances`). Correctness comes from the merge's
-        monotone-LSN guard: a rescued event whose doc has since received
-        a newer event loses the LWW compare and changes nothing;
-        otherwise it applies exactly as it would have originally.
+        merges copy-on-write (:meth:`_advances`). Correctness comes from
+        the merge's monotone-LSN guard: a rescued event whose doc has
+        since received a newer event loses the LWW compare and changes
+        nothing; otherwise it applies exactly as it would have
+        originally.
 
         Events above the watermark are never rescued: they belong to a
         chunk whose quarantine settled but whose commit failed, and its
@@ -713,7 +730,8 @@ class CdcEngine:
 
         Exactly-once across crashes, in commit order:
         1. the chunk's merge commits data (+ unchanged watermark
-           properties), its vocab pending settled in ``pre_commit``;
+           properties) and, with ``maintain_vocab``, the vocab its
+           ``pre_commit`` settled;
         2. rescued rows are dropped from quarantine via
            compact-then-filtered-archive-swap. A crash before (2) leaves
            them quarantined but already applied — a re-run re-rescues
@@ -722,26 +740,15 @@ class CdcEngine:
            ``init()`` (``quarantine_archive.old``).
 
         Ops contract: run with the ingester stopped (like ``rebucket``) —
-        the archive swap and the version-gated vocab pending both assume
-        this process is the single writer. A table whose vocab aggregate
-        is maintained must requeue through a vocab-aware engine
-        (guarded).
+        the archive swap assumes this process is the single writer. A
+        table whose vocab aggregate is maintained must requeue through a
+        vocab-aware engine (:meth:`_apply_chunk` refuses any other).
 
         Returns {"examined", "count_drift", "rescued", "merged"} counts
         (``merged`` = the LWW winners of the rescue set; count_drift is 0
         under the single-writer contract; nonzero flags a concurrent
         writer racing the archive swap).
         """
-        # a table whose vocab aggregate is maintained on disk MUST requeue
-        # through a vocab-aware engine, or the rescue merge would commit
-        # token changes the aggregate never sees (permanent drift)
-        if self._vocab is None and os.path.isdir(
-            os.path.join(self.table_path, "vocab", "_meta")
-        ):
-            raise ValueError(
-                "this table maintains a token-vocabulary aggregate; "
-                "construct CdcEngine(maintain_vocab=True) before requeueing"
-            )
         self._recover_archive_swap()
         wl = list(whitelist) if whitelist is not None else list(self.whitelist)
         q = self.quarantine()
@@ -856,7 +863,11 @@ class CdcEngine:
         affected_buckets: list[int] | None = None,
         delta_bytes: int | None = None,
         pre_commit=None,
+        vocab: str | None = None,
     ) -> None:
+        """Merge ``delta`` in one commit that also sets the watermark
+        and, when given, points the table's ``vocab`` property at the
+        dir ``pre_commit`` settles."""
         snap = self.table.snapshot()
         cur = TableSchema.from_json(snap["schema"])
         n = {c.id: c.name for c in cur.columns}
@@ -912,10 +923,13 @@ class CdcEngine:
             self._resolve_cache[schema_ver] = out
             return out
 
+        props = {"max_applied_lsn": watermark, "last_batch_id": batch_id}
+        if vocab is not None:
+            props[VOCAB_PROPERTY] = vocab
         self.table.merge(
             delta,
             resolve,
-            properties_update={"max_applied_lsn": watermark, "last_batch_id": batch_id},
+            properties_update=props,
             delta_rows=delta_rows,
             affected_buckets=affected_buckets,
             delta_bytes=delta_bytes,
@@ -956,12 +970,9 @@ class CdcEngine:
         """Does a chunk committed at ``watermark`` advance ``snap``'s
         watermark? A stream chunk does (its events are filtered above
         the watermark); a requeue rescue (every LSN at or below it) does
-        not. Two rules follow from it: merge-on-read resolves a key to
-        its newest delta row, the LWW winner only while every delta LSN
-        is above the stored state, so a chunk that does not advance
-        merges copy-on-write; and its vocab pending is gated on the
-        target version its merge creates, because the watermark cannot
-        tell whether that merge committed."""
+        not. Merge-on-read resolves a key to its newest delta row, the
+        LWW winner only while every delta LSN is above the stored state,
+        so a chunk that does not advance merges copy-on-write."""
         return watermark > int(snap["properties"].get("max_applied_lsn", 0))
 
     def _lap(self, label: str, t0: float) -> float:
@@ -983,7 +994,9 @@ class CdcEngine:
         DDL-free) in one commit that sets ``max_applied_lsn=watermark``.
         The stream passes the chunk's max LSN; a requeue passes the
         unchanged watermark (see :meth:`_advances` for what that
-        changes).
+        changes). Raises ``ValueError`` before any work when the engine's
+        ``maintain_vocab`` disagrees with the table's record
+        (:meth:`_check_vocab`).
 
         The chunk's token arrays are decoded in exactly TWO full passes;
         everything else rides those jobs or touches only small staged
@@ -1001,23 +1014,24 @@ class CdcEngine:
         - sync merge: reads the file-backed route=d delta (no persist, no
           recompute races) into the bucket-pruned MERGE. Its pre_commit
           settles the finalize and the vocab stage, so both side outputs
-          are durable before the commit and a failed one aborts it; the
-          chunk's staging dir is garbage after either.
+          are durable before the commit (which references the new vocab
+          dir) and a failed one aborts it; the chunk's staging dir is
+          garbage after either.
 
-        ``ck`` keys the chunk's staging, quarantine and vocab dirs: the
+        ``ck`` keys the chunk's staging and quarantine dirs: the
         stream passes the chunk's max data LSN, stable across partial
         redelivery (a positional index renumbers when earlier chunks are
-        already past the watermark, and would replace — or look
-        already-folded next to — another chunk's outputs). Writes no
-        manifest. Returns ``{"winners", "max_key_rows", "deletes",
-        "salted", "quarantine"}`` (the finalize's counts, or None when no
-        row was invalid).
+        already past the watermark, and would replace another chunk's
+        outputs). Writes no manifest. Returns ``{"winners",
+        "max_key_rows", "deletes", "salted", "quarantine"}`` (the
+        finalize's counts, or None when no row was invalid).
         """
         t = time.time()
         expr_r = validation_reason_expr(
             F.col("op"), F.col("tokens"), F.col("n_tok"), F.col("source"), whitelist
         )
         snap = self.table.snapshot()
+        self._check_vocab(snap)
         staging = os.path.join(self.table_path, "_staging", f"b{batch_id}_c{ck}")
         salted = rows_in >= self.salt_threshold
         winners = lww_winners(chunk.filter(expr_r.isNull()), salted=salted).withColumn(
@@ -1025,6 +1039,7 @@ class CdcEngine:
         ).persist()
         q_future = None
         stage_future = None
+        vocab_dir = None
         # unpersist on EVERY exit: an exception mid-chunk (commit
         # conflict, IO error, rejected DDL) must not pin the cached
         # winner set in executor storage for the session lifetime —
@@ -1089,36 +1104,30 @@ class CdcEngine:
                 )
 
             if self._vocab is not None and n_delta > 0:
-                # outbox stage against the pre-merge snapshot (CoW writes
-                # new files, MOR appends — the snapshot it planned against
-                # is immutable), concurrent with the merge's compute and
-                # settled by its pre_commit, so a crash on either side of
-                # the commit resolves exactly-once (see cdc/aggregates.py).
-                # A chunk at or below the watermark cannot be told
-                # committed by the watermark, so its pending waits on the
-                # target version its merge creates instead.
-                rv = None if self._advances(snap, watermark) else snap["version"] + 1
+                # the next vocab, planned against `snap` (CoW writes new
+                # files, MOR appends — the snapshot is immutable),
+                # concurrent with the merge's compute and settled by its
+                # pre_commit; the merge's commit references it, so a
+                # crash on either side of the commit leaves nothing to
+                # recover (see cdc/aggregates.py)
+                vocab_dir = self._vocab.next_dir(snap)
 
                 def _stage():
                     t0 = time.time()
-                    p = self._vocab.stage_delta(
-                        batch_id, ck, delta, affected, watermark,
-                        requires_version=rv, delta_rows=n_delta,
-                        delta_bytes=delta_bytes,
+                    self._vocab.stage_delta(
+                        delta, snap, vocab_dir, affected,
+                        delta_rows=n_delta, delta_bytes=delta_bytes,
                     )
                     self._lap("vocab_stage", t0)
-                    return p
 
                 stage_future = self._pool.submit(_stage)
             self._merge_chunk(
                 delta, n_delta, watermark, batch_id,
                 affected_buckets=affected, delta_bytes=delta_bytes,
                 pre_commit=lambda: self._settle(q_future, stage_future),
+                vocab=vocab_dir,
             )
             t = self._lap("merge", t)
-            if stage_future is not None:
-                self._vocab.maybe_fold()
-                t = self._lap("vocab_fold", t)
         except BaseException:
             self._settle(q_future, stage_future, quiet=True)
             raise

@@ -230,6 +230,18 @@ class LakeTable:
 
     # ---------- manifest chunking ----------
 
+    def _property_dirs(self, snap: dict) -> list[str]:
+        """Data dirs ``snap`` references through its properties: a
+        property whose value names a directory directly under ``data/``
+        (the CDC engine's token vocabulary) is part of the snapshot —
+        :meth:`expire_snapshots` keeps it exactly while the snapshot is
+        kept, and :meth:`history` reports its bytes."""
+        root = os.path.join(self.path, self.DATA)
+        return [
+            v for v in snap.get("properties", {}).values()
+            if isinstance(v, str) and os.path.dirname(v) == root
+        ]
+
     def _manifest_path(self, name: str) -> str:
         return os.path.join(self._meta_dir, self.MANIFESTS, name)
 
@@ -418,6 +430,9 @@ class LakeTable:
     def history(self) -> list[dict]:
         """COMMITTED snapshots, oldest first: version, properties, schema
         version, file count (Iceberg's ``history`` metadata table).
+        ``bytes`` counts the bucket files (base and merge-on-read
+        deltas); ``side_bytes`` the dirs referenced through properties
+        (:meth:`_property_dirs`).
         Snapshots below an ``expire_snapshots`` horizon are gone; a
         crashed writer's orphan (v{N}.json written, crash before the
         VERSION pointer swap) is excluded — it is not part of table
@@ -442,6 +457,9 @@ class LakeTable:
                         "schema_version": snap["schema"]["version"],
                         "n_files": n_files,
                         "bytes": nbytes,
+                        "side_bytes": sum(
+                            self._dir_bytes(p) for p in self._property_dirs(snap)
+                        ),
                         "properties": snap.get("properties", {}),
                     }
                 )
@@ -860,8 +878,9 @@ class LakeTable:
 
         ``properties_update`` rides in the SAME commit and ``pre_commit``
         runs durably before it — the same exactly-once contract
-        :meth:`merge` gives the CDC engine (watermark + outbox staging
-        atomic with the data), used by the snapshot-bootstrap path.
+        :meth:`merge` gives the CDC engine (the watermark and the side
+        outputs it references commit atomically with the data), used by
+        the snapshot-bootstrap path.
         ``n_buckets`` lays the content out under a new bucket count in
         the same commit (:meth:`rebucket`)."""
         snap = self.snapshot()
@@ -974,8 +993,9 @@ class LakeTable:
         written files are unreferenced stragglers swept by GC). Lets a
         caller overlap side-work with the merge's compute while still
         ordering it strictly before the commit — the CDC engine joins
-        its vocab-outbox stage here (transactional-outbox ordering:
-        stage durable before watermark advance).
+        its quarantine finalize and vocab stage here, so both are
+        durable before the commit that moves the watermark and
+        references the new vocab (``properties_update``).
         """
         snap = self.snapshot()
         v = snap["version"]
@@ -1355,9 +1375,11 @@ class LakeTable:
         bucket directories, and a crashed writer can leave a data dir no
         snapshot references. This op deletes (a) snapshot files older than
         the ``keep_last`` most recent and (b) any data directory not
-        referenced by a KEPT snapshot — which collects crashed-writer
-        orphans too. Time travel below the horizon is gone afterwards, by
-        design. Single-writer op, like all maintenance here.
+        referenced by a KEPT snapshot — through its file map or its
+        properties (:meth:`_property_dirs`) — which collects
+        crashed-writer orphans too. Time travel below the horizon is
+        gone afterwards, by design. Single-writer op, like all
+        maintenance here.
 
         Chunked-manifest tables get the same treatment at the metadata
         layer: manifest chunk files under ``_meta/manifests/`` not
@@ -1409,6 +1431,7 @@ class LakeTable:
                 # (d{N}-{uuid}) and are the deletable unit themselves
                 for d in entry.get("deltas", []):
                     referenced.add(os.path.abspath(d["path"]))
+            referenced.update(self._property_dirs(snap))
 
         snaps_deleted = 0
         for name in list(os.listdir(self._meta_dir)):

@@ -120,26 +120,28 @@ def main():
     if args.expire_tombstones and not args.compact:
         ap.error("--expire-tombstones only acts during --compact; pass both")
 
+    from file_standardization_etl_spark.cdc.aggregates import VOCAB_PROPERTY
     from file_standardization_etl_spark.cdc.apply import CdcEngine
+    from file_standardization_etl_spark.lake.table import LakeTable
     from file_standardization_etl_spark.session import get_spark
 
     spark = get_spark(app_name="cdc-maintain")
-    # vocab-aware when the table maintains the aggregate on disk —
-    # requeue through a vocab-blind engine would silently desync it
-    # (requeue_quarantine also guards against this)
-    maintain_vocab = os.path.isdir(os.path.join(args.table_dir, "vocab", "_meta"))
+    target = LakeTable(spark, os.path.join(args.table_dir, "target"))
+    if not target.exists():
+        raise SystemExit(f"no table at {args.table_dir}")
+    # vocab-aware exactly when the target snapshot records a maintained
+    # vocab: the engine's write path (requeue, dedup-correct) refuses a
+    # setting that disagrees with that record
     engine = CdcEngine(
         spark,
         args.table_dir,
-        maintain_vocab=maintain_vocab,
+        maintain_vocab=VOCAB_PROPERTY in target.properties(),
         whitelist=(
             [s for s in args.whitelist.split(",") if s] if args.whitelist else None
         ),
     )
-    if not engine.table.exists():
-        raise SystemExit(f"no table at {args.table_dir}")
-    # run the engine's crash recovery (staging sweep, archive swap,
-    # vocab outbox) before any maintenance op reads those trees
+    # run the engine's crash recovery (staging sweep, archive swap)
+    # before any maintenance op reads those trees
     engine.init()
 
     report: dict = {"table": args.table_dir, "version_before": engine.table.current_version()}

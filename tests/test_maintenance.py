@@ -508,7 +508,6 @@ def test_fuzz_maintenance_interleaved_with_ingest(spark, tmp_path):
         }
         assert got_tombs == want_tombs, f"case {case} ops {ops_run}"
         assert eng.quarantine().count() == len(st.quarantine), f"case {case}"
-        eng._vocab.fold_ready()
         assert maintained(eng) == recompute(eng), f"case {case} ops {ops_run}"
     assert ops_seen >= {"compact", "expire", "rebucket", "gc", "requeue"}, ops_seen
 

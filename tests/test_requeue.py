@@ -184,26 +184,29 @@ def test_requeue_fenced_below_tombstone_expiry(spark, tmp_path):
 
 
 def test_requeue_vocab_uses_own_marker_axis(spark, tmp_path):
-    """A requeue fold must not advance the stream (batch, chunk) marker —
-    that would make a later redelivered same-batch chunk's vocab pending
-    look already-folded and silently drop it."""
+    """A requeue commits at the unchanged watermark under the table's
+    last batch id, and references its own vocab like any chunk's commit.
+    A later redelivery of that same batch — its already-applied half
+    filtered, its fresh half a new chunk — must still land its tokens in
+    the vocab exactly once."""
     from tests.test_vocab import maintained, recompute
 
     cfg = EventGenConfig(n_events=1200, n_docs=150, seed=79, bad_source_frac=0.1)
     events = generate_events(cfg)
     eng = make_engine(spark, tmp_path, maintain_vocab=True)
-    eng.apply_batch(events_df(spark, events), batch_id=0)
+    eng.apply_batch(events_df(spark, events[:600]), batch_id=0)
     props_before = dict(eng.table.properties())
-    vprops_before = dict(eng._vocab.table.properties())
     m = eng.requeue_quarantine(WIDE)
     assert m["rescued"] > 0
-    vprops = eng._vocab.table.properties()
-    assert (
-        vprops.get("folded_batch"),
-        vprops.get("folded_chunk"),
-    ) == (vprops_before.get("folded_batch"), vprops_before.get("folded_chunk"))
-    assert int(vprops["folded_requeue_version"]) > 0
-    assert eng.applied_lsn() == int(props_before["max_applied_lsn"])
+    props = eng.table.properties()
+    assert int(props["max_applied_lsn"]) == int(props_before["max_applied_lsn"])
+    assert int(props["last_batch_id"]) == 0
+    assert props["vocab"] != props_before["vocab"]
+    assert maintained(eng) == recompute(eng)
+    # batch 0 redelivered whole: the first half no-ops on the watermark,
+    # the second half is a fresh batch-0 chunk
+    eng.apply_batch(events_df(spark, events), batch_id=0)
+    assert eng.applied_lsn() > int(props_before["max_applied_lsn"])
     assert maintained(eng) == recompute(eng)
 
 

@@ -4,7 +4,6 @@ redelivery and crash/resume."""
 
 from __future__ import annotations
 
-import json
 import os
 
 import pytest
@@ -87,59 +86,141 @@ def test_vocab_survives_ddl_interleaved_replay(spark, tmp_path):
     assert maintained(engine) == recompute(engine)
 
 
-def test_vocab_crash_between_merge_and_fold_recovers(spark, tmp_path):
-    """Outbox semantics: the target merge committed but the fold crashed —
-    a fresh engine must fold the pending delta on init, exactly once."""
-    cfg = EventGenConfig(n_events=2000, n_docs=100, seed=31)
+def vocab_dirs(engine: CdcEngine) -> list[str]:
+    """Vocab dirs on disk under the target's data/, referenced or not."""
+    root = os.path.join(engine.table.path, "data")
+    return sorted(n for n in os.listdir(root) if n.startswith("vocab"))
+
+
+def test_vocab_crash_between_merge_and_fold_recovers(spark, tmp_path, monkeypatch):
+    """The vocab commits with the target, so both crash windows of a
+    chunk's commit need no recovery: a crash after the stage but before
+    the commit leaves an unreferenced dir and redelivery restages; a
+    crash right after the commit leaves a published vocab and the
+    redelivery is a no-op. Either way a restarted engine reads the
+    recount."""
+    from file_standardization_etl_spark.lake.table import LakeTable
+
+    cfg = EventGenConfig(n_events=3000, n_docs=100, seed=31)
     events = generate_events(cfg)
+    b0, b1, b2 = events[:1000], events[1000:2000], events[2000:]
     engine = make_engine(spark, tmp_path)
-    b0, b1 = events[:1000], events[1000:]
     engine.apply_batch(events_df(spark, b0), batch_id=0)
+    real_commit = LakeTable._commit
 
-    real_fold = engine._vocab.fold
+    def before(self, snap, expected_version):
+        raise RuntimeError("simulated crash before the commit")
 
-    def dying_fold(pend):
-        raise RuntimeError("simulated crash after merge, before fold")
+    def after(self, snap, expected_version):
+        real_commit(self, snap, expected_version)
+        raise RuntimeError("simulated crash after the commit")
 
-    engine._vocab.fold = dying_fold
-    with pytest.raises(RuntimeError, match="simulated crash"):
-        engine.apply_batch(events_df(spark, b1), batch_id=1)
-    engine._vocab.fold = real_fold
-    # the merge committed (watermark advanced) but the vocab did not
-    assert len(os.listdir(engine._vocab.pending_dir)) >= 1
+    for i, (crash, batch) in enumerate(((before, b1), (after, b2)), start=1):
+        v = engine.table.current_version()
+        referenced = engine.table.properties()["vocab"]
+        monkeypatch.setattr(LakeTable, "_commit", crash)
+        with pytest.raises(RuntimeError, match="simulated crash"):
+            engine.apply_batch(events_df(spark, batch), batch_id=i)
+        monkeypatch.setattr(LakeTable, "_commit", real_commit)
+        if crash is before:
+            # the stage wrote its dir, nothing references it
+            assert engine.table.current_version() == v
+            assert engine.table.properties()["vocab"] == referenced
+            assert len(vocab_dirs(engine)) == i + 1
+        else:
+            assert engine.table.current_version() == v + 1
+            assert engine.table.properties()["vocab"] != referenced
 
-    fresh = make_engine(spark, tmp_path)  # same workdir: recovery runs
-    assert os.listdir(fresh._vocab.pending_dir) == []
-    assert maintained(fresh) == recompute(fresh)
-    # and a redelivery of the recovered batch stays a no-op
-    fresh.apply_batch(events_df(spark, b1), batch_id=1)
-    assert maintained(fresh) == recompute(fresh)
+        fresh = make_engine(spark, tmp_path)  # restarted process
+        fresh.apply_batch(events_df(spark, batch), batch_id=i)  # redelivery
+        assert maintained(fresh) == recompute(fresh)
+        engine = fresh
 
 
 def test_vocab_pending_from_uncommitted_merge_is_discarded(spark, tmp_path):
-    """A pending delta whose target merge never committed must be dropped
-    (the chunk will be redelivered and re-staged bit-identically)."""
-    cfg = EventGenConfig(n_events=1000, n_docs=80, seed=37)
+    """A vocab dir no snapshot references — a crashed stage's, forged
+    here newer than the real one and with bogus counts — is never read:
+    not by ``vocab()``, not by the next chunk's stage, which sums the dir
+    its snapshot references. Snapshot GC collects it."""
+    cfg = EventGenConfig(n_events=2000, n_docs=80, seed=37)
     events = generate_events(cfg)
     engine = make_engine(spark, tmp_path)
-    engine.apply_batch(events_df(spark, events), batch_id=0)
+    engine.apply_batch(events_df(spark, events[:1000]), batch_id=0)
     before = maintained(engine)
 
-    # forge a pending dir with a watermark beyond the committed one
-    pend = os.path.join(engine._vocab.pending_dir, "b0000000099_c00000")
-    os.makedirs(os.path.join(pend, "data"))
+    forged = os.path.join(engine.table.path, "data", "vocab99-deadbeef")
     spark.createDataFrame(
-        [(999999, 5, 5)], "token long, d_occ long, d_docs long"
-    ).write.mode("overwrite").parquet(os.path.join(pend, "data"))
-    with open(os.path.join(pend, "meta.json"), "w") as f:
-        json.dump(
-            {"batch_id": 99, "chunk": 0, "watermark": engine.applied_lsn() + 10},
-            f,
-        )
+        [(999999, 5, 5)], "token long, n_occ long, n_docs long"
+    ).write.parquet(forged)
 
     fresh = make_engine(spark, tmp_path)
-    assert os.listdir(fresh._vocab.pending_dir) == []
-    assert maintained(fresh) == before  # forged delta never folded
+    assert maintained(fresh) == before  # forged dir never read
+    fresh.apply_batch(events_df(spark, events[1000:]), batch_id=1)
+    assert maintained(fresh) == recompute(fresh)
+    assert 999999 not in maintained(fresh)
+    fresh.table.expire_snapshots(keep_last=1, grace_seconds=0)
+    assert not os.path.exists(forged)
+    assert maintained(fresh) == recompute(fresh)
+
+
+def test_vocab_blind_engine_cannot_desync_vocab_table(spark, tmp_path):
+    """An engine whose ``maintain_vocab`` disagrees with the table's
+    record must refuse to write before anything commits — a vocab-blind
+    batch between two vocab batches (the ingest job restarted without
+    --maintain-vocab) would otherwise leave the vocab permanently off
+    the recount. The same holds for bootstrap, and for a vocab engine on
+    a table that never kept one."""
+    from file_standardization_etl_spark.cdc.oracle import replay
+    from tests.test_bootstrap import snapshot_df
+
+    cfg = EventGenConfig(n_events=3000, n_docs=120, seed=41)
+    events = generate_events(cfg)
+    b0, b1, b2 = events[:1000], events[1000:2000], events[2000:]
+    engine = make_engine(spark, tmp_path)
+    engine.apply_batch(events_df(spark, b0), batch_id=0)
+    v = engine.table.current_version()
+    blind = CdcEngine(spark, str(tmp_path / "cdc"))
+    blind.init()
+    with pytest.raises(ValueError, match="vocab"):
+        blind.apply_batch(events_df(spark, b1), batch_id=1)
+    assert engine.table.current_version() == v  # nothing committed
+    engine.apply_batch(events_df(spark, b1), batch_id=1)
+    engine.apply_batch(events_df(spark, b2), batch_id=2)
+    assert maintained(engine) == recompute(engine)
+
+    plain = CdcEngine(spark, str(tmp_path / "plain"))
+    plain.init()
+    plain.apply_batch(events_df(spark, b0), batch_id=0)
+    v = plain.table.current_version()
+    late = CdcEngine(spark, str(tmp_path / "plain"), maintain_vocab=True)
+    late.init()
+    with pytest.raises(ValueError, match="vocab"):
+        late.apply_batch(events_df(spark, b1), batch_id=1)
+    assert plain.table.current_version() == v
+
+    make_engine(spark, tmp_path / "boot")  # a fresh table with the record
+    with pytest.raises(ValueError, match="vocab"):
+        CdcEngine(spark, str(tmp_path / "boot" / "cdc")).bootstrap(
+            snapshot_df(spark, replay(b0)), as_of_lsn=1000
+        )
+
+
+def test_vocab_dirs_collected_by_expire_snapshots(spark, tmp_path):
+    """Each chunk's commit references a new vocab dir; snapshot GC keeps
+    exactly the ones its kept snapshots reference. ``history()`` reports
+    their bytes apart from the bucket files' ``bytes``."""
+    cfg = EventGenConfig(n_events=3000, n_docs=150, seed=43)
+    events = generate_events(cfg)
+    engine = make_engine(spark, tmp_path)
+    for i, lo in enumerate(range(0, len(events), 500)):
+        engine.apply_batch(events_df(spark, events[lo : lo + 500]), batch_id=i)
+    assert len(vocab_dirs(engine)) == 6
+    engine.table.expire_snapshots(keep_last=1, grace_seconds=0)
+    referenced = engine.table.properties()["vocab"]
+    assert vocab_dirs(engine) == [os.path.basename(referenced)]
+    head = engine.table.history()[-1]
+    assert head["side_bytes"] == engine.table._dir_bytes(referenced) > 0
+    assert maintained(engine) == recompute(engine)
 
 
 def test_vocab_deletes_retract_counts(spark, tmp_path):
@@ -181,6 +262,5 @@ def test_vocab_stage_shuffle_fallback_past_broadcast_gate(spark, tmp_path, monke
         engine = make_engine(spark, tmp_path / sub)
         for i, lo in enumerate(range(0, len(events), 1000)):
             engine.apply_batch(events_df(spark, events[lo : lo + 1000]), batch_id=i)
-        engine._vocab.fold_ready()
         assert maintained(engine) == recompute(engine), sub
         monkeypatch.undo()
