@@ -15,9 +15,10 @@ arrays per micro-batch: the chunk's count delta is
     - tokens of each row it replaces (read from the PRE-merge snapshot,
       bucket-pruned to the chunk's affected buckets)
 
-with the same take-new condition as the merge resolver (``new.lsn >
-old.last_lsn``), so the aggregate can never drift from the table even
-under out-of-order or duplicate delivery.
+with the same rule as the merge (a winner replaces a row only with a
+greater ``last_lsn``, the target's recorded order column), so the
+aggregate can never drift from the table even under out-of-order or
+duplicate delivery.
 
 The vocab is one small parquet dir of ``(token, n_occ, n_docs)`` under
 the target's ``data/``, named by the target snapshot's ``vocab``
@@ -74,7 +75,7 @@ class TokenVocab:
         self.target = target
         # target-table field ids for (key, tokens, last_lsn, deleted) —
         # id-based so a rename_column mid-stream never breaks the old-side
-        # read, same binding rule as the merge resolver
+        # read, same binding rule as the merge's wire projection
         self._fid_doc, self._fid_tokens, self._fid_lsn, self._fid_deleted = fids
 
     def next_dir(self, snap: dict) -> str:

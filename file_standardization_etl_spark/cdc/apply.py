@@ -23,9 +23,10 @@ Pipeline per batch (≈ one "job run" of the reference,
 4. **LWW dedup** — :func:`.dedup.lww_winners`, a primitive max per doc_id
    (map-side combine kills most skew); its salted two-phase form engages
    when a chunk exceeds ``salt_threshold`` rows.
-5. **MERGE** — bucket-pruned join-and-rewrite with the LSN monotonic guard
-   (``new.lsn > old.last_lsn``); deletes tombstone without forgetting
-   ``last_lsn`` so lower-LSN stragglers can never resurrect a row.
+5. **MERGE** — the winners, projected onto the table's columns, are
+   upserted by the lake's recorded order column ``last_lsn`` (a row wins
+   its key only with a greater LSN); a delete is a tombstone row that
+   keeps ``last_lsn``, so lower-LSN stragglers can never resurrect it.
 6. **Lineage manifest** — per-partition rows/LSN-span + quarantine counts
    + skew stats, one atomic JSON per batch (the reference's
    MetricsCollector, ``src/utils/metrics.py:36-177``, made transactional).
@@ -179,8 +180,6 @@ class CdcEngine:
         # one pool per engine: quarantine writes + lineage scans run as
         # concurrent Spark jobs overlapping the LWW/merge critical path
         self._pool = ThreadPoolExecutor(max_workers=4)
-        # merged-row Column trees per schema version (see _merge_chunk)
-        self._resolve_cache: dict[int, dict] = {}
         # cumulative per-phase wall seconds across all applied batches
         # (lineage_join / lww_and_stats / routed_write / merge /
         # quarantine_join) — the bench exports these so a round-over-round
@@ -201,6 +200,7 @@ class CdcEngine:
                 key_column="doc_id",
                 n_buckets=self.n_buckets,
                 properties=props,
+                order_column="last_lsn",
             )
         os.makedirs(self.manifest_dir, exist_ok=True)
         self._recover_archive_swap()
@@ -215,12 +215,23 @@ class CdcEngine:
     def applied_lsn(self) -> int:
         return int(self.table.properties().get("max_applied_lsn", 0))
 
-    def _check_vocab(self, snap: dict) -> None:
-        """Refuse to write when ``maintain_vocab`` disagrees with the
-        table's record (the ``vocab`` property a vocab table carries from
-        creation): a vocab-blind commit changes tokens the vocab never
-        sees, and a vocab engine on a table that never kept one would
-        count only from here on. Either desync is permanent."""
+    def _check_table(self, snap: dict) -> None:
+        """Refuse to write to a target whose record disagrees with this
+        engine. Its recorded ``order_column`` must be the ``FID_LSN``
+        column: the merge guards LSNs through it, and a target without one
+        would merge as a plain upsert where stale and out-of-order events
+        win. And ``maintain_vocab`` must match its ``vocab`` property
+        (carried from creation): a vocab-blind commit changes tokens the
+        vocab never sees, and a vocab engine on a table that never kept
+        one would count only from here on. Every such desync is
+        permanent, so nothing may commit."""
+        lsn = TableSchema.from_json(snap["schema"]).by_id()[FID_LSN].name
+        if snap.get("order_column") != lsn:
+            raise ValueError(
+                f"this table records order column {snap.get('order_column')!r}, "
+                f"not {lsn!r}: its merge would not guard LSNs; create the "
+                "target through CdcEngine.init"
+            )
         recorded = VOCAB_PROPERTY in snap["properties"]
         if recorded != (self._vocab is not None):
             raise ValueError(
@@ -303,7 +314,7 @@ class CdcEngine:
         if as_of_lsn < 1:
             raise ValueError(f"as_of_lsn must be >= 1, got {as_of_lsn}")
         snap = self.table.snapshot()
-        self._check_vocab(snap)
+        self._check_table(snap)
         props = snap["properties"]
         if int(props.get("max_applied_lsn", 0)) != 0 or int(
             props.get("last_batch_id", -1)
@@ -446,19 +457,12 @@ class CdcEngine:
     def changes(self, v_from: int, v_to: int | None = None) -> DataFrame:
         """Row-level change feed between two target-table snapshots
         (see :meth:`LakeTable.changes`): the engine emits a changelog a
-        downstream CDC consumer could itself tail. Column names are
-        bound by field id against the v_to snapshot, so a rename
-        between the versions cannot misalign the LSN/tombstone checks."""
+        downstream CDC consumer could itself tail. The tombstone column
+        is bound by field id against the v_to snapshot, so a rename
+        between the versions cannot misalign the tombstone check."""
         snap_to = self.table.snapshot(v_to)
-        names = {
-            c.id: c.name for c in TableSchema.from_json(snap_to["schema"]).columns
-        }
-        return self.table.changes(
-            v_from,
-            v_to,
-            lsn_column=names[FID_LSN],
-            deleted_column=names[FID_DELETED],
-        )
+        deleted = TableSchema.from_json(snap_to["schema"]).by_id()[FID_DELETED].name
+        return self.table.changes(v_from, v_to, deleted_column=deleted)
 
     def _quarantine_schema(self) -> T.StructType:
         # Format note: round 3 changed 'chunk' from a positional int32 to
@@ -860,81 +864,39 @@ class CdcEngine:
         delta_rows: int,
         watermark: int,
         batch_id: int,
+        snap: dict,
         affected_buckets: list[int] | None = None,
         delta_bytes: int | None = None,
         pre_commit=None,
         vocab: str | None = None,
     ) -> None:
-        """Merge ``delta`` in one commit that also sets the watermark
-        and, when given, points the table's ``vocab`` property at the
-        dir ``pre_commit`` settles."""
-        snap = self.table.snapshot()
-        cur = TableSchema.from_json(snap["schema"])
-        n = {c.id: c.name for c in cur.columns}
-        key = n[FID_DOC]
-        schema_ver = cur.version
-        # Wire→table key binding: events always say 'doc_id' (the wire
-        # format is fixed); if a schema_change renamed the TABLE's key
-        # column, merge must see the delta's key under the table name —
-        # its bucket expression and join condition use snapshot
-        # key_column. Payload columns need no rename (resolve() binds
-        # them wire-name → field-id explicitly).
-        if key != "doc_id":
-            if key in delta.columns:
-                raise ValueError(
-                    f"key column renamed to wire-reserved name {key!r}; "
-                    "choose a name not used by the event wire format"
-                )
-            delta = delta.withColumnRenamed("doc_id", key)
-
-        def resolve(old: dict, new: dict) -> dict:
-            # The merged-row expressions depend only on column NAMES, so
-            # the Column tree is cached per schema version: building it is
-            # ~100 Py4J round trips (~0.5-1.5 s/batch of pure driver time),
-            # and merge evaluates it once per call, i.e. once per chunk.
-            cached = self._resolve_cache.get(schema_ver)
-            if cached is not None:
-                return cached
-            take_new = new["lsn"].isNotNull() & (
-                old[n[FID_LSN]].isNull() | (new["lsn"] > old[n[FID_LSN]])
-            )
-            is_del = new["op"] == "delete"
-            out = {
-                # delta's key column was bound to the table key name above
-                key: F.coalesce(old[key], new[key]),
-                n[FID_TOKENS]: F.when(
-                    take_new, F.when(is_del, F.lit(None)).otherwise(new["tokens"])
-                ).otherwise(old[n[FID_TOKENS]]),
-                n[FID_NTOK]: F.when(
-                    take_new, F.when(is_del, F.lit(None)).otherwise(new["n_tok"])
-                ).otherwise(old[n[FID_NTOK]]),
-                n[FID_SOURCE]: F.when(
-                    take_new, F.when(is_del, F.lit(None)).otherwise(new["source"])
-                ).otherwise(old[n[FID_SOURCE]]),
-                n[FID_LSN]: F.when(take_new, new["lsn"]).otherwise(old[n[FID_LSN]]),
-                n[FID_DELETED]: F.when(take_new, is_del).otherwise(
-                    F.coalesce(old[n[FID_DELETED]], F.lit(False))
-                ),
-            }
-            # columns added by schema evolution: carry old value (null for new rows)
-            for c in cur.columns:
-                if c.name not in out:
-                    out[c.name] = old[c.name]
-            self._resolve_cache[schema_ver] = out
-            return out
-
+        """Merge the wire-column winners ``delta`` in one commit that
+        also sets the watermark and, when given, points the table's
+        ``vocab`` property at the dir ``pre_commit`` settles. ``snap`` is
+        the snapshot the chunk was planned against; the wire columns
+        bind to its table columns by field id, in table order."""
+        is_del = F.col("op") == "delete"
+        wire = {
+            FID_DOC: F.col("doc_id"),
+            FID_TOKENS: F.when(is_del, F.lit(None)).otherwise(F.col("tokens")),
+            FID_NTOK: F.when(is_del, F.lit(None)).otherwise(F.col("n_tok")),
+            FID_SOURCE: F.when(is_del, F.lit(None)).otherwise(F.col("source")),
+            FID_LSN: F.col("lsn"),
+            FID_DELETED: is_del,
+        }
+        cols = TableSchema.from_json(snap["schema"]).columns
+        delta = delta.select(*[wire[c.id].alias(c.name) for c in cols if c.id in wire])
         props = {"max_applied_lsn": watermark, "last_batch_id": batch_id}
         if vocab is not None:
             props[VOCAB_PROPERTY] = vocab
         self.table.merge(
             delta,
-            resolve,
             properties_update=props,
             delta_rows=delta_rows,
             affected_buckets=affected_buckets,
             delta_bytes=delta_bytes,
-            # a chunk at or below the watermark resolves through CoW's
-            # explicit `new.lsn > old.last_lsn` guard above
+            # a chunk at or below the watermark merges copy-on-write, where
+            # every row meets the stored last_lsn (see _advances)
             mode="auto" if self._advances(snap, watermark) else "cow",
             pre_commit=pre_commit,
             # vocab maintenance re-reads the affected buckets' old rows
@@ -970,9 +932,10 @@ class CdcEngine:
         """Does a chunk committed at ``watermark`` advance ``snap``'s
         watermark? A stream chunk does (its events are filtered above
         the watermark); a requeue rescue (every LSN at or below it) does
-        not. Merge-on-read resolves a key to its newest delta row, the
-        LWW winner only while every delta LSN is above the stored state,
-        so a chunk that does not advance merges copy-on-write."""
+        not. Merge-on-read resolves a key to its newest delta row (checked
+        against the base row only), the LWW winner only while every delta
+        LSN is above those of earlier stacked deltas, so a chunk that does
+        not advance merges copy-on-write."""
         return watermark > int(snap["properties"].get("max_applied_lsn", 0))
 
     def _lap(self, label: str, t0: float) -> float:
@@ -994,9 +957,8 @@ class CdcEngine:
         DDL-free) in one commit that sets ``max_applied_lsn=watermark``.
         The stream passes the chunk's max LSN; a requeue passes the
         unchanged watermark (see :meth:`_advances` for what that
-        changes). Raises ``ValueError`` before any work when the engine's
-        ``maintain_vocab`` disagrees with the table's record
-        (:meth:`_check_vocab`).
+        changes). Raises ``ValueError`` before any work when the table's
+        record disagrees with the engine (:meth:`_check_table`).
 
         The chunk's token arrays are decoded in exactly TWO full passes;
         everything else rides those jobs or touches only small staged
@@ -1031,7 +993,7 @@ class CdcEngine:
             F.col("op"), F.col("tokens"), F.col("n_tok"), F.col("source"), whitelist
         )
         snap = self.table.snapshot()
-        self._check_vocab(snap)
+        self._check_table(snap)
         staging = os.path.join(self.table_path, "_staging", f"b{batch_id}_c{ck}")
         salted = rows_in >= self.salt_threshold
         winners = lww_winners(chunk.filter(expr_r.isNull()), salted=salted).withColumn(
@@ -1122,7 +1084,7 @@ class CdcEngine:
 
                 stage_future = self._pool.submit(_stage)
             self._merge_chunk(
-                delta, n_delta, watermark, batch_id,
+                delta, n_delta, watermark, batch_id, snap,
                 affected_buckets=affected, delta_bytes=delta_bytes,
                 pre_commit=lambda: self._settle(q_future, stage_future),
                 vocab=vocab_dir,

@@ -23,14 +23,25 @@ Design properties (the ones Iceberg would give us, and why they matter at
   ``|affected buckets| / n_buckets`` of the table, not the whole table.
   On a real cluster this layout would be registered as a bucketed catalog
   table so the MERGE join needs no shuffle on the table side.
+- **Keyed upsert by a recorded order column**: ``merge`` takes rows
+  named by table columns, at most one per key. A delta row replaces its
+  key's stored row when the key is absent, the table records no
+  ``order_column``, or the row's order value is strictly greater (a
+  stored null loses); the replacing row sets the columns it carries and
+  the stored row keeps the rest (null for a new key). Deletes are
+  tombstone rows, so a stale straggler can never resurrect a key. This
+  one rule serves the copy-on-write merge and the merge-on-read
+  resolution alike, and the delta a merge takes is the after-image of
+  every key it changes.
 - **Merge-on-read delta stacks** (round 3): ``merge(mode="auto")``
   appends micro-batch deltas as a few bucket-sorted files and leaves the
   base untouched — commit I/O is O(delta), the Hudi/Paimon shape —
-  while ``read()`` resolves the stack (newest ``_seq`` per key wins,
-  base-column fallback by recorded ``column_ids``) with the same
-  broadcast three-branch plan the CoW merge uses. Oversized deltas and
-  deep stacks fall back to copy-on-write, which FOLDS the stack — the
-  compaction scheduler is the merge policy itself.
+  while ``read()`` resolves the stack (the newest ``_seq`` row per key
+  against the base row, by the rule above, with base-column fallback by
+  recorded ``column_ids``) with the same broadcast three-branch plan the
+  CoW merge uses. Oversized deltas and deep stacks fall back to
+  copy-on-write, which FOLDS the stack — the compaction scheduler is the
+  merge policy itself.
 - **Metadata-only schema evolution**: columns carry stable integer ids;
   each snapshot records a schema version, and each file group remembers
   the schema version it was written under. ``add_column`` /
@@ -48,7 +59,6 @@ from __future__ import annotations
 
 import json
 import os
-import re
 import tempfile
 import time
 import uuid
@@ -392,7 +402,11 @@ class LakeTable:
         key_column: str,
         n_buckets: int = 16,
         properties: dict | None = None,
+        order_column: str | None = None,
     ) -> "LakeTable":
+        """A new empty table. ``order_column`` names the column whose
+        greater value wins a key in :meth:`merge`; without one the last
+        write wins."""
         # same invariant apply_schema_change enforces for DDL: a user
         # column named after a layout column would be silently overwritten
         # by the bucketed writer ('_bucket') or make every MOR read
@@ -414,6 +428,7 @@ class LakeTable:
         snap = {
             "version": 0,
             "key_column": key_column,
+            "order_column": order_column,
             "n_buckets": n_buckets,
             "schema": schema.to_json(),
             "schema_versions": {"1": schema.to_json()},
@@ -568,14 +583,17 @@ class LakeTable:
         new: DataFrame,
         key: str,
         cur: TableSchema,
-        resolve,
+        order: str | None,
         broadcast: bool,
+        tag_ids: list[set[int]] | None = None,
     ) -> DataFrame:
         """The keyed upsert plan: the rows of ``old`` (columns ``cur``)
         and ``new`` (at most one row per key) joined on ``key``, each
-        output row built by ``resolve(old_cols, new_cols)`` — dicts of
-        name-based Columns over ``__o_<name>`` / ``__n_<name>``, either
-        side null where the key is one-sided — evaluated once. ``old`` is
+        output row picked by the merge rule (module docstring) with
+        ``order`` as the order column, evaluated once. A winning ``new``
+        row sets the columns it carries: its own columns, or — for rows
+        read from merge-on-read delta files, reconciled to ``cur`` and
+        tagged ``_tag`` — the column ids ``tag_ids[_tag]``. ``old`` is
         None when nothing is stored in scope: every row is an insert and
         no join is planned.
 
@@ -592,11 +610,25 @@ class LakeTable:
         - **shuffle** (oversized ``new`` side): one full-outer join on
           the key with AQE skew handling.
         """
-        out = resolve(
-            {c.name: F.col(f"__o_{c.name}") for c in cur.columns},
-            {c: F.col(f"__n_{c}") for c in new.columns},
-        )
-        exprs = [ex.alias(nm) for nm, ex in out.items()]
+        o = {c.name: F.col(f"__o_{c.name}") for c in cur.columns}
+        n = {c: F.col(f"__n_{c}") for c in new.columns}
+        wins = n[key].isNotNull()
+        if order is not None:
+            # an absent key reads as a null stored order
+            wins = wins & (o[order].isNull() | (n[order] > o[order]))
+        carried = {c: F.lit(True) for c in new.columns}
+        if tag_ids is not None:  # per delta file group
+            for c in cur.columns:
+                tags = [t for t, ids in enumerate(tag_ids) if c.id in ids]
+                if len(tags) < len(tag_ids):
+                    carried[c.name] = n["_tag"].isin(*tags) if tags else F.lit(False)
+        exprs = [
+            (
+                F.when(wins & carried[c.name], n[c.name]).otherwise(o[c.name])
+                if c.name in carried else o[c.name]
+            ).alias(c.name)
+            for c in cur.columns
+        ]
         null_old = [F.lit(None).cast(c.type).alias(f"__o_{c.name}") for c in cur.columns]
 
         def prefixed(df: DataFrame) -> DataFrame:
@@ -629,11 +661,11 @@ class LakeTable:
         later CoW rewrite of some bucket drops its reference; the rows
         are still physically present in the shared file and must not
         resurrect), reconciled to the current schema by column id, then
-        the newest row per key wins. A column ABSENT from the winning
-        delta (recorded in its ``column_ids`` — the resolver's old-only
-        "carry" columns are excluded at write time, and columns added by
-        later schema evolution were never there) falls back to the base
-        row's value, matching what the CoW resolver would have produced.
+        the newest row per key meets the base row under the merge rule
+        (:meth:`_upsert`). A column ABSENT from the winning delta
+        (recorded in its ``column_ids``: the merge's delta lacked it, or
+        schema evolution added it later) keeps the base row's value,
+        exactly as the copy-on-write merge would have.
         """
         key = snap["key_column"]
         # --- load + reconcile each delta file with its bucket filter;
@@ -690,23 +722,9 @@ class LakeTable:
             F.broadcast(mx) if broadcast else mx, on=[key, "_seq"], how="left_semi"
         ).drop("_seq")
 
-        def carried(c: SchemaColumn, tag: Column) -> Column:
-            """Does the winning row's delta file carry column ``c``?"""
-            tags = [t for t, ids in enumerate(present_sets) if c.id in ids]
-            if len(tags) == len(present_sets):
-                return F.lit(True)
-            return tag.isin(*tags) if tags else F.lit(False)
-
-        def pick(old: dict, new: dict) -> dict:
-            won = new[key].isNotNull()
-            return {
-                c.name: F.when(won & carried(c, new["_tag"]), new[c.name]).otherwise(
-                    old[c.name]
-                )
-                for c in cur.columns
-            }
-
-        return self._upsert(base, win, key, cur, pick, broadcast)
+        return self._upsert(
+            base, win, key, cur, snap.get("order_column"), broadcast, present_sets
+        )
 
     # ---------- write helpers ----------
 
@@ -906,7 +924,6 @@ class LakeTable:
     def merge(
         self,
         delta: DataFrame,
-        apply_fn,
         properties_update: dict | None = None,
         delta_rows: int | None = None,
         affected_buckets: list[int] | None = None,
@@ -915,25 +932,18 @@ class LakeTable:
         pre_commit=None,
         max_stack: int | None = None,
     ) -> None:
-        """Bucket-pruned MERGE: join current state of *affected buckets only*
-        with ``delta`` on the key and let ``apply_fn(old_cols, new_cols)``
-        produce the merged row expressions.
+        """Bucket-pruned keyed upsert of ``delta`` into the current state
+        of the *affected buckets only*.
 
-        ``delta`` must contain the key column with **at most one row per
-        key** (run LWW dedup first); ``apply_fn(old, new)`` gets two dicts
-        of Columns (either side nullable where the key is one-sided) and
-        returns a dict name->Column for the output row (current schema
-        names).
-
-        **apply_fn contract — name-based Columns only.** The dicts passed
-        to ``apply_fn`` are always pure name references
-        (``F.col("__o_<name>")`` / ``F.col("__n_<name>")``), never
-        DataFrame-bound columns, and the ``__o_``/``__n_`` prefixes are
-        part of the contract. Callers may therefore safely memoize the
-        returned Column-expression dict across merge() invocations for the
-        same schema (the CDC engine caches per schema version —
-        ``cdc/apply.py`` ``_resolve_cache``); a change to how these dicts
-        are built must invalidate such caches.
+        ``delta`` holds rows named by table columns: the key column, the
+        recorded ``order_column`` when the table has one, and **at most
+        one row per key** (run LWW dedup first). A delta row replaces its
+        key's stored row when the key is absent, the table records no
+        order column, or the row's order value is strictly greater; it
+        sets the columns it carries, and the columns it lacks keep the
+        stored value (null for a new key). A column the table lacks, or
+        a missing key or order column, raises ``ValueError`` before
+        anything is written.
 
         ``affected_buckets``, when supplied, must be a superset of the
         buckets ``delta`` hashes into under ``bucket_expr`` — the merge
@@ -950,21 +960,22 @@ class LakeTable:
         ``mode`` selects the physical commit strategy:
 
         - ``"cow"`` (default): copy-on-write — affected buckets are read,
-          resolved through ``apply_fn`` and rewritten. Always correct for
-          any ``apply_fn``.
-        - ``"mor"``: merge-on-read — the delta is pre-resolved as inserts
-          (``apply_fn`` with an all-null old side), written ONCE as a few
-          bucket-sorted delta files, and appended to the affected
+          merged with the delta and rewritten.
+        - ``"mor"``: merge-on-read — the delta is written ONCE, typed, as
+          a few bucket-sorted delta files, and appended to the affected
           buckets' delta stacks. The base is neither read nor rewritten:
           a micro-batch merge costs O(delta) I/O instead of O(affected
           buckets) — at 100 TB that is the difference between a commit
           that writes megabytes and one that rewrites the table's hot
-          buckets every 10 seconds. :meth:`read` resolves the stack
-          (newest row per key wins). **Contract**: valid only when
-          ``apply_fn`` has upsert/LWW semantics — each delta row must
-          strictly supersede any stored row with its key (the CDC engine
-          guarantees this via the LSN watermark); an accumulating
-          ``apply_fn`` (e.g. ``old.count + new.count``) must use CoW.
+          buckets every 10 seconds. :meth:`read` resolves the stack: the
+          newest delta row per key meets the base row under the rule
+          above. **Contract**: among stacked deltas the newest wins, so
+          each delta row's order value must exceed those of its key's
+          rows in earlier deltas still stacked (the CDC engine's
+          advancing watermark guarantees it; a chunk that does not
+          advance merges CoW). A delta lacking a column that a stacked
+          delta in an affected bucket carries merges CoW instead, since
+          the read would fall back past the stacked value to the base.
         - ``"auto"``: MOR while the delta is small (≤ max(one target
           file, affected-base-bytes / ``MOR_COMPACT_RATIO``)) and every
           affected stack is shallower than ``MOR_MAX_STACK``; CoW
@@ -999,9 +1010,17 @@ class LakeTable:
         """
         snap = self.snapshot()
         v = snap["version"]
-        key = snap["key_column"]
+        key, order = snap["key_column"], snap.get("order_column")
         n_buckets = snap["n_buckets"]
         cur = TableSchema.from_json(snap["schema"])
+        by_name = cur.by_name()
+        unknown = sorted(set(delta.columns) - set(by_name))
+        missing = [c for c in (key, order) if c is not None and c not in delta.columns]
+        if unknown or missing:
+            raise ValueError(
+                f"merge delta names columns the table lacks {unknown} "
+                f"or lacks the key/order columns {missing}"
+            )
 
         # callers that already know the delta's bucket set (the CDC engine
         # folds it into the LWW stats job) skip this extra Spark job
@@ -1045,48 +1064,30 @@ class LakeTable:
         else:
             use_mor = mode == "mor"
 
+        # a stacked delta carrying a column this one lacks: the read would
+        # fall back past its value to the base, so fold instead
+        ids = {by_name[c].id for c in delta.columns}
+        use_mor = use_mor and not any(
+            set(d.get("column_ids", ())) - ids
+            for b in affected
+            for d in aff_files.get(str(b), {}).get("deltas", [])
+        )
+
         if use_mor:
-            # Old-only "carry" columns (merged expression never touches
-            # the __n_ side — e.g. columns added by schema evolution that
-            # the resolver passes through) are EXCLUDED from the delta
-            # file and its column_ids: under an all-null old side they
-            # would store null and clobber the base value at read time.
-            # The MOR read falls back to the base row for absent columns.
-            # Dependence on the new side is read from the expression's
-            # rendering by the exact prefixed tokens `__n_<col>` — never a
-            # bare substring, which would also hit a USER column like
-            # 'x__n_y' inside its '__o_x__n_y' alias and silently null
-            # base values at read.
-            def refs_new_side(ex: Column) -> bool:
-                r = repr(ex)
-                return any(
-                    re.search(rf"(?<![0-9A-Za-z_]){re.escape('__n_' + c)}(?![0-9A-Za-z_])", r)
-                    for c in delta.columns
-                )
-
-            def resolve_new_side(old: dict, new: dict) -> dict:
-                return {
-                    nm: ex
-                    for nm, ex in apply_fn(old, new).items()
-                    if nm == key or refs_new_side(ex)
-                }
-
-            merged = self._upsert(None, delta, key, cur, resolve_new_side, False)
-            ddir, dbytes = self._write_delta(merged, snap, est_delta)
+            ddir, dbytes = self._write_delta(delta, snap, est_delta)
             if affected_buckets is not None:
                 # same superset invariant as CoW: an undeclared bucket's
                 # rows would sit in the shared file with no entry
                 # referencing them — silent row loss, so verify from the
                 # written files' footer stats before committing
                 self._verify_delta_buckets(ddir, affected)
-            by_name = cur.by_name()
             item = {
                 "path": ddir,
                 "schema_version": cur.version,
                 "seq": v + 1,
                 "bytes": dbytes,
                 "share_bytes": -(-dbytes // len(affected)),
-                "column_ids": [by_name[nm].id for nm in merged.columns],
+                "column_ids": [by_name[nm].id for nm in delta.columns],
             }
             add = {}
             for b in affected:
@@ -1110,7 +1111,7 @@ class LakeTable:
         )
         old = self.read(buckets=affected) if have_old else None
         broadcast = est_delta <= self.MOR_BROADCAST_MAX_BYTES
-        merged = self._upsert(old, delta, key, cur, apply_fn, broadcast)
+        merged = self._upsert(old, delta, key, cur, order, broadcast)
         add = self._write_buckets(
             merged, snap, est_bytes=aff_bytes + est_delta, n_files_hint=len(affected)
         )
@@ -1141,7 +1142,6 @@ class LakeTable:
         self,
         v_from: int,
         v_to: int | None = None,
-        lsn_column: str | None = None,
         deleted_column: str | None = None,
     ) -> DataFrame:
         """Row-level change feed between two snapshots — the lake table
@@ -1154,10 +1154,10 @@ class LakeTable:
         misalign the two sides).
 
         ``deleted_column``: rows flagged there are logically dead
-        (tombstones) on either side. ``lsn_column``: when given, an
-        update is emitted only if the newer side's LSN advanced — the
-        exact CDC truth; without it, updates fall back to any-column
-        value inequality.
+        (tombstones) on either side. On a table that records an
+        ``order_column`` an update is emitted only if the key's order
+        value advanced — exactly when a merge replaced the row; without
+        one, updates fall back to any-column value inequality.
 
         Scale shape: the manifest diff prunes the scan to buckets whose
         file entries differ between the two snapshots — a micro-batch's
@@ -1176,7 +1176,7 @@ class LakeTable:
         if v_from > v_to:
             raise ValueError(f"v_from {v_from} > v_to {v_to}")
         sch_to = TableSchema.from_json(snap_to["schema"])
-        key = snap_to["key_column"]
+        key, order = snap_to["key_column"], snap_to.get("order_column")
 
         buckets = None
         if snap_from["n_buckets"] == snap_to["n_buckets"]:
@@ -1222,8 +1222,8 @@ class LakeTable:
         j = o.join(n, on="__k", how="full_outer")
         o_live = F.coalesce("__o_live", F.lit(False))
         n_live = F.coalesce("__n_live", F.lit(False))
-        if lsn_column and lsn_column in data_cols:
-            advanced = F.col(f"__after.{lsn_column}") > F.col(f"__before.{lsn_column}")
+        if order is not None:
+            advanced = F.col(f"__after.{order}") > F.col(f"__before.{order}")
         else:
             # null-safe: a null field inside either image must read as a
             # difference, not null out the whole predicate
@@ -1300,7 +1300,7 @@ class LakeTable:
         # (a user column by that name would be silently overwritten with
         # hash-bucket ids on the next rewrite); '_seq'/'_tag' are the MOR
         # delta columns _resolve_mor selects alongside the user columns (a
-        # user column by either name makes the resolver's select ambiguous
+        # user column by either name makes the MOR read's select ambiguous
         # and every read of a delta-carrying table fail). Reject the DDL.
         introduced = {"add_column": change.get("name"),
                       "rename_column": change.get("new_name")}.get(action)
@@ -1322,8 +1322,9 @@ class LakeTable:
                 SchemaColumn(c.id, change["new_name"] if c.name == change["name"] else c.name, c.type)
                 for c in cur.columns
             ]
-            if snap["key_column"] == change["name"]:
-                snap["key_column"] = change["new_name"]
+            for role in ("key_column", "order_column"):
+                if snap.get(role) == change["name"]:
+                    snap[role] = change["new_name"]
         elif action == "widen_type":
             c = cols.get(change["name"])
             if c is None:
@@ -1485,33 +1486,34 @@ class LakeTable:
         self,
         expire_tombstones_below_lsn: int | None = None,
         tombstone_column: str = "deleted",
-        lsn_column: str = "last_lsn",
         properties_update: dict | None = None,
     ) -> None:
         """Rewrite all buckets under the current schema version; optionally
-        drop tombstones whose last_lsn is below the global applied watermark
-        (safe: no event with a lower LSN can ever arrive again).
+        drop tombstones whose order value (the recorded ``order_column``)
+        is below the global applied watermark (safe: no event with a
+        lower LSN can ever arrive again).
 
-        ``tombstone_column``/``lsn_column``: resolve by FIELD ID at the
-        caller (the CDC engine / jobs/maintain.py do) — a rename_column
-        DDL moves the names, and a silently-skipped expiry would leave an
-        operator believing tombstones are being dropped. Missing columns
-        raise instead of skipping.
+        ``tombstone_column``: resolve by FIELD ID at the caller (the CDC
+        engine / jobs/maintain.py do) — a rename_column DDL moves the
+        name, and a silently-skipped expiry would leave an operator
+        believing tombstones are being dropped. A missing tombstone or
+        order column raises instead of skipping.
 
         Concurrency: derives from the version read and passes it to
         :meth:`overwrite`, so a concurrent ingester commit surfaces as
         CommitConflict rather than being silently erased."""
-        v = self.current_version()
+        snap = self.snapshot()
+        v, order = snap["version"], snap.get("order_column")
         df = self.read()
         if expire_tombstones_below_lsn is not None:
-            missing = {tombstone_column, lsn_column} - set(df.columns)
-            if missing:
+            if order is None or tombstone_column not in df.columns:
                 raise ValueError(
-                    f"tombstone expiry requested but columns {sorted(missing)} "
-                    "are absent — resolve names by field id after renames"
+                    f"tombstone expiry needs the column {tombstone_column!r} "
+                    "and a recorded order column — resolve names by field id "
+                    "after renames"
                 )
             df = df.filter(
                 (~F.col(tombstone_column))
-                | (F.col(lsn_column) >= F.lit(expire_tombstones_below_lsn))
+                | (F.col(order) >= F.lit(expire_tombstones_below_lsn))
             )
         self.overwrite(df, expected_version=v, properties_update=properties_update)

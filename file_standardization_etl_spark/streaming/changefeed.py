@@ -43,12 +43,10 @@ class ChangeFeedFollower:
         self,
         table: LakeTable,
         cursor_path: str,
-        lsn_column: str | None = None,
         deleted_column: str | None = None,
     ):
         self.table = table
         self.cursor_path = os.path.abspath(cursor_path)
-        self.lsn_column = lsn_column
         self.deleted_column = deleted_column
 
     # ---------- cursor ----------
@@ -106,12 +104,7 @@ class ChangeFeedFollower:
             )
             windows = list(zip([cur] + versions[:-1], versions))
         for v_from, v_to in windows:
-            df = self.table.changes(
-                v_from,
-                v_to,
-                lsn_column=self.lsn_column,
-                deleted_column=self.deleted_column,
-            )
+            df = self.table.changes(v_from, v_to, deleted_column=self.deleted_column)
             consume(df, v_from, v_to)
             self._write(v_to)
         return len(windows)
@@ -120,8 +113,5 @@ class ChangeFeedFollower:
         """The un-consumed diff as a DataFrame without advancing the
         cursor (peek)."""
         return self.table.changes(
-            self.position(),
-            None,
-            lsn_column=self.lsn_column,
-            deleted_column=self.deleted_column,
+            self.position(), None, deleted_column=self.deleted_column
         )

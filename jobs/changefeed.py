@@ -64,15 +64,14 @@ def main():
             ChangeFeedFollower,
         )
 
-        from file_standardization_etl_spark.cdc.apply import FID_DELETED, FID_LSN
+        from file_standardization_etl_spark.cdc.apply import FID_DELETED
 
-        # resolve the engine's lsn/tombstone columns by stable field id
-        # (renames keep the id); a non-CDC table yields None and the
-        # follower falls back to generic value-diff semantics
+        # resolve the engine's tombstone column by stable field id
+        # (renames keep the id); the table's recorded order column gates
+        # updates
         names = {c.id: c.name for c in engine.table.schema().columns}
         follower = ChangeFeedFollower(
-            engine.table, args.cursor,
-            lsn_column=names.get(FID_LSN), deleted_column=names.get(FID_DELETED),
+            engine.table, args.cursor, deleted_column=names.get(FID_DELETED)
         )
         n = follower.step(export)
         print(f"windows exported: {n}")

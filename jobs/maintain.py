@@ -160,15 +160,15 @@ def main():
         report["rebucketed_to"] = args.rebucket
     if args.compact:
         wm = engine.applied_lsn() + 1 if args.expire_tombstones else None
-        # rename-proof: resolve the tombstone/LSN columns by stable field
-        # id (a rename_column DDL moves the names, never the ids)
-        from file_standardization_etl_spark.cdc.apply import FID_DELETED, FID_LSN
+        # rename-proof: resolve the tombstone column by stable field id
+        # (a rename_column DDL moves the name, never the id); the LSN is
+        # the table's recorded order column
+        from file_standardization_etl_spark.cdc.apply import FID_DELETED
 
         names = {c.id: c.name for c in engine.table.schema().columns}
         engine.table.compact(
             expire_tombstones_below_lsn=wm,
             tombstone_column=names.get(FID_DELETED, "deleted"),
-            lsn_column=names.get(FID_LSN, "last_lsn"),
             # record the expiry fence: requeue_quarantine refuses to
             # rescue events below it (their vetoing tombstones are gone)
             properties_update=(

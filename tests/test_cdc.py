@@ -898,3 +898,32 @@ def test_partially_redelivered_batch_counts_only_fresh_rows(spark, tmp_path):
     oracle = replay(events)
     assert_state_matches(engine, oracle)
     assert engine.quarantine().count() == len(oracle.quarantine)
+
+
+def test_target_without_order_column_refused(spark, tmp_path):
+    """A target whose snapshot records no order column (the layout before
+    the lake recorded one) would merge as a plain upsert, where stale and
+    out-of-order events win: the write path and bootstrap refuse it
+    before anything commits."""
+    from file_standardization_etl_spark.cdc.apply import TARGET_COLUMNS
+    from file_standardization_etl_spark.lake.table import LakeTable
+
+    engine = CdcEngine(spark, str(tmp_path / "cdc"), n_buckets=4)
+    LakeTable.create(
+        spark, engine.table.path, TARGET_COLUMNS, key_column="doc_id", n_buckets=4,
+        properties={"max_applied_lsn": 0, "last_batch_id": -1},
+    )
+    engine.init()
+    events = generate_events(EventGenConfig(n_events=200, n_docs=20, seed=5))
+    with pytest.raises(ValueError, match="order column"):
+        engine.apply_batch(events_df(spark, events), batch_id=0)
+    with pytest.raises(ValueError, match="order column"):
+        engine.bootstrap(
+            spark.createDataFrame(
+                [("d1", [1], 1, "web")],
+                "doc_id string, tokens array<int>, n_tok int, source string",
+            ),
+            as_of_lsn=1,
+        )
+    assert engine.table.current_version() == 0
+    assert engine.applied_lsn() == 0

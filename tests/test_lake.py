@@ -12,7 +12,9 @@ COLS = [("doc_id", "string"), ("v", "int"), ("last_lsn", "bigint"), ("deleted", 
 
 
 def make(spark, path, n_buckets=4):
-    return LakeTable.create(spark, path, COLS, key_column="doc_id", n_buckets=n_buckets)
+    return LakeTable.create(
+        spark, path, COLS, key_column="doc_id", n_buckets=n_buckets, order_column="last_lsn"
+    )
 
 
 def seed(spark, t, rows):
@@ -39,18 +41,8 @@ def test_merge_updates_only_affected_buckets(spark, tmp_table_dir):
     t = make(spark, tmp_table_dir, n_buckets=8)
     seed(spark, t, [(f"d{i}", i, 1, False) for i in range(200)])
     files_before = dict(t.snapshot()["files"])
-    delta = spark.createDataFrame([("d5", 999, 2)], "doc_id string, v int, lsn long")
-
-    def resolve(old, new):
-        take = new["lsn"].isNotNull() & (old["last_lsn"].isNull() | (new["lsn"] > old["last_lsn"]))
-        return {
-            "doc_id": F.coalesce(old["doc_id"], new["doc_id"]),
-            "v": F.when(take, new["v"]).otherwise(old["v"]),
-            "last_lsn": F.when(take, new["lsn"]).otherwise(old["last_lsn"]),
-            "deleted": F.coalesce(old["deleted"], F.lit(False)),
-        }
-
-    t.merge(delta, resolve)
+    delta = spark.createDataFrame([("d5", 999, 2)], "doc_id string, v int, last_lsn long")
+    t.merge(delta)
     files_after = t.snapshot()["files"]
     changed = [b for b in files_after if files_after[b] != files_before.get(b)]
     assert len(changed) == 1  # only d5's bucket rewritten
@@ -100,19 +92,9 @@ def test_mixed_schema_versions_union(spark, tmp_table_dir):
     t.apply_schema_change({"action": "widen_type", "name": "value", "type": "bigint"})
 
     delta = spark.createDataFrame(
-        [("new1", 10_000_000_000, 2)], "doc_id string, value long, lsn long"
+        [("new1", 10_000_000_000, 2)], "doc_id string, value long, last_lsn long"
     )
-
-    def resolve(old, new):
-        take = new["lsn"].isNotNull() & (old["last_lsn"].isNull() | (new["lsn"] > old["last_lsn"]))
-        return {
-            "doc_id": F.coalesce(old["doc_id"], new["doc_id"]),
-            "value": F.when(take, new["value"]).otherwise(old["value"]),
-            "last_lsn": F.coalesce(new["lsn"], old["last_lsn"]),
-            "deleted": F.coalesce(old["deleted"], F.lit(False)),
-        }
-
-    t.merge(delta, resolve)
+    t.merge(delta)
     got = {r["doc_id"]: r["value"] for r in t.read().collect()}
     assert got == {"old1": 1, "old2": 2, "new1": 10_000_000_000}
 
@@ -121,7 +103,6 @@ def test_time_travel_and_history(spark, tmp_path):
     """Iceberg-parity metadata: read(as_of_version=) reproduces an earlier
     snapshot bitwise; history() lists the commit chain."""
     from file_standardization_etl_spark.lake.table import LakeTable
-    from pyspark.sql import functions as F
 
     t = LakeTable.create(
         spark, str(tmp_path / "t"), [("k", "string"), ("v", "bigint")], key_column="k",
@@ -129,13 +110,7 @@ def test_time_travel_and_history(spark, tmp_path):
     )
     t.overwrite(spark.createDataFrame([("a", 1), ("b", 2)], "k string, v bigint"))
     v1 = t.current_version()
-    t.merge(
-        spark.createDataFrame([("b", 20), ("c", 30)], "k string, v bigint"),
-        lambda old, new: {
-            "k": F.coalesce(old["k"], new["k"]),
-            "v": F.coalesce(new["v"], old["v"]),
-        },
-    )
+    t.merge(spark.createDataFrame([("b", 20), ("c", 30)], "k string, v bigint"))
     v2 = t.current_version()
     assert v2 == v1 + 1
 
@@ -158,7 +133,6 @@ def test_failed_commit_leaves_table_unchanged_and_gc_collects(spark, tmp_path):
     import pytest as _pytest
 
     from file_standardization_etl_spark.lake.table import LakeTable
-    from pyspark.sql import functions as F
 
     t = LakeTable.create(
         spark, str(tmp_path / "t"), [("k", "string"), ("v", "bigint")],
@@ -175,13 +149,7 @@ def test_failed_commit_leaves_table_unchanged_and_gc_collects(spark, tmp_path):
 
     t._commit = exploding_commit
     with _pytest.raises(RuntimeError, match="injected crash"):
-        t.merge(
-            spark.createDataFrame([("b", 20)], "k string, v bigint"),
-            lambda old, new: {
-                "k": F.coalesce(old["k"], new["k"]),
-                "v": F.coalesce(new["v"], old["v"]),
-            },
-        )
+        t.merge(spark.createDataFrame([("b", 20)], "k string, v bigint"))
     t._commit = real_commit
 
     # reader: unchanged version, unchanged content
@@ -234,16 +202,6 @@ def test_dml_delete_and_update_where(spark, tmp_path):
     with _pytest.raises(ValueError, match="unknown columns"):
         t.update_where(F.lit(True), {"nope": F.lit(1)})
 
-def _lww_resolve(old, new):
-    take = new["lsn"].isNotNull() & (old["last_lsn"].isNull() | (new["lsn"] > old["last_lsn"]))
-    return {
-        "doc_id": F.coalesce(old["doc_id"], new["doc_id"]),
-        "v": F.when(take, new["v"]).otherwise(old["v"]),
-        "last_lsn": F.when(take, new["lsn"]).otherwise(old["last_lsn"]),
-        "deleted": F.coalesce(old["deleted"], F.lit(False)),
-    }
-
-
 @pytest.fixture()
 def small_chunks(monkeypatch):
     """Shrink the manifest thresholds so a 16-bucket table exercises the
@@ -267,8 +225,8 @@ def test_chunked_manifest_merge_rewrites_only_touched_chunks(
     assert sum(c["n"] for c in snap["manifest_list"]) == 16
     before = {c["file"] for c in snap["manifest_list"]}
 
-    delta = spark.createDataFrame([("d5", 999, 2)], "doc_id string, v int, lsn long")
-    t.merge(delta, _lww_resolve)
+    delta = spark.createDataFrame([("d5", 999, 2)], "doc_id string, v int, last_lsn long")
+    t.merge(delta)
     after_list = t.snapshot()["manifest_list"]
     after = {c["file"] for c in after_list}
     assert len(after - before) == 1  # exactly one chunk rewritten
@@ -291,10 +249,7 @@ def test_chunked_manifest_time_travel_history_and_gc(spark, tmp_table_dir, small
     seed(spark, t, [(f"d{i}", i, 1, False) for i in range(50)])
     v1 = t.current_version()
     for lsn, (k, val) in enumerate([("d1", 100), ("d2", 200), ("d3", 300)], start=2):
-        t.merge(
-            spark.createDataFrame([(k, val, lsn)], "doc_id string, v int, lsn long"),
-            _lww_resolve,
-        )
+        t.merge(spark.createDataFrame([(k, val, lsn)], "doc_id string, v int, last_lsn long"))
     v4 = t.current_version()
     assert v4 == v1 + 3
     hist = t.history()
@@ -324,8 +279,8 @@ def test_inline_to_chunked_migration_and_rebucket_back(spark, tmp_table_dir, mon
 
     monkeypatch.setattr(LakeTable, "MANIFEST_INLINE_MAX", 8)
     monkeypatch.setattr(LakeTable, "MANIFEST_CHUNK", 4)
-    delta = spark.createDataFrame([("d7", 700, 2)], "doc_id string, v int, lsn long")
-    t.merge(delta, _lww_resolve)  # first post-threshold commit migrates
+    delta = spark.createDataFrame([("d7", 700, 2)], "doc_id string, v int, last_lsn long")
+    t.merge(delta)  # first post-threshold commit migrates
     snap = t.snapshot()
     assert "files" not in snap and sum(c["n"] for c in snap["manifest_list"]) == 16
     got = {r["doc_id"]: r["v"] for r in t.read().collect()}

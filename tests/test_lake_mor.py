@@ -28,26 +28,18 @@ COLS = [
 
 
 def make(spark, path, n_buckets=8):
-    return LakeTable.create(spark, path, COLS, key_column="doc_id", n_buckets=n_buckets)
-
-
-def lww(old, new):
-    take = new["lsn"].isNotNull() & (
-        old["last_lsn"].isNull() | (new["lsn"] > old["last_lsn"])
+    return LakeTable.create(
+        spark, path, COLS, key_column="doc_id", n_buckets=n_buckets, order_column="last_lsn"
     )
-    is_del = F.coalesce(new["op"] == "delete", F.lit(False))
-    return {
-        "doc_id": F.coalesce(old["doc_id"], new["doc_id"]),
-        "v": F.when(take, F.when(is_del, F.lit(None)).otherwise(new["v"])).otherwise(
-            old["v"]
-        ),
-        "last_lsn": F.when(take, new["lsn"]).otherwise(old["last_lsn"]),
-        "deleted": F.when(take, is_del).otherwise(F.coalesce(old["deleted"], F.lit(False))),
-    }
 
 
 def delta_df(spark, rows):
-    return spark.createDataFrame(rows, "doc_id string, v int, lsn long, op string")
+    """Events ``(doc_id, v, lsn, op)`` as table-column rows: a delete is a
+    tombstone row with ``v`` null."""
+    return spark.createDataFrame(
+        [(k, None if op == "delete" else v, lsn, op == "delete") for k, v, lsn, op in rows],
+        "doc_id string, v int, last_lsn long, deleted boolean",
+    )
 
 
 def state(t):
@@ -58,7 +50,7 @@ def state(t):
 
 def apply_events(t, spark, batches, mode):
     for lsn_rows in batches:
-        t.merge(delta_df(spark, lsn_rows), lww, mode=mode, delta_rows=len(lsn_rows))
+        t.merge(delta_df(spark, lsn_rows), mode=mode, delta_rows=len(lsn_rows))
 
 
 BATCHES = [
@@ -97,7 +89,7 @@ def test_auto_mode_appends_then_folds_at_max_stack(spark, tmp_path, monkeypatch)
             k = f"d{(i * 3 + j) % 6}"
             rows.append((k, 100 * i + j, lsn, "upsert"))
             ref[k] = (100 * i + j, lsn, False)
-        t.merge(delta_df(spark, rows), lww, mode="auto", delta_rows=len(rows))
+        t.merge(delta_df(spark, rows), mode="auto", delta_rows=len(rows))
     assert state(t) == ref
     entries = t._files_load(t.snapshot())
     depth = max(len(e.get("deltas", [])) for e in entries.values())
@@ -110,31 +102,25 @@ def test_auto_mode_appends_then_folds_at_max_stack(spark, tmp_path, monkeypatch)
 
 def test_mor_schema_evolution_preserves_carried_columns(spark, tmp_path):
     """A column added mid-stack keeps its base value through later MOR
-    upserts (the delta's column_ids exclude old-carry columns, so the
+    upserts (the delta lacks it, so its column_ids exclude it and the
     read falls back to the base row)."""
     t = make(spark, str(tmp_path / "t"))
-    t.merge(delta_df(spark, BATCHES[0]), lww, mode="mor", delta_rows=3)
+    t.merge(delta_df(spark, BATCHES[0]), mode="mor", delta_rows=3)
     # fold to base so there is a base row to carry from
     t.compact()
     t.apply_schema_change({"action": "add_column", "name": "extra", "type": "int"})
     t.update_where(F.col("doc_id") == "d1", {"extra": F.lit(7)})
 
-    def lww2(old, new):
-        out = lww(old, new)
-        out["extra"] = old["extra"]  # old-carry, like the CDC resolver
-        return out
-
     # MOR upsert of d1 AFTER the column exists must not clobber extra=7
     t.merge(
         delta_df(spark, [("d1", 99, 50, "upsert"), ("d7", 70, 51, "upsert")]),
-        lww2,
         mode="mor",
         delta_rows=2,
     )
     got = {r["doc_id"]: (r["v"], r["extra"]) for r in t.read().collect()}
     assert got["d1"] == (99, 7)
     assert got["d7"] == (70, None)
-    # the recorded column_ids must exclude the carried column
+    # the recorded column_ids must exclude the column the delta lacks
     entries = t._files_load(t.snapshot())
     items = [d for e in entries.values() for d in e.get("deltas", [])]
     extra_id = t.schema().by_name()["extra"].id
@@ -143,24 +129,17 @@ def test_mor_schema_evolution_preserves_carried_columns(spark, tmp_path):
 
 def test_mor_rename_and_widen_mid_stack(spark, tmp_path):
     t = make(spark, str(tmp_path / "t"))
-    t.merge(delta_df(spark, BATCHES[0]), lww, mode="mor", delta_rows=3)
+    t.merge(delta_df(spark, BATCHES[0]), mode="mor", delta_rows=3)
     t.apply_schema_change({"action": "rename_column", "name": "v", "new_name": "val"})
     t.apply_schema_change({"action": "widen_type", "name": "val", "type": "bigint"})
 
-    def lww_renamed(old, new):
-        take = new["lsn"].isNotNull() & (
-            old["last_lsn"].isNull() | (new["lsn"] > old["last_lsn"])
-        )
-        return {
-            "doc_id": F.coalesce(old["doc_id"], new["doc_id"]),
-            "val": F.when(take, new["v"].cast("bigint")).otherwise(old["val"]),
-            "last_lsn": F.when(take, new["lsn"]).otherwise(old["last_lsn"]),
-            "deleted": F.when(take, F.lit(False)).otherwise(
-                F.coalesce(old["deleted"], F.lit(False))
-            ),
-        }
-
-    t.merge(delta_df(spark, [("d2", 21, 20, "upsert")]), lww_renamed, mode="mor", delta_rows=1)
+    t.merge(
+        spark.createDataFrame(
+            [("d2", 21, 20, False)], "doc_id string, val bigint, last_lsn long, deleted boolean"
+        ),
+        mode="mor",
+        delta_rows=1,
+    )
     got = {r["doc_id"]: r["val"] for r in t.read().collect()}
     assert got == {"d1": 10, "d2": 21, "d3": 30}
     assert dict(t.read().dtypes)["val"] == "bigint"
@@ -204,7 +183,7 @@ def test_partial_cow_fold_drops_refs_without_resurrecting_rows(spark, tmp_path):
     before = state(t)
     # CoW touching only d1's bucket
     t.merge(
-        delta_df(spark, [("d1", 13, 100, "upsert")]), lww, mode="cow", delta_rows=1
+        delta_df(spark, [("d1", 13, 100, "upsert")]), mode="cow", delta_rows=1
     )
     want = dict(before)
     want["d1"] = (13, 100, False)
@@ -226,7 +205,6 @@ def test_stray_bucket_guard_aborts_before_commit(spark, tmp_path):
     with pytest.raises(ValueError, match="undeclared buckets"):
         t.merge(
             delta_df(spark, rows),
-            lww,
             mode="mor",
             delta_rows=2,
             affected_buckets=[0],
@@ -271,7 +249,7 @@ def test_mor_over_chunked_manifest_layout(spark, tmp_path, monkeypatch):
             k = f"d{(i * 3 + j) % 6}"
             rows.append((k, 100 * i + j, lsn, "upsert"))
             ref[k] = (100 * i + j, lsn, False)
-        t.merge(delta_df(spark, rows), lww, mode="auto", delta_rows=len(rows))
+        t.merge(delta_df(spark, rows), mode="auto", delta_rows=len(rows))
     snap = t.snapshot()
     assert "files" not in snap and snap.get("manifest_list")
     assert state(t) == ref
@@ -291,7 +269,7 @@ def test_mor_delta_bytes_apportioned_per_bucket(spark, tmp_path):
     compaction threshold and CoW write-task sizing by up to 64x."""
     t = make(spark, str(tmp_path / "t"), n_buckets=8)
     rows = [(f"d{i}", i, i + 1, "upsert") for i in range(64)]  # spans all buckets
-    t.merge(delta_df(spark, rows), lww, mode="mor", delta_rows=len(rows))
+    t.merge(delta_df(spark, rows), mode="mor", delta_rows=len(rows))
     entries = t._files_load(t.snapshot())
     items = [d for e in entries.values() for d in e.get("deltas", [])]
     assert items
@@ -306,25 +284,18 @@ def test_mor_delta_bytes_apportioned_per_bucket(spark, tmp_path):
 
 
 def test_mor_carry_column_named_like_new_prefix_survives(spark, tmp_path):
-    """A carried (old-only) column whose NAME contains the literal '__n_'
-    substring (e.g. 'x__n_y') must still be excluded from the delta file:
-    naive substring matching on the expression repr would see its
-    '__o_x__n_y' alias, persist the column as all-null, and silently
-    clobber the base value at read time."""
+    """A column the delta lacks whose NAME contains the literal '__n_'
+    substring (e.g. 'x__n_y', the merge plan's new-side prefix) must
+    still be excluded from the delta file and keep its base value: a
+    delta file carrying it as all-null would clobber the base value at
+    read time."""
     t = make(spark, str(tmp_path / "t"))
-    t.merge(delta_df(spark, BATCHES[0]), lww, mode="mor", delta_rows=3)
+    t.merge(delta_df(spark, BATCHES[0]), mode="mor", delta_rows=3)
     t.compact()
     t.apply_schema_change({"action": "add_column", "name": "x__n_y", "type": "int"})
     t.update_where(F.col("doc_id") == "d1", {"x__n_y": F.lit(41)})
 
-    def lww2(old, new):
-        out = lww(old, new)
-        out["x__n_y"] = old["x__n_y"]  # old-carry with a booby-trapped name
-        return out
-
-    t.merge(
-        delta_df(spark, [("d1", 99, 50, "upsert")]), lww2, mode="mor", delta_rows=1
-    )
+    t.merge(delta_df(spark, [("d1", 99, 50, "upsert")]), mode="mor", delta_rows=1)
     got = {r["doc_id"]: (r["v"], r["x__n_y"]) for r in t.read().collect()}
     assert got["d1"] == (99, 41)  # carried value survived the MOR upsert
     entries = t._files_load(t.snapshot())
@@ -387,13 +358,12 @@ def test_cow_merge_byte_gate_never_broadcasts_payload(spark, tmp_path, monkeypat
     monkeypatch.setattr(LakeTable, "_write_buckets", spy)
     try:
         for rows in merges:
-            t_small.merge(delta_df(spark, rows), lww, mode="cow", delta_rows=1, delta_bytes=1)
+            t_small.merge(delta_df(spark, rows), mode="cow", delta_rows=1, delta_bytes=1)
         assert all("BroadcastHashJoin" in p for p in plans), plans
         plans.clear()
         for rows in merges:
             t_big.merge(
                 delta_df(spark, rows),
-                lww,
                 mode="cow",
                 delta_rows=1,
                 delta_bytes=LakeTable.MOR_BROADCAST_MAX_BYTES + 1,
@@ -479,3 +449,89 @@ def test_internal_reads_plan_without_spark_jobs(spark, tmp_path):
             docs.setdefault(t, set()).add(k)
     got = {r["token"]: (r["n_occ"], r["n_docs"]) for r in vocab.collect()}
     assert got == {t: (occ[t], len(docs[t])) for t in occ}
+
+
+def test_randomized_order_rule_matches_dict_oracle(spark, tmp_path, monkeypatch):
+    """The merge rule on a plain table, no engine: random batches of
+    out-of-order and stale rows through copy-on-write, tombstone rows,
+    merge-on-read appends and the folds they trigger (MOR_MAX_STACK=2),
+    ``compact()``, and an ``add_column`` whose values later MOR upserts
+    must keep — some deltas carry the added column, most lack it. The
+    table equals a dict oracle throughout: a row replaces its key's
+    stored row when the key is absent or its order value is strictly
+    greater, sets the columns it carries and keeps the rest. A table
+    with no order column is last-write-wins. A delta naming a column the
+    table lacks, or lacking the key or order column, is refused before
+    anything is written."""
+    import random
+
+    monkeypatch.setattr(LakeTable, "MOR_MAX_STACK", 2)
+    for ordered in (True, False):
+        rng = random.Random(5150 + ordered)
+        t = LakeTable.create(
+            spark, str(tmp_path / f"t{int(ordered)}"), COLS, key_column="doc_id",
+            n_buckets=4, order_column="last_lsn" if ordered else None,
+        )
+        cols = ["doc_id", "v", "last_lsn", "deleted"]
+        want: dict = {}
+        mor_top: dict = {}  # key -> highest order sent through an auto merge
+        clock = 0
+        early, late = ["cow", "auto"] * 2, ["cow", "auto"] * 6 + ["compact", "auto"]
+        rng.shuffle(early)
+        rng.shuffle(late)
+        # then two wide MOR appends sharing keys, the first carrying the
+        # added column and the second lacking it
+        steps = early + ["add_column", "auto:extra", "auto:plain"] + late
+        for i, step in enumerate(steps):
+            if step == "compact":
+                t.compact()
+            elif step == "add_column":
+                t.apply_schema_change({"action": "add_column", "name": "extra", "type": "int"})
+                cols.append("extra")
+                for row in want.values():
+                    row["extra"] = None
+            else:
+                mode, _, forced = step.partition(":")
+                extra = {"extra": True, "plain": False}.get(forced, rng.random() < 0.5)
+                carry = [c for c in cols if c != "extra" or extra]
+                rows = []
+                n_keys = 8 if forced else rng.randint(1, 6)
+                for k in rng.sample([f"d{j}" for j in range(12)], n_keys):
+                    if mode == "auto":  # above every stacked row of its key
+                        o = rng.randint(mor_top.get(k, 0) + 1, clock + 4)
+                        mor_top[k] = o
+                    else:  # anything: stale, tied or out of order
+                        o = rng.randint(1, clock + 4)
+                    clock = max(clock, o)
+                    dead = rng.random() < 0.25
+                    row = {"doc_id": k, "v": None if dead else rng.randint(0, 999),
+                           "last_lsn": o, "deleted": dead, "extra": rng.randint(0, 9)}
+                    rows.append(tuple(row[c] for c in carry))
+                    stored = want.get(k)
+                    if stored is None or not ordered or o > stored["last_lsn"]:
+                        want[k] = {**dict.fromkeys(cols), **(stored or {}),
+                                   **{c: row[c] for c in carry}}
+                schema = ", ".join(
+                    f"{c} {dict(COLS + [('extra', 'int')])[c]}" for c in carry
+                )
+                t.merge(
+                    spark.createDataFrame(rows, schema),
+                    mode=mode,
+                    delta_rows=len(rows),
+                )
+            if i % 4 == 3 or i == len(steps) - 1:
+                got = {r["doc_id"]: tuple(r[c] for c in cols) for r in t.read().collect()}
+                assert got == {k: tuple(r[c] for c in cols) for k, r in want.items()}, (
+                    ordered, i, step,
+                )
+        entries = t._files_load(t.snapshot()).values()
+        assert any(e.get("path") for e in entries)  # folds wrote base files
+
+        v = t.current_version()
+        bad = ["doc_id string, v int, last_lsn long, nope int", "v int, last_lsn long"]
+        if ordered:
+            bad.append("doc_id string, v int")
+        for schema in bad:
+            with pytest.raises(ValueError, match="merge delta"):
+                t.merge(spark.createDataFrame([], schema))
+        assert t.current_version() == v

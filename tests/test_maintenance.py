@@ -275,7 +275,6 @@ def test_compact_raises_commit_conflict_on_concurrent_commit(spark, tmp_path, mo
     silently erased the concurrent batch (and carried its watermark
     forward, making the loss permanent)."""
     import pytest as _pytest
-    from pyspark.sql import functions as F
 
     from file_standardization_etl_spark.lake.table import CommitConflict, LakeTable
 
@@ -297,14 +296,7 @@ def test_compact_raises_commit_conflict_on_concurrent_commit(spark, tmp_path, mo
         df = orig_read(self, *a, **kw)
         # concurrent ingester commit lands after the maintenance read
         t2 = LakeTable(spark, path)
-        t2.merge(
-            spark.createDataFrame([("c", 3)], "k string, v long"),
-            lambda old, new: {
-                "k": F.coalesce(old["k"], new["k"]),
-                "v": F.coalesce(new["v"], old["v"]),
-            },
-            delta_rows=1,
-        )
+        t2.merge(spark.createDataFrame([("c", 3)], "k string, v long"), delta_rows=1)
         return df
 
     monkeypatch.setattr(LakeTable, "read", racy_read)
@@ -319,15 +311,12 @@ def test_compact_raises_commit_conflict_on_concurrent_commit(spark, tmp_path, mo
 
 def test_compact_tombstone_expiry_resolves_renamed_columns(spark, tmp_path):
     """Tombstone expiry after a rename_column DDL: the caller resolves the
-    tombstone/LSN columns by field id; name-bound defaults must raise
-    loudly (not silently skip) when the names moved."""
+    tombstone column by field id (the LSN is the table's recorded order
+    column); a name-bound default must raise loudly (not silently skip)
+    when the name moved."""
     import pytest as _pytest
 
-    from file_standardization_etl_spark.cdc.apply import (
-        FID_DELETED,
-        FID_LSN,
-        CdcEngine,
-    )
+    from file_standardization_etl_spark.cdc.apply import FID_DELETED, CdcEngine
     from file_standardization_etl_spark.cdc.events import (
         EventGenConfig,
         events_df,
@@ -349,7 +338,6 @@ def test_compact_tombstone_expiry_resolves_renamed_columns(spark, tmp_path):
     engine.table.compact(
         expire_tombstones_below_lsn=engine.applied_lsn() + 1,
         tombstone_column=names[FID_DELETED],
-        lsn_column=names[FID_LSN],
     )
     assert engine.table.read().filter(F.col("is_dead")).count() == 0
 
@@ -441,14 +429,12 @@ def test_fuzz_maintenance_interleaved_with_ingest(spark, tmp_path):
             if op == "compact":
                 eng.table.compact(
                     tombstone_column=names.get(FID_DELETED, "deleted"),
-                    lsn_column=names.get(FID_LSN, "last_lsn"),
                 )
             elif op == "expire":
                 wm = eng.applied_lsn() + 1
                 eng.table.compact(
                     expire_tombstones_below_lsn=wm,
                     tombstone_column=names.get(FID_DELETED, "deleted"),
-                    lsn_column=names.get(FID_LSN, "last_lsn"),
                     properties_update={"tombstones_expired_below_lsn": wm},
                 )
                 oracle_expire()
@@ -578,3 +564,116 @@ def test_dedup_correct_releases_persisted_frames(spark, tmp_path):
     rep = dedup_correct(engine, 4, str(tmp_path / "corrective"))
     assert rep["rows_in"] == 2
     assert spark.sparkContext._jsc.getPersistentRDDs().size() == baseline
+
+
+def test_order_column_rename_mid_stream_matches_oracle(spark, tmp_path):
+    """A ``rename_column last_lsn -> commit_lsn`` DDL mid-batch moves the
+    table's recorded order column with it. After the rename, out-of-order
+    arrival and redelivered (duplicate) events, a widened-whitelist
+    requeue (copy-on-write: every rescued LSN is at or below the
+    watermark, and some lose to newer state) and a tombstone-expiring
+    compact all guard LSNs through the renamed column. Live state,
+    tombstones, quarantine, the vocab aggregate and ``engine.changes()``
+    across the rename equal the dict oracle."""
+    import copy
+
+    from file_standardization_etl_spark.cdc.apply import FID_DELETED
+    from file_standardization_etl_spark.cdc.events import BAD_SOURCES, SOURCE_WHITELIST
+    from file_standardization_etl_spark.cdc.oracle import OracleState, validation_reason
+    from tests.test_vocab import maintained, recompute
+
+    widened = SOURCE_WHITELIST + [s for s in BAD_SOURCES if s]
+    events = generate_events(
+        EventGenConfig(
+            n_events=1600, n_docs=90, seed=9100, bad_source_frac=0.15, delete_frac=0.15,
+            shuffle_arrival=True, disorder_window=40,
+            schema_change_lsns=(500,),
+            schema_changes=(
+                {"action": "rename_column", "name": "last_lsn", "new_name": "commit_lsn"},
+            ),
+        )
+    )
+
+    def between(lo, hi):  # an LSN-coherent slice, arrival order kept
+        return [e for e in events if lo < e["lsn"] <= hi]
+
+    eng = CdcEngine(spark, str(tmp_path / "cdc"), n_buckets=4, maintain_vocab=True)
+    eng.init()
+    st = OracleState()
+    eng.apply_batch(events_df(spark, between(0, 400)), batch_id=0)
+    replay(between(0, 400), st)
+    v1 = eng.table.current_version()
+    live1 = copy.deepcopy(st.live_docs())
+
+    for bid, (lo, hi) in enumerate([(400, 1000), (400, 1000), (900, 1300)], start=1):
+        eng.apply_batch(events_df(spark, between(lo, hi)), batch_id=bid)
+        replay(between(lo, hi), st)
+    snap = eng.table.snapshot()
+    assert snap["order_column"] == "commit_lsn"
+    assert "last_lsn" not in eng.table.schema().names()
+
+    # requeue: rescued events apply only where their LSN beats the doc's
+    rescued = [
+        q for q in st.quarantine if validation_reason(q, tuple(widened)) is None
+    ]
+    stale = 0
+    for ev in sorted(rescued, key=lambda e: e["lsn"]):
+        doc = st.docs.get(ev["doc_id"])
+        if doc is not None and ev["lsn"] <= doc["last_lsn"]:
+            stale += 1
+            continue
+        st.docs[ev["doc_id"]] = {
+            "tokens": list(ev["tokens"]), "n_tok": ev["n_tok"],
+            "source": ev["source"], "last_lsn": ev["lsn"], "deleted": False,
+        }
+    st.quarantine = [q for q in st.quarantine if q not in rescued]
+    assert eng.requeue_quarantine(widened)["rescued"] == len(rescued)
+    assert 0 < stale < len(rescued)
+
+    # tombstone-expiring compact, the expiry read through the order column
+    wm = eng.applied_lsn() + 1
+    assert any(v["deleted"] for v in st.docs.values())
+    dead = {c.id: c.name for c in eng.table.schema().columns}[FID_DELETED]
+    eng.table.compact(
+        expire_tombstones_below_lsn=wm,
+        tombstone_column=dead,
+        properties_update={"tombstones_expired_below_lsn": wm},
+    )
+    st.docs = {k: v for k, v in st.docs.items() if not (v["deleted"] and v["last_lsn"] < wm)}
+
+    eng.apply_batch(events_df(spark, between(1300, 1600)), batch_id=4)
+    replay(between(1300, 1600), st)
+
+    def image(tokens, n_tok, source, lsn):
+        return (list(tokens or []), n_tok, source, lsn)
+
+    got = {
+        r["doc_id"]: image(r["tokens"], r["n_tok"], r["source"], r["commit_lsn"])
+        for r in eng.state(include_deleted=True).collect()
+    }
+    assert got == {
+        k: image(v["tokens"], v["n_tok"], v["source"], v["last_lsn"])
+        for k, v in st.docs.items()
+    }
+    assert {r["lsn"]: r["reason"] for r in eng.quarantine().collect()} == {
+        q["lsn"]: q["reason"] for q in st.quarantine
+    }
+    assert maintained(eng) == recompute(eng)
+
+    live2 = st.live_docs()
+    want = {("delete", d): v for d, v in live1.items() if d not in live2}
+    for d, v in live2.items():
+        if d not in live1:
+            want[("insert", d)] = v
+        elif v["last_lsn"] > live1[d]["last_lsn"]:
+            want[("update", d)] = v
+    feed = eng.changes(v1)
+    assert "commit_lsn" in feed.columns and "last_lsn" not in feed.columns
+    assert {
+        (r["change_op"], r["doc_id"]):
+            image(r["tokens"], r["n_tok"], r["source"], r["commit_lsn"])
+        for r in feed.collect()
+    } == {
+        key: image(v["tokens"], v["n_tok"], v["source"], v["last_lsn"])
+        for key, v in want.items()
+    }

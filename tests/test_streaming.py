@@ -247,7 +247,6 @@ def test_changefeed_follower_replicates_downstream(spark, tmp_path):
     follower = ChangeFeedFollower(
         engine.table,
         str(tmp_path / "cursor.json"),
-        lsn_column=names[5],      # FID_LSN
         deleted_column=names[6],  # FID_DELETED
     )
     assert follower.step(lambda *_: None) == 0  # idle poll: nothing new
@@ -318,7 +317,7 @@ def test_changefeed_per_commit_backfill_matches_state(spark, tmp_path):
     names = {c.id: c.name for c in engine.table.schema().columns}
     f = ChangeFeedFollower(
         engine.table, str(tmp_path / "c2.json"),
-        lsn_column=names[5], deleted_column=names[6],
+        deleted_column=names[6],
     )
     f.seek(0)
     replica: dict = {}
@@ -356,7 +355,7 @@ def test_changefeed_follower_ignores_orphan_snapshot(spark, tmp_path):
     engine.apply_batch(events_df(spark, events[:700]), batch_id=0)
     follower = ChangeFeedFollower(
         engine.table, str(tmp_path / "cursor.json"),
-        lsn_column="last_lsn", deleted_column="deleted",
+        deleted_column="deleted",
     )
     follower.position()  # pin the cursor at the post-batch-0 version
     engine.apply_batch(events_df(spark, events[700:]), batch_id=1)

@@ -375,26 +375,15 @@ def main() -> int:
             [("k", "string"), ("v", "int"), ("last_lsn", "bigint")],
             "k",
             n_buckets=8,
+            order_column="last_lsn",
         )
         t.overwrite(
             spark.createDataFrame(
                 [(f"k{i}", i, 1) for i in range(64)], "k string, v int, last_lsn long"
             )
         )
-
-        def lww(old, new):
-            take = new["lsn"].isNotNull() & (
-                old["last_lsn"].isNull() | (new["lsn"] > old["last_lsn"])
-            )
-            return {
-                "k": F.coalesce(old["k"], new["k"]),
-                "v": F.when(take, new["v"]).otherwise(old["v"]),
-                "last_lsn": F.when(take, new["lsn"]).otherwise(old["last_lsn"]),
-            }
-
         t.merge(
-            spark.createDataFrame([("k1", 100, 2)], "k string, v int, lsn long"),
-            lww,
+            spark.createDataFrame([("k1", 100, 2)], "k string, v int, last_lsn long"),
             mode="mor",
             delta_rows=1,
         )
