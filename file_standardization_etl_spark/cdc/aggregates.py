@@ -65,18 +65,13 @@ VOCAB_PROPERTY = "vocab"
 class TokenVocab:
     """The token vocabulary of one engine's target table."""
 
-    def __init__(
-        self,
-        spark: SparkSession,
-        target: LakeTable,
-        fids: tuple[int, int, int, int],
-    ):
+    def __init__(self, spark: SparkSession, target: LakeTable, tokens_fid: int):
         self.spark = spark
         self.target = target
-        # target-table field ids for (key, tokens, last_lsn, deleted) —
-        # id-based so a rename_column mid-stream never breaks the old-side
-        # read, same binding rule as the merge's wire projection
-        self._fid_doc, self._fid_tokens, self._fid_lsn, self._fid_deleted = fids
+        # the old-side read binds the key, order and tombstone columns by
+        # the snapshot's recorded roles and the token column by field id,
+        # so a rename_column mid-stream never misaligns it
+        self._tokens_fid = tokens_fid
 
     def next_dir(self, snap: dict) -> str:
         """A fresh vocab dir for the commit after ``snap``."""
@@ -137,8 +132,7 @@ class TokenVocab:
                 F.lit(None).cast("array<bigint>").alias("__old_toks"),
             )
         else:
-            names = {c.id: c.name for c in TableSchema.from_json(snap["schema"]).columns}
-            key = names[self._fid_doc]
+            tokens = TableSchema.from_json(snap["schema"]).by_id()[self._tokens_fid].name
             # unknown size is NOT small: with no row or byte hint the
             # token-array-carrying `old` frame must take the shuffled
             # path — defaulting est_bytes to 0 here would broadcast it
@@ -157,12 +151,12 @@ class TokenVocab:
             old = (
                 self.target.read(buckets=affected_buckets, as_of_version=snap["version"])
                 .select(
-                    F.col(key).alias("doc_id"),
-                    F.col(names[self._fid_lsn]).alias("__old_lsn"),
-                    F.coalesce(F.col(names[self._fid_deleted]), F.lit(False)).alias(
+                    F.col(snap["key_column"]).alias("doc_id"),
+                    F.col(snap["order_column"]).alias("__old_lsn"),
+                    F.coalesce(F.col(snap["tombstone_column"]), F.lit(False)).alias(
                         "__old_del"
                     ),
-                    F.col(names[self._fid_tokens]).alias("__old_toks"),
+                    F.col(tokens).alias("__old_toks"),
                 )
                 .join(F.broadcast(keys) if small else keys, "doc_id")
             )

@@ -174,9 +174,7 @@ class CdcEngine:
         self.table = LakeTable(spark, os.path.join(self.table_path, "target"))
         self._vocab = None
         if maintain_vocab:
-            self._vocab = TokenVocab(
-                spark, self.table, fids=(FID_DOC, FID_TOKENS, FID_LSN, FID_DELETED)
-            )
+            self._vocab = TokenVocab(spark, self.table, FID_TOKENS)
         # one pool per engine: quarantine writes + lineage scans run as
         # concurrent Spark jobs overlapping the LWW/merge critical path
         self._pool = ThreadPoolExecutor(max_workers=4)
@@ -201,6 +199,7 @@ class CdcEngine:
                 n_buckets=self.n_buckets,
                 properties=props,
                 order_column="last_lsn",
+                tombstone_column="deleted",
             )
         os.makedirs(self.manifest_dir, exist_ok=True)
         self._recover_archive_swap()
@@ -220,18 +219,21 @@ class CdcEngine:
         engine. Its recorded ``order_column`` must be the ``FID_LSN``
         column: the merge guards LSNs through it, and a target without one
         would merge as a plain upsert where stale and out-of-order events
-        win. And ``maintain_vocab`` must match its ``vocab`` property
-        (carried from creation): a vocab-blind commit changes tokens the
-        vocab never sees, and a vocab engine on a table that never kept
-        one would count only from here on. Every such desync is
-        permanent, so nothing may commit."""
-        lsn = TableSchema.from_json(snap["schema"]).by_id()[FID_LSN].name
-        if snap.get("order_column") != lsn:
-            raise ValueError(
-                f"this table records order column {snap.get('order_column')!r}, "
-                f"not {lsn!r}: its merge would not guard LSNs; create the "
-                "target through CdcEngine.init"
-            )
+        win. Its ``tombstone_column`` must be the ``FID_DELETED`` column,
+        through which readers and the vocab see deletes. And
+        ``maintain_vocab`` must match its ``vocab`` property (carried from
+        creation): a vocab-blind commit changes tokens the vocab never
+        sees, and a vocab engine on a table that never kept one would
+        count only from here on. Every such desync is permanent, so
+        nothing may commit."""
+        by_id = TableSchema.from_json(snap["schema"]).by_id()
+        for role, fid in (("order_column", FID_LSN), ("tombstone_column", FID_DELETED)):
+            if snap.get(role) != by_id[fid].name:
+                raise ValueError(
+                    f"this table records {role.replace('_', ' ')} "
+                    f"{snap.get(role)!r}, not {by_id[fid].name!r}; create the "
+                    "target through CdcEngine.init"
+                )
         recorded = VOCAB_PROPERTY in snap["properties"]
         if recorded != (self._vocab is not None):
             raise ValueError(
@@ -372,15 +374,6 @@ class CdcEngine:
         invalid = snap_wire.filter(expr_r.isNotNull())
 
         ck = as_of_lsn  # the chunk key: the snapshot's one "chunk"
-        n = self._names()
-        target = valid.select(
-            F.col("doc_id").alias(n[FID_DOC]),
-            F.col("tokens").alias(n[FID_TOKENS]),
-            F.col("n_tok").alias(n[FID_NTOK]),
-            F.col("source").alias(n[FID_SOURCE]),
-            F.col("lsn").alias(n[FID_LSN]),
-            F.lit(False).alias(n[FID_DELETED]),
-        )
         # the quarantine finalize and the vocab stage overlap the
         # overwrite; its pre_commit settles both
         q_future = self._pool.submit(self._finalize_quarantine, invalid, batch_id, ck)
@@ -396,7 +389,7 @@ class CdcEngine:
                     new_props[VOCAB_PROPERTY],
                 )
             self.table.overwrite(
-                target,
+                self._to_table(valid, snap),
                 expected_version=snap["version"],
                 properties_update=new_props,
                 pre_commit=lambda: self._settle(q_future, stage_future),
@@ -440,29 +433,42 @@ class CdcEngine:
         self._write_manifest(metrics)
         return metrics
 
-    # ---------- field-id → current-name resolution ----------
+    # ---------- field-id binding ----------
 
     def _names(self) -> dict[int, str]:
         return {c.id: c.name for c in self.table.schema().columns}
 
+    @staticmethod
+    def _to_table(wire: DataFrame, snap: dict) -> DataFrame:
+        """The wire events ``wire`` as rows of ``snap``'s table, each
+        column bound to its wire field by field id, in table order: a
+        delete is a tombstone that keeps its LSN and carries no payload."""
+        is_del = F.col("op") == "delete"
+        fields = {
+            FID_DOC: F.col("doc_id"),
+            FID_TOKENS: F.when(is_del, F.lit(None)).otherwise(F.col("tokens")),
+            FID_NTOK: F.when(is_del, F.lit(None)).otherwise(F.col("n_tok")),
+            FID_SOURCE: F.when(is_del, F.lit(None)).otherwise(F.col("source")),
+            FID_LSN: F.col("lsn"),
+            FID_DELETED: is_del,
+        }
+        cols = TableSchema.from_json(snap["schema"]).columns
+        return wire.select(*[fields[c.id].alias(c.name) for c in cols if c.id in fields])
+
     # ---------- state readers ----------
 
     def state(self, include_deleted: bool = False) -> DataFrame:
-        n = self._names()
-        df = self.table.read()
+        snap = self.table.snapshot()
+        df = self.table.read(as_of_version=snap["version"])
         if not include_deleted:
-            df = df.filter(~F.coalesce(F.col(n[FID_DELETED]), F.lit(False)))
+            df = df.filter(~F.coalesce(F.col(snap["tombstone_column"]), F.lit(False)))
         return df
 
     def changes(self, v_from: int, v_to: int | None = None) -> DataFrame:
         """Row-level change feed between two target-table snapshots
         (see :meth:`LakeTable.changes`): the engine emits a changelog a
-        downstream CDC consumer could itself tail. The tombstone column
-        is bound by field id against the v_to snapshot, so a rename
-        between the versions cannot misalign the tombstone check."""
-        snap_to = self.table.snapshot(v_to)
-        deleted = TableSchema.from_json(snap_to["schema"]).by_id()[FID_DELETED].name
-        return self.table.changes(v_from, v_to, deleted_column=deleted)
+        downstream CDC consumer could itself tail."""
+        return self.table.changes(v_from, v_to)
 
     def _quarantine_schema(self) -> T.StructType:
         # Format note: round 3 changed 'chunk' from a positional int32 to
@@ -726,11 +732,12 @@ class CdcEngine:
 
         Events above the watermark are never rescued: they belong to a
         chunk whose quarantine settled but whose commit failed, and its
-        redelivery quarantines them again. Events below the
-        ``tombstones_expired_below_lsn`` fence (recorded by
-        jobs/maintain.py --expire-tombstones) are never rescued either:
-        the tombstones that would veto them are gone, so applying them
-        could resurrect deleted docs — they stay quarantined instead.
+        redelivery quarantines them again. Events below the table's
+        ``tombstones_expired_below`` fence (recorded by every
+        :meth:`LakeTable.compact` that expires tombstones) are never
+        rescued either: the tombstones that would veto them are gone, so
+        applying them could resurrect deleted docs — they stay
+        quarantined instead.
 
         Exactly-once across crashes, in commit order:
         1. the chunk's merge commits data (+ unchanged watermark
@@ -756,13 +763,14 @@ class CdcEngine:
         self._recover_archive_swap()
         wl = list(whitelist) if whitelist is not None else list(self.whitelist)
         q = self.quarantine()
-        props = self.table.properties()
+        snap = self.table.snapshot()
+        props = snap["properties"]
         applied = int(props.get("max_applied_lsn", 0))
         # tombstone-expiry fence: expiry physically dropped tombstones
         # below this LSN, so a rescue below it could resurrect a deleted
         # doc (the information needed to refuse it is gone). Such events
         # stay quarantined.
-        fence = int(props.get("tombstones_expired_below_lsn", 0))
+        fence = int(snap.get("tombstones_expired_below", 0))
         expr_r = validation_reason_expr(
             F.col("op"), F.col("tokens"), F.col("n_tok"), F.col("source"), wl
         )
@@ -873,24 +881,12 @@ class CdcEngine:
         """Merge the wire-column winners ``delta`` in one commit that
         also sets the watermark and, when given, points the table's
         ``vocab`` property at the dir ``pre_commit`` settles. ``snap`` is
-        the snapshot the chunk was planned against; the wire columns
-        bind to its table columns by field id, in table order."""
-        is_del = F.col("op") == "delete"
-        wire = {
-            FID_DOC: F.col("doc_id"),
-            FID_TOKENS: F.when(is_del, F.lit(None)).otherwise(F.col("tokens")),
-            FID_NTOK: F.when(is_del, F.lit(None)).otherwise(F.col("n_tok")),
-            FID_SOURCE: F.when(is_del, F.lit(None)).otherwise(F.col("source")),
-            FID_LSN: F.col("lsn"),
-            FID_DELETED: is_del,
-        }
-        cols = TableSchema.from_json(snap["schema"]).columns
-        delta = delta.select(*[wire[c.id].alias(c.name) for c in cols if c.id in wire])
+        the snapshot the chunk was planned against (:meth:`_to_table`)."""
         props = {"max_applied_lsn": watermark, "last_batch_id": batch_id}
         if vocab is not None:
             props[VOCAB_PROPERTY] = vocab
         self.table.merge(
-            delta,
+            self._to_table(delta, snap),
             properties_update=props,
             delta_rows=delta_rows,
             affected_buckets=affected_buckets,
@@ -970,7 +966,12 @@ class CdcEngine:
           size, skew stats, delete count and the affected-bucket set.
         - pass 2 routed write: ONE scan left-joins the broadcast winner
           keys and writes partitionBy(route): invalid → route=q, valid
-          winner → route=d, valid loser dropped.
+          winner → route=d, valid loser dropped. Its Observation counts
+          each route; only when an event was delivered twice within the
+          chunk (more route=d rows than winners, or more route=q rows
+          than distinct LSNs there) is that slice's read deduplicated, so
+          the merge takes one row per key and the quarantine one per
+          event, as the oracle does.
         - async quarantine finalize: the small route=q slice through
           :meth:`_finalize_quarantine` into ``(batch_id, ck)``.
         - sync merge: reads the file-backed route=d delta (no persist, no
@@ -1030,20 +1031,25 @@ class CdcEngine:
                 )
                 .filter(F.col("route").isNotNull())
             )
-            staged(routed, "route").write.mode("overwrite").partitionBy(
-                "route"
-            ).parquet(staging)
+            # the write's own counts tell whether an event delivered twice
+            # was staged twice (the LSN set is the small route=q slice's)
+            route = F.col("route")
+            obs = Observation(f"route-{batch_id}-{ck}")
+            staged(routed, "route").observe(
+                obs,
+                F.count(F.when(route == "d", 1)).alias("d"),
+                F.count(F.when(route == "q", 1)).alias("q"),
+                F.size(F.collect_set(F.when(route == "q", F.col("lsn")))).alias("q_lsns"),
+            ).write.mode("overwrite").partitionBy("route").parquet(staging)
+            staged_n = obs.get
             t = self._lap("routed_write", t)
 
             qsrc = os.path.join(staging, "route=q")
             if os.path.isdir(qsrc):  # no invalid rows staged otherwise
-                q_future = self._pool.submit(
-                    lambda: self._finalize_quarantine(
-                        self.spark.read.schema(STAGED_SCHEMA).parquet(qsrc),
-                        batch_id,
-                        ck,
-                    )
-                )
+                rows = self.spark.read.schema(STAGED_SCHEMA).parquet(qsrc)
+                if staged_n["q"] > staged_n["q_lsns"]:  # an event staged twice
+                    rows = rows.dropDuplicates(["lsn"])
+                q_future = self._pool.submit(self._finalize_quarantine, rows, batch_id, ck)
 
             # Existence-gated (driver-local staging), NOT a bare except:
             # an unexpected read failure must propagate — substituting an
@@ -1051,19 +1057,15 @@ class CdcEngine:
             # permanently drop every valid row in the chunk with no retry
             # possible. An all-quarantined chunk still commits (properties
             # only), so the watermark advances past it.
-            dedup_cols = ["doc_id", "lsn", "op", "tokens", "n_tok", "source"]
             ddir = os.path.join(staging, "route=d")
             delta_bytes = None
             if os.path.isdir(ddir):
-                delta = self.spark.read.schema(STAGED_SCHEMA).parquet(ddir).select(
-                    *dedup_cols
-                )
+                delta = self.spark.read.schema(STAGED_SCHEMA).parquet(ddir)
+                if staged_n["d"] > n_delta:  # an event staged twice
+                    delta = delta.dropDuplicates(["doc_id"])
                 delta_bytes = LakeTable._dir_bytes(ddir)
             else:
-                delta = self.spark.createDataFrame(
-                    [],
-                    T.StructType([f for f in EVENT_SCHEMA.fields if f.name in dedup_cols]),
-                )
+                delta = self.spark.createDataFrame([], STAGED_SCHEMA)
 
             if self._vocab is not None and n_delta > 0:
                 # the next vocab, planned against `snap` (CoW writes new

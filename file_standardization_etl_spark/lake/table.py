@@ -23,6 +23,15 @@ Design properties (the ones Iceberg would give us, and why they matter at
   ``|affected buckets| / n_buckets`` of the table, not the whole table.
   On a real cluster this layout would be registered as a bucketed catalog
   table so the MERGE join needs no shuffle on the table side.
+- **Recorded column roles**: a snapshot records three roles, and
+  ``rename_column`` moves each with its column: ``key_column`` (one row
+  per key, hashed to its bucket), ``order_column`` (decides which row
+  wins a key) and the boolean ``tombstone_column`` (flags a tombstone, a
+  dead key kept for its order value). Readers and maintenance take them
+  from the snapshot, never from a caller: ``changes`` reports a key that
+  turns into a tombstone as a delete, ``compact`` records its tombstone
+  expiry fence ``tombstones_expired_below`` in the same commit, and DML
+  refuses a table with a tombstone column.
 - **Keyed upsert by a recorded order column**: ``merge`` takes rows
   named by table columns, at most one per key. A delta row replaces its
   key's stored row when the key is absent, the table records no
@@ -144,6 +153,9 @@ def bucket_expr(key: Column, n_buckets: int) -> Column:
 # apply_schema_change — the collision would corrupt or wedge reads, not
 # error cleanly.
 LAYOUT_RESERVED = frozenset({"_bucket", "_seq", "_tag"})
+
+# the column roles a snapshot records (module docstring)
+ROLES = ("key_column", "order_column", "tombstone_column")
 
 # the MOR delta layout columns as _write_delta writes them (bucket_expr
 # yields int; _seq is the commit version), declared by the schema-bound
@@ -403,10 +415,12 @@ class LakeTable:
         n_buckets: int = 16,
         properties: dict | None = None,
         order_column: str | None = None,
+        tombstone_column: str | None = None,
     ) -> "LakeTable":
-        """A new empty table. ``order_column`` names the column whose
-        greater value wins a key in :meth:`merge`; without one the last
-        write wins."""
+        """A new empty table recording its column roles (module
+        docstring); without an ``order_column`` the last write wins. A
+        role naming no declared column, or a tombstone column that is not
+        ``boolean``, raises ``ValueError`` before anything is written."""
         # same invariant apply_schema_change enforces for DDL: a user
         # column named after a layout column would be silently overwritten
         # by the bucketed writer ('_bucket') or make every MOR read
@@ -417,6 +431,12 @@ class LakeTable:
             raise ValueError(
                 f"column names {sorted(bad)} are reserved layout columns"
             )
+        types = dict(columns)
+        roles = dict(zip(ROLES, (key_column, order_column, tombstone_column)))
+        if any(n is not None and n not in types for n in roles.values()) or (
+            types.get(tombstone_column, "boolean") != "boolean"
+        ):
+            raise ValueError(f"roles {roles} need declared columns, a boolean tombstone")
         t = cls(spark, path)
         os.makedirs(t._meta_dir, exist_ok=True)
         if t.exists():
@@ -427,8 +447,7 @@ class LakeTable:
         )
         snap = {
             "version": 0,
-            "key_column": key_column,
-            "order_column": order_column,
+            **roles,
             "n_buckets": n_buckets,
             "schema": schema.to_json(),
             "schema_versions": {"1": schema.to_json()},
@@ -883,11 +902,11 @@ class LakeTable:
         pre_commit=None,
         n_buckets: int | None = None,
     ) -> None:
-        """Replace the whole table content (used for seeding/compaction).
+        """Replace the whole table content (seeding, DML, rebucket).
 
         ``expected_version``: the snapshot version ``df`` was derived
-        from. Callers that compute ``df`` from ``self.read()`` (compact,
-        delete_where, update_where, rebucket) MUST pass the version they
+        from. Callers that compute ``df`` from ``self.read()``
+        (delete_where, update_where, rebucket) MUST pass the version they
         read at — otherwise a concurrent commit landing between their
         read and this overwrite would be silently erased (this method's
         own snapshot() would see the newer version, pass the optimistic
@@ -1134,16 +1153,9 @@ class LakeTable:
             properties_update=properties_update,
         )
 
-    # ---------- DML (the reference's raw-JDBC UPDATE/DELETE side-channel,
-    # S7, as snapshot-atomic table ops — `spark.sql("UPDATE/DELETE")` on
-    # Iceberg would be the cluster equivalent) ----------
+    # ---------- change feed ----------
 
-    def changes(
-        self,
-        v_from: int,
-        v_to: int | None = None,
-        deleted_column: str | None = None,
-    ) -> DataFrame:
+    def changes(self, v_from: int, v_to: int | None = None) -> DataFrame:
         """Row-level change feed between two snapshots — the lake table
         EMITS a changelog, not just consumes one (the Iceberg
         changelog-read / Delta CDF shape): one row per key whose logical
@@ -1153,8 +1165,9 @@ class LakeTable:
         the v_to schema by column id, so mid-stream renames/widens never
         misalign the two sides).
 
-        ``deleted_column``: rows flagged there are logically dead
-        (tombstones) on either side. On a table that records an
+        Rows flagged in the ``tombstone_column`` ``v_to`` records are
+        logically dead on either side, so a key whose row turns into a
+        tombstone is a delete. On a table that records an
         ``order_column`` an update is emitted only if the key's order
         value advanced — exactly when a merge replaced the row; without
         one, updates fall back to any-column value inequality.
@@ -1177,6 +1190,7 @@ class LakeTable:
             raise ValueError(f"v_from {v_from} > v_to {v_to}")
         sch_to = TableSchema.from_json(snap_to["schema"])
         key, order = snap_to["key_column"], snap_to.get("order_column")
+        tomb = snap_to.get("tombstone_column")
 
         buckets = None
         if snap_from["n_buckets"] == snap_to["n_buckets"]:
@@ -1204,9 +1218,7 @@ class LakeTable:
         old = old.select(*self._by_id(sch_to, TableSchema.from_json(snap_from["schema"])))
 
         def live(side: DataFrame) -> Column:
-            if deleted_column and deleted_column in side.columns:
-                return ~F.coalesce(side[deleted_column], F.lit(False))
-            return F.lit(True)
+            return F.lit(True) if tomb is None else ~F.coalesce(side[tomb], F.lit(False))
 
         data_cols = [c.name for c in sch_to.columns if c.name != key]
         o = old.select(
@@ -1240,26 +1252,45 @@ class LakeTable:
             .select("change_op", key, *[F.col(f"__i.{c}").alias(c) for c in data_cols])
         )
 
+    # ---------- DML (the reference's raw-JDBC UPDATE/DELETE side-channel,
+    # S7, as snapshot-atomic table ops — `spark.sql("UPDATE/DELETE")` on
+    # Iceberg would be the cluster equivalent) ----------
+
+    def _dml_snapshot(self) -> dict:
+        """The snapshot a DML op reads at, refusing a table that records a
+        tombstone column: a physical delete leaves no tombstone for
+        readers and expiry, and derived state (the CDC vocab) drifts."""
+        snap = self.snapshot()
+        if snap.get("tombstone_column") is not None:
+            raise ValueError(
+                f"this table records tombstone column {snap['tombstone_column']!r}: "
+                "delete or change its rows with corrective change events "
+                "through CdcEngine.apply_batch, not DML"
+            )
+        return snap
+
     def delete_where(self, cond: Column) -> None:
         """Delete rows matching ``cond`` — one read, one bucketed rewrite,
         one atomic snapshot swap. A general predicate can touch any
         bucket, so this is a full rewrite by design; key-scoped deletes
         should go through the CDC delete op instead (bucket-pruned,
-        tombstoned, LSN-guarded)."""
-        v = self.current_version()
+        tombstoned, LSN-guarded). Refused on a table with a tombstone
+        column (:meth:`_dml_snapshot`)."""
+        v = self._dml_snapshot()["version"]
         self.overwrite(
             self.read().filter(~F.coalesce(cond, F.lit(False))), expected_version=v
         )
 
     def update_where(self, cond: Column, assignments: dict[str, Column]) -> None:
         """UPDATE ... SET assignments WHERE cond, snapshot-atomic. Same
-        full-rewrite caveat as :meth:`delete_where`; the CDC path is the
-        scalable route for keyed updates."""
-        names = self.schema().names()
+        full-rewrite caveat and refusal as :meth:`delete_where`; the CDC
+        path is the scalable route for keyed updates."""
+        snap = self._dml_snapshot()
+        names = TableSchema.from_json(snap["schema"]).names()
         unknown = set(assignments) - set(names)
         if unknown:
             raise ValueError(f"unknown columns in assignments: {sorted(unknown)}")
-        v = self.current_version()
+        v = snap["version"]
         df = self.read()
         c = F.coalesce(cond, F.lit(False))
         updated = df.select(
@@ -1322,7 +1353,7 @@ class LakeTable:
                 SchemaColumn(c.id, change["new_name"] if c.name == change["name"] else c.name, c.type)
                 for c in cur.columns
             ]
-            for role in ("key_column", "order_column"):
+            for role in ROLES:
                 if snap.get(role) == change["name"]:
                     snap[role] = change["new_name"]
         elif action == "widen_type":
@@ -1482,38 +1513,37 @@ class LakeTable:
             "manifests_deleted": manifests_deleted,
         }
 
-    def compact(
-        self,
-        expire_tombstones_below_lsn: int | None = None,
-        tombstone_column: str = "deleted",
-        properties_update: dict | None = None,
-    ) -> None:
-        """Rewrite all buckets under the current schema version; optionally
-        drop tombstones whose order value (the recorded ``order_column``)
-        is below the global applied watermark (safe: no event with a
-        lower LSN can ever arrive again).
+    def compact(self, expire_tombstones_below_lsn: int | None = None) -> None:
+        """Rewrite all buckets under the current schema version.
 
-        ``tombstone_column``: resolve by FIELD ID at the caller (the CDC
-        engine / jobs/maintain.py do) — a rename_column DDL moves the
-        name, and a silently-skipped expiry would leave an operator
-        believing tombstones are being dropped. A missing tombstone or
-        order column raises instead of skipping.
+        ``expire_tombstones_below_lsn`` also drops every tombstone (a row
+        flagged in the recorded ``tombstone_column``) whose value in the
+        recorded ``order_column`` is below it: safe once no change with a
+        lower order value can arrive again (the CDC engine passes its
+        applied watermark + 1). The same commit records the fence
+        ``tombstones_expired_below``, the greatest bound any expiry used.
+        A change below the fence admitted later could resurrect a key
+        whose tombstone is gone, so the CDC engine's requeue refuses
+        those. A table recording no tombstone or order column raises.
 
-        Concurrency: derives from the version read and passes it to
-        :meth:`overwrite`, so a concurrent ingester commit surfaces as
-        CommitConflict rather than being silently erased."""
+        Concurrency: commits against the version it read at, so a
+        concurrent ingester commit surfaces as CommitConflict rather than
+        being silently erased."""
         snap = self.snapshot()
-        v, order = snap["version"], snap.get("order_column")
         df = self.read()
         if expire_tombstones_below_lsn is not None:
-            if order is None or tombstone_column not in df.columns:
+            tomb, order = snap.get("tombstone_column"), snap.get("order_column")
+            if tomb is None or order is None:
                 raise ValueError(
-                    f"tombstone expiry needs the column {tombstone_column!r} "
-                    "and a recorded order column — resolve names by field id "
-                    "after renames"
+                    "tombstone expiry needs a recorded tombstone column and order "
+                    f"column; this table records {tomb!r} and {order!r}"
                 )
             df = df.filter(
-                (~F.col(tombstone_column))
+                ~F.coalesce(F.col(tomb), F.lit(False))
                 | (F.col(order) >= F.lit(expire_tombstones_below_lsn))
             )
-        self.overwrite(df, expected_version=v, properties_update=properties_update)
+            snap["tombstones_expired_below"] = max(
+                expire_tombstones_below_lsn, snap.get("tombstones_expired_below", 0)
+            )
+        names = TableSchema.from_json(snap["schema"]).names()
+        self._publish(snap, self._write_buckets(df.select(*names), snap), replace_all=True)

@@ -39,15 +39,9 @@ from ..lake.table import LakeTable
 
 
 class ChangeFeedFollower:
-    def __init__(
-        self,
-        table: LakeTable,
-        cursor_path: str,
-        deleted_column: str | None = None,
-    ):
+    def __init__(self, table: LakeTable, cursor_path: str):
         self.table = table
         self.cursor_path = os.path.abspath(cursor_path)
-        self.deleted_column = deleted_column
 
     # ---------- cursor ----------
 
@@ -104,7 +98,7 @@ class ChangeFeedFollower:
             )
             windows = list(zip([cur] + versions[:-1], versions))
         for v_from, v_to in windows:
-            df = self.table.changes(v_from, v_to, deleted_column=self.deleted_column)
+            df = self.table.changes(v_from, v_to)
             consume(df, v_from, v_to)
             self._write(v_to)
         return len(windows)
@@ -112,6 +106,4 @@ class ChangeFeedFollower:
     def read_pending(self) -> DataFrame:
         """The un-consumed diff as a DataFrame without advancing the
         cursor (peek)."""
-        return self.table.changes(
-            self.position(), None, deleted_column=self.deleted_column
-        )
+        return self.table.changes(self.position())

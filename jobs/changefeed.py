@@ -64,15 +64,7 @@ def main():
             ChangeFeedFollower,
         )
 
-        from file_standardization_etl_spark.cdc.apply import FID_DELETED
-
-        # resolve the engine's tombstone column by stable field id
-        # (renames keep the id); the table's recorded order column gates
-        # updates
-        names = {c.id: c.name for c in engine.table.schema().columns}
-        follower = ChangeFeedFollower(
-            engine.table, args.cursor, deleted_column=names.get(FID_DELETED)
-        )
+        follower = ChangeFeedFollower(engine.table, args.cursor)
         n = follower.step(export)
         print(f"windows exported: {n}")
     else:

@@ -146,7 +146,7 @@ def main():
 
     report: dict = {"table": args.table_dir, "version_before": engine.table.current_version()}
     # requeue runs FIRST: --compact --expire-tombstones records a
-    # tombstones_expired_below_lsn fence at applied+1, and every
+    # tombstones_expired_below fence at applied+1, and every
     # quarantined event's lsn is <= applied — a requeue ordered after
     # that expiry would rescue 0 rows with no warning (the fence filter
     # refuses everything). Requeue-then-expire gives both ops their
@@ -160,21 +160,7 @@ def main():
         report["rebucketed_to"] = args.rebucket
     if args.compact:
         wm = engine.applied_lsn() + 1 if args.expire_tombstones else None
-        # rename-proof: resolve the tombstone column by stable field id
-        # (a rename_column DDL moves the name, never the id); the LSN is
-        # the table's recorded order column
-        from file_standardization_etl_spark.cdc.apply import FID_DELETED
-
-        names = {c.id: c.name for c in engine.table.schema().columns}
-        engine.table.compact(
-            expire_tombstones_below_lsn=wm,
-            tombstone_column=names.get(FID_DELETED, "deleted"),
-            # record the expiry fence: requeue_quarantine refuses to
-            # rescue events below it (their vetoing tombstones are gone)
-            properties_update=(
-                {"tombstones_expired_below_lsn": wm} if wm is not None else None
-            ),
-        )
+        engine.table.compact(expire_tombstones_below_lsn=wm)
         report["compacted"] = True
         report["tombstones_expired_below"] = wm
     if args.compact_quarantine:

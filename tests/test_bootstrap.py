@@ -230,10 +230,10 @@ WIDE_EVENT_DDL = (
 
 def test_wider_input_types_are_written_as_the_recorded_types(spark, tmp_path):
     """A snapshot and a WAL carrying wider types than the table records,
-    and an ``update_where`` assigning a bigint: every write lands the
-    types its schema version records (the types the schema-bound reads
-    declare), so later reads, MOR merges, the state, the vocab and the
-    quarantine keep working and equal the oracle."""
+    and an ``overwrite`` of the state with ``n_tok`` cast to bigint: every
+    write lands the types its schema version records (the types the
+    schema-bound reads declare), so later reads, MOR merges, the state,
+    the vocab and the quarantine keep working and equal the oracle."""
     from pyspark.sql import functions as F
 
     from tests.test_vocab import maintained, recompute
@@ -252,11 +252,12 @@ def test_wider_input_types_are_written_as_the_recorded_types(spark, tmp_path):
     m = eng.bootstrap(spark.createDataFrame(rows + [bad], WIDE_SNAP_DDL), as_of_lsn=L)
     assert m.rows_quarantined == 1 and m.rows_valid == len(rows)
 
-    # a bigint assignment of the stored value: the state stays the
+    # the stored values rewritten as bigint: the state stays the
     # oracle's, the rewrite's input type does not
-    doc, n_tok = rows[0][0], rows[0][2]
-    eng.table.update_where(
-        F.col("doc_id") == doc, {"n_tok": F.lit(n_tok).cast("bigint")}
+    v = eng.table.current_version()
+    eng.table.overwrite(
+        eng.table.read().withColumn("n_tok", F.col("n_tok").cast("bigint")),
+        expected_version=v,
     )
 
     def wide(evs):

@@ -29,6 +29,31 @@ def test_create_read_empty(spark, tmp_table_dir):
     assert t.schema().names() == ["doc_id", "v", "last_lsn", "deleted"]
 
 
+def test_create_refuses_roles_that_name_no_column(spark, tmp_path):
+    """Each recorded role must name a declared column, and the tombstone
+    column must be boolean; otherwise create raises before writing
+    anything."""
+    bad = [
+        {"key_column": "kk"},
+        {"key_column": "doc_id", "order_column": "nope"},
+        {"key_column": "doc_id", "tombstone_column": "nope"},
+        {"key_column": "doc_id", "tombstone_column": "v"},  # int
+    ]
+    for i, roles in enumerate(bad):
+        path = tmp_path / f"t{i}"
+        with pytest.raises(ValueError):
+            LakeTable.create(spark, str(path), COLS, **roles)
+        assert not path.exists()
+    t = LakeTable.create(
+        spark, str(tmp_path / "ok"), COLS, key_column="doc_id",
+        order_column="last_lsn", tombstone_column="deleted",
+    )
+    snap = t.snapshot()
+    assert [snap[r] for r in ("key_column", "order_column", "tombstone_column")] == [
+        "doc_id", "last_lsn", "deleted"
+    ]
+
+
 def test_overwrite_and_read(spark, tmp_table_dir):
     t = make(spark, tmp_table_dir)
     seed(spark, t, [(f"d{i}", i, 1, False) for i in range(100)])

@@ -310,18 +310,13 @@ def test_compact_raises_commit_conflict_on_concurrent_commit(spark, tmp_path, mo
 
 
 def test_compact_tombstone_expiry_resolves_renamed_columns(spark, tmp_path):
-    """Tombstone expiry after a rename_column DDL: the caller resolves the
-    tombstone column by field id (the LSN is the table's recorded order
-    column); a name-bound default must raise loudly (not silently skip)
-    when the name moved."""
+    """Tombstone expiry after a rename_column DDL: the table's recorded
+    tombstone column moves with the rename (the LSN is its recorded order
+    column), so expiry takes no name from the caller; a table that
+    records no tombstone column must raise loudly (not silently skip)."""
     import pytest as _pytest
 
-    from file_standardization_etl_spark.cdc.apply import FID_DELETED, CdcEngine
-    from file_standardization_etl_spark.cdc.events import (
-        EventGenConfig,
-        events_df,
-        generate_events,
-    )
+    from file_standardization_etl_spark.lake.table import LakeTable
 
     cfg = EventGenConfig(n_events=800, n_docs=60, seed=77, delete_frac=0.3)
     engine = CdcEngine(spark, str(tmp_path / "cdc"), n_buckets=4)
@@ -330,16 +325,18 @@ def test_compact_tombstone_expiry_resolves_renamed_columns(spark, tmp_path):
     engine.table.apply_schema_change(
         {"action": "rename_column", "name": "deleted", "new_name": "is_dead"}
     )
-    with _pytest.raises(ValueError, match="deleted"):
-        engine.table.compact(expire_tombstones_below_lsn=engine.applied_lsn() + 1)
-    names = {c.id: c.name for c in engine.table.schema().columns}
-    tomb = engine.table.read().filter(F.col("is_dead")).count()
-    assert tomb > 0
-    engine.table.compact(
-        expire_tombstones_below_lsn=engine.applied_lsn() + 1,
-        tombstone_column=names[FID_DELETED],
-    )
+    assert engine.table.snapshot()["tombstone_column"] == "is_dead"
+    assert engine.table.read().filter(F.col("is_dead")).count() > 0
+    engine.table.compact(expire_tombstones_below_lsn=engine.applied_lsn() + 1)
     assert engine.table.read().filter(F.col("is_dead")).count() == 0
+
+    plain = LakeTable.create(
+        spark, str(tmp_path / "plain"),
+        [("k", "string"), ("dead", "boolean"), ("lsn", "bigint")],
+        key_column="k", order_column="lsn",
+    )
+    with _pytest.raises(ValueError, match="tombstone"):
+        plain.compact(expire_tombstones_below_lsn=1)
 
 
 def test_fuzz_maintenance_interleaved_with_ingest(spark, tmp_path):
@@ -425,18 +422,10 @@ def test_fuzz_maintenance_interleaved_with_ingest(spark, tmp_path):
             replay(b, st)
             op = ops_pool[i]
             ops_run.append(op)
-            names = {c.id: c.name for c in eng.table.schema().columns}
             if op == "compact":
-                eng.table.compact(
-                    tombstone_column=names.get(FID_DELETED, "deleted"),
-                )
+                eng.table.compact()
             elif op == "expire":
-                wm = eng.applied_lsn() + 1
-                eng.table.compact(
-                    expire_tombstones_below_lsn=wm,
-                    tombstone_column=names.get(FID_DELETED, "deleted"),
-                    properties_update={"tombstones_expired_below_lsn": wm},
-                )
+                eng.table.compact(expire_tombstones_below_lsn=eng.applied_lsn() + 1)
                 oracle_expire()
             elif op == "rebucket":
                 eng.table.rebucket(rng.choice([4, 8, 24]))
@@ -568,16 +557,17 @@ def test_dedup_correct_releases_persisted_frames(spark, tmp_path):
 
 def test_order_column_rename_mid_stream_matches_oracle(spark, tmp_path):
     """A ``rename_column last_lsn -> commit_lsn`` DDL mid-batch moves the
-    table's recorded order column with it. After the rename, out-of-order
-    arrival and redelivered (duplicate) events, a widened-whitelist
-    requeue (copy-on-write: every rescued LSN is at or below the
-    watermark, and some lose to newer state) and a tombstone-expiring
-    compact all guard LSNs through the renamed column. Live state,
+    table's recorded order column with it, and a later ``rename_column
+    deleted -> is_dead`` its recorded tombstone column. After the
+    renames, out-of-order arrival and redelivered (duplicate) events, a
+    widened-whitelist requeue (copy-on-write: every rescued LSN is at or
+    below the watermark, and some lose to newer state) and a
+    tombstone-expiring compact all guard LSNs and read tombstones through
+    the renamed columns, and no caller passes a column name. Live state,
     tombstones, quarantine, the vocab aggregate and ``engine.changes()``
-    across the rename equal the dict oracle."""
+    across the renames equal the dict oracle."""
     import copy
 
-    from file_standardization_etl_spark.cdc.apply import FID_DELETED
     from file_standardization_etl_spark.cdc.events import BAD_SOURCES, SOURCE_WHITELIST
     from file_standardization_etl_spark.cdc.oracle import OracleState, validation_reason
     from tests.test_vocab import maintained, recompute
@@ -587,9 +577,10 @@ def test_order_column_rename_mid_stream_matches_oracle(spark, tmp_path):
         EventGenConfig(
             n_events=1600, n_docs=90, seed=9100, bad_source_frac=0.15, delete_frac=0.15,
             shuffle_arrival=True, disorder_window=40,
-            schema_change_lsns=(500,),
+            schema_change_lsns=(500, 1100),
             schema_changes=(
                 {"action": "rename_column", "name": "last_lsn", "new_name": "commit_lsn"},
+                {"action": "rename_column", "name": "deleted", "new_name": "is_dead"},
             ),
         )
     )
@@ -609,8 +600,8 @@ def test_order_column_rename_mid_stream_matches_oracle(spark, tmp_path):
         eng.apply_batch(events_df(spark, between(lo, hi)), batch_id=bid)
         replay(between(lo, hi), st)
     snap = eng.table.snapshot()
-    assert snap["order_column"] == "commit_lsn"
-    assert "last_lsn" not in eng.table.schema().names()
+    assert (snap["order_column"], snap["tombstone_column"]) == ("commit_lsn", "is_dead")
+    assert {"last_lsn", "deleted"}.isdisjoint(eng.table.schema().names())
 
     # requeue: rescued events apply only where their LSN beats the doc's
     rescued = [
@@ -633,12 +624,7 @@ def test_order_column_rename_mid_stream_matches_oracle(spark, tmp_path):
     # tombstone-expiring compact, the expiry read through the order column
     wm = eng.applied_lsn() + 1
     assert any(v["deleted"] for v in st.docs.values())
-    dead = {c.id: c.name for c in eng.table.schema().columns}[FID_DELETED]
-    eng.table.compact(
-        expire_tombstones_below_lsn=wm,
-        tombstone_column=dead,
-        properties_update={"tombstones_expired_below_lsn": wm},
-    )
+    eng.table.compact(expire_tombstones_below_lsn=wm)
     st.docs = {k: v for k, v in st.docs.items() if not (v["deleted"] and v["last_lsn"] < wm)}
 
     eng.apply_batch(events_df(spark, between(1300, 1600)), batch_id=4)

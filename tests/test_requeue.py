@@ -156,7 +156,8 @@ def test_requeue_vocab_pending_from_uncommitted_merge_is_discarded(
 def test_requeue_fenced_below_tombstone_expiry(spark, tmp_path):
     """After tombstone expiry, a rescue below the expiry fence could
     resurrect a deleted doc (its vetoing tombstone is gone) — it must
-    stay quarantined instead."""
+    stay quarantined instead. The expiring compact records the fence
+    itself, as the greatest bound any expiry used."""
     eng = make_engine(spark, tmp_path)
     base = {"n_tok": 2, "schema_change": None, "ts": None}
     events = [
@@ -168,19 +169,19 @@ def test_requeue_fenced_below_tombstone_expiry(spark, tmp_path):
          "tokens": [3, 4], **base},
     ]
     eng.apply_batch(events_df(spark, events), batch_id=0)
-    # expire tombstones below the watermark, recording the fence —
-    # exactly what jobs/maintain.py --compact --expire-tombstones does
+    # expire tombstones below the watermark, which records the fence —
+    # exactly what jobs/maintain.py --compact --expire-tombstones does; a
+    # later expiry with a lower bound keeps it
     wm = eng.applied_lsn() + 1
-    eng.table.compact(
-        expire_tombstones_below_lsn=wm,
-        properties_update={"tombstones_expired_below_lsn": wm},
-    )
+    eng.table.compact(expire_tombstones_below_lsn=wm)
+    eng.table.compact(expire_tombstones_below_lsn=wm - 2)
     assert eng.state(include_deleted=True).filter("doc_id = 'd1'").count() == 0
     m = eng.requeue_quarantine(["web", "nope"])
     assert m["rescued"] == 0  # fenced, not rescued
     assert "d1" not in state_dict(eng)  # the deleted doc stays dead
     # the event is still quarantined for a future decision
     assert eng.quarantine().filter("lsn = 1").count() == 1
+    assert eng.table.snapshot()["tombstones_expired_below"] == wm
 
 
 def test_requeue_vocab_uses_own_marker_axis(spark, tmp_path):

@@ -243,12 +243,7 @@ def test_changefeed_follower_replicates_downstream(spark, tmp_path):
     events = generate_events(EventGenConfig(n_events=3000, n_docs=150, seed=41))
     engine = CdcEngine(spark, str(tmp_path / "cdc"))
     engine.init()
-    names = {c.id: c.name for c in engine.table.schema().columns}
-    follower = ChangeFeedFollower(
-        engine.table,
-        str(tmp_path / "cursor.json"),
-        deleted_column=names[6],  # FID_DELETED
-    )
+    follower = ChangeFeedFollower(engine.table, str(tmp_path / "cursor.json"))
     assert follower.step(lambda *_: None) == 0  # idle poll: nothing new
 
     replica: dict = {}
@@ -292,6 +287,37 @@ def test_changefeed_follower_replicates_downstream(spark, tmp_path):
     assert follower.step(consume) == 0  # caught up
 
 
+def test_changefeed_follower_reports_delete_without_a_name(spark, tmp_path):
+    """A follower built from the table and a cursor alone reads the
+    table's recorded tombstone column: a commit that deletes a doc is a
+    ``delete`` in its window, as ``engine.changes`` reports it, not an
+    ``update``."""
+    from file_standardization_etl_spark.streaming.changefeed import (
+        ChangeFeedFollower,
+    )
+
+    base = {"schema_change": None, "ts": None}
+    engine = CdcEngine(spark, str(tmp_path / "cdc"), n_buckets=4)
+    engine.init()
+    engine.apply_batch(events_df(spark, [
+        {"lsn": 1, "op": "insert", "doc_id": "d1", "tokens": [1, 2], "n_tok": 2,
+         "source": "web", **base},
+    ]), batch_id=0)
+    follower = ChangeFeedFollower(engine.table, str(tmp_path / "cursor.json"))
+    v = follower.position()
+    engine.apply_batch(events_df(spark, [
+        {"lsn": 2, "op": "delete", "doc_id": "d1", "tokens": None, "n_tok": None,
+         "source": None, **base},
+    ]), batch_id=1)
+
+    seen = []
+    assert follower.step(
+        lambda df, *_: seen.extend((r["change_op"], r["doc_id"]) for r in df.collect())
+    ) == 1
+    assert seen == [("delete", "d1")]
+    assert [(r["change_op"], r["doc_id"]) for r in engine.changes(v).collect()] == seen
+
+
 def test_changefeed_per_commit_backfill_matches_state(spark, tmp_path):
     """coalesce=False replays commit by commit from genesis (seek(0)),
     including schema-only commits (zero-row windows), and converges to
@@ -314,11 +340,7 @@ def test_changefeed_per_commit_backfill_matches_state(spark, tmp_path):
     engine.apply_batch(events_df(spark, events[:1200]), batch_id=0)
     engine.apply_batch(events_df(spark, events[1200:]), batch_id=1)
 
-    names = {c.id: c.name for c in engine.table.schema().columns}
-    f = ChangeFeedFollower(
-        engine.table, str(tmp_path / "c2.json"),
-        deleted_column=names[6],
-    )
+    f = ChangeFeedFollower(engine.table, str(tmp_path / "c2.json"))
     f.seek(0)
     replica: dict = {}
 
@@ -353,10 +375,7 @@ def test_changefeed_follower_ignores_orphan_snapshot(spark, tmp_path):
     engine = CdcEngine(spark, str(tmp_path / "cdc"), n_buckets=4)
     engine.init()
     engine.apply_batch(events_df(spark, events[:700]), batch_id=0)
-    follower = ChangeFeedFollower(
-        engine.table, str(tmp_path / "cursor.json"),
-        deleted_column="deleted",
-    )
+    follower = ChangeFeedFollower(engine.table, str(tmp_path / "cursor.json"))
     follower.position()  # pin the cursor at the post-batch-0 version
     engine.apply_batch(events_df(spark, events[700:]), batch_id=1)
 

@@ -66,6 +66,57 @@ def test_vocab_redelivery_is_noop(spark, tmp_path):
     assert maintained(engine) == recompute(engine)
 
 
+def test_event_delivered_twice_in_one_batch_lands_once(spark, tmp_path):
+    """An event delivered twice within one batch lands once, as in the
+    dict oracle: one table row per doc, one vocab contribution and one
+    quarantine row per event — for an insert into an empty table and for
+    an update over a stored row."""
+    from file_standardization_etl_spark.cdc.oracle import replay
+
+    base = {"schema_change": None, "ts": None}
+    ins = {"lsn": 1, "op": "insert", "doc_id": "d1", "tokens": [1, 2], "n_tok": 2,
+           "source": "web", **base}
+    bad = {"lsn": 2, "op": "insert", "doc_id": "d2", "tokens": [3], "n_tok": 1,
+           "source": "nope", **base}
+    upd = {"lsn": 3, "op": "update", "doc_id": "d1", "tokens": [4], "n_tok": 1,
+           "source": "web", **base}
+    engine = make_engine(spark, tmp_path)
+    m = engine.apply_batch(events_df(spark, [ins, ins, bad, bad]), batch_id=0)
+    assert [(r["doc_id"], r["last_lsn"]) for r in engine.table.read().collect()] == [
+        ("d1", 1)
+    ]
+    assert maintained(engine) == {1: (1, 1), 2: (1, 1)}
+    assert [r["lsn"] for r in engine.quarantine().collect()] == [2]
+    assert m.rows_quarantined == 1
+
+    engine.apply_batch(events_df(spark, [upd, upd]), batch_id=1)
+    want = replay([ins, ins, bad, bad, upd, upd])
+    assert [
+        (r["doc_id"], list(r["tokens"]), r["last_lsn"])
+        for r in engine.table.read().collect()
+    ] == [(k, v["tokens"], v["last_lsn"]) for k, v in want.docs.items()]
+    assert maintained(engine) == recompute(engine) == {4: (1, 1)}
+    assert engine.quarantine().count() == len(want.quarantine)
+
+
+def test_dml_refused_on_engine_table(spark, tmp_path):
+    """``delete_where`` / ``update_where`` on the engine's target, which
+    records a tombstone column, raise before reading anything: a physical
+    delete would leave no tombstone and a stale vocab. The table, its
+    version and the vocab stay as they were."""
+    engine = make_engine(spark, tmp_path)
+    events = generate_events(EventGenConfig(n_events=600, n_docs=40, seed=31))
+    engine.apply_batch(events_df(spark, events), batch_id=0)
+    v = engine.table.current_version()
+    doc = engine.state().first()["doc_id"]
+    with pytest.raises(ValueError, match="apply_batch"):
+        engine.table.delete_where(F.col("doc_id") == doc)
+    with pytest.raises(ValueError, match="apply_batch"):
+        engine.table.update_where(F.col("doc_id") == doc, {"tokens": F.array()})
+    assert engine.table.current_version() == v
+    assert maintained(engine) == recompute(engine)
+
+
 def test_vocab_survives_ddl_interleaved_replay(spark, tmp_path):
     """Type-widen + rename mid-stream: the old-side read binds by field
     id, so maintenance keeps working across the schema changes."""
