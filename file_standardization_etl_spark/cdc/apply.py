@@ -333,15 +333,7 @@ class CdcEngine:
             "doc_id", "tokens", "n_tok", "source", "lsn"
         ).withColumn("op", F.lit("insert"))
 
-        lineage_future = self._pool.submit(
-            lambda: snap_wire.groupBy(F.spark_partition_id().alias("pid"))
-            .agg(
-                F.count(F.lit(1)).alias("rows"),
-                F.min("lsn").alias("lsn_min"),
-                F.max("lsn").alias("lsn_max"),
-            )
-            .collect()
-        )
+        lineage_future = self._pool.submit(self._lineage, snap_wire)
         # narrow integrity agg: doc_id/lsn only, map-side combined
         try:
             stats = snap_wire.agg(
@@ -401,7 +393,6 @@ class CdcEngine:
         qm = q_future.result()
         rows_q = qm["n"]
         by_reason = {r: qm[r] for r in QUARANTINE_REASONS if qm[r]}
-        cells = lineage_future.result()
         rows_valid = rows_in - rows_q
         metrics = BatchMetrics(
             batch_id=batch_id,
@@ -418,16 +409,7 @@ class CdcEngine:
             max_key_rows=1 if rows_in else 0,
             distinct_keys=rows_valid,
             salted=False,
-            partitions=[
-                {
-                    "chunk": 0,
-                    "partition_id": r["pid"],
-                    "rows": r["rows"],
-                    "lsn_min": r["lsn_min"],
-                    "lsn_max": r["lsn_max"],
-                }
-                for r in cells
-            ],
+            partitions=self._partitions(0, lineage_future.result()),
             table_version=self.table.current_version(),
         )
         self._write_manifest(metrics)
@@ -723,12 +705,14 @@ class CdcEngine:
         The rescue set is every quarantined event the whitelist admits
         with an LSN at or below the watermark and at or above the
         tombstone-expiry fence. It is applied as one chunk at the
-        current watermark, so the watermark never moves; such a chunk
-        merges copy-on-write (:meth:`_advances`). Correctness comes from
-        the merge's monotone-LSN guard: a rescued event whose doc has
-        since received a newer event loses the LWW compare and changes
-        nothing; otherwise it applies exactly as it would have
-        originally.
+        current watermark, so the watermark never moves. Correctness
+        comes from the merge's monotone-LSN guard: a rescued event whose
+        doc has since received a newer event loses the LWW compare and
+        changes nothing; otherwise it applies exactly as it would have
+        originally. The lake decides how: the chunk folds copy-on-write
+        unless none of its buckets stacks a row newer than its least
+        LSN, in which case appending it equals the fold
+        (:meth:`LakeTable.merge`).
 
         Events above the watermark are never rescued: they belong to a
         chunk whose quarantine settled but whose commit failed, and its
@@ -891,9 +875,6 @@ class CdcEngine:
             delta_rows=delta_rows,
             affected_buckets=affected_buckets,
             delta_bytes=delta_bytes,
-            # a chunk at or below the watermark merges copy-on-write, where
-            # every row meets the stored last_lsn (see _advances)
-            mode="auto" if self._advances(snap, watermark) else "cow",
             pre_commit=pre_commit,
             # vocab maintenance re-reads the affected buckets' old rows
             # EVERY batch (stage_delta's pre-merge snapshot scan), so read
@@ -924,15 +905,18 @@ class CdcEngine:
         )
 
     @staticmethod
-    def _advances(snap: dict, watermark: int) -> bool:
-        """Does a chunk committed at ``watermark`` advance ``snap``'s
-        watermark? A stream chunk does (its events are filtered above
-        the watermark); a requeue rescue (every LSN at or below it) does
-        not. Merge-on-read resolves a key to its newest delta row (checked
-        against the base row only), the LWW winner only while every delta
-        LSN is above those of earlier stacked deltas, so a chunk that does
-        not advance merges copy-on-write."""
-        return watermark > int(snap["properties"].get("max_applied_lsn", 0))
+    def _partitions(chunk: int, cells: list) -> list[dict]:
+        """The manifest's per-partition lineage rows of one chunk."""
+        return [
+            {
+                "chunk": chunk,
+                "partition_id": r["pid"],
+                "rows": r["rows"],
+                "lsn_min": r["lsn_min"],
+                "lsn_max": r["lsn_max"],
+            }
+            for r in cells
+        ]
 
     def _lap(self, label: str, t0: float) -> float:
         """Add the wall seconds since ``t0`` to ``timings[label]``; return now."""
@@ -952,9 +936,9 @@ class CdcEngine:
         """The one write path: apply ``chunk`` (``rows_in`` wire events,
         DDL-free) in one commit that sets ``max_applied_lsn=watermark``.
         The stream passes the chunk's max LSN; a requeue passes the
-        unchanged watermark (see :meth:`_advances` for what that
-        changes). Raises ``ValueError`` before any work when the table's
-        record disagrees with the engine (:meth:`_check_table`).
+        unchanged watermark. Raises ``ValueError`` before any work when
+        the table's record disagrees with the engine
+        (:meth:`_check_table`).
 
         The chunk's token arrays are decoded in exactly TWO full passes;
         everything else rides those jobs or touches only small staged
@@ -1164,17 +1148,9 @@ class CdcEngine:
             cells = self._lineage(chunk) if ddl else probe
             rows_in = sum(r["rows"] for r in cells)
             totals["rows_in"] += rows_in
+            partitions += self._partitions(ci, cells)
             chunk_lsn_max = None
             for r in cells:
-                partitions.append(
-                    {
-                        "chunk": ci,
-                        "partition_id": r["pid"],
-                        "rows": r["rows"],
-                        "lsn_min": r["lsn_min"],
-                        "lsn_max": r["lsn_max"],
-                    }
-                )
                 lsn_min = r["lsn_min"] if lsn_min is None else min(lsn_min, r["lsn_min"])
                 lsn_max = r["lsn_max"] if lsn_max is None else max(lsn_max, r["lsn_max"])
                 chunk_lsn_max = (

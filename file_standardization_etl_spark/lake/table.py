@@ -42,15 +42,19 @@ Design properties (the ones Iceberg would give us, and why they matter at
   one rule serves the copy-on-write merge and the merge-on-read
   resolution alike, and the delta a merge takes is the after-image of
   every key it changes.
-- **Merge-on-read delta stacks** (round 3): ``merge(mode="auto")``
-  appends micro-batch deltas as a few bucket-sorted files and leaves the
-  base untouched — commit I/O is O(delta), the Hudi/Paimon shape —
-  while ``read()`` resolves the stack (the newest ``_seq`` row per key
-  against the base row, by the rule above, with base-column fallback by
-  recorded ``column_ids``) with the same broadcast three-branch plan the
-  CoW merge uses. Oversized deltas and deep stacks fall back to
-  copy-on-write, which FOLDS the stack — the compaction scheduler is the
-  merge policy itself.
+- **Merge-on-read delta stacks** (round 3): ``merge`` appends
+  micro-batch deltas as a few bucket-sorted files and leaves the base
+  untouched — commit I/O is O(delta), the Hudi/Paimon shape — while
+  ``read()`` resolves the stack (the newest ``_seq`` row per key against
+  the base row, by the rule above, with base-column fallback by recorded
+  ``column_ids``) with the same broadcast three-branch plan the CoW
+  merge uses. That equals copy-on-write only while every delta is newer
+  than the rows stacked under it, so the lake decides it: the delta's
+  write observes its bucket set and order range, each stacked item
+  records its ``order_max``, and a delta whose least order value is not
+  above every bound stacked in its buckets merges copy-on-write instead
+  (as do oversized deltas and deep stacks). Copy-on-write FOLDS the
+  stack — the compaction scheduler is the merge policy itself.
 - **Metadata-only schema evolution**: columns carry stable integer ids;
   each snapshot records a schema version, and each file group remembers
   the schema version it was written under. ``add_column`` /
@@ -68,13 +72,14 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import tempfile
 import time
 import uuid
 from dataclasses import dataclass
 from functools import reduce
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -516,13 +521,15 @@ class LakeTable:
         ``expire_snapshots`` (their data dirs are retained exactly while
         the snapshot JSON is).
 
-        Buckets carrying a **merge-on-read delta stack** (see
-        :meth:`merge` ``mode="mor"``) are resolved here: per key the
-        newest delta row (max ``_seq``) supersedes the base row for every
-        column its schema version contains; columns added after that
-        delta was written fall back to the base row's value. The plan is
-        the same broadcast three-branch shape the CoW merge uses — the
-        base side is never shuffled. Compacted tables (no deltas) take
+        Buckets carrying a **merge-on-read delta stack** (appended by
+        :meth:`merge`) are resolved here: per key the newest delta row
+        (max ``_seq``) meets the base row under the merge rule and, when
+        it wins, sets every column it carries; columns it lacks or that
+        were added after it was written fall back to the base row's
+        value. :meth:`merge` stacks a delta only above every order value
+        stacked under it, so this equals the copy-on-write result. The
+        plan is the same broadcast three-branch shape the CoW merge uses
+        — the base side is never shuffled. Compacted tables (no deltas) take
         the plain scan path with zero overhead.
         """
         snap = self.snapshot(as_of_version)
@@ -729,7 +736,7 @@ class LakeTable:
         # unique because each MOR commit carries at most one row per key
         # and commits have distinct versions). The per-key max frame is
         # broadcast only under the SAME byte gate as the base upsert: an
-        # oversized stack (forced mode="mor", no fold) would otherwise
+        # oversized stack (a deep stack of large appends) would otherwise
         # ship a delta-sized key set to every executor even as the base
         # join correctly falls back to shuffle. ---
         broadcast = (
@@ -762,14 +769,14 @@ class LakeTable:
     # count: at most this many bucket files per write task.
     FILES_PER_WRITE_TASK = 4
 
-    # merge(mode="auto") policy: append merge-on-read deltas while every
+    # merge policy: append merge-on-read deltas while every
     # affected bucket's stack is shallower than MOR_MAX_STACK and the
     # delta is no bigger than max(one target file, affected-base-bytes /
     # MOR_COMPACT_RATIO); otherwise copy-on-write (which folds the stack).
     MOR_MAX_STACK = 8
     MOR_COMPACT_RATIO = 8
 
-    def _write_delta(self, df: DataFrame, snap: dict, est_bytes: int) -> tuple[str, int]:
+    def _write_delta(self, df: DataFrame, snap: dict, est_bytes: int) -> tuple[str, int, dict]:
         """Write a merge-on-read delta for the commit after ``snap``, typed
         to its schema (:meth:`TableSchema.typed`), as a
         handful of bucket-RANGE files (no ``partitionBy``), tagged with
@@ -778,64 +785,35 @@ class LakeTable:
         bucket-filtered reads. A micro-batch delta lands in ~1 task and
         ~1 file instead of one file per affected bucket dir — profiling
         showed the 64 per-dir file commits were the dominant cost of
-        small CoW merges. Returns (directory, bytes)."""
+        small CoW merges. The write carries one Observation (no extra
+        job) of the bucket set it wrote (``buckets``) and, on a table
+        recording an ``order_column``, of its least and greatest order
+        value (``lo``, ``hi``) and count of null ones (``nulls``).
+        Returns (directory, bytes, observed)."""
         v, n_buckets, key = snap["version"] + 1, snap["n_buckets"], snap["key_column"]
         ddir = os.path.join(self.path, self.DATA, f"d{v}-{uuid.uuid4().hex[:8]}")
         tasks = max(1, min(n_buckets, -(-(est_bytes or 1) // self.TARGET_WRITE_BYTES)))
+        stats = [F.collect_set("_bucket").alias("buckets")]
+        order = snap.get("order_column")
+        if order is not None:
+            o = F.col(order)
+            stats += [
+                F.min(o).alias("lo"),
+                F.max(o).alias("hi"),
+                F.count(F.when(o.isNull(), 1)).alias("nulls"),
+            ]
+        obs = Observation(f"delta-{v}-{uuid.uuid4().hex[:8]}")
         (
             TableSchema.from_json(snap["schema"])
             .typed(df)
             .withColumn("_bucket", bucket_expr(F.col(key), n_buckets))
             .withColumn("_seq", F.lit(v).cast(DELTA_LAYOUT["_seq"].dataType))
+            .observe(obs, *stats)
             .repartition(tasks, "_bucket")
             .sortWithinPartitions("_bucket", key)
             .write.parquet(ddir)
         )
-        return ddir, self._dir_bytes(ddir)
-
-    def _verify_delta_buckets(self, ddir: str, affected) -> None:
-        """Abort (pre-commit) if the written delta contains a bucket the
-        caller did not declare: such rows would sit in the shared delta
-        file with no snapshot entry referencing them — silent row loss on
-        every read. Checked from parquet row-group footer stats
-        (driver-side, no Spark job); only row groups whose [min, max]
-        bucket span contains an undeclared id are actually read."""
-        import pyarrow.parquet as pq
-
-        allowed = {int(b) for b in affected}
-        for root, _dirs, fs in os.walk(ddir):
-            for fn in fs:
-                if not fn.endswith(".parquet"):
-                    continue
-                pf = pq.ParquetFile(os.path.join(root, fn))
-                md = pf.metadata
-                ci = next(
-                    i
-                    for i in range(md.num_columns)
-                    if md.row_group(0).column(i).path_in_schema == "_bucket"
-                ) if md.num_row_groups else 0
-                for rg in range(md.num_row_groups):
-                    st = md.row_group(rg).column(ci).statistics
-                    if st is not None and st.has_min_max and all(
-                        b in allowed for b in range(st.min, st.max + 1)
-                    ):
-                        continue
-                    got = set(
-                        pf.read_row_group(rg, columns=["_bucket"])
-                        .column(0)
-                        .to_pylist()
-                    )
-                    stray = got - allowed
-                    if stray:
-                        import shutil as _sh
-
-                        _sh.rmtree(ddir, ignore_errors=True)
-                        raise ValueError(
-                            f"merge delta contains undeclared buckets "
-                            f"{sorted(stray)}; affected_buckets is not a "
-                            "superset — aborting before commit to avoid "
-                            "unreferenced (lost) rows"
-                        )
+        return ddir, self._dir_bytes(ddir), obs.get
 
     def _write_buckets(
         self,
@@ -947,7 +925,6 @@ class LakeTable:
         delta_rows: int | None = None,
         affected_buckets: list[int] | None = None,
         delta_bytes: int | None = None,
-        mode: str = "cow",
         pre_commit=None,
         max_stack: int | None = None,
     ) -> None:
@@ -976,43 +953,42 @@ class LakeTable:
         512 — is within ``MOR_BROADCAST_MAX_BYTES``. Unaffected buckets
         are carried forward by reference — no read, no write.
 
-        ``mode`` selects the physical commit strategy:
+        The physical commit strategy is the lake's own decision:
 
-        - ``"cow"`` (default): copy-on-write — affected buckets are read,
-          merged with the delta and rewritten.
-        - ``"mor"``: merge-on-read — the delta is written ONCE, typed, as
-          a few bucket-sorted delta files, and appended to the affected
-          buckets' delta stacks. The base is neither read nor rewritten:
-          a micro-batch merge costs O(delta) I/O instead of O(affected
-          buckets) — at 100 TB that is the difference between a commit
-          that writes megabytes and one that rewrites the table's hot
-          buckets every 10 seconds. :meth:`read` resolves the stack: the
-          newest delta row per key meets the base row under the rule
-          above. **Contract**: among stacked deltas the newest wins, so
-          each delta row's order value must exceed those of its key's
-          rows in earlier deltas still stacked (the CDC engine's
-          advancing watermark guarantees it; a chunk that does not
-          advance merges CoW). A delta lacking a column that a stacked
-          delta in an affected bucket carries merges CoW instead, since
-          the read would fall back past the stacked value to the base.
-        - ``"auto"``: MOR while the delta is small (≤ max(one target
-          file, affected-base-bytes / ``MOR_COMPACT_RATIO``)) and every
-          affected stack is shallower than ``MOR_MAX_STACK``; CoW
-          otherwise. The CoW fallback reads through :meth:`read`, so it
-          FOLDS the accumulated stack back into the base — compaction
-          happens as a natural consequence of the policy, no separate
-          scheduler needed.
+        - **merge-on-read** append: the delta is written ONCE, typed, as
+          a few bucket-sorted delta files, and appended to the delta
+          stacks of exactly the buckets its write observed. The base is
+          neither read nor rewritten: a micro-batch merge costs O(delta)
+          I/O instead of O(affected buckets) — at 100 TB that is the
+          difference between a commit that writes megabytes and one
+          that rewrites the table's hot buckets every 10 seconds.
+          :meth:`read` resolves the stack. Chosen while the delta is
+          small (≤ max(one target file, affected-base-bytes /
+          ``MOR_COMPACT_RATIO``)), every affected stack is shallower than
+          ``MOR_MAX_STACK``, no stacked delta in an affected bucket
+          carries a column this one lacks (the read would fall back past
+          its value to the base) and — on a table recording an
+          ``order_column`` — the delta has no null order value and its
+          least one is strictly greater than the ``order_max`` every
+          item stacked in its buckets records, so its rows are newer
+          than every row stacked under them.
+        - **copy-on-write** otherwise: affected buckets are read through
+          :meth:`read`, merged with the delta and rewritten. This FOLDS
+          the accumulated stack back into the base — compaction happens
+          as a natural consequence of the policy, no separate scheduler
+          needed. A delta written for an append and then refused by its
+          observed order range is removed first.
 
-        ``max_stack`` overrides ``MOR_MAX_STACK`` for this call (only
-        meaningful with ``mode="auto"``). Write-mostly tables want the
-        default (8): stacks amortize merges and nothing pays to read
-        them. A table some job RE-READS every batch — e.g. a maintained
-        derived aggregate whose stage must scan the affected buckets'
-        old rows per micro-batch — flips the economics: read cost grows
-        ~linearly with stack depth (each delta file in an affected
-        bucket is another file open + MOR resolution branch), so the
-        optimal fold cadence is short. With per-file read overhead ~half
-        a base-read and CoW ~3 base-reads, cycle cost is minimized
+        ``max_stack`` overrides ``MOR_MAX_STACK`` for this call.
+        Write-mostly tables want the default (8): stacks amortize merges
+        and nothing pays to read them. A table some job RE-READS every
+        batch — e.g. a maintained derived aggregate whose stage must
+        scan the affected buckets' old rows per micro-batch — flips the
+        economics: read cost grows ~linearly with stack depth (each
+        delta file in an affected bucket is another file open + MOR
+        resolution branch), so the optimal fold cadence is short. With
+        per-file read overhead ~half a base-read and CoW ~3 base-reads,
+        cycle cost is minimized
         around depth 3 (measured in BENCH_DETAIL.json
         ``vocab_maintenance``; the CDC engine passes 3 when
         ``maintain_vocab=True``).
@@ -1044,7 +1020,7 @@ class LakeTable:
         # callers that already know the delta's bucket set (the CDC engine
         # folds it into the LWW stats job) skip this extra Spark job
         affected = (
-            list(affected_buckets)
+            [int(b) for b in affected_buckets]
             if affected_buckets is not None
             else [
                 r[0]
@@ -1071,55 +1047,67 @@ class LakeTable:
         aff_bytes = sum(
             self._entry_bytes(aff_files[str(b)]) for b in affected if str(b) in aff_files
         )
-        if mode == "auto":
-            stack = max(
-                (len(aff_files.get(str(b), {}).get("deltas") or []) for b in affected),
-                default=0,
-            )
-            cap = max_stack if max_stack is not None else self.MOR_MAX_STACK
-            use_mor = stack < cap and est_delta <= max(
-                self.TARGET_WRITE_BYTES, aff_bytes // self.MOR_COMPACT_RATIO
-            )
-        else:
-            use_mor = mode == "mor"
-
-        # a stacked delta carrying a column this one lacks: the read would
-        # fall back past its value to the base, so fold instead
+        stacked = {b: aff_files.get(str(b), {}).get("deltas") or [] for b in affected}
+        stack = max(map(len, stacked.values()), default=0)
+        cap = max_stack if max_stack is not None else self.MOR_MAX_STACK
+        use_mor = stack < cap and est_delta <= max(
+            self.TARGET_WRITE_BYTES, aff_bytes // self.MOR_COMPACT_RATIO
+        )
+        # a stacked delta carrying a column this one lacks (the read would
+        # fall back past its value to the base) or, on an ordered table,
+        # recording no order bound (it may hold rows newer than this
+        # delta's): fold instead, before writing anything
         ids = {by_name[c].id for c in delta.columns}
         use_mor = use_mor and not any(
-            set(d.get("column_ids", ())) - ids
-            for b in affected
-            for d in aff_files.get(str(b), {}).get("deltas", [])
+            set(d.get("column_ids", ())) - ids or (order is not None and "order_max" not in d)
+            for ds in stacked.values()
+            for d in ds
         )
 
         if use_mor:
-            ddir, dbytes = self._write_delta(delta, snap, est_delta)
-            if affected_buckets is not None:
-                # same superset invariant as CoW: an undeclared bucket's
-                # rows would sit in the shared file with no entry
-                # referencing them — silent row loss, so verify from the
-                # written files' footer stats before committing
-                self._verify_delta_buckets(ddir, affected)
-            item = {
-                "path": ddir,
-                "schema_version": cur.version,
-                "seq": v + 1,
-                "bytes": dbytes,
-                "share_bytes": -(-dbytes // len(affected)),
-                "column_ids": [by_name[nm].id for nm in delta.columns],
-            }
-            add = {}
-            for b in affected:
-                e = dict(
-                    aff_files.get(str(b))
-                    or {"path": None, "schema_version": cur.version, "bytes": 0}
+            ddir, dbytes, seen = self._write_delta(delta, snap, est_delta)
+            wrote = sorted(seen["buckets"])
+            # an undeclared bucket's rows would sit in the shared file with
+            # no entry referencing them — silent row loss
+            stray = set(wrote) - set(affected)
+            if stray:
+                shutil.rmtree(ddir, ignore_errors=True)
+                raise ValueError(
+                    f"merge delta contains undeclared buckets {sorted(stray)}; "
+                    "affected_buckets is not a superset — aborting before "
+                    "commit to avoid unreferenced (lost) rows"
                 )
-                e["deltas"] = list(e.get("deltas", [])) + [item]
-                add[str(b)] = e
-            self._publish(
-                snap, add, pre_commit=pre_commit, properties_update=properties_update
+            # the read resolves each key to its newest delta row, so a
+            # delta stacks only above every order value stacked under it
+            stacks = order is None or (
+                seen["nulls"] == 0
+                and all(seen["lo"] > d["order_max"] for b in wrote for d in stacked[b])
             )
-            return
+            if not stacks or not wrote:
+                shutil.rmtree(ddir, ignore_errors=True)
+            if stacks:
+                item = {
+                    "path": ddir,
+                    "schema_version": cur.version,
+                    "seq": v + 1,
+                    "bytes": dbytes,
+                    "share_bytes": -(-dbytes // max(1, len(wrote))),
+                    "column_ids": [by_name[nm].id for nm in delta.columns],
+                }
+                if order is not None and type(seen["hi"]) in (int, float):
+                    item["order_max"] = seen["hi"]
+                add = {}
+                for b in wrote:
+                    e = dict(
+                        aff_files.get(str(b))
+                        or {"path": None, "schema_version": cur.version, "bytes": 0}
+                    )
+                    e["deltas"] = list(e.get("deltas", [])) + [item]
+                    add[str(b)] = e
+                self._publish(
+                    snap, add, pre_commit=pre_commit, properties_update=properties_update
+                )
+                return
 
         # all-fresh buckets (first load): no old side, so no join is
         # planned — building the three-branch plan driver-side costs
@@ -1433,8 +1421,6 @@ class LakeTable:
         past the window; pass ``grace_seconds=0`` only with the ingester
         provably stopped.
         """
-        import shutil
-
         v = self.current_version()
         keep_from = max(0, v - max(1, keep_last) + 1)
         # data roots referenced by kept snapshots (files map references

@@ -365,7 +365,7 @@ def test_replay_over_chunked_manifest_table(spark, tmp_path, monkeypatch):
 
 
 def test_many_micro_batches_build_and_fold_mor_stacks(spark, tmp_path):
-    """Live-table cadence through the DEFAULT merge mode ("auto"): 14
+    """Live-table cadence through the merge's own policy: 14
     micro-batches must append merge-on-read delta stacks, hit
     ``MOR_MAX_STACK`` mid-stream and fold back copy-on-write with NO
     maintenance call, absorb a DDL add_column and a crash-redelivery,

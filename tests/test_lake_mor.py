@@ -48,9 +48,9 @@ def state(t):
     }
 
 
-def apply_events(t, spark, batches, mode):
+def apply_events(t, spark, batches):
     for lsn_rows in batches:
-        t.merge(delta_df(spark, lsn_rows), mode=mode, delta_rows=len(lsn_rows))
+        t.merge(delta_df(spark, lsn_rows), delta_rows=len(lsn_rows))
 
 
 BATCHES = [
@@ -61,12 +61,14 @@ BATCHES = [
 ]
 
 
-def test_mor_matches_cow_exactly(spark, tmp_path):
+def test_mor_matches_cow_exactly(spark, tmp_path, monkeypatch):
     """The MOR stack must resolve to bit-identical state vs CoW."""
     t_cow = make(spark, str(tmp_path / "cow"))
     t_mor = make(spark, str(tmp_path / "mor"))
-    apply_events(t_cow, spark, BATCHES, "cow")
-    apply_events(t_mor, spark, BATCHES, "mor")
+    with monkeypatch.context() as m:
+        m.setattr(LakeTable, "MOR_MAX_STACK", 0)  # every merge folds
+        apply_events(t_cow, spark, BATCHES)
+    apply_events(t_mor, spark, BATCHES)
     assert state(t_mor) == state(t_cow)
     # MOR never rewrote a base file: every data dir is a delta dir
     data = os.listdir(os.path.join(str(tmp_path / "mor"), "data"))
@@ -89,7 +91,7 @@ def test_auto_mode_appends_then_folds_at_max_stack(spark, tmp_path, monkeypatch)
             k = f"d{(i * 3 + j) % 6}"
             rows.append((k, 100 * i + j, lsn, "upsert"))
             ref[k] = (100 * i + j, lsn, False)
-        t.merge(delta_df(spark, rows), mode="auto", delta_rows=len(rows))
+        t.merge(delta_df(spark, rows), delta_rows=len(rows))
     assert state(t) == ref
     entries = t._files_load(t.snapshot())
     depth = max(len(e.get("deltas", [])) for e in entries.values())
@@ -105,7 +107,7 @@ def test_mor_schema_evolution_preserves_carried_columns(spark, tmp_path):
     upserts (the delta lacks it, so its column_ids exclude it and the
     read falls back to the base row)."""
     t = make(spark, str(tmp_path / "t"))
-    t.merge(delta_df(spark, BATCHES[0]), mode="mor", delta_rows=3)
+    t.merge(delta_df(spark, BATCHES[0]), delta_rows=3)
     # fold to base so there is a base row to carry from
     t.compact()
     t.apply_schema_change({"action": "add_column", "name": "extra", "type": "int"})
@@ -114,7 +116,6 @@ def test_mor_schema_evolution_preserves_carried_columns(spark, tmp_path):
     # MOR upsert of d1 AFTER the column exists must not clobber extra=7
     t.merge(
         delta_df(spark, [("d1", 99, 50, "upsert"), ("d7", 70, 51, "upsert")]),
-        mode="mor",
         delta_rows=2,
     )
     got = {r["doc_id"]: (r["v"], r["extra"]) for r in t.read().collect()}
@@ -129,7 +130,7 @@ def test_mor_schema_evolution_preserves_carried_columns(spark, tmp_path):
 
 def test_mor_rename_and_widen_mid_stack(spark, tmp_path):
     t = make(spark, str(tmp_path / "t"))
-    t.merge(delta_df(spark, BATCHES[0]), mode="mor", delta_rows=3)
+    t.merge(delta_df(spark, BATCHES[0]), delta_rows=3)
     t.apply_schema_change({"action": "rename_column", "name": "v", "new_name": "val"})
     t.apply_schema_change({"action": "widen_type", "name": "val", "type": "bigint"})
 
@@ -137,7 +138,6 @@ def test_mor_rename_and_widen_mid_stack(spark, tmp_path):
         spark.createDataFrame(
             [("d2", 21, 20, False)], "doc_id string, val bigint, last_lsn long, deleted boolean"
         ),
-        mode="mor",
         delta_rows=1,
     )
     got = {r["doc_id"]: r["val"] for r in t.read().collect()}
@@ -147,7 +147,7 @@ def test_mor_rename_and_widen_mid_stack(spark, tmp_path):
 
 def test_bucket_pruned_read_with_stack_matches_full(spark, tmp_path):
     t = make(spark, str(tmp_path / "t"), n_buckets=8)
-    apply_events(t, spark, BATCHES, "mor")
+    apply_events(t, spark, BATCHES)
     full = t.read().withColumn("_b", bucket_expr(F.col("doc_id"), 8)).collect()
     for b in range(8):
         want = sorted(r["doc_id"] for r in full if r["_b"] == b)
@@ -157,7 +157,7 @@ def test_bucket_pruned_read_with_stack_matches_full(spark, tmp_path):
 
 def test_time_travel_through_stack_and_gc_keeps_live_deltas(spark, tmp_path):
     t = make(spark, str(tmp_path / "t"))
-    apply_events(t, spark, BATCHES, "mor")
+    apply_events(t, spark, BATCHES)
     # time travel to after batch 2
     got = {r["doc_id"]: r["v"] for r in t.read(as_of_version=2).collect()}
     assert got == {"d1": 11, "d2": 20, "d3": 30, "d4": 40}
@@ -174,17 +174,16 @@ def test_time_travel_through_stack_and_gc_keeps_live_deltas(spark, tmp_path):
         t.read(as_of_version=1)
 
 
-def test_partial_cow_fold_drops_refs_without_resurrecting_rows(spark, tmp_path):
+def test_partial_cow_fold_drops_refs_without_resurrecting_rows(spark, tmp_path, monkeypatch):
     """CoW-merging a SUBSET of buckets that share a delta file must drop
     only those buckets' references; other buckets keep resolving from the
     shared file, and the folded buckets must not resurrect stack rows."""
     t = make(spark, str(tmp_path / "t"), n_buckets=8)
-    apply_events(t, spark, BATCHES, "mor")
+    apply_events(t, spark, BATCHES)
     before = state(t)
     # CoW touching only d1's bucket
-    t.merge(
-        delta_df(spark, [("d1", 13, 100, "upsert")]), mode="cow", delta_rows=1
-    )
+    monkeypatch.setattr(LakeTable, "MOR_MAX_STACK", 0)
+    t.merge(delta_df(spark, [("d1", 13, 100, "upsert")]), delta_rows=1)
     want = dict(before)
     want["d1"] = (13, 100, False)
     assert state(t) == want
@@ -205,7 +204,6 @@ def test_stray_bucket_guard_aborts_before_commit(spark, tmp_path):
     with pytest.raises(ValueError, match="undeclared buckets"):
         t.merge(
             delta_df(spark, rows),
-            mode="mor",
             delta_rows=2,
             affected_buckets=[0],
         )
@@ -225,7 +223,7 @@ def test_oversized_stack_uses_shuffle_fallback(spark, tmp_path, monkeypatch):
             "doc_id string, v int, last_lsn long, deleted boolean",
         )
     )
-    apply_events(t, spark, BATCHES, "mor")
+    apply_events(t, spark, BATCHES)
     got = state(t)
     assert got["d1"] == (12, 9, False)
     assert got["d9"] == (9, 1, False)
@@ -249,7 +247,7 @@ def test_mor_over_chunked_manifest_layout(spark, tmp_path, monkeypatch):
             k = f"d{(i * 3 + j) % 6}"
             rows.append((k, 100 * i + j, lsn, "upsert"))
             ref[k] = (100 * i + j, lsn, False)
-        t.merge(delta_df(spark, rows), mode="auto", delta_rows=len(rows))
+        t.merge(delta_df(spark, rows), delta_rows=len(rows))
     snap = t.snapshot()
     assert "files" not in snap and snap.get("manifest_list")
     assert state(t) == ref
@@ -265,11 +263,14 @@ def test_mor_delta_bytes_apportioned_per_bucket(spark, tmp_path):
     K times in per-bucket accounting: each reference carries a
     ``share_bytes`` apportionment (summing to ~the true file size), while
     ``bytes`` stays the true size for the read-side broadcast decision.
-    Without this a 64-bucket micro-batch delta inflates the auto-mode
-    compaction threshold and CoW write-task sizing by up to 64x."""
+    Without this a 64-bucket micro-batch delta inflates the merge
+    policy's compaction threshold and CoW write-task sizing by up to 64x.
+    A caller declaring a superset of the delta's buckets deepens only the
+    stacks of the buckets the write observed, and the share is
+    apportioned over those."""
     t = make(spark, str(tmp_path / "t"), n_buckets=8)
     rows = [(f"d{i}", i, i + 1, "upsert") for i in range(64)]  # spans all buckets
-    t.merge(delta_df(spark, rows), mode="mor", delta_rows=len(rows))
+    t.merge(delta_df(spark, rows), delta_rows=len(rows))
     entries = t._files_load(t.snapshot())
     items = [d for e in entries.values() for d in e.get("deltas", [])]
     assert items
@@ -282,6 +283,16 @@ def test_mor_delta_bytes_apportioned_per_bucket(spark, tmp_path):
     per_bucket = sum(LakeTable._entry_bytes(e) for e in entries.values())
     assert per_bucket < 2 * true_bytes
 
+    few = delta_df(spark, [("d1", 7, 100, "upsert"), ("d2", 8, 101, "upsert")])
+    wrote = {r["b"] for r in few.select(bucket_expr(F.col("doc_id"), 8).alias("b")).collect()}
+    t.merge(few, delta_rows=2, affected_buckets=list(range(8)))
+    entries = t._files_load(t.snapshot())
+    depth = {int(b): len(e["deltas"]) for b, e in entries.items()}
+    assert depth == {b: 2 if b in wrote else 1 for b in range(8)}
+    top = [e["deltas"][-1] for b, e in entries.items() if int(b) in wrote]
+    assert {d["path"] for d in top} == {top[0]["path"]}
+    assert top[0]["share_bytes"] == -(-top[0]["bytes"] // len(wrote))
+
 
 def test_mor_carry_column_named_like_new_prefix_survives(spark, tmp_path):
     """A column the delta lacks whose NAME contains the literal '__n_'
@@ -290,12 +301,12 @@ def test_mor_carry_column_named_like_new_prefix_survives(spark, tmp_path):
     delta file carrying it as all-null would clobber the base value at
     read time."""
     t = make(spark, str(tmp_path / "t"))
-    t.merge(delta_df(spark, BATCHES[0]), mode="mor", delta_rows=3)
+    t.merge(delta_df(spark, BATCHES[0]), delta_rows=3)
     t.compact()
     t.apply_schema_change({"action": "add_column", "name": "x__n_y", "type": "int"})
     t.update_where(F.col("doc_id") == "d1", {"x__n_y": F.lit(41)})
 
-    t.merge(delta_df(spark, [("d1", 99, 50, "upsert")]), mode="mor", delta_rows=1)
+    t.merge(delta_df(spark, [("d1", 99, 50, "upsert")]), delta_rows=1)
     got = {r["doc_id"]: (r["v"], r["x__n_y"]) for r in t.read().collect()}
     assert got["d1"] == (99, 41)  # carried value survived the MOR upsert
     entries = t._files_load(t.snapshot())
@@ -307,13 +318,13 @@ def test_mor_carry_column_named_like_new_prefix_survives(spark, tmp_path):
 def test_oversized_stack_read_never_broadcasts(spark, tmp_path, monkeypatch):
     """Above MOR_BROADCAST_MAX_BYTES the read resolution must not
     broadcast EITHER frame — the base join (already gated) or the
-    per-key max-_seq winner semi-join (gated in round 4): with forced
-    mode="mor" and no fold, a >256 MB live stack carries a key set far
-    too large to ship to every executor. Auto-broadcast is disabled for
+    per-key max-_seq winner semi-join (gated in round 4): a >256 MB
+    live stack carries a key set far too large to ship to every
+    executor. Auto-broadcast is disabled for
     the assertion so the plan shows the engine's own hints only."""
     monkeypatch.setattr(LakeTable, "MOR_BROADCAST_MAX_BYTES", 0)
     t = make(spark, str(tmp_path / "t"))
-    apply_events(t, spark, BATCHES, "mor")
+    apply_events(t, spark, BATCHES)
     thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
@@ -322,7 +333,9 @@ def test_oversized_stack_read_never_broadcasts(spark, tmp_path, monkeypatch):
         assert "Broadcast" not in plan, plan
         # the shuffled fallback resolves to the same state as CoW
         t_cow = make(spark, str(tmp_path / "cow"))
-        apply_events(t_cow, spark, BATCHES, "cow")
+        with monkeypatch.context() as m:
+            m.setattr(LakeTable, "MOR_MAX_STACK", 0)  # every merge folds
+            apply_events(t_cow, spark, BATCHES)
         got = {
             r["doc_id"]: (r["v"], r["last_lsn"], r["deleted"]) for r in df.collect()
         }
@@ -349,6 +362,7 @@ def test_cow_merge_byte_gate_never_broadcasts_payload(spark, tmp_path, monkeypat
         plans.append(df._jdf.queryExecution().executedPlan().toString())
         return real(self, df, *args, **kwargs)
 
+    monkeypatch.setattr(LakeTable, "MOR_MAX_STACK", 0)  # every merge folds
     t_small = make(spark, str(tmp_path / "small"))
     t_big = make(spark, str(tmp_path / "big"))
     t_small.overwrite(seed)
@@ -358,13 +372,12 @@ def test_cow_merge_byte_gate_never_broadcasts_payload(spark, tmp_path, monkeypat
     monkeypatch.setattr(LakeTable, "_write_buckets", spy)
     try:
         for rows in merges:
-            t_small.merge(delta_df(spark, rows), mode="cow", delta_rows=1, delta_bytes=1)
+            t_small.merge(delta_df(spark, rows), delta_rows=1, delta_bytes=1)
         assert all("BroadcastHashJoin" in p for p in plans), plans
         plans.clear()
         for rows in merges:
             t_big.merge(
                 delta_df(spark, rows),
-                mode="cow",
                 delta_rows=1,
                 delta_bytes=LakeTable.MOR_BROADCAST_MAX_BYTES + 1,
             )
@@ -453,19 +466,32 @@ def test_internal_reads_plan_without_spark_jobs(spark, tmp_path):
 
 def test_randomized_order_rule_matches_dict_oracle(spark, tmp_path, monkeypatch):
     """The merge rule on a plain table, no engine: random batches of
-    out-of-order and stale rows through copy-on-write, tombstone rows,
-    merge-on-read appends and the folds they trigger (MOR_MAX_STACK=2),
-    ``compact()``, and an ``add_column`` whose values later MOR upserts
-    must keep — some deltas carry the added column, most lack it. The
-    table equals a dict oracle throughout: a row replaces its key's
-    stored row when the key is absent or its order value is strictly
-    greater, sets the columns it carries and keeps the rest. A table
-    with no order column is last-write-wins. A delta naming a column the
-    table lacks, or lacking the key or order column, is refused before
-    anything is written."""
+    stale, tied and out-of-order rows and tombstone rows through the
+    merge's own policy — merge-on-read appends and the folds they
+    trigger (MOR_MAX_STACK=2), ``compact()``, and an ``add_column`` whose
+    values later upserts must keep — some deltas carry the added column,
+    most lack it. The table equals a dict oracle throughout: a row
+    replaces its key's stored row when the key is absent or its order
+    value is strictly greater, sets the columns it carries and keeps the
+    rest. A table with no order column is last-write-wins. Stacks reach
+    depth 2, and on the ordered table a merge whose least order value is
+    not above the bound stacked in its buckets never adds a stack entry.
+    A delta naming a column the table lacks, or lacking the key or order
+    column, is refused before anything is written."""
     import random
 
     monkeypatch.setattr(LakeTable, "MOR_MAX_STACK", 2)
+    keys = [f"d{j}" for j in range(12)]
+    bucket = {
+        r["doc_id"]: r["b"]
+        for r in spark.createDataFrame([(k,) for k in keys], "doc_id string")
+        .select("doc_id", bucket_expr(F.col("doc_id"), 4).alias("b"))
+        .collect()
+    }
+
+    def stacks(t):  # bucket -> its stacked delta items
+        return {int(b): e.get("deltas", []) for b, e in t._files_load(t.snapshot()).items()}
+
     for ordered in (True, False):
         rng = random.Random(5150 + ordered)
         t = LakeTable.create(
@@ -474,14 +500,12 @@ def test_randomized_order_rule_matches_dict_oracle(spark, tmp_path, monkeypatch)
         )
         cols = ["doc_id", "v", "last_lsn", "deleted"]
         want: dict = {}
-        mor_top: dict = {}  # key -> highest order sent through an auto merge
-        clock = 0
-        early, late = ["cow", "auto"] * 2, ["cow", "auto"] * 6 + ["compact", "auto"]
-        rng.shuffle(early)
+        clock = depth = 0
+        late = ["merge"] * 13 + ["compact"]
         rng.shuffle(late)
-        # then two wide MOR appends sharing keys, the first carrying the
-        # added column and the second lacking it
-        steps = early + ["add_column", "auto:extra", "auto:plain"] + late
+        # then two wide merges sharing keys, the first carrying the added
+        # column and the second lacking it
+        steps = ["merge"] * 4 + ["add_column", "merge:extra", "merge:plain"] + late
         for i, step in enumerate(steps):
             if step == "compact":
                 t.compact()
@@ -491,17 +515,14 @@ def test_randomized_order_rule_matches_dict_oracle(spark, tmp_path, monkeypatch)
                 for row in want.values():
                     row["extra"] = None
             else:
-                mode, _, forced = step.partition(":")
+                forced = step.partition(":")[2]
                 extra = {"extra": True, "plain": False}.get(forced, rng.random() < 0.5)
                 carry = [c for c in cols if c != "extra" or extra]
                 rows = []
                 n_keys = 8 if forced else rng.randint(1, 6)
-                for k in rng.sample([f"d{j}" for j in range(12)], n_keys):
-                    if mode == "auto":  # above every stacked row of its key
-                        o = rng.randint(mor_top.get(k, 0) + 1, clock + 4)
-                        mor_top[k] = o
-                    else:  # anything: stale, tied or out of order
-                        o = rng.randint(1, clock + 4)
+                sent = rng.sample(keys, n_keys)
+                for k in sent:
+                    o = rng.randint(1, clock + 4)  # stale, tied or out of order
                     clock = max(clock, o)
                     dead = rng.random() < 0.25
                     row = {"doc_id": k, "v": None if dead else rng.randint(0, 999),
@@ -514,16 +535,24 @@ def test_randomized_order_rule_matches_dict_oracle(spark, tmp_path, monkeypatch)
                 schema = ", ".join(
                     f"{c} {dict(COLS + [('extra', 'int')])[c]}" for c in carry
                 )
-                t.merge(
-                    spark.createDataFrame(rows, schema),
-                    mode=mode,
-                    delta_rows=len(rows),
+                before = stacks(t)
+                t.merge(spark.createDataFrame(rows, schema), delta_rows=len(rows))
+                after = stacks(t)
+                depth = max([depth, *map(len, after.values())])
+                bound = ordered and max(
+                    (d["order_max"] for k in sent for d in before.get(bucket[k], [])),
+                    default=None,
                 )
+                if bound and min(r[2] for r in rows) <= bound:
+                    assert all(len(after[b]) <= len(before.get(b, [])) for b in after), (
+                        i, bound, rows,
+                    )
             if i % 4 == 3 or i == len(steps) - 1:
                 got = {r["doc_id"]: tuple(r[c] for c in cols) for r in t.read().collect()}
                 assert got == {k: tuple(r[c] for c in cols) for k, r in want.items()}, (
                     ordered, i, step,
                 )
+        assert depth >= 2, ordered
         entries = t._files_load(t.snapshot()).values()
         assert any(e.get("path") for e in entries)  # folds wrote base files
 

@@ -99,6 +99,51 @@ def test_requeue_loses_to_newer_state(spark, tmp_path):
     assert got["d2"] == ([1, 2], 2, "nope", 3)
 
 
+def test_requeue_appends_only_above_stacked_rows(spark, tmp_path):
+    """A requeue chunk sits at or below the watermark, so the lake decides
+    how it lands: when no rescued key's bucket stacks a row newer than
+    the rescue, it appends (stack depth +1, equal to the fold); when the
+    rescued key has a newer stacked row, it folds copy-on-write. Both
+    land the dict oracle."""
+    from file_standardization_etl_spark.lake.table import bucket_expr
+
+    def ev(lsn, op, source):
+        return {"lsn": lsn, "op": op, "doc_id": "a", "source": source,
+                "tokens": [lsn, 7], "n_tok": 2, "schema_change": None, "ts": None}
+
+    wl = ["web", "nope"]
+    first = [ev(1, "insert", "web"), {**ev(2, "insert", "web"), "doc_id": "b"}]
+    cases = {
+        "append": [first, [ev(5, "update", "nope")]],
+        "fold": [first, [ev(3, "update", "nope"), ev(4, "update", "web")]],
+    }
+    for case, batches in cases.items():
+        eng = CdcEngine(spark, str(tmp_path / case))
+        eng.init()
+        for i, b in enumerate(batches):
+            eng.apply_batch(events_df(spark, b), batch_id=i)
+        ba = spark.createDataFrame([("a",)], "doc_id string").select(
+            bucket_expr(F.col("doc_id"), eng.table.snapshot()["n_buckets"])
+        ).first()[0]
+
+        def depth():
+            files = eng.table._files_load(eng.table.snapshot())
+            return {int(b): len(e.get("deltas", [])) for b, e in files.items()}
+
+        before = depth()
+        assert eng.requeue_quarantine(wl)["rescued"] == 1
+        if case == "append":
+            assert depth() == {**before, ba: before[ba] + 1}
+        else:
+            assert before[ba] == 2 and depth()[ba] == 0
+        st, _, _ = oracle_after_requeue([e for b in batches for e in b], wl)
+        want = {
+            k: (list(v["tokens"]), v["n_tok"], v["source"], v["last_lsn"])
+            for k, v in st.docs.items() if not v["deleted"]
+        }
+        assert state_dict(eng) == want, case
+
+
 def test_requeue_maintains_vocab_exactly(spark, tmp_path):
     from tests.test_vocab import maintained, recompute
 

@@ -384,7 +384,6 @@ def main() -> int:
         )
         t.merge(
             spark.createDataFrame([("k1", 100, 2)], "k string, v int, last_lsn long"),
-            mode="mor",
             delta_rows=1,
         )
         df = t.read()
