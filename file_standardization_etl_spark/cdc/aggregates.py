@@ -13,7 +13,8 @@ arrays per micro-batch: the chunk's count delta is
 
     + tokens of each LWW winner that actually replaces state
     - tokens of each row it replaces (read from the PRE-merge snapshot,
-      bucket-pruned to the chunk's affected buckets)
+      bucket-pruned to the chunk's affected buckets and key-pruned to
+      its winners' keys)
 
 with the same rule as the merge (a winner replaces a row only with a
 greater ``last_lsn``, the target's recorded order column), so the
@@ -87,16 +88,11 @@ class TokenVocab:
 
     # ---------- per-chunk maintenance ----------
 
-    # above this many winner rows the old-side KEY join stops broadcasting
-    # — the engine-wide key-frame gate, shared with the hot path's routed
-    # join so retuning happens in exactly one place (lake/table.py)
+    # above this many winner rows the pre-image's key frame is not
+    # broadcast — the engine-wide key-frame gate, shared with the hot
+    # path's routed join so retuning happens in exactly one place
+    # (lake/table.py)
     BROADCAST_MAX_ROWS = BROADCAST_MAX_KEY_ROWS
-    # the `old` frame carries TOKEN ARRAYS, so a row-count gate alone can
-    # green-light a broadcast past Spark's 8 GB hard limit (4M rows x
-    # ~512-token docs ~ 16 GB); it shares the lake's MOR byte rule
-    # (estimated from delta_bytes when the caller staged the delta, else
-    # rows x 512 B — the same heuristic LakeTable.merge uses)
-    BROADCAST_MAX_BYTES = LakeTable.MOR_BROADCAST_MAX_BYTES
 
     def stage_delta(
         self,
@@ -105,7 +101,6 @@ class TokenVocab:
         out: str,
         affected_buckets: list[int] | None = None,
         delta_rows: int | None = None,
-        delta_bytes: int | None = None,
     ) -> None:
         """Write to ``out`` the vocab after one chunk: the vocab ``snap``
         references plus the chunk's signed (token, occ, docs) delta
@@ -113,16 +108,16 @@ class TokenVocab:
         which references ``out``.
 
         ``delta`` is the LWW-deduped winner set (wire column names, one
-        row per doc_id). Plan shape: the old side is a bucket-pruned,
-        column-pruned read of ``snap`` inner-joined to the broadcast
-        winner keys — delta-sized from the first join on; the explodes
-        touch O(delta) token arrays, never the table.
+        row per doc_id). Plan shape: the pre-image is ``snap``'s rows of
+        the winner keys, read with :meth:`LakeTable.read`'s ``keys``
+        (bucket-pruned, key-pruned before the merge-on-read resolve,
+        the key frame broadcast up to ``BROADCAST_MAX_ROWS`` winners),
+        then left-joined to the winners; the explodes touch O(delta)
+        token arrays, never the table.
 
-        ``affected_buckets=None`` (snapshot bootstrap) skips the old side
-        entirely: the delta there is snapshot-sized, so the unconditional
-        ``F.broadcast(delta)`` below — fine at micro-batch scale — would
-        ship the whole corpus key set to every executor. With an empty
-        base the minus side is vacuously empty and no join is needed.
+        ``affected_buckets=None`` (snapshot bootstrap) skips the
+        pre-image entirely: with an empty base the minus side is
+        vacuously empty and no join is needed.
         """
         if affected_buckets is None:
             j = delta.select("doc_id", "lsn", "op", "tokens").select(
@@ -132,42 +127,20 @@ class TokenVocab:
                 F.lit(None).cast("array<bigint>").alias("__old_toks"),
             )
         else:
+            key = snap["key_column"]
             tokens = TableSchema.from_json(snap["schema"]).by_id()[self._tokens_fid].name
-            # unknown size is NOT small: with no row or byte hint the
-            # token-array-carrying `old` frame must take the shuffled
-            # path — defaulting est_bytes to 0 here would broadcast it
-            # unconditionally, the exact failure the gate exists to stop
-            small = delta_rows is not None and delta_rows <= self.BROADCAST_MAX_ROWS
-            est_bytes = (
-                delta_bytes
-                if delta_bytes is not None
-                else (delta_rows * 512 if delta_rows is not None else None)
+            keys = delta.select(F.col("doc_id").alias(key))
+            if delta_rows is not None and delta_rows <= self.BROADCAST_MAX_ROWS:
+                keys = F.broadcast(keys)
+            old = self.target.read(
+                affected_buckets, as_of_version=snap["version"], keys=keys
+            ).select(
+                F.col(key).alias("doc_id"),
+                F.col(snap["order_column"]).alias("__old_lsn"),
+                F.coalesce(F.col(snap["tombstone_column"]), F.lit(False)).alias("__old_del"),
+                F.col(tokens).alias("__old_toks"),
             )
-            small_old = (
-                small and est_bytes is not None
-                and est_bytes <= self.BROADCAST_MAX_BYTES
-            )
-            keys = delta.select("doc_id")
-            old = (
-                self.target.read(buckets=affected_buckets, as_of_version=snap["version"])
-                .select(
-                    F.col(snap["key_column"]).alias("doc_id"),
-                    F.col(snap["order_column"]).alias("__old_lsn"),
-                    F.coalesce(F.col(snap["tombstone_column"]), F.lit(False)).alias(
-                        "__old_del"
-                    ),
-                    F.col(tokens).alias("__old_toks"),
-                )
-                .join(F.broadcast(keys) if small else keys, "doc_id")
-            )
-            j = delta.select("doc_id", "lsn", "op", "tokens").join(
-                # `old` carries delta-sized TOKEN ARRAYS — broadcastable at
-                # micro-batch scale, shuffled past BROADCAST_MAX_BYTES
-                # (byte-gated, not row-gated: the arrays dominate)
-                F.broadcast(old) if small_old else old,
-                "doc_id",
-                "left",
-            )
+            j = delta.select("doc_id", "lsn", "op", "tokens").join(old, "doc_id", "left")
         take = F.col("__old_lsn").isNull() | (F.col("lsn") > F.col("__old_lsn"))
         empty = F.array().cast("array<bigint>")
         plus_arr = F.when(
@@ -189,7 +162,7 @@ class TokenVocab:
                 ),
             )
 
-        # ONE pass over the join and ONE shuffle total. Occurrence deltas
+        # ONE pass over the join and ONE token-keyed shuffle. Occurrence deltas
         # are (token, ±1) over raw arrays; doc-frequency deltas are
         # (token, ±1) over the ROW-LOCAL array_distinct of each side —
         # per-(doc,token) presence never needs a (doc_id, token) shuffle.

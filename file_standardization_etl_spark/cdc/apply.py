@@ -92,7 +92,7 @@ def staged(df: DataFrame, *keep: str) -> DataFrame:
 WIRE_RESERVED = frozenset(f.name for f in EVENT_SCHEMA.fields) | {
     "route",
     "_bucket",
-    # MOR delta layout columns (lake/table.py _resolve_mor): a user column
+    # MOR delta layout columns (lake/table.py _layers): a user column
     # by either name would make every merge-on-read table read ambiguous
     "_seq",
     "_tag",
@@ -154,8 +154,8 @@ class CdcEngine:
         n_buckets: int = 16,
         # maintain the token-frequency aggregate (cdc/aggregates.py)
         # incrementally alongside every merge — O(delta) per chunk vs
-        # O(corpus) per recompute; opt-in because it adds a bucket-pruned
-        # old-side read + two explode passes per chunk. A table records
+        # O(corpus) per recompute; opt-in because it adds a key-pruned
+        # pre-image read + two explode passes per chunk. A table records
         # the setting it was created with, and the write path refuses an
         # engine whose setting disagrees.
         maintain_vocab: bool = False,
@@ -333,7 +333,7 @@ class CdcEngine:
             "doc_id", "tokens", "n_tok", "source", "lsn"
         ).withColumn("op", F.lit("insert"))
 
-        lineage_future = self._pool.submit(self._lineage, snap_wire)
+        lineage_future = self._submit("lineage_join", self._lineage, snap_wire)
         # narrow integrity agg: doc_id/lsn only, map-side combined
         try:
             stats = snap_wire.agg(
@@ -368,13 +368,14 @@ class CdcEngine:
         ck = as_of_lsn  # the chunk key: the snapshot's one "chunk"
         # the quarantine finalize and the vocab stage overlap the
         # overwrite; its pre_commit settles both
-        q_future = self._pool.submit(self._finalize_quarantine, invalid, batch_id, ck)
+        q_future = self._submit("quarantine_join", self._finalize_quarantine, invalid, batch_id, ck)
         stage_future = None
         new_props = {"max_applied_lsn": as_of_lsn, "last_batch_id": batch_id}
         try:
             if self._vocab is not None:
                 new_props[VOCAB_PROPERTY] = self._vocab.next_dir(snap)
-                stage_future = self._pool.submit(
+                stage_future = self._submit(
+                    "vocab_stage",
                     self._vocab.stage_delta,
                     valid.select("doc_id", "lsn", "op", "tokens"),
                     snap,
@@ -876,11 +877,10 @@ class CdcEngine:
             affected_buckets=affected_buckets,
             delta_bytes=delta_bytes,
             pre_commit=pre_commit,
-            # vocab maintenance re-reads the affected buckets' old rows
-            # EVERY batch (stage_delta's pre-merge snapshot scan), so read
-            # amplification grows with MOR stack depth — fold around depth
-            # 3 instead of 8 (the cycle-cost minimum; see merge docstring
-            # and BENCH_DETAIL.json vocab_maintenance)
+            # a stack keeps superseded rows stored until its fold: on the
+            # serve benchmark (vocab on) the default depth 8 raised
+            # lake_bytes_per_live_doc 214.8 -> 246.9 B (+15 %, past that
+            # metric's 0.1 bound), so fold at 3 (merge docstring)
             max_stack=3 if self._vocab is not None else None,
         )
 
@@ -917,6 +917,25 @@ class CdcEngine:
             }
             for r in cells
         ]
+
+    def _phase(self, label: str | None) -> None:
+        """Label the Spark jobs this thread issues next with the
+        ``timings`` phase issuing them (``spark.job.description``, which
+        the status store keeps per job); None clears it. Local properties
+        are per thread, so pool jobs label themselves (:meth:`_submit`)."""
+        self.spark.sparkContext.setLocalProperty("spark.job.description", label)
+
+    def _submit(self, label: str, fn, *args):
+        """``fn(*args)`` on the engine's pool, its jobs labelled ``label``."""
+
+        def run():
+            self._phase(label)
+            try:
+                return fn(*args)
+            finally:
+                self._phase(None)
+
+        return self._pool.submit(run)
 
     def _lap(self, label: str, t0: float) -> float:
         """Add the wall seconds since ``t0`` to ``timings[label]``; return now."""
@@ -974,6 +993,7 @@ class CdcEngine:
         finalize's counts, or None when no row was invalid).
         """
         t = time.time()
+        self._phase("lww_and_stats")
         expr_r = validation_reason_expr(
             F.col("op"), F.col("tokens"), F.col("n_tok"), F.col("source"), whitelist
         )
@@ -1001,6 +1021,7 @@ class CdcEngine:
             n_delta = w["n"]
             affected = [int(b) for b in (w["buckets"] or [])]
             t = self._lap("lww_and_stats", t)
+            self._phase("routed_write")
 
             keys = winners.select("doc_id", "lsn").withColumn("__win", F.lit(1))
             if n_delta <= BROADCAST_MAX_KEY_ROWS:
@@ -1027,13 +1048,7 @@ class CdcEngine:
             ).write.mode("overwrite").partitionBy("route").parquet(staging)
             staged_n = obs.get
             t = self._lap("routed_write", t)
-
-            qsrc = os.path.join(staging, "route=q")
-            if os.path.isdir(qsrc):  # no invalid rows staged otherwise
-                rows = self.spark.read.schema(STAGED_SCHEMA).parquet(qsrc)
-                if staged_n["q"] > staged_n["q_lsns"]:  # an event staged twice
-                    rows = rows.dropDuplicates(["lsn"])
-                q_future = self._pool.submit(self._finalize_quarantine, rows, batch_id, ck)
+            self._phase("merge")
 
             # Existence-gated (driver-local staging), NOT a bare except:
             # an unexpected read failure must propagate — substituting an
@@ -1062,13 +1077,21 @@ class CdcEngine:
 
                 def _stage():
                     t0 = time.time()
-                    self._vocab.stage_delta(
-                        delta, snap, vocab_dir, affected,
-                        delta_rows=n_delta, delta_bytes=delta_bytes,
-                    )
+                    self._vocab.stage_delta(delta, snap, vocab_dir, affected, delta_rows=n_delta)
                     self._lap("vocab_stage", t0)
 
-                stage_future = self._pool.submit(_stage)
+                stage_future = self._submit("vocab_stage", _stage)
+
+            # submitted after the vocab stage, the batch's longest side
+            # job, so the stage's jobs are queued first
+            qsrc = os.path.join(staging, "route=q")
+            if os.path.isdir(qsrc):  # no invalid rows staged otherwise
+                rows = self.spark.read.schema(STAGED_SCHEMA).parquet(qsrc)
+                if staged_n["q"] > staged_n["q_lsns"]:  # an event staged twice
+                    rows = rows.dropDuplicates(["lsn"])
+                q_future = self._submit(
+                    "quarantine_join", self._finalize_quarantine, rows, batch_id, ck
+                )
             self._merge_chunk(
                 delta, n_delta, watermark, batch_id, snap,
                 affected_buckets=affected, delta_bytes=delta_bytes,
@@ -1081,6 +1104,7 @@ class CdcEngine:
             raise
         finally:
             winners.unpersist()
+            self._phase(None)
         qm = q_future.result() if q_future is not None else None  # settled
         shutil.rmtree(staging, ignore_errors=True)
         self._lap("quarantine_join", t)
@@ -1094,6 +1118,7 @@ class CdcEngine:
 
     def apply_batch(self, events: DataFrame, batch_id: int) -> BatchMetrics:
         t = time.time()
+        self._phase("lineage_join")
         applied = self.applied_lsn()
         events = events.filter(F.col("lsn") > F.lit(applied))
 
@@ -1145,6 +1170,7 @@ class CdcEngine:
                 chunk = chunk.filter(F.col("lsn") < F.lit(hi))
             # lineage: the batch probe's when the batch has no DDL, else a
             # narrow columnar scan (no arrays) of this chunk
+            self._phase("lineage_join")
             cells = self._lineage(chunk) if ddl else probe
             rows_in = sum(r["rows"] for r in cells)
             totals["rows_in"] += rows_in
@@ -1230,6 +1256,7 @@ class CdcEngine:
             partitions=partitions,
             table_version=self.table.current_version(),
         )
+        self._phase(None)
         self._write_manifest(metrics)
         # merges/DDL already persisted properties; commit once more only if
         # this batch changed nothing else (e.g. fully-filtered replay)

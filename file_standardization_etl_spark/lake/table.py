@@ -47,8 +47,12 @@ Design properties (the ones Iceberg would give us, and why they matter at
   untouched — commit I/O is O(delta), the Hudi/Paimon shape — while
   ``read()`` resolves the stack (the newest ``_seq`` row per key against
   the base row, by the rule above, with base-column fallback by recorded
-  ``column_ids``) with the same broadcast three-branch plan the CoW
-  merge uses. That equals copy-on-write only while every delta is newer
+  ``column_ids``) with one per-key aggregate, the same one the CoW merge
+  runs under its ``_bucket`` repartition with the incoming delta as a
+  third layer. A full read aggregates only the stack's keys and adds
+  the untouched base rows through a broadcast anti-join, so the base is
+  never shuffled; ``read(keys=)`` aggregates only the keys asked for.
+  That equals copy-on-write only while every delta is newer
   than the rows stacked under it, so the lake decides it: the delta's
   write observes its bucket set and order range, each stacked item
   records its ``order_max``, and a delta whose least order value is not
@@ -152,8 +156,8 @@ def bucket_expr(key: Column, n_buckets: int) -> Column:
 
 
 # Column names the physical layout owns: '_bucket' (hash-bucket partition
-# column injected by _write_buckets/_write_delta) and '_seq'/'_tag' (MOR
-# delta commit-version / file-tag columns consumed by _resolve_mor). DDL
+# column injected by _bucketed/_write_delta) and '_seq'/'_tag' (MOR
+# delta commit-version / file-tag columns consumed by _resolve). DDL
 # introducing a USER column by any of these names is rejected in
 # apply_schema_change — the collision would corrupt or wedge reads, not
 # error cleanly.
@@ -164,7 +168,7 @@ ROLES = ("key_column", "order_column", "tombstone_column")
 
 # the MOR delta layout columns as _write_delta writes them (bucket_expr
 # yields int; _seq is the commit version), declared by the schema-bound
-# delta read in _resolve_mor
+# delta read in _layers
 DELTA_LAYOUT = T.StructType(
     [T.StructField("_bucket", T.IntegerType()), T.StructField("_seq", T.IntegerType())]
 )
@@ -172,9 +176,9 @@ DELTA_LAYOUT = T.StructType(
 # Engine-wide broadcast gate for KEY-ONLY frames (doc_id / (doc_id, lsn)
 # rows, no payload arrays): above this many rows the frame is too big to
 # ship to every executor and the join falls back to a shuffle. Consumers:
-# the hot path's routed winner-key join (cdc/apply.py) and TokenVocab's
-# old-side key join (cdc/aggregates.py). Payload-carrying frames must use
-# a BYTE gate instead (LakeTable.MOR_BROADCAST_MAX_BYTES).
+# the hot path's routed winner-key join (cdc/apply.py) and the key frame
+# of TokenVocab's pre-image read (cdc/aggregates.py). Payload-carrying
+# frames must use a BYTE gate instead (LakeTable.MOR_BROADCAST_MAX_BYTES).
 BROADCAST_MAX_KEY_ROWS = 4_000_000
 
 
@@ -508,9 +512,10 @@ class LakeTable:
         self,
         buckets: list[int] | None = None,
         as_of_version: int | None = None,
+        keys: DataFrame | None = None,
     ) -> DataFrame:
         """Snapshot scan (current, or time travel via ``as_of_version``),
-        optionally bucket-pruned.
+        optionally bucket-pruned and key-pruned.
 
         Base files are read grouped by the schema version they were
         written under; each group is reconciled to THAT SNAPSHOT's schema
@@ -521,44 +526,45 @@ class LakeTable:
         ``expire_snapshots`` (their data dirs are retained exactly while
         the snapshot JSON is).
 
+        ``keys`` — a frame of the key column — keeps only the stored rows
+        of those keys: it is semi-joined into the base and into each
+        delta group before anything is resolved, so the read is
+        key-sized past the scans. Hint it with ``F.broadcast`` when it is
+        small.
+
         Buckets carrying a **merge-on-read delta stack** (appended by
-        :meth:`merge`) are resolved here: per key the newest delta row
-        (max ``_seq``) meets the base row under the merge rule and, when
-        it wins, sets every column it carries; columns it lacks or that
-        were added after it was written fall back to the base row's
-        value. :meth:`merge` stacks a delta only above every order value
-        stacked under it, so this equals the copy-on-write result. The
-        plan is the same broadcast three-branch shape the CoW merge uses
-        — the base side is never shuffled. Compacted tables (no deltas) take
-        the plain scan path with zero overhead.
+        :meth:`merge`) are resolved here by :meth:`_resolve`: one per-key
+        aggregate keeps the base row and the newest stacked row, and the
+        merge rule sets the columns the stacked row carries; columns it
+        lacks or that were added after it was written keep the base
+        row's value. :meth:`merge` stacks a delta only above every order
+        value stacked under it, so this equals the copy-on-write result.
+        A full read resolves only the stack's own keys that way and adds
+        the base rows no delta touches through an anti-join against the
+        stack's keys, broadcast while the stack is within
+        ``MOR_BROADCAST_MAX_BYTES`` — the base is never shuffled; past
+        it every row goes through the aggregate. Compacted tables (no
+        deltas) take the plain scan path with zero overhead.
         """
         snap = self.snapshot(as_of_version)
         cur = TableSchema.from_json(snap["schema"])
-        groups: dict[int, list[str]] = {}
-        # delta path -> {"sv", "cols", "bytes", "buckets": referencing bucket ids}
-        delta_paths: dict[str, dict] = {}
-        for b, entry in self._files_load(snap, buckets).items():
-            if buckets is not None and int(b) not in buckets:
-                continue
-            if entry.get("path"):
-                groups.setdefault(entry["schema_version"], []).append(entry["path"])
-            for d in entry.get("deltas", []):
-                rec = delta_paths.setdefault(
-                    d["path"],
-                    {
-                        "sv": d["schema_version"],
-                        "cols": tuple(d["column_ids"]) if d.get("column_ids") else None,
-                        "bytes": d.get("bytes", 0),
-                        "buckets": set(),
-                    },
-                )
-                rec["buckets"].add(int(b))
-        base = self._reconcile_union(snap, cur, groups)
-        if not delta_paths:
-            if base is None:
-                return self.spark.createDataFrame([], cur.struct_type())
-            return base
-        return self._resolve_mor(snap, cur, base, delta_paths)
+        key = snap["key_column"]
+        base, stack, sets, stack_bytes = self._layers(snap, cur, buckets)
+        if keys is not None:
+            base = None if base is None else base.join(keys, key, "left_semi")
+            stack = [p.join(keys, key, "left_semi") for p in stack]
+        if not stack:
+            return self.spark.createDataFrame([], cur.struct_type()) if base is None else base
+        rows = reduce(DataFrame.unionByName, stack)
+        untouched = None
+        if keys is None and base is not None and stack_bytes <= self.MOR_BROADCAST_MAX_BYTES:
+            touched = F.broadcast(rows.select(key))
+            untouched = base.join(touched, key, "left_anti")
+            base = base.join(touched, key, "left_semi")
+        if base is not None:
+            rows = self._base_layer(base).unionByName(rows)
+        out = self._resolve(snap, rows, sets)
+        return out if untouched is None else untouched.unionByName(out)
 
     @staticmethod
     def _by_id(
@@ -597,160 +603,113 @@ class LakeTable:
             )
         return reduce(DataFrame.unionByName, parts)
 
-    # Byte gate for broadcasting a PAYLOAD-carrying frame in a keyed
-    # upsert (_upsert): the CoW merge's delta side (caller-supplied bytes,
-    # else rows x 512) and the MOR read's winner side (live delta file
-    # bytes). Above it both fall back to one shuffled full-outer join.
+    # Byte gate for the full read's broadcast of the stack's keys: past
+    # this many live delta file bytes the touched-key frame is too big to
+    # ship to every executor, and every row goes through the aggregate.
     MOR_BROADCAST_MAX_BYTES = 256 << 20
 
-    def _upsert(
-        self,
-        old: DataFrame | None,
-        new: DataFrame,
-        key: str,
-        cur: TableSchema,
-        order: str | None,
-        broadcast: bool,
-        tag_ids: list[set[int]] | None = None,
+    @staticmethod
+    def _base_layer(base: DataFrame) -> DataFrame:
+        """Base rows as the order-0 layer :meth:`_resolve` aggregates."""
+        return base.select(
+            F.lit(0).alias("_seq"), F.lit(None).cast("int").alias("_tag"), *base.columns
+        )
+
+    def _resolve(
+        self, snap: dict, rows: DataFrame, sets: list[set[int]], fold: bool = False
     ) -> DataFrame:
-        """The keyed upsert plan: the rows of ``old`` (columns ``cur``)
-        and ``new`` (at most one row per key) joined on ``key``, each
-        output row picked by the merge rule (module docstring) with
-        ``order`` as the order column, evaluated once. A winning ``new``
-        row sets the columns it carries: its own columns, or — for rows
-        read from merge-on-read delta files, reconciled to ``cur`` and
-        tagged ``_tag`` — the column ids ``tag_ids[_tag]``. ``old`` is
-        None when nothing is stored in scope: every row is an insert and
-        no join is planned.
-
-        Physical strategy:
-
-        - **broadcast** (micro-batch path): the ``old`` side is NEVER
-          shuffled. Three broadcast-hash joins against the small ``new``
-          side — ``old LEFT JOIN new`` (updates + untouched in one scan),
-          ``old SEMI new`` (matched keys, tiny), ``new ANTI matched``
-          (brand-new keys) — then a union. Cost: two scans of ``old``,
-          zero exchanges of table data. At 100 TB this is the difference
-          between rewriting buckets at disk bandwidth and paying a
-          cluster-wide shuffle per micro-batch.
-        - **shuffle** (oversized ``new`` side): one full-outer join on
-          the key with AQE skew handling.
-        """
-        o = {c.name: F.col(f"__o_{c.name}") for c in cur.columns}
-        n = {c: F.col(f"__n_{c}") for c in new.columns}
-        wins = n[key].isNotNull()
-        if order is not None:
-            # an absent key reads as a null stored order
-            wins = wins & (o[order].isNull() | (n[order] > o[order]))
-        carried = {c: F.lit(True) for c in new.columns}
-        if tag_ids is not None:  # per delta file group
+        """The merge rule (module docstring) as ONE per-key aggregate over
+        ``rows``: the union of the base layer (``_seq`` 0), the stacked
+        delta groups (``_seq`` their commit version) and, on a ``fold``,
+        the incoming delta (``_seq`` -1, so no per-commit literal reaches
+        the generated code), each row reconciled to ``snap``'s schema and
+        tagged ``_tag``, whose carried column ids are ``sets[_tag]``. Per
+        key the aggregate keeps the base row, the newest stacked row and
+        the incoming row; the rule then lays the stacked row over the
+        base row and the incoming row over that: a strictly greater order
+        value wins (a missing or null stored one loses; every win without
+        an order column), and a winner sets the columns it carries while
+        the rest keep the value below. A ``fold`` groups by ``_bucket``
+        too, so the aggregate rides a ``_bucket`` repartition of ``rows``
+        (:meth:`_bucketed`) with no further exchange, and keeps it."""
+        key, order = snap["key_column"], snap.get("order_column")
+        cur = TableSchema.from_json(snap["schema"])
+        seq = F.col("_seq")
+        row = F.struct("_tag", *cur.names())
+        tiers = {"__s": F.when(seq > 0, seq)}
+        if fold:
+            tiers["__i"] = F.when(seq < 0, seq)
+        by = ["_bucket"] if fold else []
+        picked = rows.groupBy(*by, key).agg(
+            F.max_by(row, F.when(seq == 0, seq)).alias("__b"),
+            *[F.max_by(row, o).alias(t) for t, o in tiers.items()],
+        )
+        out = {c: F.col("__b")[c] for c in cur.names()}
+        for tier in tiers:
+            up = F.col(tier)
+            wins = up.isNotNull()
+            if order is not None:
+                wins = wins & (out[order].isNull() | (up[order] > out[order]))
             for c in cur.columns:
-                tags = [t for t, ids in enumerate(tag_ids) if c.id in ids]
-                if len(tags) < len(tag_ids):
-                    carried[c.name] = n["_tag"].isin(*tags) if tags else F.lit(False)
-        exprs = [
-            (
-                F.when(wins & carried[c.name], n[c.name]).otherwise(o[c.name])
-                if c.name in carried else o[c.name]
-            ).alias(c.name)
-            for c in cur.columns
-        ]
-        null_old = [F.lit(None).cast(c.type).alias(f"__o_{c.name}") for c in cur.columns]
+                tags = [t for t, ids in enumerate(sets) if c.id in ids]
+                if tags:
+                    hit = wins if len(tags) == len(sets) else wins & up["_tag"].isin(*tags)
+                    out[c.name] = F.when(hit, up[c.name]).otherwise(out[c.name])
+        return picked.select(
+            *by, *[(F.col(c) if c == key else out[c]).alias(c) for c in cur.names()]
+        )
 
-        def prefixed(df: DataFrame) -> DataFrame:
-            return df.select(*[F.col(c).alias(f"__n_{c}") for c in new.columns])
-
-        if old is None:
-            return prefixed(new).select(*null_old, "*").select(*exprs)
-        old_pref = old.select(*[F.col(c.name).alias(f"__o_{c.name}") for c in cur.columns])
-        new_pref = prefixed(new)
-        cond = old_pref[f"__o_{key}"] == new_pref[f"__n_{key}"]
-        if not broadcast:
-            return old_pref.join(new_pref, cond, "full_outer").select(*exprs)
-        upserts = old_pref.join(F.broadcast(new_pref), cond, "left_outer").select(*exprs)
-        matched = old.join(F.broadcast(new.select(key)), on=key, how="left_semi").select(key)
-        inserts = prefixed(new.join(F.broadcast(matched), on=key, how="left_anti"))
-        return upserts.unionByName(inserts.select(*null_old, "*").select(*exprs))
-
-    def _resolve_mor(
-        self,
-        snap: dict,
-        cur: TableSchema,
-        base: DataFrame | None,
-        delta_paths: dict[str, dict],
-    ) -> DataFrame:
-        """Merge-on-read resolution: base ⊎ delta stack → logical rows.
-
-        Each delta file carries ``_bucket`` (layout position) and
-        ``_seq`` (commit version) columns written at append time. Rows
-        are filtered to the buckets that still REFERENCE the file (a
-        later CoW rewrite of some bucket drops its reference; the rows
-        are still physically present in the shared file and must not
-        resurrect), reconciled to the current schema by column id, then
-        the newest row per key meets the base row under the merge rule
-        (:meth:`_upsert`). A column ABSENT from the winning delta
-        (recorded in its ``column_ids``: the merge's delta lacked it, or
-        schema evolution added it later) keeps the base row's value,
-        exactly as the copy-on-write merge would have.
-        """
-        key = snap["key_column"]
-        # --- load + reconcile each delta file with its bucket filter;
-        # rows carry their file group's _tag, whose present column ids
-        # are present_sets[_tag] ---
-        parts: list[DataFrame] = []
-        present_sets: list[set[int]] = []
-        by_sig: dict[tuple, list] = {}
-        sv_ids = {
-            int(v): {c["id"] for c in sch["columns"]}
-            for v, sch in snap["schema_versions"].items()
-        }
-        for path, rec in delta_paths.items():
-            by_sig.setdefault(
-                (rec["sv"], rec["cols"], tuple(sorted(rec["buckets"]))), []
-            ).append(path)
-        for (sv, cols_ids, bks), paths in sorted(
-            by_sig.items(), key=lambda kv: (kv[0][0], kv[0][2])
-        ):
-            present = set(cols_ids) if cols_ids is not None else sv_ids[int(sv)]
+    def _layers(
+        self, snap: dict, cur: TableSchema, buckets: list[int] | None
+    ) -> tuple[DataFrame | None, list[DataFrame], list[set[int]], int]:
+        """The stored layers of ``buckets`` (all when None) in ``snap``:
+        ``(base, stack, sets, stack_bytes)``. ``base`` is the base files
+        reconciled to ``cur`` (None when there are none). ``stack`` holds
+        one frame per merge-on-read delta file group: the rows of the
+        buckets that still REFERENCE the file (a later copy-on-write
+        rewrite of a bucket drops its reference while the rows stay in
+        the shared file, and must not resurrect), reconciled to ``cur``
+        by column id, with the commit version ``_seq`` the file carries
+        and the group's ``_tag``. ``sets[_tag]`` holds the column ids the
+        group carries (its ``column_ids``, else its schema version's);
+        ``stack_bytes`` sums the delta files once each. Every read is
+        schema-bound, so planning runs no schema-inference job."""
+        groups: dict[int, list[str]] = {}
+        # delta path -> [schema version, column ids, bytes, referencing buckets]
+        deltas: dict[str, list] = {}
+        for b, entry in self._files_load(snap, buckets).items():
+            if buckets is not None and int(b) not in buckets:
+                continue
+            if entry.get("path"):
+                groups.setdefault(entry["schema_version"], []).append(entry["path"])
+            for d in entry.get("deltas", []):
+                rec = deltas.setdefault(
+                    d["path"],
+                    [d["schema_version"], tuple(d.get("column_ids") or ()), d.get("bytes", 0), []],
+                )
+                rec[3].append(int(b))
+        by_sig: dict[tuple, list[str]] = {}
+        for path, (sv, ids, _bytes, bks) in deltas.items():
+            by_sig.setdefault((sv, ids, tuple(sorted(bks))), []).append(path)
+        stack: list[DataFrame] = []
+        sets: list[set[int]] = []
+        for (sv, ids, bks), paths in sorted(by_sig.items(), key=lambda kv: (kv[0][0], kv[0][2])):
             old = TableSchema.from_json(snap["schema_versions"][str(sv)])
-            # the file's own columns (those it carries, plus the layout
-            # pair): a schema-bound read infers nothing while planning
+            present = set(ids) or {c.id for c in old.columns}
+            # the file's own columns (those it carries, plus the layout pair)
             written = T.StructType(
                 [T.StructField(c.name, c.spark_type()) for c in old.columns if c.id in present]
                 + DELTA_LAYOUT.fields
             )
-            parts.append(
+            stack.append(
                 self.spark.read.schema(written)
                 .parquet(*paths)
-                .filter(F.col("_bucket").isin(*[int(b) for b in bks]))
-                .select(
-                    F.col("_seq"),
-                    F.lit(len(present_sets)).alias("_tag"),
-                    *self._by_id(cur, old, present),
-                )
+                .filter(F.col("_bucket").isin(*bks))
+                .select("_seq", F.lit(len(sets)).alias("_tag"), *self._by_id(cur, old, present))
             )
-            present_sets.append(present)
-        deltas = reduce(DataFrame.unionByName, parts)
-
-        # --- newest delta row per key (argmax on _seq; (key, _seq) is
-        # unique because each MOR commit carries at most one row per key
-        # and commits have distinct versions). The per-key max frame is
-        # broadcast only under the SAME byte gate as the base upsert: an
-        # oversized stack (a deep stack of large appends) would otherwise
-        # ship a delta-sized key set to every executor even as the base
-        # join correctly falls back to shuffle. ---
-        broadcast = (
-            sum(rec.get("bytes", 0) for rec in delta_paths.values())
-            <= self.MOR_BROADCAST_MAX_BYTES
-        )
-        mx = deltas.groupBy(key).agg(F.max("_seq").alias("_seq"))
-        win = deltas.join(
-            F.broadcast(mx) if broadcast else mx, on=[key, "_seq"], how="left_semi"
-        ).drop("_seq")
-
-        return self._upsert(
-            base, win, key, cur, snap.get("order_column"), broadcast, present_sets
-        )
+            sets.append(present)
+        stack_bytes = sum(rec[2] for rec in deltas.values())
+        return self._reconcile_union(snap, cur, groups), stack, sets, stack_bytes
 
     # ---------- write helpers ----------
 
@@ -815,41 +774,44 @@ class LakeTable:
         )
         return ddir, self._dir_bytes(ddir), obs.get
 
-    def _write_buckets(
+    def _bucketed(
         self,
         df: DataFrame,
         snap: dict,
         est_bytes: int | None = None,
         n_files_hint: int | None = None,
-    ) -> dict[str, dict]:
-        """Write df, typed to ``snap``'s schema (:meth:`TableSchema.typed`),
-        hash-bucketed under ``snap``'s layout (``n_buckets``, key column)
-        as the files of the commit after it; return the
-        bucket -> ``{path, schema_version, bytes}`` entries. Hash-
-        repartition on ``_bucket`` keeps every bucket's rows in exactly
-        ONE task → one file per bucket (bounded small-file count at
-        scale); the task COUNT adapts to ``est_bytes`` (output-size
-        estimate) so tiny merges don't pay per-task overhead for empty
-        shares."""
+    ) -> DataFrame:
+        """``df`` typed to ``snap``'s schema (:meth:`TableSchema.typed`)
+        and hash-repartitioned on its ``_bucket`` under ``snap``'s layout
+        (``n_buckets``, key column): every bucket's rows in exactly ONE
+        task → one file per bucket (bounded small-file count at scale).
+        The task COUNT adapts to ``est_bytes`` (output-size estimate) so
+        tiny merges don't pay per-task overhead for empty shares."""
         n_buckets = snap["n_buckets"]
-        key = snap["key_column"]
-        snap_dir = os.path.join(
-            self.path, self.DATA, f"s{snap['version'] + 1}-{uuid.uuid4().hex[:8]}"
-        )
         tasks = n_buckets
         if est_bytes is not None:
             by_bytes = -(-est_bytes // self.TARGET_WRITE_BYTES)
             by_files = -(-(n_files_hint or 1) // self.FILES_PER_WRITE_TASK)
             tasks = max(1, min(n_buckets, max(by_bytes, by_files)))
-        (
+        return (
             TableSchema.from_json(snap["schema"])
             .typed(df)
-            .withColumn("_bucket", bucket_expr(F.col(key), n_buckets))
+            .withColumn("_bucket", bucket_expr(F.col(snap["key_column"]), n_buckets))
             .repartition(tasks, "_bucket")
+        )
+
+    def _write_buckets(self, df: DataFrame, snap: dict) -> dict[str, dict]:
+        """Write ``df`` — table rows plus their ``_bucket``, partitioned by
+        :meth:`_bucketed` — as the files of the commit after ``snap``;
+        return the bucket -> ``{path, schema_version, bytes}`` entries."""
+        snap_dir = os.path.join(
+            self.path, self.DATA, f"s{snap['version'] + 1}-{uuid.uuid4().hex[:8]}"
+        )
+        (
             # sort by (_bucket, key): a task holding several buckets writes
             # each partition dir in one sequential run instead of churning
             # open files across interleaved buckets
-            .sortWithinPartitions("_bucket", key)
+            df.sortWithinPartitions("_bucket", snap["key_column"])
             .write.partitionBy("_bucket")
             .mode("overwrite")
             .parquet(snap_dir)
@@ -907,7 +869,7 @@ class LakeTable:
         if n_buckets is not None:
             snap["n_buckets"] = n_buckets
         names = TableSchema.from_json(snap["schema"]).names()
-        add = self._write_buckets(df.select(*[F.col(n) for n in names]), snap)
+        add = self._write_buckets(self._bucketed(df.select(*names), snap), snap)
         self._publish(
             snap,
             add,
@@ -948,10 +910,11 @@ class LakeTable:
         is enforced post-write: any output bucket outside the set aborts
         the commit.
 
-        The join is :meth:`_upsert`'s plan; the delta side is broadcast
-        while its size estimate — ``delta_bytes``, else ``delta_rows`` x
-        512 — is within ``MOR_BROADCAST_MAX_BYTES``. Unaffected buckets
-        are carried forward by reference — no read, no write.
+        No join is planned: a copy-on-write merge resolves the rule with
+        :meth:`_resolve`'s one per-key aggregate under the ``_bucket``
+        repartition its write needs anyway — one exchange, no broadcast.
+        Unaffected buckets are carried forward by reference — no read,
+        no write.
 
         The physical commit strategy is the lake's own decision:
 
@@ -972,26 +935,23 @@ class LakeTable:
           least one is strictly greater than the ``order_max`` every
           item stacked in its buckets records, so its rows are newer
           than every row stacked under them.
-        - **copy-on-write** otherwise: affected buckets are read through
-          :meth:`read`, merged with the delta and rewritten. This FOLDS
+        - **copy-on-write** otherwise: the affected buckets' base rows,
+          their stacked deltas and this delta are resolved together and
+          rewritten. This FOLDS
           the accumulated stack back into the base — compaction happens
           as a natural consequence of the policy, no separate scheduler
           needed. A delta written for an append and then refused by its
           observed order range is removed first.
 
-        ``max_stack`` overrides ``MOR_MAX_STACK`` for this call.
-        Write-mostly tables want the default (8): stacks amortize merges
-        and nothing pays to read them. A table some job RE-READS every
-        batch — e.g. a maintained derived aggregate whose stage must
-        scan the affected buckets' old rows per micro-batch — flips the
-        economics: read cost grows ~linearly with stack depth (each
-        delta file in an affected bucket is another file open + MOR
-        resolution branch), so the optimal fold cadence is short. With
-        per-file read overhead ~half a base-read and CoW ~3 base-reads,
-        cycle cost is minimized
-        around depth 3 (measured in BENCH_DETAIL.json
-        ``vocab_maintenance``; the CDC engine passes 3 when
-        ``maintain_vocab=True``).
+        ``max_stack`` overrides ``MOR_MAX_STACK`` for this call. The
+        cap bounds STORED bytes, not read cost: the stack keeps a key's
+        superseded rows next to its base row until the fold, so a deeper
+        cap holds more dead bytes per live row. Measured on the serve
+        benchmark (2.5k-event batches, vocab on), stacking to the default
+        8 instead of 3 folded less often but raised
+        ``lake_bytes_per_live_doc`` from 214.8 to 246.9 B (+15 %, past
+        that metric's 0.1 bound); the CDC engine passes 3 when
+        ``maintain_vocab=True``.
 
         ``pre_commit``, when given, is invoked after all data is written
         but immediately before the snapshot commit, on every exit path
@@ -1037,8 +997,8 @@ class LakeTable:
             return
 
         # delta-size estimate: caller-supplied bytes from its staged
-        # files, else a row-count heuristic; gates the MOR policy, the
-        # CoW broadcast and the write-task count
+        # files, else a row-count heuristic; gates the MOR policy and
+        # the write-task count
         if delta_bytes is not None:
             est_delta = delta_bytes
         else:
@@ -1109,19 +1069,26 @@ class LakeTable:
                 )
                 return
 
-        # all-fresh buckets (first load): no old side, so no join is
-        # planned — building the three-branch plan driver-side costs
-        # ~1 s of Py4J per merge even though Catalyst would fold it away
-        have_old = any(
-            aff_files.get(str(b), {}).get("path") or aff_files.get(str(b), {}).get("deltas")
-            for b in affected
+        # the incoming rows as the table's columns: null for the ones the
+        # delta does not carry (a new key's; a stored key's keep theirs)
+        incoming = cur.typed(delta).select(
+            *[F.col(c.name) if c.name in delta.columns else F.lit(None).cast(c.type).alias(c.name)
+              for c in cur.columns]
         )
-        old = self.read(buckets=affected) if have_old else None
-        broadcast = est_delta <= self.MOR_BROADCAST_MAX_BYTES
-        merged = self._upsert(old, delta, key, cur, order, broadcast)
-        add = self._write_buckets(
-            merged, snap, est_bytes=aff_bytes + est_delta, n_files_hint=len(affected)
-        )
+        base, stack, sets, _ = self._layers(snap, cur, affected)
+        est = {"est_bytes": aff_bytes + est_delta, "n_files_hint": len(affected)}
+        if base is None and not stack:
+            # all-fresh buckets (first load): nothing to resolve against
+            merged = self._bucketed(incoming, snap, **est)
+        else:
+            layers = stack + [
+                incoming.select(F.lit(-1).alias("_seq"), F.lit(len(sets)).alias("_tag"), "*")
+            ]
+            if base is not None:
+                layers.append(self._base_layer(base))
+            rows = self._bucketed(reduce(DataFrame.unionByName, layers), snap, **est)
+            merged = self._resolve(snap, rows, sets + [ids], fold=True)
+        add = self._write_buckets(merged, snap)
         # Enforce the affected_buckets superset invariant (docstring): if
         # the delta wrote a bucket the caller didn't declare, committing
         # would drop that bucket's prior rows (files[b] replaced by a
@@ -1315,10 +1282,10 @@ class LakeTable:
         cur = TableSchema.from_json(snap["schema"])
         action = change["action"]
         cols = {c.name: c for c in cur.columns}
-        # '_bucket' is the layout partition column _write_buckets injects
+        # '_bucket' is the layout partition column _bucketed injects
         # (a user column by that name would be silently overwritten with
         # hash-bucket ids on the next rewrite); '_seq'/'_tag' are the MOR
-        # delta columns _resolve_mor selects alongside the user columns (a
+        # delta columns _layers selects alongside the user columns (a
         # user column by either name makes the MOR read's select ambiguous
         # and every read of a delta-carrying table fail). Reject the DDL.
         introduced = {"add_column": change.get("name"),
@@ -1532,4 +1499,5 @@ class LakeTable:
                 expire_tombstones_below_lsn, snap.get("tombstones_expired_below", 0)
             )
         names = TableSchema.from_json(snap["schema"]).names()
-        self._publish(snap, self._write_buckets(df.select(*names), snap), replace_all=True)
+        add = self._write_buckets(self._bucketed(df.select(*names), snap), snap)
+        self._publish(snap, add, replace_all=True)

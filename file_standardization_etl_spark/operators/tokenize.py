@@ -396,9 +396,9 @@ def _gate_broadcast(df: DataFrame, mode, row_bytes):
     persisted, its rows and estimated bytes are COUNTED with a 1-row
     aggregate, and it is broadcast only when both clear the engine-wide
     gate constants (``lake.table.BROADCAST_MAX_KEY_ROWS`` rows /
-    ``LakeTable.MOR_BROADCAST_MAX_BYTES`` bytes) — the same
-    measured-not-assumed rule the MOR winner side and the vocab
-    old-token side follow. On a 100 TB web corpus the hot n-gram set is
+    ``LakeTable.MOR_BROADCAST_MAX_BYTES`` bytes) — the byte constant
+    also gates the merge-on-read read's broadcast of the stack's keys.
+    On a 100 TB web corpus the hot n-gram set is
     data-dependent and CAN exceed the 8 GB broadcast hard limit; the
     fallback keeps the plan an equi-join on the same key, where AQE's
     skew split still applies. ``mode=True/False`` forces the decision

@@ -334,7 +334,7 @@ def test_lake_level_bucket_column_ddl_rejected(spark, tmp_path):
     with _pytest.raises(ValueError, match="_bucket"):
         t.apply_schema_change({"action": "rename_column", "name": "v", "new_name": "_bucket"})
     # the MOR layout columns are just as poisonous: a user '_seq'/'_tag'
-    # would make _resolve_mor's select ambiguous and wedge every read of
+    # would make the MOR read's select ambiguous and wedge every read of
     # a delta-carrying table
     for reserved in ("_seq", "_tag"):
         with _pytest.raises(ValueError, match=reserved):

@@ -297,21 +297,56 @@ def test_vocab_deletes_retract_counts(spark, tmp_path):
 
 
 def test_vocab_stage_shuffle_fallback_past_broadcast_gate(spark, tmp_path, monkeypatch):
-    """Past BROADCAST_MAX_ROWS the stage's old-side joins must shuffle
-    instead of broadcasting (a 10^7-row micro-batch's key set / old-token
-    frame is too big to ship to every executor) — same counts either way."""
+    """Past BROADCAST_MAX_ROWS the stage's pre-image key frame must shuffle
+    instead of broadcasting (a 10^7-row micro-batch's key set is too big
+    to ship to every executor) — same counts either way; and with Spark's
+    own broadcast threshold off, the unhinted pre-image join shuffles too
+    and the counts still equal the recount."""
     from file_standardization_etl_spark.cdc import aggregates as agg
 
     cfg = EventGenConfig(n_events=3000, n_docs=150, seed=31, shuffle_arrival=True)
     events = generate_events(cfg)
-    # case 1: row gate trips (key join AND old-token join shuffle);
-    # case 2: rows pass but the BYTE gate trips — the old-token frame
-    # (which carries arrays, where a row-count gate alone could
-    # green-light a >8 GB broadcast) must shuffle on its own
-    for sub, attr in (("rows", "BROADCAST_MAX_ROWS"), ("bytes", "BROADCAST_MAX_BYTES")):
-        monkeypatch.setattr(agg.TokenVocab, attr, 1)
-        engine = make_engine(spark, tmp_path / sub)
-        for i, lo in enumerate(range(0, len(events), 1000)):
-            engine.apply_batch(events_df(spark, events[lo : lo + 1000]), batch_id=i)
-        assert maintained(engine) == recompute(engine), sub
-        monkeypatch.undo()
+    # case 1: the row gate trips (the key frame is not hinted);
+    # case 2: rows pass, but no join may be broadcast by size — the
+    # pre-image join to the chunk carries no hint and must shuffle
+    thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    for sub in ("rows", "bytes"):
+        if sub == "rows":
+            monkeypatch.setattr(agg.TokenVocab, "BROADCAST_MAX_ROWS", 1)
+        else:
+            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        try:
+            engine = make_engine(spark, tmp_path / sub)
+            for i, lo in enumerate(range(0, len(events), 1000)):
+                engine.apply_batch(events_df(spark, events[lo : lo + 1000]), batch_id=i)
+            assert maintained(engine) == recompute(engine), sub
+        finally:
+            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thresh)
+            monkeypatch.undo()
+
+
+def test_vocab_batch_jobs_are_labelled_by_phase(spark, tmp_path):
+    """Every Spark job a vocab batch runs — on the batch's own thread or
+    on the engine's pool — carries, as its ``spark.job.description`` in
+    the status store, the ``CdcEngine.timings`` label of the phase that
+    issued it: appends and the fold batch alike."""
+    cfg = EventGenConfig(n_events=2000, n_docs=120, seed=43)
+    events = generate_events(cfg)
+    engine = make_engine(spark, tmp_path)
+    sc = spark.sparkContext._jsc.sc()
+    for i, lo in enumerate(range(0, len(events), 400)):
+        first = sc.dagScheduler().numTotalJobs()
+        engine.apply_batch(events_df(spark, events[lo : lo + 400]), batch_id=i)
+        last = sc.dagScheduler().numTotalJobs()
+        sc.listenerBus().waitUntilEmpty()
+        labels = {}
+        for j in range(first, last):
+            d = sc.statusStore().job(j).description()
+            labels[j] = d.get() if d.isDefined() else None
+        assert labels and set(labels.values()) <= set(engine.timings), (i, labels)
+        assert {"lww_and_stats", "routed_write", "merge", "vocab_stage"} <= set(
+            labels.values()
+        ), (i, labels)
+    snap = engine.table.snapshot()
+    assert any(e.get("path") for e in engine.table._files_load(snap).values())  # a fold ran
+    assert maintained(engine) == recompute(engine)
